@@ -84,9 +84,12 @@ class Cuckoo:
         # rank of each item within its bucket group
         first = np.searchsorted(bs, bs, side="left")
         rank = np.arange(n) - first
-        occ = (self.table[bs] != 0).sum(axis=1)
-        slot = occ + rank
-        fit = slot < SLOTS
+        # the rank-th EMPTY slot of the bucket: a deletion leaves a hole
+        # anywhere in the row, so "next slot after the occupied count"
+        # would overwrite a stored fingerprint
+        empties = np.cumsum(self.table[bs] == 0, axis=1)
+        fit = rank < empties[:, -1]
+        slot = np.argmax(empties == (rank + 1)[:, None], axis=1)
         self.table[bs[fit], slot[fit]] = fps[order][fit]
         return order[~fit]
 
@@ -224,39 +227,36 @@ def cuckoo_update_buckets(
     cannot do. Cogroups the filter table with the change sets; returns the
     updated filter table."""
     spark = filters_df.sparkSession
-    null_long = F.lit(None).cast("long")
+    # one non-null hash column plus an op flag: a NULL-padded column per
+    # op reaches pandas as float64 and loses the low bits of 60-bit hashes
     rem = removals_df.select(
-        "rank_bucket",
-        F.col(hash_col).alias("_rm"),
-        null_long.alias("_add"),
+        "rank_bucket", F.col(hash_col).alias("_h"), F.lit(False).alias("_add")
     )
     add = (
         additions_df.select(
-            "rank_bucket",
-            null_long.alias("_rm"),
-            F.col(hash_col).alias("_add"),
+            "rank_bucket", F.col(hash_col).alias("_h"), F.lit(True).alias("_add")
         )
         if additions_df is not None
-        else spark.createDataFrame([], "rank_bucket long, _rm long, _add long")
+        else spark.createDataFrame([], "rank_bucket long, _h long, _add boolean")
     )
-    changes = rem.unionByName(add)
+    changes = rem.unionByName(add).filter(F.col("_h").isNotNull())
 
     def apply_fn(key, fdf: pd.DataFrame, cdf: pd.DataFrame) -> pd.DataFrame:
+        h = cdf["_h"].to_numpy(dtype=np.int64)
+        is_add = cdf["_add"].to_numpy(dtype=bool)
+        rm, ad = h[~is_add], h[is_add]
         if len(fdf) == 0:
             # additions into a bucket with no filter yet: build fresh
-            adds = cdf["_add"].dropna().to_numpy(dtype=np.int64)
-            c = Cuckoo(max(len(adds), 64))
-            c.insert(adds)
+            c = Cuckoo(max(len(ad), 64))
+            c.insert(ad)
             m, table, ovf = c.to_state()
             return pd.DataFrame(
-                {"rank_bucket": [int(key[0])], "n": [len(adds)], "m": [m],
+                {"rank_bucket": [int(key[0])], "n": [len(ad)], "m": [m],
                  "table": [table], "overflow": [ovf]}
             )
         c = Cuckoo.from_state(
             fdf["m"].iloc[0], fdf["table"].iloc[0], fdf["overflow"].iloc[0]
         )
-        rm = cdf["_rm"].dropna().to_numpy(dtype=np.int64)
-        ad = cdf["_add"].dropna().to_numpy(dtype=np.int64)
         n = int(fdf["n"].iloc[0]) - c.delete(rm)
         if len(ad):
             c.insert(ad)

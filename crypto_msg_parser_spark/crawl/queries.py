@@ -2306,7 +2306,8 @@ def hits_hub_authority(spark, sf_dir):
     ew AS (
       SELECT host,
              CAST(sum(latency_ms * (1 << (8 - recency))) AS BIGINT)
-               AS ewma_num
+               AS ewma_num,
+             CAST(sum(1 << (8 - recency)) AS BIGINT) AS ewma_den
       FROM rk WHERE recency <= 8 GROUP BY host),
     med AS (
       SELECT host, CAST(max(n) AS BIGINT) AS n_fetches,
@@ -2315,16 +2316,19 @@ def hits_hub_authority(spark, sf_dir):
                AS p50_latency_ms
       FROM rk GROUP BY host)
     SELECT m.host, m.n_fetches, m.p50_latency_ms, e.ewma_num,
-           CAST(e.ewma_num // 255 AS BIGINT) AS ewma_ms,
+           CAST(e.ewma_num // e.ewma_den AS BIGINT) AS ewma_ms,
            CAST(50 AS BIGINT) AS old_budget_per_min,
-           CAST(least(600, greatest(6, (50 * 200 * 255) // e.ewma_num))
-                AS BIGINT) AS new_budget_per_min
+           CAST(least(600, greatest(6,
+                (50 * 200 * e.ewma_den) // e.ewma_num)) AS BIGINT)
+             AS new_budget_per_min
     FROM med m JOIN ew e ON e.host = m.host
     """,
     doc="adaptive politeness control from fetch telemetry: per host, a "
     "dyadic-weight EWMA over the 8 most recent fetch latencies "
-    "(weights 2^7..2^0, denominator 255 — binary weights keep the "
-    "accumulator an exact BIGINT instead of the usual float alpha "
+    "(weights 2^7..2^0, divided by the weight sum of the fetches "
+    "present — 255 for a host with 8 or more, less for a sparse host, "
+    "so ewma_ms is a true weighted mean either way; binary weights keep "
+    "the accumulator an exact BIGINT instead of the usual float alpha "
     "recursion, which is order-fragile AND unmergeable across "
     "partitions) plus the exact p50 latency as an order statistic "
     "(value at row_number (n+1) DIV 2 under the total (latency, "
@@ -2371,7 +2375,10 @@ def host_latency_ewma_budget(spark, sf_dir):
         .agg(
             F.sum(F.expr("latency_ms * shiftleft(1, 8 - recency)"))
             .cast("long")
-            .alias("ewma_num")
+            .alias("ewma_num"),
+            F.sum(F.expr("shiftleft(1, 8 - recency)"))
+            .cast("long")
+            .alias("ewma_den"),
         )
     )
     med = rk.groupBy("host").agg(
@@ -2390,11 +2397,11 @@ def host_latency_ewma_budget(spark, sf_dir):
         "n_fetches",
         "p50_latency_ms",
         "ewma_num",
-        F.expr("ewma_num DIV 255").cast("long").alias("ewma_ms"),
+        F.expr("ewma_num DIV ewma_den").cast("long").alias("ewma_ms"),
         F.lit(50).cast("long").alias("old_budget_per_min"),
         F.least(
             F.lit(600),
-            F.greatest(F.lit(6), F.expr("(50 * 200 * 255) DIV ewma_num")),
+            F.greatest(F.lit(6), F.expr("(50 * 200 * ewma_den) DIV ewma_num")),
         )
         .cast("long")
         .alias("new_budget_per_min"),

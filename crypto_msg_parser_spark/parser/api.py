@@ -10,8 +10,8 @@ The dispatch is a partition-pruning filter per exchange module + unionByName
 partitioned by exchange (the recommended layout:
 df.write.partitionBy('exchange', 'market_type', 'msg_type')).
 
-Exchange coverage grows module by module; EXCHANGES maps the reference's 20
-dispatch arms to their implementation status.
+_ARMS maps the reference's 20 dispatch arms (and the names each accepts)
+to the module implementing them.
 """
 
 from __future__ import annotations
@@ -44,50 +44,40 @@ from crypto_msg_parser_spark.parser import (
     zbg,
 )
 
-# exchange -> module implementing (a subset of) the parse functions
-_MODULES = {
-    "binance": binance,
-    "huobi": huobi,
-    "okx": okx,
-    "okex": okx,  # alias (lib.rs:36)
-    "bybit": bybit,
-    "dydx": dydx,
-    "bitmex": bitmex,
-    "gate": gate,
-    "bitget": bitget,
-    "kucoin": kucoin,
-    "deribit": deribit,
-    "mexc": mexc,
-    "mxc": mexc,  # alias (lib.rs:35)
-    "zbg": zbg,
-    "bitfinex": bitfinex,
-    "kraken": kraken,
-    "ftx": ftx,
-    "zb": zb,
-    "coinbase_pro": coinbase_pro,
-    "bithumb": bithumb,
-    "bitstamp": bitstamp,
-    "bitz": bitz,
+# canonical exchange -> (module implementing a subset of the parse
+# functions, alias names the arm also accepts — lib.rs:35-36,41)
+_ARMS = {
+    "binance": (binance, ()),
+    "huobi": (huobi, ()),
+    "okx": (okx, ("okex",)),
+    "bybit": (bybit, ()),
+    "dydx": (dydx, ()),
+    "bitmex": (bitmex, ()),
+    "gate": (gate, ()),
+    "bitget": (bitget, ()),
+    "kucoin": (kucoin, ()),
+    "deribit": (deribit, ()),
+    "mexc": (mexc, ("mxc",)),
+    "zbg": (zbg, ()),
+    "bitfinex": (bitfinex, ()),
+    "kraken": (kraken, ()),
+    "ftx": (ftx, ()),
+    "zb": (zb, ()),
+    "coinbase_pro": (coinbase_pro, ()),
+    "bithumb": (bithumb, ()),
+    "bitstamp": (bitstamp, ()),
+    "bitz": (bitz, ()),
 }
 
-IMPLEMENTED = sorted(set(_MODULES) - {"okex", "mxc"})
-PLANNED: list[str] = []  # all 20 reference dispatch arms implemented
-
-# alias rows in _MODULES (skipped when iterating arms; folded into the
-# canonical arm's match set instead). lib.rs:35,41 semantics.
-_ALIAS_KEYS = ("okex", "mxc")
-_ALIASES = {"okx": ["okex"], "mexc": ["mxc"]}
+IMPLEMENTED = sorted(_ARMS)
 
 
 def _dispatch_arms():
     """Yield (exchange, accepted_names, module) once per canonical arm —
-    the single place the alias map and skip set are consulted, so every
-    dispatcher (union router, column ladder, struct ladder) matches the
-    same name set."""
-    for exchange, mod in _MODULES.items():
-        if exchange in _ALIAS_KEYS:
-            continue
-        yield exchange, [exchange, *_ALIASES.get(exchange, [])], mod
+    every dispatcher (union router, column ladder, struct ladder) matches
+    the same name set."""
+    for exchange, (mod, aliases) in _ARMS.items():
+        yield exchange, [exchange, *aliases], mod
 
 
 def _dispatch(df: DataFrame, fn_name: str) -> DataFrame:
@@ -124,15 +114,7 @@ def parse_l2_snapshot(df: DataFrame) -> DataFrame:
     (lib.rs:286-298). The input needs a `routed_symbol` column for the
     response formats that embed no symbol (the reference's Option<&str>
     parameter, filled by the crawler from the request URL)."""
-    parts = []
-    for name in ("binance", "bitfinex", "bitget"):
-        mod = _MODULES[name]
-        sub = df.filter(F.col("exchange") == name)
-        parts.append(mod.parse_l2_snapshot(sub))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return _dispatch(df, "parse_l2_snapshot")
 
 
 def parse_bbo(df: DataFrame) -> DataFrame:

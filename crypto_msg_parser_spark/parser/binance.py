@@ -23,11 +23,12 @@ from pyspark.sql import functions as F
 from crypto_msg_parser_spark import schemas
 from crypto_msg_parser_spark.parser.common import (
     parsed_once,
-    EUROPEAN_OPTION,
     INVERSE,
     SPOT,
-    finalize,
+    emit,
+    item_json,
     normalize_pair_with_quotes,
+    order_level,
     quantity_triple,
     sort_book_sides,
 )
@@ -180,24 +181,17 @@ def parse_trade(df: DataFrame) -> DataFrame:
             ),
         )
     )
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        F.col("d.s").alias("symbol"),
-        "pair",
-        F.lit("trade").alias("msg_type"),
-        F.col("d.E").alias("timestamp"),
-        F.col("msg").alias("json"),
-        F.when(F.col("d.m"), "sell").otherwise("buy").alias("side"),
-        "price",
-        F.col("qt.quantity_base").alias("quantity_base"),
-        F.col("qt.quantity_quote").alias("quantity_quote"),
-        F.col("qt.quantity_contract").alias("quantity_contract"),
-        F.when(F.col("d.e") == "aggTrade", F.col("d.a").cast("string"))
-        .otherwise(F.col("d.t").cast("string"))
-        .alias("trade_id"),
+    return emit(
+        base, schemas.TRADE_SCHEMA, EXCHANGE, "trade",
+        symbol=F.col("d.s"),
+        timestamp=F.col("d.E"),
+        side=F.when(F.col("d.m"), "sell").otherwise("buy"),
+        quantity_base=F.col("qt.quantity_base"),
+        quantity_quote=F.col("qt.quantity_quote"),
+        quantity_contract=F.col("qt.quantity_contract"),
+        trade_id=F.when(F.col("d.e") == "aggTrade", F.col("d.a").cast("string"))
+        .otherwise(F.col("d.t").cast("string")),
     )
-    return finalize(out, schemas.TRADE_SCHEMA)
 
 
 _L2_DATA_SCHEMA = (
@@ -209,19 +203,12 @@ _L2_DATA_SCHEMA = (
 
 def _levels(raw_levels: Column, market_type: Column, pair: Column) -> Column:
     cv = contract_value(market_type, pair)
-
-    def to_order(lv):
-        price = lv.getItem(0).cast("double")
-        qty = lv.getItem(1).cast("double")
-        t = quantity_triple(market_type, price, qty, cv)
-        return F.struct(
-            price.alias("price"),
-            t["quantity_base"].alias("quantity_base"),
-            t["quantity_quote"].alias("quantity_quote"),
-            t["quantity_contract"].alias("quantity_contract"),
-        )
-
-    return F.transform(raw_levels, to_order)
+    return F.transform(
+        raw_levels,
+        lambda lv: order_level(
+            market_type, lv.getItem(0).cast("double"), lv.getItem(1).cast("double"), cv
+        ),
+    )
 
 
 def parse_l2(df: DataFrame, topk: bool = False) -> DataFrame:
@@ -233,23 +220,18 @@ def parse_l2(df: DataFrame, topk: bool = False) -> DataFrame:
         .filter(F.col("d.s").isNotNull())
         .withColumn("pair", normalize_pair(F.col("d.s")))
     )
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        F.col("d.s").alias("symbol"),
-        "pair",
-        F.lit("l2_topk" if topk else "l2_event").alias("msg_type"),
-        F.col("d.E").alias("timestamp"),
-        F.col("msg").alias("json"),
-        F.lit(topk).alias("snapshot"),
-        _levels(F.col("d.a"), F.col("market_type"), F.col("pair")).alias("asks"),
-        _levels(F.col("d.b"), F.col("market_type"), F.col("pair")).alias("bids"),
-        F.col("d.u").alias("seq_id"),
-        F.when(F.col("d.pu") == -1, F.lit(None).cast("long"))
-        .otherwise(F.col("d.pu"))
-        .alias("prev_seq_id"),
+    out = emit(
+        base, schemas.ORDERBOOK_SCHEMA, EXCHANGE, "l2_topk" if topk else "l2_event",
+        symbol=F.col("d.s"),
+        timestamp=F.col("d.E"),
+        snapshot=F.lit(topk),
+        asks=_levels(F.col("d.a"), F.col("market_type"), F.col("pair")),
+        bids=_levels(F.col("d.b"), F.col("market_type"), F.col("pair")),
+        seq_id=F.col("d.u"),
+        prev_seq_id=F.when(F.col("d.pu") == -1, F.lit(None).cast("long"))
+        .otherwise(F.col("d.pu")),
     )
-    return finalize(sort_book_sides(out), schemas.ORDERBOOK_SCHEMA)
+    return sort_book_sides(out)
 
 
 def parse_l2_topk(df: DataFrame) -> DataFrame:
@@ -283,27 +265,21 @@ def parse_bbo(df: DataFrame) -> DataFrame:
         F.col("d.B").cast("double"),
         F.col("cv"),
     )
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        F.col("d.s").alias("symbol"),
-        "pair",
-        F.lit("bbo").alias("msg_type"),
-        F.when(F.col("market_type") == SPOT, F.col("received_at"))
-        .otherwise(F.col("d.E"))
-        .alias("timestamp"),
-        F.col("msg").alias("json"),
-        F.col("d.b").cast("double").alias("bid_price"),
-        bid_t["quantity_base"].alias("bid_quantity_base"),
-        bid_t["quantity_quote"].alias("bid_quantity_quote"),
-        bid_t["quantity_contract"].alias("bid_quantity_contract"),
-        F.col("d.a").cast("double").alias("ask_price"),
-        ask_t["quantity_base"].alias("ask_quantity_base"),
-        ask_t["quantity_quote"].alias("ask_quantity_quote"),
-        ask_t["quantity_contract"].alias("ask_quantity_contract"),
-        F.col("d.u").alias("id"),
+    return emit(
+        base, schemas.BBO_SCHEMA, EXCHANGE, "bbo",
+        symbol=F.col("d.s"),
+        timestamp=F.when(F.col("market_type") == SPOT, F.col("received_at"))
+        .otherwise(F.col("d.E")),
+        bid_price=F.col("d.b").cast("double"),
+        bid_quantity_base=bid_t["quantity_base"],
+        bid_quantity_quote=bid_t["quantity_quote"],
+        bid_quantity_contract=bid_t["quantity_contract"],
+        ask_price=F.col("d.a").cast("double"),
+        ask_quantity_base=ask_t["quantity_base"],
+        ask_quantity_quote=ask_t["quantity_quote"],
+        ask_quantity_contract=ask_t["quantity_contract"],
+        id=F.col("d.u"),
     )
-    return finalize(out, schemas.BBO_SCHEMA)
 
 
 _FUNDING_SCHEMA = "struct<e:string, E:bigint, s:string, p:string, r:string, T:bigint>"
@@ -332,21 +308,14 @@ def parse_funding_rate(df: DataFrame) -> DataFrame:
         .filter(F.col("d.r") != "")
         .withColumn("pair", normalize_pair(F.col("d.s")))
     )
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        F.col("d.s").alias("symbol"),
-        "pair",
-        F.lit("funding_rate").alias("msg_type"),
-        F.col("d.E").alias("timestamp"),
-        F.when(F.col("n_items") == 1, F.col("msg"))
-        .otherwise(F.to_json("d"))
-        .alias("json"),
-        F.col("d.r").cast("double").alias("funding_rate"),
-        F.col("d.T").alias("funding_time"),
-        F.lit(None).cast("double").alias("estimated_rate"),
+    return emit(
+        base, schemas.FUNDING_RATE_SCHEMA, EXCHANGE, "funding_rate",
+        symbol=F.col("d.s"),
+        timestamp=F.col("d.E"),
+        json=item_json(),
+        funding_rate=F.col("d.r").cast("double"),
+        funding_time=F.col("d.T"),
     )
-    return finalize(out, schemas.FUNDING_RATE_SCHEMA)
 
 
 _KLINE_SCHEMA = (
@@ -368,24 +337,19 @@ def parse_candlestick(df: DataFrame) -> DataFrame:
     q = F.col("d.k.q").cast("double")
     is_inverse = F.col("market_type").isin(*INVERSE)
     cv = contract_value(F.col("market_type"), F.col("pair"))
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        F.col("d.k.s").alias("symbol"),
-        "pair",
-        F.lit("candlestick").alias("msg_type"),
-        F.col("d.E").alias("timestamp"),
-        F.col("msg").alias("json"),
-        (F.col("d.k.t") / 1000).cast("long").alias("begin_time"),
-        F.col("d.k.o").cast("double").alias("open"),
-        F.col("d.k.h").cast("double").alias("high"),
-        F.col("d.k.l").cast("double").alias("low"),
-        F.col("d.k.c").cast("double").alias("close"),
-        F.when(is_inverse, q).otherwise(v).alias("volume"),
-        F.col("d.k.i").alias("period"),
-        F.when(is_inverse, v * cv).otherwise(q).alias("quote_volume"),
+    return emit(
+        base, schemas.CANDLESTICK_SCHEMA, EXCHANGE, "candlestick",
+        symbol=F.col("d.k.s"),
+        timestamp=F.col("d.E"),
+        begin_time=(F.col("d.k.t") / 1000).cast("long"),
+        open=F.col("d.k.o").cast("double"),
+        high=F.col("d.k.h").cast("double"),
+        low=F.col("d.k.l").cast("double"),
+        close=F.col("d.k.c").cast("double"),
+        volume=F.when(is_inverse, q).otherwise(v),
+        period=F.col("d.k.i"),
+        quote_volume=F.when(is_inverse, v * cv).otherwise(q),
     )
-    return finalize(out, schemas.CANDLESTICK_SCHEMA)
 
 
 def parse_l2_snapshot(df: DataFrame, symbol_col: str = "routed_symbol") -> DataFrame:
@@ -411,18 +375,12 @@ def parse_l2_snapshot(df: DataFrame, symbol_col: str = "routed_symbol") -> DataF
         )
         .withColumn("pair", normalize_pair(F.col("symbol")))
     )
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
-        F.lit("l2_snapshot").alias("msg_type"),
-        F.coalesce(F.col("d.E"), F.col("received_at")).alias("timestamp"),
-        F.col("msg").alias("json"),
-        F.lit(True).alias("snapshot"),
-        _levels(F.col("d.asks"), F.col("market_type"), F.col("pair")).alias("asks"),
-        _levels(F.col("d.bids"), F.col("market_type"), F.col("pair")).alias("bids"),
-        F.col("d.lastUpdateId").alias("seq_id"),
-        F.lit(None).cast("long").alias("prev_seq_id"),
+    out = emit(
+        base, schemas.ORDERBOOK_SCHEMA, EXCHANGE, "l2_snapshot",
+        timestamp=F.coalesce(F.col("d.E"), F.col("received_at")),
+        snapshot=F.lit(True),
+        asks=_levels(F.col("d.asks"), F.col("market_type"), F.col("pair")),
+        bids=_levels(F.col("d.bids"), F.col("market_type"), F.col("pair")),
+        seq_id=F.col("d.lastUpdateId"),
     )
-    return finalize(sort_book_sides(out), schemas.ORDERBOOK_SCHEMA)
+    return sort_book_sides(out)

@@ -27,10 +27,10 @@ from pyspark.sql import functions as F
 
 from crypto_msg_parser_spark import schemas
 from crypto_msg_parser_spark.parser.common import (
-    SPOT,
-    finalize,
     quantity_triple,
     sort_book_sides,
+    emit,
+    order_level,
 )
 
 EXCHANGE = "bitfinex"
@@ -167,24 +167,18 @@ def parse_trade(df: DataFrame) -> DataFrame:
     amount = F.col("d").getItem(2)
     qty = F.abs(amount)
     q = quantity_triple(F.col("market_type"), price, qty, F.lit(1.0))
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
-        F.lit("trade").alias("msg_type"),
-        F.col("d").getItem(1).cast("long").alias("timestamp"),
-        F.when(F.col("is_te") | (F.col("n_items") == 1), F.col("msg"))
-        .otherwise(F.to_json("d"))
-        .alias("json"),
-        F.when(amount < 0, "sell").otherwise("buy").alias("side"),
-        price.alias("price"),
-        q["quantity_base"].alias("quantity_base"),
-        q["quantity_quote"].alias("quantity_quote"),
-        q["quantity_contract"].alias("quantity_contract"),
-        F.col("d").getItem(0).cast("long").cast("string").alias("trade_id"),
+    return emit(
+        base, schemas.TRADE_SCHEMA, EXCHANGE, "trade",
+        timestamp=F.col("d").getItem(1).cast("long"),
+        json=F.when(F.col("is_te") | (F.col("n_items") == 1), F.col("msg"))
+        .otherwise(F.to_json("d")),
+        side=F.when(amount < 0, "sell").otherwise("buy"),
+        price=price,
+        quantity_base=q["quantity_base"],
+        quantity_quote=q["quantity_quote"],
+        quantity_contract=q["quantity_contract"],
+        trade_id=F.col("d").getItem(0).cast("long").cast("string"),
     )
-    return finalize(out, schemas.TRADE_SCHEMA)
 
 
 # ---------------------------------------------------------------- orderbooks
@@ -215,31 +209,16 @@ def parse_l2(df: DataFrame) -> DataFrame:
         qty = F.when(count.cast("int") == 0, F.lit(0.0)).otherwise(
             F.abs(lv.getItem(2))
         )
-        q = quantity_triple(F.col("market_type"), price, qty, F.lit(1.0))
-        return F.struct(
-            price.alias("price"),
-            q["quantity_base"].alias("quantity_base"),
-            q["quantity_quote"].alias("quantity_quote"),
-            q["quantity_contract"].alias("quantity_contract"),
-        )
+        return order_level(F.col("market_type"), price, qty, F.lit(1.0))
 
     bids_raw = F.filter(F.col("levels"), lambda lv: lv.getItem(2) > 0)
     asks_raw = F.filter(F.col("levels"), lambda lv: ~(lv.getItem(2) > 0))
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
-        F.lit("l2_event").alias("msg_type"),
-        F.col("received_at").alias("timestamp"),
-        F.col("msg").alias("json"),
-        "snapshot",
-        F.transform(asks_raw, order).alias("asks"),
-        F.transform(bids_raw, order).alias("bids"),
-        F.lit(None).cast("long").alias("seq_id"),
-        F.lit(None).cast("long").alias("prev_seq_id"),
+    return emit(
+        base, schemas.ORDERBOOK_SCHEMA, EXCHANGE, "l2_event",
+        timestamp=F.col("received_at"),
+        asks=F.transform(asks_raw, order),
+        bids=F.transform(bids_raw, order),
     )
-    return finalize(out, schemas.ORDERBOOK_SCHEMA)
 
 
 def parse_l2_snapshot(df: DataFrame, symbol_col: str = "routed_symbol") -> DataFrame:
@@ -256,31 +235,18 @@ def parse_l2_snapshot(df: DataFrame, symbol_col: str = "routed_symbol") -> DataF
     def order(lv):
         price = lv.getItem(0)
         qty = F.abs(lv.getItem(2))
-        q = quantity_triple(F.col("market_type"), price, qty, F.lit(1.0))
-        return F.struct(
-            price.alias("price"),
-            q["quantity_base"].alias("quantity_base"),
-            q["quantity_quote"].alias("quantity_quote"),
-            q["quantity_contract"].alias("quantity_contract"),
-        )
+        return order_level(F.col("market_type"), price, qty, F.lit(1.0))
 
     bids_raw = F.filter(F.col("levels"), lambda lv: lv.getItem(2) > 0)
     asks_raw = F.filter(F.col("levels"), lambda lv: ~(lv.getItem(2) > 0))
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
-        F.lit("l2_snapshot").alias("msg_type"),
-        F.col("received_at").alias("timestamp"),
-        F.col("msg").alias("json"),
-        F.lit(True).alias("snapshot"),
-        F.transform(asks_raw, order).alias("asks"),
-        F.transform(bids_raw, order).alias("bids"),
-        F.lit(None).cast("long").alias("seq_id"),
-        F.lit(None).cast("long").alias("prev_seq_id"),
+    out = emit(
+        base, schemas.ORDERBOOK_SCHEMA, EXCHANGE, "l2_snapshot",
+        timestamp=F.col("received_at"),
+        snapshot=F.lit(True),
+        asks=F.transform(asks_raw, order),
+        bids=F.transform(bids_raw, order),
     )
-    return finalize(sort_book_sides(out), schemas.ORDERBOOK_SCHEMA)
+    return sort_book_sides(out)
 
 
 # ---------------------------------------------------------------- candles
@@ -304,21 +270,13 @@ def parse_candlestick(df: DataFrame) -> DataFrame:
         .select("*", F.explode("items").alias("d"))
     )
     ts = F.col("d").getItem(0).cast("long")
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
-        F.lit("candlestick").alias("msg_type"),
-        ts.alias("timestamp"),
-        F.col("msg").alias("json"),
-        ts.alias("begin_time"),
-        F.col("d").getItem(1).alias("open"),
-        F.col("d").getItem(3).alias("high"),
-        F.col("d").getItem(4).alias("low"),
-        F.col("d").getItem(2).alias("close"),
-        F.col("d").getItem(5).alias("volume"),
-        "period",
-        F.lit(None).cast("double").alias("quote_volume"),
+    return emit(
+        base, schemas.CANDLESTICK_SCHEMA, EXCHANGE, "candlestick",
+        timestamp=ts,
+        begin_time=ts,
+        open=F.col("d").getItem(1),
+        high=F.col("d").getItem(3),
+        low=F.col("d").getItem(4),
+        close=F.col("d").getItem(2),
+        volume=F.col("d").getItem(5),
     )
-    return finalize(out, schemas.CANDLESTICK_SCHEMA)

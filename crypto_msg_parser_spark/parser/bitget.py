@@ -27,9 +27,11 @@ from crypto_msg_parser_spark.parser.common import (
     explode_with_count,
     parsed_once,
     SPOT,
-    finalize,
     quantity_triple,
     sort_book_sides,
+    emit,
+    item_json,
+    order_level,
 )
 
 EXCHANGE = "bitget"
@@ -228,26 +230,19 @@ def _parse_trade_mix(df: DataFrame) -> DataFrame:
     ts = F.col("d")[0].cast("long")
     price = F.col("d")[1].cast("double")
     qty = F.col("d")[2].cast("double")
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
-        F.lit("trade").alias("msg_type"),
-        ts.alias("timestamp"),
-        F.when(F.col("n_items") == 1, F.col("msg"))
-        .otherwise(F.to_json("d"))
-        .alias("json"),
-        F.when(F.col("d")[3] == "sell", "sell").otherwise("buy").alias("side"),
-        price.alias("price"),
-        qty.alias("quantity_base"),
-        (qty * price).alias("quantity_quote"),
-        F.when(F.col("market_type") == SPOT, F.lit(None).cast("double"))
-        .otherwise(qty)
-        .alias("quantity_contract"),
-        ts.cast("string").alias("trade_id"),
+    return emit(
+        base, schemas.TRADE_SCHEMA, EXCHANGE, "trade",
+        timestamp=ts,
+        json=item_json(),
+        side=F.when(F.col("d")[3] == "sell", "sell").otherwise("buy"),
+        price=price,
+        quantity_base=qty,
+        quantity_quote=qty * price,
+        quantity_contract=F.when(
+            F.col("market_type") == SPOT, F.lit(None).cast("double")
+        ).otherwise(qty),
+        trade_id=ts.cast("string"),
     )
-    return finalize(out, schemas.TRADE_SCHEMA)
 
 
 def _parse_trade_legacy(df: DataFrame) -> DataFrame:
@@ -267,24 +262,17 @@ def _parse_trade_legacy(df: DataFrame) -> DataFrame:
     price = F.col("d.price").cast("double")
     qty = F.col("d.size").cast("double")
     q = quantity_triple(F.col("market_type"), price, qty, F.col("cv"))
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
-        F.lit("trade").alias("msg_type"),
-        F.col("d.timestamp").cast("long").alias("timestamp"),
-        F.when(F.col("n_items") == 1, F.col("msg"))
-        .otherwise(F.to_json("d"))
-        .alias("json"),
-        F.when(F.col("d.side") == "sell", "sell").otherwise("buy").alias("side"),
-        price.alias("price"),
-        q["quantity_base"].alias("quantity_base"),
-        q["quantity_quote"].alias("quantity_quote"),
-        q["quantity_contract"].alias("quantity_contract"),
-        F.col("d.timestamp").alias("trade_id"),
+    return emit(
+        base, schemas.TRADE_SCHEMA, EXCHANGE, "trade",
+        timestamp=F.col("d.timestamp").cast("long"),
+        json=item_json(),
+        side=F.when(F.col("d.side") == "sell", "sell").otherwise("buy"),
+        price=price,
+        quantity_base=q["quantity_base"],
+        quantity_quote=q["quantity_quote"],
+        quantity_contract=q["quantity_contract"],
+        trade_id=F.col("d.timestamp"),
     )
-    return finalize(out, schemas.TRADE_SCHEMA)
 
 
 # ---------------------------------------------------------------- orderbooks
@@ -348,23 +336,14 @@ def _parse_l2_mix(df: DataFrame) -> DataFrame:
             .alias("quantity_contract"),
         )
 
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
-        F.lit("l2_event").alias("msg_type"),
-        F.col("d.ts").cast("long").alias("timestamp"),
-        F.when(F.col("n_items") == 1, F.col("msg"))
-        .otherwise(F.to_json("d"))
-        .alias("json"),
-        "snapshot",
-        F.transform(F.coalesce("d.asks", F.array()), order).alias("asks"),
-        F.transform(F.coalesce("d.bids", F.array()), order).alias("bids"),
-        F.lit(None).cast("long").alias("seq_id"),
-        F.lit(None).cast("long").alias("prev_seq_id"),
+    out = emit(
+        base, schemas.ORDERBOOK_SCHEMA, EXCHANGE, "l2_event",
+        timestamp=F.col("d.ts").cast("long"),
+        json=item_json(),
+        asks=F.transform(F.coalesce("d.asks", F.array()), order),
+        bids=F.transform(F.coalesce("d.bids", F.array()), order),
     )
-    return finalize(sort_book_sides(out), schemas.ORDERBOOK_SCHEMA)
+    return sort_book_sides(out)
 
 
 def _parse_l2_legacy(df: DataFrame) -> DataFrame:
@@ -392,29 +371,15 @@ def _parse_l2_legacy(df: DataFrame) -> DataFrame:
     def order(lv):
         price = lv.getItem(0).cast("double")
         qty = lv.getItem(1).cast("double")
-        q = quantity_triple(F.col("market_type"), price, qty, F.col("cv"))
-        return F.struct(
-            price.alias("price"),
-            q["quantity_base"].alias("quantity_base"),
-            q["quantity_quote"].alias("quantity_quote"),
-            q["quantity_contract"].alias("quantity_contract"),
-        )
+        return order_level(F.col("market_type"), price, qty, F.col("cv"))
 
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
-        F.col("mt_out").alias("msg_type"),
-        F.col("d.timestamp").cast("long").alias("timestamp"),
-        F.col("msg").alias("json"),
-        "snapshot",
-        F.transform(F.coalesce("d.asks", F.array()), order).alias("asks"),
-        F.transform(F.coalesce("d.bids", F.array()), order).alias("bids"),
-        F.lit(None).cast("long").alias("seq_id"),
-        F.lit(None).cast("long").alias("prev_seq_id"),
+    out = emit(
+        base, schemas.ORDERBOOK_SCHEMA, EXCHANGE, F.col("mt_out"),
+        timestamp=F.col("d.timestamp").cast("long"),
+        asks=F.transform(F.coalesce("d.asks", F.array()), order),
+        bids=F.transform(F.coalesce("d.bids", F.array()), order),
     )
-    return finalize(sort_book_sides(out), schemas.ORDERBOOK_SCHEMA)
+    return sort_book_sides(out)
 
 
 # ---------------------------------------------------------------- funding
@@ -438,21 +403,14 @@ def parse_funding_rate(df: DataFrame) -> DataFrame:
         .transform(explode_with_count(arr))
         .withColumn("symbol", F.col("d.instrument_id"))
     )
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        normalize_pair(F.col("symbol")).alias("pair"),
-        F.lit("funding_rate").alias("msg_type"),
-        F.col("received_at").alias("timestamp"),
-        F.when(F.col("n_items") == 1, F.col("msg"))
-        .otherwise(F.to_json("d"))
-        .alias("json"),
-        F.col("d.funding_rate").cast("double").alias("funding_rate"),
-        F.col("d.funding_time").cast("long").alias("funding_time"),
-        F.lit(None).cast("double").alias("estimated_rate"),
+    return emit(
+        base, schemas.FUNDING_RATE_SCHEMA, EXCHANGE, "funding_rate",
+        pair=normalize_pair(F.col("symbol")),
+        timestamp=F.col("received_at"),
+        json=item_json(),
+        funding_rate=F.col("d.funding_rate").cast("double"),
+        funding_time=F.col("d.funding_time").cast("long"),
     )
-    return finalize(out, schemas.FUNDING_RATE_SCHEMA)
 
 
 # ---------------------------------------------------------------- candles
@@ -487,26 +445,17 @@ def _parse_candle_mix(df: DataFrame) -> DataFrame:
         .transform(explode_with_count(arr))
     )
     ts = F.col("d")[0].cast("long")
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
-        F.lit("candlestick").alias("msg_type"),
-        ts.alias("timestamp"),
-        F.when(F.col("n_items") == 1, F.col("msg"))
-        .otherwise(F.to_json("d"))
-        .alias("json"),
-        (ts - _period_ms(F.col("period"))).alias("begin_time"),
-        F.col("d")[1].cast("double").alias("open"),
-        F.col("d")[2].cast("double").alias("high"),
-        F.col("d")[3].cast("double").alias("low"),
-        F.col("d")[4].cast("double").alias("close"),
-        F.col("d")[5].cast("double").alias("volume"),
-        "period",
-        F.lit(None).cast("double").alias("quote_volume"),
+    return emit(
+        base, schemas.CANDLESTICK_SCHEMA, EXCHANGE, "candlestick",
+        timestamp=ts,
+        json=item_json(),
+        begin_time=ts - _period_ms(F.col("period")),
+        open=F.col("d")[1].cast("double"),
+        high=F.col("d")[2].cast("double"),
+        low=F.col("d")[3].cast("double"),
+        close=F.col("d")[4].cast("double"),
+        volume=F.col("d")[5].cast("double"),
     )
-    return finalize(out, schemas.CANDLESTICK_SCHEMA)
 
 
 def _parse_candle_legacy(df: DataFrame) -> DataFrame:
@@ -529,28 +478,19 @@ def _parse_candle_legacy(df: DataFrame) -> DataFrame:
     base = with_contract_value(base)
     ts = F.col("d")[0].cast("long")
     is_inverse = F.col("market_type") == "inverse_swap"
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
-        F.lit("candlestick").alias("msg_type"),
-        ts.alias("timestamp"),
-        F.col("msg").alias("json"),
-        (ts - _period_ms(F.col("period"))).alias("begin_time"),
-        F.col("d")[1].cast("double").alias("open"),
-        F.col("d")[2].cast("double").alias("high"),
-        F.col("d")[3].cast("double").alias("low"),
-        F.col("d")[4].cast("double").alias("close"),
-        F.when(is_inverse, F.col("d")[6].cast("double"))
-        .otherwise(F.col("d")[5].cast("double") * F.col("cv"))
-        .alias("volume"),
-        "period",
-        F.when(is_inverse, F.col("d")[5].cast("double"))
-        .otherwise(F.col("d")[6].cast("double"))
-        .alias("quote_volume"),
+    return emit(
+        base, schemas.CANDLESTICK_SCHEMA, EXCHANGE, "candlestick",
+        timestamp=ts,
+        begin_time=ts - _period_ms(F.col("period")),
+        open=F.col("d")[1].cast("double"),
+        high=F.col("d")[2].cast("double"),
+        low=F.col("d")[3].cast("double"),
+        close=F.col("d")[4].cast("double"),
+        volume=F.when(is_inverse, F.col("d")[6].cast("double"))
+        .otherwise(F.col("d")[5].cast("double") * F.col("cv")),
+        quote_volume=F.when(is_inverse, F.col("d")[5].cast("double"))
+        .otherwise(F.col("d")[6].cast("double")),
     )
-    return finalize(out, schemas.CANDLESTICK_SCHEMA)
 
 
 def parse_l2_snapshot(df: DataFrame, symbol_col: str = "routed_symbol") -> DataFrame:
@@ -577,26 +517,13 @@ def parse_l2_snapshot(df: DataFrame, symbol_col: str = "routed_symbol") -> DataF
     def order(lv):
         price = lv.getItem(0).cast("double")
         qty = lv.getItem(1).cast("double")
-        q = quantity_triple(F.col("market_type"), price, qty, F.col("cv"))
-        return F.struct(
-            price.alias("price"),
-            q["quantity_base"].alias("quantity_base"),
-            q["quantity_quote"].alias("quantity_quote"),
-            q["quantity_contract"].alias("quantity_contract"),
-        )
+        return order_level(F.col("market_type"), price, qty, F.col("cv"))
 
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
-        F.lit("l2_snapshot").alias("msg_type"),
-        F.col("d.timestamp").cast("long").alias("timestamp"),
-        F.col("msg").alias("json"),
-        F.lit(True).alias("snapshot"),
-        F.transform(F.coalesce("d.asks", F.array()), order).alias("asks"),
-        F.transform(F.coalesce("d.bids", F.array()), order).alias("bids"),
-        F.lit(None).cast("long").alias("seq_id"),
-        F.lit(None).cast("long").alias("prev_seq_id"),
+    out = emit(
+        base, schemas.ORDERBOOK_SCHEMA, EXCHANGE, "l2_snapshot",
+        timestamp=F.col("d.timestamp").cast("long"),
+        snapshot=F.lit(True),
+        asks=F.transform(F.coalesce("d.asks", F.array()), order),
+        bids=F.transform(F.coalesce("d.bids", F.array()), order),
     )
-    return finalize(sort_book_sides(out), schemas.ORDERBOOK_SCHEMA)
+    return sort_book_sides(out)

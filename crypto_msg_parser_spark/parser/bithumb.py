@@ -15,7 +15,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from crypto_msg_parser_spark import schemas
-from crypto_msg_parser_spark.parser.common import finalize, parsed_once
+from crypto_msg_parser_spark.parser.common import (
+    emit,
+    item_json,
+    parsed_once,
+    sort_book_sides,
+    spot_level,
+)
 
 EXCHANGE = "bithumb"
 
@@ -59,24 +65,18 @@ def parse_trade(df: DataFrame) -> DataFrame:
     )
     price = F.col("d.p").cast("double")
     qty = F.col("d.v").cast("double")
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        F.col("d.symbol").alias("symbol"),
-        normalize_pair(F.col("d.symbol")).alias("pair"),
-        F.lit("trade").alias("msg_type"),
-        (F.col("d.t").cast("long") * 1000).alias("timestamp"),
-        F.when(F.col("n_items") == 1, F.col("msg"))
-        .otherwise(F.to_json("d"))
-        .alias("json"),
-        F.when(F.col("d.s") == "sell", "sell").otherwise("buy").alias("side"),
-        price.alias("price"),
-        qty.alias("quantity_base"),
-        (price * qty).alias("quantity_quote"),
-        F.lit(None).cast("double").alias("quantity_contract"),
-        F.col("d.ver").alias("trade_id"),
+    return emit(
+        base, schemas.TRADE_SCHEMA, EXCHANGE, "trade",
+        symbol=F.col("d.symbol"),
+        pair=normalize_pair(F.col("d.symbol")),
+        timestamp=F.col("d.t").cast("long") * 1000,
+        json=item_json(),
+        side=F.when(F.col("d.s") == "sell", "sell").otherwise("buy"),
+        price=price,
+        quantity_base=qty,
+        quantity_quote=price * qty,
+        trade_id=F.col("d.ver"),
     )
-    return finalize(out, schemas.TRADE_SCHEMA)
 
 
 _BOOK = (
@@ -99,31 +99,16 @@ def parse_l2(df: DataFrame) -> DataFrame:
     def order(lv):
         price = lv.getItem(0).cast("double")
         qty = lv.getItem(1).cast("double")
-        return F.struct(
-            price.alias("price"),
-            qty.alias("quantity_base"),
-            (price * qty).alias("quantity_quote"),
-            F.lit(None).cast("double").alias("quantity_contract"),
-        )
+        return spot_level(price, qty)
 
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        F.col("d.symbol").alias("symbol"),
-        normalize_pair(F.col("d.symbol")).alias("pair"),
-        F.lit("l2_event").alias("msg_type"),
-        F.get_json_object("msg", "$.timestamp").cast("long").alias("timestamp"),
-        F.col("msg").alias("json"),
-        "snapshot",
-        F.transform(F.coalesce("d.s", F.array()), order).alias("asks"),
-        F.transform(F.coalesce("d.b", F.array()), order).alias("bids"),
-        F.col("d.ver").try_cast("long").alias("seq_id"),
-        F.lit(None).cast("long").alias("prev_seq_id"),
+    out = emit(
+        base, schemas.ORDERBOOK_SCHEMA, EXCHANGE, "l2_event",
+        symbol=F.col("d.symbol"),
+        pair=normalize_pair(F.col("d.symbol")),
+        timestamp=F.get_json_object("msg", "$.timestamp").cast("long"),
+        asks=F.transform(F.coalesce("d.s", F.array()), order),
+        bids=F.transform(F.coalesce("d.b", F.array()), order),
+        seq_id=F.col("d.ver").try_cast("long"),
     )
-    # NOTE: the reference does NOT re-sort snapshot sides here (its central
-    # post-pass does); keep parity with the library-level parse_l2 by
-    # leaving order as-received — the engine's sort_book_sides runs in the
-    # central pipeline (api-level), mirroring lib.rs:148-161
-    from crypto_msg_parser_spark.parser.common import sort_book_sides
-
-    return finalize(sort_book_sides(out), schemas.ORDERBOOK_SCHEMA)
+    # the central snapshot sort of lib.rs:148-161
+    return sort_book_sides(out)

@@ -25,9 +25,11 @@ from crypto_msg_parser_spark import schemas
 from crypto_msg_parser_spark.functions.scalar import round9
 from crypto_msg_parser_spark.parser.common import (
     explode_with_count,
-    finalize,
     quantity_triple,
     sort_book_sides,
+    emit,
+    item_json,
+    order_level,
 )
 
 EXCHANGE = "bitmex"
@@ -198,24 +200,18 @@ def parse_trade(df: DataFrame) -> DataFrame:
         .transform(explode_with_count(arr))
         .withColumn("pair", normalize_pair(F.col("d.symbol")))
     )
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        F.col("d.symbol").alias("symbol"),
-        "pair",
-        F.lit("trade").alias("msg_type"),
-        _rfc3339_ms(F.col("d.timestamp")).alias("timestamp"),
-        F.when(F.col("n_items") == 1, F.col("msg"))
-        .otherwise(F.to_json("d"))
-        .alias("json"),
-        F.when(F.col("d.side") == "Sell", "sell").otherwise("buy").alias("side"),
-        F.col("d.price").alias("price"),
-        F.col("d.homeNotional").alias("quantity_base"),
-        F.col("d.foreignNotional").alias("quantity_quote"),
-        F.col("d.size").alias("quantity_contract"),
-        F.col("d.trdMatchID").alias("trade_id"),
+    return emit(
+        base, schemas.TRADE_SCHEMA, EXCHANGE, "trade",
+        symbol=F.col("d.symbol"),
+        timestamp=_rfc3339_ms(F.col("d.timestamp")),
+        json=item_json(),
+        side=F.when(F.col("d.side") == "Sell", "sell").otherwise("buy"),
+        price=F.col("d.price"),
+        quantity_base=F.col("d.homeNotional"),
+        quantity_quote=F.col("d.foreignNotional"),
+        quantity_contract=F.col("d.size"),
+        trade_id=F.col("d.trdMatchID"),
     )
-    return finalize(out, schemas.TRADE_SCHEMA)
 
 
 _FUNDING_ELEM = (
@@ -233,21 +229,14 @@ def parse_funding_rate(df: DataFrame) -> DataFrame:
         .transform(explode_with_count(arr))
         .withColumn("pair", normalize_pair(F.col("d.symbol")))
     )
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        F.col("d.symbol").alias("symbol"),
-        "pair",
-        F.lit("funding_rate").alias("msg_type"),
-        F.col("received_at").alias("timestamp"),
-        F.when(F.col("n_items") == 1, F.col("msg"))
-        .otherwise(F.to_json("d"))
-        .alias("json"),
-        F.col("d.fundingRate").alias("funding_rate"),
-        _rfc3339_ms(F.col("d.timestamp")).alias("funding_time"),
-        F.lit(None).cast("double").alias("estimated_rate"),
+    return emit(
+        base, schemas.FUNDING_RATE_SCHEMA, EXCHANGE, "funding_rate",
+        symbol=F.col("d.symbol"),
+        timestamp=F.col("received_at"),
+        json=item_json(),
+        funding_rate=F.col("d.fundingRate"),
+        funding_time=_rfc3339_ms(F.col("d.timestamp")),
     )
-    return finalize(out, schemas.FUNDING_RATE_SCHEMA)
 
 
 _L2_ELEM = (
@@ -293,13 +282,7 @@ def parse_l2(df: DataFrame) -> DataFrame:
             id_to_price(F.col("sym_index"), F.col("tick_size"), lv["id"]),
         )
         qty = F.coalesce(lv["size"], F.lit(0.0))
-        t = quantity_triple(F.col("market_type"), price, qty, F.col("cv"))
-        return F.struct(
-            price.alias("price"),
-            t["quantity_base"].alias("quantity_base"),
-            t["quantity_quote"].alias("quantity_quote"),
-            t["quantity_contract"].alias("quantity_contract"),
-        )
+        return order_level(F.col("market_type"), price, qty, F.col("cv"))
 
     asks = F.transform(
         F.filter(F.col("levels"), lambda x: x["side"] == "Sell"), to_order
@@ -307,21 +290,13 @@ def parse_l2(df: DataFrame) -> DataFrame:
     bids = F.transform(
         F.filter(F.col("levels"), lambda x: x["side"] == "Buy"), to_order
     )
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
-        F.lit("l2_event").alias("msg_type"),
-        F.coalesce(F.col("ts"), F.col("received_at")).alias("timestamp"),
-        F.col("msg").alias("json"),
-        "snapshot",
-        asks.alias("asks"),
-        bids.alias("bids"),
-        F.lit(None).cast("long").alias("seq_id"),
-        F.lit(None).cast("long").alias("prev_seq_id"),
+    out = emit(
+        base, schemas.ORDERBOOK_SCHEMA, EXCHANGE, "l2_event",
+        timestamp=F.coalesce(F.col("ts"), F.col("received_at")),
+        asks=asks,
+        bids=bids,
     )
-    return finalize(sort_book_sides(out), schemas.ORDERBOOK_SCHEMA)
+    return sort_book_sides(out)
 
 
 _BOOK10_ELEM = (
@@ -344,29 +319,16 @@ def parse_l2_topk(df: DataFrame) -> DataFrame:
     def to_order(lv):
         price = lv.getItem(0)
         qty = lv.getItem(1)
-        t = quantity_triple(F.col("market_type"), price, qty, F.col("cv"))
-        return F.struct(
-            price.alias("price"),
-            t["quantity_base"].alias("quantity_base"),
-            t["quantity_quote"].alias("quantity_quote"),
-            t["quantity_contract"].alias("quantity_contract"),
-        )
+        return order_level(F.col("market_type"), price, qty, F.col("cv"))
 
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
-        F.lit("l2_topk").alias("msg_type"),
-        _rfc3339_ms(F.col("d.timestamp")).alias("timestamp"),
-        F.col("msg").alias("json"),
-        F.lit(True).alias("snapshot"),
-        F.transform(F.coalesce(F.col("d.asks"), F.array()), to_order).alias("asks"),
-        F.transform(F.coalesce(F.col("d.bids"), F.array()), to_order).alias("bids"),
-        F.lit(None).cast("long").alias("seq_id"),
-        F.lit(None).cast("long").alias("prev_seq_id"),
+    out = emit(
+        base, schemas.ORDERBOOK_SCHEMA, EXCHANGE, "l2_topk",
+        timestamp=_rfc3339_ms(F.col("d.timestamp")),
+        snapshot=F.lit(True),
+        asks=F.transform(F.coalesce(F.col("d.asks"), F.array()), to_order),
+        bids=F.transform(F.coalesce(F.col("d.bids"), F.array()), to_order),
     )
-    return finalize(sort_book_sides(out), schemas.ORDERBOOK_SCHEMA)
+    return sort_book_sides(out)
 
 
 _BBO_ELEM = (
@@ -387,25 +349,18 @@ def parse_bbo(df: DataFrame) -> DataFrame:
     mt, cv = F.col("market_type"), F.col("cv")
     ask_t = quantity_triple(mt, F.col("d.askPrice"), F.col("d.askSize"), cv)
     bid_t = quantity_triple(mt, F.col("d.bidPrice"), F.col("d.bidSize"), cv)
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
-        F.lit("bbo").alias("msg_type"),
-        _rfc3339_ms(F.col("d.timestamp")).alias("timestamp"),
-        F.col("msg").alias("json"),
-        F.col("d.bidPrice").alias("bid_price"),
-        bid_t["quantity_base"].alias("bid_quantity_base"),
-        bid_t["quantity_quote"].alias("bid_quantity_quote"),
-        bid_t["quantity_contract"].alias("bid_quantity_contract"),
-        F.col("d.askPrice").alias("ask_price"),
-        ask_t["quantity_base"].alias("ask_quantity_base"),
-        ask_t["quantity_quote"].alias("ask_quantity_quote"),
-        ask_t["quantity_contract"].alias("ask_quantity_contract"),
-        F.lit(None).cast("long").alias("id"),
+    return emit(
+        base, schemas.BBO_SCHEMA, EXCHANGE, "bbo",
+        timestamp=_rfc3339_ms(F.col("d.timestamp")),
+        bid_price=F.col("d.bidPrice"),
+        bid_quantity_base=bid_t["quantity_base"],
+        bid_quantity_quote=bid_t["quantity_quote"],
+        bid_quantity_contract=bid_t["quantity_contract"],
+        ask_price=F.col("d.askPrice"),
+        ask_quantity_base=ask_t["quantity_base"],
+        ask_quantity_quote=ask_t["quantity_quote"],
+        ask_quantity_contract=ask_t["quantity_contract"],
     )
-    return finalize(out, schemas.BBO_SCHEMA)
 
 
 _CANDLE_ELEM = (
@@ -429,25 +384,17 @@ def parse_candlestick(df: DataFrame) -> DataFrame:
         .withColumn("pair", normalize_pair(F.col("symbol")))
     )
     ts = _rfc3339_ms(F.col("d.timestamp"))
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
-        F.lit("candlestick").alias("msg_type"),
-        ts.alias("timestamp"),
-        F.col("msg").alias("json"),
+    return emit(
+        base, schemas.CANDLESTICK_SCHEMA, EXCHANGE, "candlestick",
+        timestamp=ts,
         # reference quirk: bitmex begin_time stays in MILLISECONDS
         # (bitmex.rs:1015, unlike the seconds convention elsewhere)
-        (ts - F.col("minutes") * 60000).alias("begin_time"),
-        F.col("d.open").alias("open"),
-        F.col("d.high").alias("high"),
-        F.col("d.low").alias("low"),
-        F.col("d.close").alias("close"),
-        F.col("d.homeNotional").alias("volume"),
-        F.concat(F.col("minutes").cast("string"), F.lit("m")).alias("period"),
-        F.when(F.col("d.foreignNotional") > 0, F.col("d.foreignNotional")).alias(
-            "quote_volume"
-        ),
+        begin_time=ts - F.col("minutes") * 60000,
+        open=F.col("d.open"),
+        high=F.col("d.high"),
+        low=F.col("d.low"),
+        close=F.col("d.close"),
+        volume=F.col("d.homeNotional"),
+        period=F.concat(F.col("minutes").cast("string"), F.lit("m")),
+        quote_volume=F.when(F.col("d.foreignNotional") > 0, F.col("d.foreignNotional")),
     )
-    return finalize(out, schemas.CANDLESTICK_SCHEMA)

@@ -17,7 +17,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from crypto_msg_parser_spark import schemas
-from crypto_msg_parser_spark.parser.common import finalize, sort_book_sides, parsed_once
+from crypto_msg_parser_spark.parser.common import (
+    emit,
+    sort_book_sides,
+    parsed_once,
+    spot_level,
+)
 
 EXCHANGE = "bitstamp"
 
@@ -80,26 +85,19 @@ def parse_trade(df: DataFrame) -> DataFrame:
     )
     price = F.get_json_object("msg", "$.data.price").cast("double")
     qty = F.get_json_object("msg", "$.data.amount").cast("double")
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        normalize_pair(F.col("symbol")).alias("pair"),
-        F.lit("trade").alias("msg_type"),
-        F.floor(
+    return emit(
+        base, schemas.TRADE_SCHEMA, EXCHANGE, "trade",
+        pair=normalize_pair(F.col("symbol")),
+        timestamp=F.floor(
             F.get_json_object("msg", "$.data.microtimestamp").cast("long") / 1000
-        ).cast("long").alias("timestamp"),
-        F.col("msg").alias("json"),
-        F.when(F.get_json_object("msg", "$.data.type") == "1", "sell")
-        .otherwise("buy")
-        .alias("side"),
-        price.alias("price"),
-        qty.alias("quantity_base"),
-        (price * qty).alias("quantity_quote"),
-        F.lit(None).cast("double").alias("quantity_contract"),
-        F.get_json_object("msg", "$.data.id").alias("trade_id"),
+        ).cast("long"),
+        side=F.when(F.get_json_object("msg", "$.data.type") == "1", "sell")
+        .otherwise("buy"),
+        price=price,
+        quantity_base=qty,
+        quantity_quote=price * qty,
+        trade_id=F.get_json_object("msg", "$.data.id"),
     )
-    return finalize(out, schemas.TRADE_SCHEMA)
 
 
 def _parse_book(df: DataFrame) -> DataFrame:
@@ -121,30 +119,18 @@ def _parse_book(df: DataFrame) -> DataFrame:
     def order(lv):
         price = lv.getItem(0).cast("double")
         qty = lv.getItem(1).cast("double")
-        return F.struct(
-            price.alias("price"),
-            qty.alias("quantity_base"),
-            (price * qty).alias("quantity_quote"),
-            F.lit(None).cast("double").alias("quantity_contract"),
-        )
+        return spot_level(price, qty)
 
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        normalize_pair(F.col("symbol")).alias("pair"),
-        F.when(F.col("is_diff"), "l2_event").otherwise("l2_topk").alias("msg_type"),
-        F.floor(F.col("d.microtimestamp").cast("long") / 1000)
-        .cast("long")
-        .alias("timestamp"),
-        F.col("msg").alias("json"),
-        (~F.col("is_diff")).alias("snapshot"),
-        F.transform(F.coalesce("d.asks", F.array()), order).alias("asks"),
-        F.transform(F.coalesce("d.bids", F.array()), order).alias("bids"),
-        F.lit(None).cast("long").alias("seq_id"),
-        F.lit(None).cast("long").alias("prev_seq_id"),
+    out = emit(
+        base, schemas.ORDERBOOK_SCHEMA, EXCHANGE,
+        F.when(F.col("is_diff"), "l2_event").otherwise("l2_topk"),
+        pair=normalize_pair(F.col("symbol")),
+        timestamp=F.floor(F.col("d.microtimestamp").cast("long") / 1000).cast("long"),
+        snapshot=~F.col("is_diff"),
+        asks=F.transform(F.coalesce("d.asks", F.array()), order),
+        bids=F.transform(F.coalesce("d.bids", F.array()), order),
     )
-    return finalize(sort_book_sides(out), schemas.ORDERBOOK_SCHEMA)
+    return sort_book_sides(out)
 
 
 def parse_l2(df: DataFrame) -> DataFrame:

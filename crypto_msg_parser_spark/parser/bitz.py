@@ -15,7 +15,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from crypto_msg_parser_spark import schemas
-from crypto_msg_parser_spark.parser.common import finalize, parsed_once, explode_with_count
+from crypto_msg_parser_spark.parser.common import (
+    parsed_once,
+    explode_with_count,
+    emit,
+    item_json,
+)
 
 EXCHANGE = "bitz"
 
@@ -52,24 +57,16 @@ def parse_trade(df: DataFrame) -> DataFrame:
         F.col("d.id").isNotNull() & (F.col("d.id") != ""),
         F.col("d.id").cast("long"),
     ).otherwise(F.col("d.T") * 1000)
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
-        F.lit("trade").alias("msg_type"),
-        ts.alias("timestamp"),
-        F.when(F.col("n_items") == 1, F.col("msg"))
-        .otherwise(F.to_json("d"))
-        .alias("json"),
-        F.when(F.col("d.s") == "sell", "sell").otherwise("buy").alias("side"),
-        price.alias("price"),
-        qty.alias("quantity_base"),
-        (price * qty).alias("quantity_quote"),
-        F.lit(None).cast("double").alias("quantity_contract"),
-        ts.cast("string").alias("trade_id"),
+    return emit(
+        base, schemas.TRADE_SCHEMA, EXCHANGE, "trade",
+        timestamp=ts,
+        json=item_json(),
+        side=F.when(F.col("d.s") == "sell", "sell").otherwise("buy"),
+        price=price,
+        quantity_base=qty,
+        quantity_quote=price * qty,
+        trade_id=ts.cast("string"),
     )
-    return finalize(out, schemas.TRADE_SCHEMA)
 
 
 _BOOK = (
@@ -101,18 +98,10 @@ def parse_l2(df: DataFrame) -> DataFrame:
             F.lit(None).cast("double").alias("quantity_contract"),
         )
 
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
-        F.lit("l2_event").alias("msg_type"),
-        F.get_json_object("msg", "$.time").cast("long").alias("timestamp"),
-        F.col("msg").alias("json"),
-        F.lit(False).alias("snapshot"),
-        F.transform(F.coalesce("d.asks", F.array()), order).alias("asks"),
-        F.transform(F.coalesce("d.bids", F.array()), order).alias("bids"),
-        F.lit(None).cast("long").alias("seq_id"),
-        F.lit(None).cast("long").alias("prev_seq_id"),
+    return emit(
+        base, schemas.ORDERBOOK_SCHEMA, EXCHANGE, "l2_event",
+        timestamp=F.get_json_object("msg", "$.time").cast("long"),
+        snapshot=F.lit(False),
+        asks=F.transform(F.coalesce("d.asks", F.array()), order),
+        bids=F.transform(F.coalesce("d.bids", F.array()), order),
     )
-    return finalize(out, schemas.ORDERBOOK_SCHEMA)

@@ -20,9 +20,10 @@ from crypto_msg_parser_spark import schemas
 from crypto_msg_parser_spark.parser.common import (
     explode_with_count,
     INVERSE,
-    finalize,
-    quantity_triple,
     sort_book_sides,
+    emit,
+    item_json,
+    order_level,
 )
 
 EXCHANGE = "bybit"
@@ -124,24 +125,18 @@ def parse_trade(df: DataFrame) -> DataFrame:
     price = F.col("d.price").cast("double")
     size = F.col("d.size")
     is_inverse = F.col("market_type").isin(*INVERSE)
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        F.col("d.symbol").alias("symbol"),
-        "pair",
-        F.lit("trade").alias("msg_type"),
-        F.col("d.trade_time_ms").cast("long").alias("timestamp"),
-        F.when(F.col("n_items") == 1, F.col("msg"))
-        .otherwise(F.to_json("d"))
-        .alias("json"),
-        F.when(F.col("d.side") == "Sell", "sell").otherwise("buy").alias("side"),
-        price.alias("price"),
-        F.when(is_inverse, size / price).otherwise(size).alias("quantity_base"),
-        F.when(is_inverse, size).otherwise(price * size).alias("quantity_quote"),
-        size.alias("quantity_contract"),
-        F.col("d.trade_id").alias("trade_id"),
+    return emit(
+        base, schemas.TRADE_SCHEMA, EXCHANGE, "trade",
+        symbol=F.col("d.symbol"),
+        timestamp=F.col("d.trade_time_ms").cast("long"),
+        json=item_json(),
+        side=F.when(F.col("d.side") == "Sell", "sell").otherwise("buy"),
+        price=price,
+        quantity_base=F.when(is_inverse, size / price).otherwise(size),
+        quantity_quote=F.when(is_inverse, size).otherwise(price * size),
+        quantity_contract=size,
+        trade_id=F.col("d.trade_id"),
     )
-    return finalize(out, schemas.TRADE_SCHEMA)
 
 
 _ORDER = "struct<price:string, symbol:string, side:string, size:double>"
@@ -194,13 +189,7 @@ def parse_l2(df: DataFrame) -> DataFrame:
     def to_order(lv):
         price = lv["price"].cast("double")
         qty = F.coalesce(lv["size"], F.lit(0.0))
-        t = quantity_triple(F.col("market_type"), price, qty, F.lit(1.0))
-        return F.struct(
-            price.alias("price"),
-            t["quantity_base"].alias("quantity_base"),
-            t["quantity_quote"].alias("quantity_quote"),
-            t["quantity_contract"].alias("quantity_contract"),
-        )
+        return order_level(F.col("market_type"), price, qty, F.lit(1.0))
 
     asks = F.transform(
         F.filter(F.col("levels"), lambda x: x["side"] != "Buy"), to_order
@@ -208,21 +197,13 @@ def parse_l2(df: DataFrame) -> DataFrame:
     bids = F.transform(
         F.filter(F.col("levels"), lambda x: x["side"] == "Buy"), to_order
     )
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
-        F.lit("l2_event").alias("msg_type"),
-        F.col("ts").alias("timestamp"),
-        F.col("msg").alias("json"),
-        "snapshot",
-        asks.alias("asks"),
-        bids.alias("bids"),
-        F.lit(None).cast("long").alias("seq_id"),
-        F.lit(None).cast("long").alias("prev_seq_id"),
+    out = emit(
+        base, schemas.ORDERBOOK_SCHEMA, EXCHANGE, "l2_event",
+        timestamp=F.col("ts"),
+        asks=asks,
+        bids=bids,
     )
-    return finalize(sort_book_sides(out), schemas.ORDERBOOK_SCHEMA)
+    return sort_book_sides(out)
 
 
 _CANDLE_ELEM = (
@@ -248,27 +229,18 @@ def parse_candlestick(df: DataFrame) -> DataFrame:
     )
     is_inverse = F.col("market_type").isin(*INVERSE)
     topic_period = F.split("topic", "\\.").getItem(1)
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
-        F.lit("candlestick").alias("msg_type"),
-        (F.col("d.timestamp") / 1000).cast("long").alias("timestamp"),
-        F.when(F.col("n_items") == 1, F.col("msg"))
-        .otherwise(F.to_json("d"))
-        .alias("json"),
-        F.col("d.start").alias("begin_time"),
-        F.col("d.open").alias("open"),
-        F.col("d.high").alias("high"),
-        F.col("d.low").alias("low"),
-        F.col("d.close").alias("close"),
-        F.when(is_inverse, F.col("d.turnover").cast("double"))
-        .otherwise(F.col("d.volume").cast("double"))
-        .alias("volume"),
-        F.when(is_inverse, topic_period).otherwise(F.col("d.period")).alias("period"),
-        F.when(is_inverse, F.col("d.volume").cast("double"))
-        .otherwise(F.col("d.turnover").cast("double"))
-        .alias("quote_volume"),
+    return emit(
+        base, schemas.CANDLESTICK_SCHEMA, EXCHANGE, "candlestick",
+        timestamp=(F.col("d.timestamp") / 1000).cast("long"),
+        json=item_json(),
+        begin_time=F.col("d.start"),
+        open=F.col("d.open"),
+        high=F.col("d.high"),
+        low=F.col("d.low"),
+        close=F.col("d.close"),
+        volume=F.when(is_inverse, F.col("d.turnover").cast("double"))
+        .otherwise(F.col("d.volume").cast("double")),
+        period=F.when(is_inverse, topic_period).otherwise(F.col("d.period")),
+        quote_volume=F.when(is_inverse, F.col("d.volume").cast("double"))
+        .otherwise(F.col("d.turnover").cast("double")),
     )
-    return finalize(out, schemas.CANDLESTICK_SCHEMA)

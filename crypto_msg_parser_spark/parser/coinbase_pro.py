@@ -15,7 +15,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from crypto_msg_parser_spark import schemas
-from crypto_msg_parser_spark.parser.common import finalize, sort_book_sides
+from crypto_msg_parser_spark.parser.common import sort_book_sides, emit, spot_level
 
 EXCHANGE = "coinbase_pro"
 
@@ -75,24 +75,17 @@ def parse_trade(df: DataFrame) -> DataFrame:
     )
     price = F.get_json_object("msg", "$.price").cast("double")
     qty = F.get_json_object("msg", "$.size").cast("double")
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        normalize_pair(F.col("symbol")).alias("pair"),
-        F.lit("trade").alias("msg_type"),
-        _rfc3339_ms(F.get_json_object("msg", "$.time")).alias("timestamp"),
-        F.col("msg").alias("json"),
-        F.when(F.get_json_object("msg", "$.side") == "sell", "sell")
-        .otherwise("buy")
-        .alias("side"),
-        price.alias("price"),
-        qty.alias("quantity_base"),
-        (price * qty).alias("quantity_quote"),
-        F.lit(None).cast("double").alias("quantity_contract"),
-        F.get_json_object("msg", "$.trade_id").alias("trade_id"),
+    return emit(
+        base, schemas.TRADE_SCHEMA, EXCHANGE, "trade",
+        pair=normalize_pair(F.col("symbol")),
+        timestamp=_rfc3339_ms(F.get_json_object("msg", "$.time")),
+        side=F.when(F.get_json_object("msg", "$.side") == "sell", "sell")
+        .otherwise("buy"),
+        price=price,
+        quantity_base=qty,
+        quantity_quote=price * qty,
+        trade_id=F.get_json_object("msg", "$.trade_id"),
     )
-    return finalize(out, schemas.TRADE_SCHEMA)
 
 
 def parse_l2(df: DataFrame) -> DataFrame:
@@ -112,52 +105,34 @@ def parse_l2(df: DataFrame) -> DataFrame:
     def order2(lv):
         price = lv.getItem(0).cast("double")
         qty = lv.getItem(1).cast("double")
-        return F.struct(
-            price.alias("price"),
-            qty.alias("quantity_base"),
-            (price * qty).alias("quantity_quote"),
-            F.lit(None).cast("double").alias("quantity_contract"),
-        )
+        return spot_level(price, qty)
 
     def order3(lv):
         price = lv.getItem(1).cast("double")
         qty = lv.getItem(2).cast("double")
-        return F.struct(
-            price.alias("price"),
-            qty.alias("quantity_base"),
-            (price * qty).alias("quantity_quote"),
-            F.lit(None).cast("double").alias("quantity_contract"),
-        )
+        return spot_level(price, qty)
 
     base = df.filter(t.isin("snapshot", "l2update")).withColumn(
         "symbol", F.get_json_object("msg", "$.product_id")
     ).withColumn("snapshot", t == "snapshot")
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        normalize_pair(F.col("symbol")).alias("pair"),
-        F.lit("l2_event").alias("msg_type"),
-        F.when(F.col("snapshot"), F.col("received_at"))
-        .otherwise(_rfc3339_ms(F.get_json_object("msg", "$.time")))
-        .alias("timestamp"),
-        F.col("msg").alias("json"),
-        "snapshot",
-        F.when(F.col("snapshot"), F.transform(F.coalesce(snap_book, F.array()), order2))
-        .otherwise(
+    out = emit(
+        base, schemas.ORDERBOOK_SCHEMA, EXCHANGE, "l2_event",
+        pair=normalize_pair(F.col("symbol")),
+        timestamp=F.when(F.col("snapshot"), F.col("received_at"))
+        .otherwise(_rfc3339_ms(F.get_json_object("msg", "$.time"))),
+        asks=F.when(
+            F.col("snapshot"), F.transform(F.coalesce(snap_book, F.array()), order2)
+        ).otherwise(
             F.transform(
                 F.filter(changes, lambda x: x.getItem(0) == "sell"), order3
             )
-        )
-        .alias("asks"),
-        F.when(F.col("snapshot"), F.transform(F.coalesce(snap_bids, F.array()), order2))
-        .otherwise(
+        ),
+        bids=F.when(
+            F.col("snapshot"), F.transform(F.coalesce(snap_bids, F.array()), order2)
+        ).otherwise(
             F.transform(
                 F.filter(changes, lambda x: x.getItem(0) == "buy"), order3
             )
-        )
-        .alias("bids"),
-        F.lit(None).cast("long").alias("seq_id"),
-        F.lit(None).cast("long").alias("prev_seq_id"),
+        ),
     )
-    return finalize(sort_book_sides(out), schemas.ORDERBOOK_SCHEMA)
+    return sort_book_sides(out)

@@ -174,23 +174,92 @@ def sort_book_sides(df, snapshot_col: str = "snapshot"):
     snapshots, asks ascending / bids descending by price. Struct arrays sort
     lexicographically — price is the first field, so array_sort works."""
     is_snap = F.col(snapshot_col)
-    return df.withColumn(
-        "asks", F.when(is_snap, F.array_sort("asks")).otherwise(F.col("asks"))
-    ).withColumn(
-        "bids",
-        F.when(is_snap, F.reverse(F.array_sort("bids"))).otherwise(F.col("bids")),
-    )
+    sides = {
+        "asks": F.when(is_snap, F.array_sort("asks")).otherwise(F.col("asks")),
+        "bids": F.when(is_snap, F.reverse(F.array_sort("bids"))).otherwise(
+            F.col("bids")
+        ),
+    }
+    return df.select(*[sides.get(c, F.col(c)).alias(c) for c in df.columns])
 
 
-def finalize(df, schema):
-    """Project to the canonical column order of an output schema.
+def emit(df, schema, exchange, msg_type, **fields):
+    """Project ``df`` onto an output schema, in the schema's field order —
+    the engine twin of the reference's ``add_common_fields!``
+    (crypto-message/src/lib.rs:12-45): an arm supplies only what is
+    specific to it.
 
-    Primitive columns are cast to the declared type; nested array/struct
-    columns are selected as-built (casting would fight nullability flags)."""
-    cols = []
+    Each field of ``schema`` is
+      - ``exchange`` / ``msg_type``: a string becomes a literal, a Column
+        is used as given;
+      - any other field given as a keyword: that Column;
+      - ``json`` when not given: the raw ``msg``;
+      - a column of ``df`` with the field's name: passed through;
+      - otherwise NULL.
+    Primitive fields are cast to the declared type; nested array/struct
+    fields are selected as built (casting would fight nullability flags).
+
+    The casts sit in a second projection, which Catalyst collapses into
+    the first. Cast-and-alias in the building projection would shadow
+    the input's pass-through columns, and Spark resolves a reference to
+    such a name inside a lambda (``transform(levels, ...)``) to the
+    alias, not to the input column."""
+    unknown = set(fields) - set(schema.fieldNames())
+    if unknown:
+        raise ValueError(f"not fields of the output schema: {sorted(unknown)}")
+    given = {
+        "exchange": F.lit(exchange) if isinstance(exchange, str) else exchange,
+        "msg_type": F.lit(msg_type) if isinstance(msg_type, str) else msg_type,
+        "json": F.col("msg"),
+        **fields,
+    }
+    present = set(df.columns)
+    built, cast = [], []
     for f in schema.fields:
+        if f.name in given:
+            built.append(given[f.name].alias(f.name))
+        elif f.name in present:
+            built.append(F.col(f.name))
+        else:
+            built.append(F.lit(None).cast(f.dataType).alias(f.name))
         c = F.col(f.name)
         if f.dataType.typeName() not in ("array", "struct", "map"):
             c = c.cast(f.dataType)
-        cols.append(c.alias(f.name))
-    return df.select(*cols)
+        cast.append(c.alias(f.name))
+    return df.select(*built).select(*cast)
+
+
+def item_json() -> Column:
+    """json provenance of a fanned-out record ``d`` (``n_items`` records in
+    its message): the whole raw message when it held exactly one record
+    (byte-identical to the reference), else the element's canonical
+    ``to_json`` form — the reference re-serializes fan-out elements
+    through a HashMap, whose key order is not deterministic."""
+    return F.when(F.col("n_items") == 1, F.col("msg")).otherwise(F.to_json("d"))
+
+
+def order_level(
+    market_type: Column, price: Column, quantity: Column, contract_value: Column
+) -> Column:
+    """One orderbook level (schemas.ORDER_STRUCT) whose quantities come
+    from ``quantity_triple``."""
+    t = quantity_triple(market_type, price, quantity, contract_value)
+    return F.struct(
+        price.alias("price"),
+        t["quantity_base"].alias("quantity_base"),
+        t["quantity_quote"].alias("quantity_quote"),
+        t["quantity_contract"].alias("quantity_contract"),
+    )
+
+
+def spot_level(price: Column, quantity: Column) -> Column:
+    """One orderbook level with the un-rounded quote quantity
+    ``price * quantity`` and no contract quantity — the spot books whose
+    reference arms multiply without ``round9`` (unlike
+    ``quantity_triple``)."""
+    return F.struct(
+        price.alias("price"),
+        quantity.alias("quantity_base"),
+        (price * quantity).alias("quantity_quote"),
+        F.lit(None).cast("double").alias("quantity_contract"),
+    )

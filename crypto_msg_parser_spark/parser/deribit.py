@@ -22,9 +22,11 @@ from crypto_msg_parser_spark import schemas
 from crypto_msg_parser_spark.parser.common import (
     explode_with_count,
     parsed_once,
-    finalize,
     quantity_triple,
     sort_book_sides,
+    emit,
+    item_json,
+    order_level,
 )
 
 EXCHANGE = "deribit"
@@ -173,26 +175,18 @@ def parse_trade(df: DataFrame) -> DataFrame:
     q = quantity_triple(
         F.col("market_type"), F.col("d.price"), F.col("d.amount"), F.col("cv")
     )
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
-        F.lit("trade").alias("msg_type"),
-        F.col("d.timestamp").alias("timestamp"),
-        F.when(F.col("n_items") == 1, F.col("msg"))
-        .otherwise(F.to_json("d"))
-        .alias("json"),
-        F.when(F.col("d.direction") == "sell", "sell")
-        .otherwise("buy")
-        .alias("side"),
-        F.col("d.price").alias("price"),
-        q["quantity_base"].alias("quantity_base"),
-        q["quantity_quote"].alias("quantity_quote"),
-        q["quantity_contract"].alias("quantity_contract"),
-        F.col("d.trade_id").alias("trade_id"),
+    return emit(
+        base, schemas.TRADE_SCHEMA, EXCHANGE, "trade",
+        timestamp=F.col("d.timestamp"),
+        json=item_json(),
+        side=F.when(F.col("d.direction") == "sell", "sell")
+        .otherwise("buy"),
+        price=F.col("d.price"),
+        quantity_base=q["quantity_base"],
+        quantity_quote=q["quantity_quote"],
+        quantity_contract=q["quantity_contract"],
+        trade_id=F.col("d.trade_id"),
     )
-    return finalize(out, schemas.TRADE_SCHEMA)
 
 
 # ---------------------------------------------------------------- orderbooks
@@ -232,29 +226,18 @@ def _parse_l2_core(df: DataFrame) -> DataFrame:
         qty = F.when(F.size(lv) == 3, lv.getItem(2)).otherwise(
             lv.getItem(1)
         ).cast("double")
-        q = quantity_triple(F.col("market_type"), price, qty, F.col("cv"))
-        return F.struct(
-            price.alias("price"),
-            q["quantity_base"].alias("quantity_base"),
-            q["quantity_quote"].alias("quantity_quote"),
-            q["quantity_contract"].alias("quantity_contract"),
-        )
+        return order_level(F.col("market_type"), price, qty, F.col("cv"))
 
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
-        F.when(F.col("is_event"), "l2_event").otherwise("l2_topk").alias("msg_type"),
-        F.col("d.timestamp").alias("timestamp"),
-        F.col("msg").alias("json"),
-        "snapshot",
-        F.transform(F.coalesce("d.asks", F.array()), order).alias("asks"),
-        F.transform(F.coalesce("d.bids", F.array()), order).alias("bids"),
-        F.col("d.change_id").alias("seq_id"),
-        F.col("d.prev_change_id").alias("prev_seq_id"),
+    out = emit(
+        base, schemas.ORDERBOOK_SCHEMA, EXCHANGE,
+        F.when(F.col("is_event"), "l2_event").otherwise("l2_topk"),
+        timestamp=F.col("d.timestamp"),
+        asks=F.transform(F.coalesce("d.asks", F.array()), order),
+        bids=F.transform(F.coalesce("d.bids", F.array()), order),
+        seq_id=F.col("d.change_id"),
+        prev_seq_id=F.col("d.prev_change_id"),
     )
-    return finalize(sort_book_sides(out), schemas.ORDERBOOK_SCHEMA)
+    return sort_book_sides(out)
 
 
 def parse_l2(df: DataFrame) -> DataFrame:
@@ -284,25 +267,18 @@ def parse_bbo(df: DataFrame) -> DataFrame:
     bid_q = F.get_json_object("msg", "$.params.data.best_bid_amount").cast("double")
     aq = quantity_triple(F.col("market_type"), ask_p, ask_q, F.col("cv"))
     bq = quantity_triple(F.col("market_type"), bid_p, bid_q, F.col("cv"))
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
-        F.lit("bbo").alias("msg_type"),
-        F.get_json_object("msg", "$.params.data.timestamp").cast("long").alias("timestamp"),
-        F.col("msg").alias("json"),
-        bid_p.alias("bid_price"),
-        bq["quantity_base"].alias("bid_quantity_base"),
-        bq["quantity_quote"].alias("bid_quantity_quote"),
-        bq["quantity_contract"].alias("bid_quantity_contract"),
-        ask_p.alias("ask_price"),
-        aq["quantity_base"].alias("ask_quantity_base"),
-        aq["quantity_quote"].alias("ask_quantity_quote"),
-        aq["quantity_contract"].alias("ask_quantity_contract"),
-        F.lit(None).cast("long").alias("id"),
+    return emit(
+        base, schemas.BBO_SCHEMA, EXCHANGE, "bbo",
+        timestamp=F.get_json_object("msg", "$.params.data.timestamp").cast("long"),
+        bid_price=bid_p,
+        bid_quantity_base=bq["quantity_base"],
+        bid_quantity_quote=bq["quantity_quote"],
+        bid_quantity_contract=bq["quantity_contract"],
+        ask_price=ask_p,
+        ask_quantity_base=aq["quantity_base"],
+        ask_quantity_quote=aq["quantity_quote"],
+        ask_quantity_contract=aq["quantity_contract"],
     )
-    return finalize(out, schemas.BBO_SCHEMA)
 
 
 # ---------------------------------------------------------------- candles
@@ -324,21 +300,14 @@ def parse_candlestick(df: DataFrame) -> DataFrame:
         .withColumn("minutes", minutes)
     )
     tick = F.get_json_object("msg", "$.params.data.tick").cast("long")
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
-        F.lit("candlestick").alias("msg_type"),
-        tick.alias("timestamp"),
-        F.col("msg").alias("json"),
-        (tick - F.col("minutes") * 60000).alias("begin_time"),
-        F.get_json_object("msg", "$.params.data.open").cast("double").alias("open"),
-        F.get_json_object("msg", "$.params.data.high").cast("double").alias("high"),
-        F.get_json_object("msg", "$.params.data.low").cast("double").alias("low"),
-        F.get_json_object("msg", "$.params.data.close").cast("double").alias("close"),
-        F.get_json_object("msg", "$.params.data.volume").cast("double").alias("volume"),
-        "period",
-        F.get_json_object("msg", "$.params.data.cost").cast("double").alias("quote_volume"),
+    return emit(
+        base, schemas.CANDLESTICK_SCHEMA, EXCHANGE, "candlestick",
+        timestamp=tick,
+        begin_time=tick - F.col("minutes") * 60000,
+        open=F.get_json_object("msg", "$.params.data.open").cast("double"),
+        high=F.get_json_object("msg", "$.params.data.high").cast("double"),
+        low=F.get_json_object("msg", "$.params.data.low").cast("double"),
+        close=F.get_json_object("msg", "$.params.data.close").cast("double"),
+        volume=F.get_json_object("msg", "$.params.data.volume").cast("double"),
+        quote_volume=F.get_json_object("msg", "$.params.data.cost").cast("double"),
     )
-    return finalize(out, schemas.CANDLESTICK_SCHEMA)

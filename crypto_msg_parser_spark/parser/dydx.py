@@ -15,7 +15,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from crypto_msg_parser_spark import schemas
-from crypto_msg_parser_spark.parser.common import finalize, sort_book_sides, explode_with_count
+from crypto_msg_parser_spark.parser.common import (
+    sort_book_sides,
+    explode_with_count,
+    emit,
+    item_json,
+)
 
 EXCHANGE = "dydx"
 
@@ -84,24 +89,17 @@ def parse_trade(df: DataFrame) -> DataFrame:
     price = F.col("d.price").cast("double")
     size = F.col("d.size").cast("double")
     ts = _rfc3339_ms(F.col("d.createdAt"))
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
-        F.lit("trade").alias("msg_type"),
-        ts.alias("timestamp"),
-        F.when(F.col("n_items") == 1, F.col("msg"))
-        .otherwise(F.to_json("d"))
-        .alias("json"),
-        F.when(F.col("d.side") == "SELL", "sell").otherwise("buy").alias("side"),
-        price.alias("price"),
-        size.alias("quantity_base"),
-        (price * size).alias("quantity_quote"),
-        size.alias("quantity_contract"),
-        ts.cast("string").alias("trade_id"),  # dydx_swap.rs:132
+    return emit(
+        base, schemas.TRADE_SCHEMA, EXCHANGE, "trade",
+        timestamp=ts,
+        json=item_json(),
+        side=F.when(F.col("d.side") == "SELL", "sell").otherwise("buy"),
+        price=price,
+        quantity_base=size,
+        quantity_quote=price * size,
+        quantity_contract=size,
+        trade_id=ts.cast("string"),  # dydx_swap.rs:132
     )
-    return finalize(out, schemas.TRADE_SCHEMA)
 
 
 _SNAP = (
@@ -146,28 +144,18 @@ def parse_l2(df: DataFrame) -> DataFrame:
             size.alias("quantity_contract"),
         )
 
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
-        F.lit("l2_event").alias("msg_type"),
-        F.col("received_at").alias("timestamp"),
-        F.col("msg").alias("json"),
-        "snapshot",
-        F.when(
+    out = emit(
+        base, schemas.ORDERBOOK_SCHEMA, EXCHANGE, "l2_event",
+        timestamp=F.col("received_at"),
+        asks=F.when(
             F.col("snapshot"),
             F.transform(F.coalesce(snap["asks"], F.array()), snap_order),
         )
-        .otherwise(F.transform(F.coalesce(upd["asks"], F.array()), upd_order))
-        .alias("asks"),
-        F.when(
+        .otherwise(F.transform(F.coalesce(upd["asks"], F.array()), upd_order)),
+        bids=F.when(
             F.col("snapshot"),
             F.transform(F.coalesce(snap["bids"], F.array()), snap_order),
         )
-        .otherwise(F.transform(F.coalesce(upd["bids"], F.array()), upd_order))
-        .alias("bids"),
-        F.lit(None).cast("long").alias("seq_id"),
-        F.lit(None).cast("long").alias("prev_seq_id"),
+        .otherwise(F.transform(F.coalesce(upd["bids"], F.array()), upd_order)),
     )
-    return finalize(sort_book_sides(out), schemas.ORDERBOOK_SCHEMA)
+    return sort_book_sides(out)

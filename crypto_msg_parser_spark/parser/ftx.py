@@ -18,9 +18,11 @@ from crypto_msg_parser_spark import schemas
 from crypto_msg_parser_spark.parser.common import (
     explode_with_count,
     parsed_once,
-    finalize,
     quantity_triple,
     sort_book_sides,
+    emit,
+    item_json,
+    order_level,
 )
 
 EXCHANGE = "ftx"
@@ -128,24 +130,17 @@ def parse_trade(df: DataFrame) -> DataFrame:
     q = quantity_triple(
         F.col("market_type"), F.col("d.price"), F.col("d.size"), F.lit(1.0)
     )
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
-        F.lit("trade").alias("msg_type"),
-        _rfc3339_ms(F.col("d.time")).alias("timestamp"),
-        F.when(F.col("n_items") == 1, F.col("msg"))
-        .otherwise(F.to_json("d"))
-        .alias("json"),
-        F.when(F.col("d.side") == "sell", "sell").otherwise("buy").alias("side"),
-        F.col("d.price").alias("price"),
-        q["quantity_base"].alias("quantity_base"),
-        q["quantity_quote"].alias("quantity_quote"),
-        q["quantity_contract"].alias("quantity_contract"),
-        F.col("d.id").cast("string").alias("trade_id"),
+    return emit(
+        base, schemas.TRADE_SCHEMA, EXCHANGE, "trade",
+        timestamp=_rfc3339_ms(F.col("d.time")),
+        json=item_json(),
+        side=F.when(F.col("d.side") == "sell", "sell").otherwise("buy"),
+        price=F.col("d.price"),
+        quantity_base=q["quantity_base"],
+        quantity_quote=q["quantity_quote"],
+        quantity_contract=q["quantity_contract"],
+        trade_id=F.col("d.id").cast("string"),
     )
-    return finalize(out, schemas.TRADE_SCHEMA)
 
 
 # ---------------------------------------------------------------- orderbooks
@@ -169,29 +164,15 @@ def parse_l2(df: DataFrame) -> DataFrame:
     def order(lv):
         price = lv.getItem(0)
         qty = lv.getItem(1)
-        q = quantity_triple(F.col("market_type"), price, qty, F.lit(1.0))
-        return F.struct(
-            price.alias("price"),
-            q["quantity_base"].alias("quantity_base"),
-            q["quantity_quote"].alias("quantity_quote"),
-            q["quantity_contract"].alias("quantity_contract"),
-        )
+        return order_level(F.col("market_type"), price, qty, F.lit(1.0))
 
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
-        F.lit("l2_event").alias("msg_type"),
-        (F.col("d.time") * 1000).cast("long").alias("timestamp"),
-        F.col("msg").alias("json"),
-        "snapshot",
-        F.transform(F.coalesce("d.asks", F.array()), order).alias("asks"),
-        F.transform(F.coalesce("d.bids", F.array()), order).alias("bids"),
-        F.lit(None).cast("long").alias("seq_id"),
-        F.lit(None).cast("long").alias("prev_seq_id"),
+    out = emit(
+        base, schemas.ORDERBOOK_SCHEMA, EXCHANGE, "l2_event",
+        timestamp=(F.col("d.time") * 1000).cast("long"),
+        asks=F.transform(F.coalesce("d.asks", F.array()), order),
+        bids=F.transform(F.coalesce("d.bids", F.array()), order),
     )
-    return finalize(sort_book_sides(out), schemas.ORDERBOOK_SCHEMA)
+    return sort_book_sides(out)
 
 
 # ---------------------------------------------------------------- bbo
@@ -209,24 +190,16 @@ def parse_bbo(df: DataFrame) -> DataFrame:
     bid_q = F.get_json_object("msg", "$.data.bidSize").cast("double")
     aq = quantity_triple(F.col("market_type"), ask_p, ask_q, F.lit(1.0))
     bq = quantity_triple(F.col("market_type"), bid_p, bid_q, F.lit(1.0))
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
-        F.lit("bbo").alias("msg_type"),
-        (F.get_json_object("msg", "$.data.time").cast("double") * 1000)
-        .cast("long")
-        .alias("timestamp"),
-        F.col("msg").alias("json"),
-        bid_p.alias("bid_price"),
-        bq["quantity_base"].alias("bid_quantity_base"),
-        bq["quantity_quote"].alias("bid_quantity_quote"),
-        bq["quantity_contract"].alias("bid_quantity_contract"),
-        ask_p.alias("ask_price"),
-        aq["quantity_base"].alias("ask_quantity_base"),
-        aq["quantity_quote"].alias("ask_quantity_quote"),
-        aq["quantity_contract"].alias("ask_quantity_contract"),
-        F.lit(None).cast("long").alias("id"),
+    return emit(
+        base, schemas.BBO_SCHEMA, EXCHANGE, "bbo",
+        timestamp=(F.get_json_object("msg", "$.data.time").cast("double") * 1000)
+        .cast("long"),
+        bid_price=bid_p,
+        bid_quantity_base=bq["quantity_base"],
+        bid_quantity_quote=bq["quantity_quote"],
+        bid_quantity_contract=bq["quantity_contract"],
+        ask_price=ask_p,
+        ask_quantity_base=aq["quantity_base"],
+        ask_quantity_quote=aq["quantity_quote"],
+        ask_quantity_contract=aq["quantity_contract"],
     )
-    return finalize(out, schemas.BBO_SCHEMA)

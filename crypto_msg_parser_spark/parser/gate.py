@@ -37,11 +37,13 @@ from crypto_msg_parser_spark.parser.common import (
     parsed_once,
     INVERSE,
     LINEAR_FUTURE,
-    LINEAR_SWAP,
     SPOT,
-    finalize,
     quantity_triple,
     sort_book_sides,
+    emit,
+    item_json,
+    order_level,
+    spot_level,
 )
 
 EXCHANGE = "gate"
@@ -261,24 +263,16 @@ def _parse_trade_spot_legacy(df: DataFrame) -> DataFrame:
     )
     price = F.col("d.price").cast("double")
     qty = F.col("d.amount").cast("double")
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
-        F.lit("trade").alias("msg_type"),
-        (F.col("d.time") * 1000).cast("long").alias("timestamp"),
-        F.when(F.col("n_items") == 1, F.col("msg"))
-        .otherwise(F.to_json("d"))
-        .alias("json"),
-        F.when(F.col("d.type") == "sell", "sell").otherwise("buy").alias("side"),
-        price.alias("price"),
-        qty.alias("quantity_base"),
-        (price * qty).alias("quantity_quote"),
-        F.lit(None).cast("double").alias("quantity_contract"),
-        F.col("d.id").cast("string").alias("trade_id"),
+    return emit(
+        base, schemas.TRADE_SCHEMA, EXCHANGE, "trade",
+        timestamp=(F.col("d.time") * 1000).cast("long"),
+        json=item_json(),
+        side=F.when(F.col("d.type") == "sell", "sell").otherwise("buy"),
+        price=price,
+        quantity_base=qty,
+        quantity_quote=price * qty,
+        trade_id=F.col("d.id").cast("string"),
     )
-    return finalize(out, schemas.TRADE_SCHEMA)
 
 
 def _parse_trade_spot_current(df: DataFrame) -> DataFrame:
@@ -298,22 +292,17 @@ def _parse_trade_spot_current(df: DataFrame) -> DataFrame:
     )
     price = F.col("d.price").cast("double")
     qty = F.col("d.amount").cast("double")
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        F.col("d.currency_pair").alias("symbol"),
-        normalize_pair(F.col("d.currency_pair")).alias("pair"),
-        F.lit("trade").alias("msg_type"),
-        F.col("d.create_time_ms").cast("double").cast("long").alias("timestamp"),
-        F.col("msg").alias("json"),
-        F.when(F.col("d.side") == "sell", "sell").otherwise("buy").alias("side"),
-        price.alias("price"),
-        qty.alias("quantity_base"),
-        (price * qty).alias("quantity_quote"),
-        F.lit(None).cast("double").alias("quantity_contract"),
-        F.col("d.id").cast("string").alias("trade_id"),
+    return emit(
+        base, schemas.TRADE_SCHEMA, EXCHANGE, "trade",
+        symbol=F.col("d.currency_pair"),
+        pair=normalize_pair(F.col("d.currency_pair")),
+        timestamp=F.col("d.create_time_ms").cast("double").cast("long"),
+        side=F.when(F.col("d.side") == "sell", "sell").otherwise("buy"),
+        price=price,
+        quantity_base=qty,
+        quantity_quote=price * qty,
+        trade_id=F.col("d.id").cast("string"),
     )
-    return finalize(out, schemas.TRADE_SCHEMA)
 
 
 def _parse_trade_deriv(df: DataFrame) -> DataFrame:
@@ -336,24 +325,17 @@ def _parse_trade_deriv(df: DataFrame) -> DataFrame:
     ts = F.when(
         F.col("market_type").isin(*_FUTURES), F.col("d.create_time") * 1000
     ).otherwise(F.col("d.create_time_ms"))
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
-        F.lit("trade").alias("msg_type"),
-        ts.cast("long").alias("timestamp"),
-        F.when(F.col("n_items") == 1, F.col("msg"))
-        .otherwise(F.to_json("d"))
-        .alias("json"),
-        F.when(F.col("d.size") < 0, "sell").otherwise("buy").alias("side"),
-        price.alias("price"),
-        q["quantity_base"].alias("quantity_base"),
-        q["quantity_quote"].alias("quantity_quote"),
-        q["quantity_contract"].alias("quantity_contract"),
-        F.col("d.id").cast("string").alias("trade_id"),
+    return emit(
+        base, schemas.TRADE_SCHEMA, EXCHANGE, "trade",
+        timestamp=ts.cast("long"),
+        json=item_json(),
+        side=F.when(F.col("d.size") < 0, "sell").otherwise("buy"),
+        price=price,
+        quantity_base=q["quantity_base"],
+        quantity_quote=q["quantity_quote"],
+        quantity_contract=q["quantity_contract"],
+        trade_id=F.col("d.id").cast("string"),
     )
-    return finalize(out, schemas.TRADE_SCHEMA)
 
 
 # ---------------------------------------------------------------- orderbooks
@@ -381,25 +363,14 @@ _SWAP_SNAP = (
 def _spot_order(lv):
     price = lv.getItem(0).cast("double")
     qty = lv.getItem(1).cast("double")
-    return F.struct(
-        price.alias("price"),
-        qty.alias("quantity_base"),
-        (price * qty).alias("quantity_quote"),
-        F.lit(None).cast("double").alias("quantity_contract"),
-    )
+    return spot_level(price, qty)
 
 
 def _deriv_order(market_type, cv):
     def mk(lv):
         price = lv["p"].cast("double")
         qty = F.abs(lv["s"])
-        q = quantity_triple(market_type, price, qty, cv)
-        return F.struct(
-            price.alias("price"),
-            q["quantity_base"].alias("quantity_base"),
-            q["quantity_quote"].alias("quantity_quote"),
-            q["quantity_contract"].alias("quantity_contract"),
-        )
+        return order_level(market_type, price, qty, cv)
 
     return mk
 
@@ -448,21 +419,13 @@ def _parse_l2_spot_legacy(df: DataFrame) -> DataFrame:
         .withColumn("snapshot", F.get_json_object("msg", "$.params[0]") == "true")
         .withColumn("book", book)
     )
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
-        F.lit("l2_event").alias("msg_type"),
-        F.col("received_at").alias("timestamp"),
-        F.col("msg").alias("json"),
-        "snapshot",
-        F.transform(F.coalesce("book.asks", F.array()), _spot_order).alias("asks"),
-        F.transform(F.coalesce("book.bids", F.array()), _spot_order).alias("bids"),
-        F.lit(None).cast("long").alias("seq_id"),
-        F.lit(None).cast("long").alias("prev_seq_id"),
+    out = emit(
+        base, schemas.ORDERBOOK_SCHEMA, EXCHANGE, "l2_event",
+        timestamp=F.col("received_at"),
+        asks=F.transform(F.coalesce("book.asks", F.array()), _spot_order),
+        bids=F.transform(F.coalesce("book.bids", F.array()), _spot_order),
     )
-    return finalize(sort_book_sides(out), schemas.ORDERBOOK_SCHEMA)
+    return sort_book_sides(out)
 
 
 def _parse_l2_spot_current(df: DataFrame) -> DataFrame:
@@ -475,21 +438,15 @@ def _parse_l2_spot_current(df: DataFrame) -> DataFrame:
         .withColumn("pair", normalize_pair(F.col("symbol")))
         .withColumn("snapshot", F.get_json_object("msg", "$.event") == "all")
     )
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
-        F.lit("l2_event").alias("msg_type"),
-        F.col("d.t").alias("timestamp"),
-        F.col("msg").alias("json"),
-        "snapshot",
-        F.transform(F.coalesce("d.a", F.array()), _spot_order).alias("asks"),
-        F.transform(F.coalesce("d.b", F.array()), _spot_order).alias("bids"),
-        F.col("d.u").alias("seq_id"),
-        (F.col("d.U") - 1).alias("prev_seq_id"),
+    out = emit(
+        base, schemas.ORDERBOOK_SCHEMA, EXCHANGE, "l2_event",
+        timestamp=F.col("d.t"),
+        asks=F.transform(F.coalesce("d.a", F.array()), _spot_order),
+        bids=F.transform(F.coalesce("d.b", F.array()), _spot_order),
+        seq_id=F.col("d.u"),
+        prev_seq_id=F.col("d.U") - 1,
     )
-    return finalize(sort_book_sides(out), schemas.ORDERBOOK_SCHEMA)
+    return sort_book_sides(out)
 
 
 def _parse_l2_topk_spot(df: DataFrame) -> DataFrame:
@@ -501,21 +458,15 @@ def _parse_l2_topk_spot(df: DataFrame) -> DataFrame:
         .withColumn("symbol", F.col("d.s"))
         .withColumn("pair", normalize_pair(F.col("symbol")))
     )
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
-        F.lit("l2_topk").alias("msg_type"),
-        F.col("d.t").alias("timestamp"),
-        F.col("msg").alias("json"),
-        F.lit(True).alias("snapshot"),
-        F.transform(F.coalesce("d.asks", F.array()), _spot_order).alias("asks"),
-        F.transform(F.coalesce("d.bids", F.array()), _spot_order).alias("bids"),
-        F.col("d.lastUpdateId").alias("seq_id"),
-        F.lit(None).cast("long").alias("prev_seq_id"),
+    out = emit(
+        base, schemas.ORDERBOOK_SCHEMA, EXCHANGE, "l2_topk",
+        timestamp=F.col("d.t"),
+        snapshot=F.lit(True),
+        asks=F.transform(F.coalesce("d.asks", F.array()), _spot_order),
+        bids=F.transform(F.coalesce("d.bids", F.array()), _spot_order),
+        seq_id=F.col("d.lastUpdateId"),
     )
-    return finalize(sort_book_sides(out), schemas.ORDERBOOK_SCHEMA)
+    return sort_book_sides(out)
 
 
 def _parse_l2_swap_update(df: DataFrame) -> DataFrame:
@@ -530,21 +481,15 @@ def _parse_l2_swap_update(df: DataFrame) -> DataFrame:
     )
     base = with_contract_value(base)
     mk = _deriv_order(F.col("market_type"), F.col("cv"))
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
-        F.lit("l2_event").alias("msg_type"),
-        F.col("d.t").alias("timestamp"),
-        F.col("msg").alias("json"),
-        "snapshot",
-        F.transform(F.coalesce("d.a", F.array()), mk).alias("asks"),
-        F.transform(F.coalesce("d.b", F.array()), mk).alias("bids"),
-        F.col("d.u").alias("seq_id"),
-        (F.col("d.U") - 1).alias("prev_seq_id"),
+    out = emit(
+        base, schemas.ORDERBOOK_SCHEMA, EXCHANGE, "l2_event",
+        timestamp=F.col("d.t"),
+        asks=F.transform(F.coalesce("d.a", F.array()), mk),
+        bids=F.transform(F.coalesce("d.b", F.array()), mk),
+        seq_id=F.col("d.u"),
+        prev_seq_id=F.col("d.U") - 1,
     )
-    return finalize(sort_book_sides(out), schemas.ORDERBOOK_SCHEMA)
+    return sort_book_sides(out)
 
 
 def _parse_futures_snapshot(df: DataFrame) -> DataFrame:
@@ -562,23 +507,17 @@ def _parse_futures_snapshot(df: DataFrame) -> DataFrame:
         F.col("market_type") == LINEAR_FUTURE,
         F.get_json_object("msg", "$.time").cast("long") * 1000,
     ).otherwise(F.col("d.t"))
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
+    out = emit(
+        base, schemas.ORDERBOOK_SCHEMA, EXCHANGE,
         F.when(F.col("market_type").isin(*_SWAPS), "l2_topk")
-        .otherwise("l2_event")
-        .alias("msg_type"),
-        ts.alias("timestamp"),
-        F.col("msg").alias("json"),
-        F.lit(True).alias("snapshot"),
-        F.transform(F.coalesce("d.asks", F.array()), mk).alias("asks"),
-        F.transform(F.coalesce("d.bids", F.array()), mk).alias("bids"),
-        F.col("d.id").alias("seq_id"),
-        F.lit(None).cast("long").alias("prev_seq_id"),
+        .otherwise("l2_event"),
+        timestamp=ts,
+        snapshot=F.lit(True),
+        asks=F.transform(F.coalesce("d.asks", F.array()), mk),
+        bids=F.transform(F.coalesce("d.bids", F.array()), mk),
+        seq_id=F.col("d.id"),
     )
-    return finalize(sort_book_sides(out), schemas.ORDERBOOK_SCHEMA)
+    return sort_book_sides(out)
 
 
 def _round9_py(x: float) -> float:
@@ -738,25 +677,18 @@ def parse_bbo(df: DataFrame) -> DataFrame:
         else:
             aq = quantity_triple(F.col("market_type"), ask_p, ask_q, F.col("cv"))
             bq = quantity_triple(F.col("market_type"), bid_p, bid_q, F.col("cv"))
-        out = base.select(
-            F.lit(EXCHANGE).alias("exchange"),
-            "market_type",
-            "symbol",
-            "pair",
-            F.lit("bbo").alias("msg_type"),
-            F.col("d.t").alias("timestamp"),
-            F.col("msg").alias("json"),
-            bid_p.alias("bid_price"),
-            bq["quantity_base"].alias("bid_quantity_base"),
-            bq["quantity_quote"].alias("bid_quantity_quote"),
-            bq["quantity_contract"].alias("bid_quantity_contract"),
-            ask_p.alias("ask_price"),
-            aq["quantity_base"].alias("ask_quantity_base"),
-            aq["quantity_quote"].alias("ask_quantity_quote"),
-            aq["quantity_contract"].alias("ask_quantity_contract"),
-            F.lit(None).cast("long").alias("id"),
+        return emit(
+            base, schemas.BBO_SCHEMA, EXCHANGE, "bbo",
+            timestamp=F.col("d.t"),
+            bid_price=bid_p,
+            bid_quantity_base=bq["quantity_base"],
+            bid_quantity_quote=bq["quantity_quote"],
+            bid_quantity_contract=bq["quantity_contract"],
+            ask_price=ask_p,
+            ask_quantity_base=aq["quantity_base"],
+            ask_quantity_quote=aq["quantity_quote"],
+            ask_quantity_contract=aq["quantity_contract"],
         )
-        return finalize(out, schemas.BBO_SCHEMA)
 
     return project(spot, True).unionByName(project(deriv, False))
 
@@ -785,24 +717,20 @@ def parse_candlestick(df: DataFrame) -> DataFrame:
         .transform(parsed_once(F.from_json(F.get_json_object("msg", "$.result"), _SPOT_CANDLE)))
         .withColumn("n_items", F.lit(1))
     )
-    spot_out = spot.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        _n_suffix(F.col("d.n")).alias("symbol"),
-        normalize_pair(_n_suffix(F.col("d.n"))).alias("pair"),
-        F.lit("candlestick").alias("msg_type"),
-        (F.get_json_object("msg", "$.time").cast("long") * 1000).alias("timestamp"),
-        F.col("msg").alias("json"),
-        F.col("d.t").cast("long").alias("begin_time"),
-        F.col("d.o").cast("double").alias("open"),
-        F.col("d.h").cast("double").alias("high"),
-        F.col("d.l").cast("double").alias("low"),
-        F.col("d.c").cast("double").alias("close"),
-        F.col("d.a").cast("double").alias("volume"),
-        F.regexp_extract(F.col("d.n"), "^([^_]*)_", 1).alias("period"),
-        F.col("d.v").cast("double").alias("quote_volume"),
+    spot_out = emit(
+        spot, schemas.CANDLESTICK_SCHEMA, EXCHANGE, "candlestick",
+        symbol=_n_suffix(F.col("d.n")),
+        pair=normalize_pair(_n_suffix(F.col("d.n"))),
+        timestamp=F.get_json_object("msg", "$.time").cast("long") * 1000,
+        begin_time=F.col("d.t").cast("long"),
+        open=F.col("d.o").cast("double"),
+        high=F.col("d.h").cast("double"),
+        low=F.col("d.l").cast("double"),
+        close=F.col("d.c").cast("double"),
+        volume=F.col("d.a").cast("double"),
+        period=F.regexp_extract(F.col("d.n"), "^([^_]*)_", 1),
+        quote_volume=F.col("d.v").cast("double"),
     )
-    spot_out = finalize(spot_out, schemas.CANDLESTICK_SCHEMA)
 
     arr = F.from_json(F.get_json_object("msg", "$.result"), _SWAP_CANDLE)
     deriv = (
@@ -822,26 +750,18 @@ def parse_candlestick(df: DataFrame) -> DataFrame:
     is_inverse = F.col("market_type").isin(*INVERSE)
     quote_vol = F.col("d.v") * F.col("cv")
     avg_price = (o + h + low + c) / 4
-    deriv_out = deriv.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
-        F.lit("candlestick").alias("msg_type"),
-        (F.get_json_object("msg", "$.time").cast("long") * 1000).alias("timestamp"),
-        F.col("msg").alias("json"),  # whole msg even on fan-out (gate_swap.rs:570)
-        F.col("d.t").alias("begin_time"),
-        o.alias("open"),
-        h.alias("high"),
-        low.alias("low"),
-        c.alias("close"),
-        F.when(is_inverse, quote_vol / avg_price)
-        .otherwise(quote_vol)
-        .alias("volume"),
-        F.regexp_extract(F.col("d.n"), "^([^_]*)_", 1).alias("period"),
-        F.when(is_inverse, quote_vol)
-        .otherwise(F.lit(None).cast("double"))
-        .alias("quote_volume"),
+    # json: the whole msg even on fan-out (gate_swap.rs:570)
+    deriv_out = emit(
+        deriv, schemas.CANDLESTICK_SCHEMA, EXCHANGE, "candlestick",
+        timestamp=F.get_json_object("msg", "$.time").cast("long") * 1000,
+        begin_time=F.col("d.t"),
+        open=o,
+        high=h,
+        low=low,
+        close=c,
+        volume=F.when(is_inverse, quote_vol / avg_price).otherwise(quote_vol),
+        period=F.regexp_extract(F.col("d.n"), "^([^_]*)_", 1),
+        quote_volume=F.when(is_inverse, quote_vol)
+        .otherwise(F.lit(None).cast("double")),
     )
-    deriv_out = finalize(deriv_out, schemas.CANDLESTICK_SCHEMA)
     return spot_out.unionByName(deriv_out)

@@ -25,10 +25,13 @@ from crypto_msg_parser_spark.parser.common import (
     explode_with_count,
     INVERSE,
     SPOT,
-    finalize,
     normalize_pair_with_quotes,
     quantity_triple,
     sort_book_sides,
+    emit,
+    item_json,
+    order_level,
+    spot_level,
 )
 
 EXCHANGE = "huobi"
@@ -166,33 +169,21 @@ def parse_trade(df: DataFrame) -> DataFrame:
     qt = quantity_triple(
         F.col("market_type"), price, F.col("d.amount"), F.col("cv")
     )
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
-        F.lit("trade").alias("msg_type"),
-        F.col("d.ts").alias("timestamp"),
-        F.when(F.col("n_items") == 1, F.col("msg"))
-        .otherwise(F.to_json("d"))
-        .alias("json"),
-        F.when(F.col("d.direction") == "sell", "sell").otherwise("buy").alias("side"),
-        price.alias("price"),
-        F.when(is_spot, F.col("d.amount")).otherwise(F.col("d.quantity")).alias(
-            "quantity_base"
-        ),
-        F.when(is_spot, price * F.col("d.amount"))
-        .otherwise(qt["quantity_quote"])
-        .alias("quantity_quote"),
-        F.when(is_spot, F.lit(None).cast("double"))
-        .otherwise(F.col("d.amount"))
-        .alias("quantity_contract"),
-        F.when(is_spot, F.col("d.tradeId"))
+    return emit(
+        base, schemas.TRADE_SCHEMA, EXCHANGE, "trade",
+        timestamp=F.col("d.ts"),
+        json=item_json(),
+        side=F.when(F.col("d.direction") == "sell", "sell").otherwise("buy"),
+        price=price,
+        quantity_base=F.when(is_spot, F.col("d.amount")).otherwise(F.col("d.quantity")),
+        quantity_quote=F.when(is_spot, price * F.col("d.amount"))
+        .otherwise(qt["quantity_quote"]),
+        quantity_contract=F.when(is_spot, F.lit(None).cast("double"))
+        .otherwise(F.col("d.amount")),
+        trade_id=F.when(is_spot, F.col("d.tradeId"))
         .otherwise(F.col("d.id"))
-        .cast("string")
-        .alias("trade_id"),
+        .cast("string"),
     )
-    return finalize(out, schemas.TRADE_SCHEMA)
 
 
 _SPOT_BOOK = (
@@ -209,12 +200,7 @@ def _spot_levels(raw: Column) -> Column:
     def to_order(lv):
         price = lv.getItem(0)
         qty = lv.getItem(1)
-        return F.struct(
-            price.alias("price"),
-            qty.alias("quantity_base"),
-            (price * qty).alias("quantity_quote"),
-            F.lit(None).cast("double").alias("quantity_contract"),
-        )
+        return spot_level(price, qty)
 
     return F.transform(F.coalesce(raw, F.array()), to_order)
 
@@ -223,13 +209,7 @@ def _deriv_levels(raw: Column, mt: Column, cv: Column) -> Column:
     def to_order(lv):
         price = lv.getItem(0)
         qty = lv.getItem(1)
-        t = quantity_triple(mt, price, qty, cv)
-        return F.struct(
-            price.alias("price"),
-            t["quantity_base"].alias("quantity_base"),
-            t["quantity_quote"].alias("quantity_quote"),
-            t["quantity_contract"].alias("quantity_contract"),
-        )
+        return order_level(mt, price, qty, cv)
 
     # huobi may send JSON null for an absent side (utils.rs:89-98)
     return F.transform(F.coalesce(raw, F.array()), to_order)
@@ -261,29 +241,20 @@ def parse_l2(df: DataFrame) -> DataFrame:
     snapshot = F.when(is_topk, F.lit(True)).otherwise(
         F.coalesce(F.col("dt.event") == "snapshot", F.lit(False))
     )
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
-        F.when(is_topk, "l2_topk").otherwise("l2_event").alias("msg_type"),
-        F.col("ts").alias("timestamp"),
-        F.col("msg").alias("json"),
-        snapshot.alias("snapshot"),
-        F.when(is_spot, _spot_levels(F.col("st.asks")))
-        .otherwise(_deriv_levels(F.col("dt.asks"), F.col("market_type"), F.col("cv")))
-        .alias("asks"),
-        F.when(is_spot, _spot_levels(F.col("st.bids")))
-        .otherwise(_deriv_levels(F.col("dt.bids"), F.col("market_type"), F.col("cv")))
-        .alias("bids"),
-        F.when(is_spot, F.col("st.seqNum")).otherwise(F.col("dt.mrid")).alias(
-            "seq_id"
-        ),
-        F.when(is_spot, F.col("st.prevSeqNum"))
-        .otherwise(F.lit(None).cast("long"))
-        .alias("prev_seq_id"),
+    out = emit(
+        base, schemas.ORDERBOOK_SCHEMA, EXCHANGE,
+        F.when(is_topk, "l2_topk").otherwise("l2_event"),
+        timestamp=F.col("ts"),
+        snapshot=snapshot,
+        asks=F.when(is_spot, _spot_levels(F.col("st.asks")))
+        .otherwise(_deriv_levels(F.col("dt.asks"), F.col("market_type"), F.col("cv"))),
+        bids=F.when(is_spot, _spot_levels(F.col("st.bids")))
+        .otherwise(_deriv_levels(F.col("dt.bids"), F.col("market_type"), F.col("cv"))),
+        seq_id=F.when(is_spot, F.col("st.seqNum")).otherwise(F.col("dt.mrid")),
+        prev_seq_id=F.when(is_spot, F.col("st.prevSeqNum"))
+        .otherwise(F.lit(None).cast("long")),
     )
-    return finalize(sort_book_sides(out), schemas.ORDERBOOK_SCHEMA)
+    return sort_book_sides(out)
 
 
 parse_l2_topk = parse_l2  # huobi L2TopK rides the same channels (mod.rs:127-132)
@@ -318,41 +289,27 @@ def parse_bbo(df: DataFrame) -> DataFrame:
     d_bid = quantity_triple(
         mt, F.col("db.bid").getItem(0), F.col("db.bid").getItem(1), cv
     )
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
-        F.lit("bbo").alias("msg_type"),
-        F.col("ts").alias("timestamp"),
-        F.col("msg").alias("json"),
-        F.when(is_spot, F.col("sb.bid"))
-        .otherwise(F.col("db.bid").getItem(0))
-        .alias("bid_price"),
-        F.when(is_spot, F.col("sb.bidSize"))
-        .otherwise(d_bid["quantity_base"])
-        .alias("bid_quantity_base"),
-        F.when(is_spot, F.col("sb.bid") * F.col("sb.bidSize"))
-        .otherwise(d_bid["quantity_quote"])
-        .alias("bid_quantity_quote"),
-        F.when(is_spot, F.lit(None).cast("double"))
-        .otherwise(d_bid["quantity_contract"])
-        .alias("bid_quantity_contract"),
-        F.when(is_spot, F.col("sb.ask"))
-        .otherwise(F.col("db.ask").getItem(0))
-        .alias("ask_price"),
-        F.when(is_spot, F.col("sb.askSize"))
-        .otherwise(d_ask["quantity_base"])
-        .alias("ask_quantity_base"),
-        F.when(is_spot, F.col("sb.ask") * F.col("sb.askSize"))
-        .otherwise(d_ask["quantity_quote"])
-        .alias("ask_quantity_quote"),
-        F.when(is_spot, F.lit(None).cast("double"))
-        .otherwise(d_ask["quantity_contract"])
-        .alias("ask_quantity_contract"),
-        F.when(is_spot, F.col("sb.seqId")).otherwise(F.col("db.mrid")).alias("id"),
+    return emit(
+        base, schemas.BBO_SCHEMA, EXCHANGE, "bbo",
+        timestamp=F.col("ts"),
+        bid_price=F.when(is_spot, F.col("sb.bid"))
+        .otherwise(F.col("db.bid").getItem(0)),
+        bid_quantity_base=F.when(is_spot, F.col("sb.bidSize"))
+        .otherwise(d_bid["quantity_base"]),
+        bid_quantity_quote=F.when(is_spot, F.col("sb.bid") * F.col("sb.bidSize"))
+        .otherwise(d_bid["quantity_quote"]),
+        bid_quantity_contract=F.when(is_spot, F.lit(None).cast("double"))
+        .otherwise(d_bid["quantity_contract"]),
+        ask_price=F.when(is_spot, F.col("sb.ask"))
+        .otherwise(F.col("db.ask").getItem(0)),
+        ask_quantity_base=F.when(is_spot, F.col("sb.askSize"))
+        .otherwise(d_ask["quantity_base"]),
+        ask_quantity_quote=F.when(is_spot, F.col("sb.ask") * F.col("sb.askSize"))
+        .otherwise(d_ask["quantity_quote"]),
+        ask_quantity_contract=F.when(is_spot, F.lit(None).cast("double"))
+        .otherwise(d_ask["quantity_contract"]),
+        id=F.when(is_spot, F.col("sb.seqId")).otherwise(F.col("db.mrid")),
     )
-    return finalize(out, schemas.BBO_SCHEMA)
 
 
 _FUNDING = (
@@ -373,21 +330,15 @@ def parse_funding_rate(df: DataFrame) -> DataFrame:
         .select("*", F.explode("w.data").alias("d"))
         .withColumn("pair", normalize_pair(F.col("d.contract_code")))
     )
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        F.col("d.contract_code").alias("symbol"),
-        "pair",
-        F.lit("funding_rate").alias("msg_type"),
-        F.col("w.ts").alias("timestamp"),
-        F.when(F.col("n_items") == 1, F.col("msg"))
-        .otherwise(F.to_json("d"))
-        .alias("json"),
-        F.col("d.funding_rate").cast("double").alias("funding_rate"),
-        F.col("d.settlement_time").cast("long").alias("funding_time"),
-        F.col("d.estimated_rate").cast("double").alias("estimated_rate"),
+    return emit(
+        base, schemas.FUNDING_RATE_SCHEMA, EXCHANGE, "funding_rate",
+        symbol=F.col("d.contract_code"),
+        timestamp=F.col("w.ts"),
+        json=item_json(),
+        funding_rate=F.col("d.funding_rate").cast("double"),
+        funding_time=F.col("d.settlement_time").cast("long"),
+        estimated_rate=F.col("d.estimated_rate").cast("double"),
     )
-    return finalize(out, schemas.FUNDING_RATE_SCHEMA)
 
 
 _CANDLE = (
@@ -411,23 +362,15 @@ def parse_candlestick(df: DataFrame) -> DataFrame:
     )
     base = with_contract_value(base)
     is_spot = F.col("market_type") == SPOT
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
-        F.lit("candlestick").alias("msg_type"),
-        F.col("ts").alias("timestamp"),
-        F.col("msg").alias("json"),
-        F.col("t.id").alias("begin_time"),
-        F.col("t.open").alias("open"),
-        F.col("t.high").alias("high"),
-        F.col("t.low").alias("low"),
-        F.col("t.close").alias("close"),
-        F.col("t.amount").alias("volume"),
-        "period",
-        F.when(is_spot, F.col("t.vol"))
-        .otherwise(F.col("t.vol") * F.col("cv"))
-        .alias("quote_volume"),
+    return emit(
+        base, schemas.CANDLESTICK_SCHEMA, EXCHANGE, "candlestick",
+        timestamp=F.col("ts"),
+        begin_time=F.col("t.id"),
+        open=F.col("t.open"),
+        high=F.col("t.high"),
+        low=F.col("t.low"),
+        close=F.col("t.close"),
+        volume=F.col("t.amount"),
+        quote_volume=F.when(is_spot, F.col("t.vol"))
+        .otherwise(F.col("t.vol") * F.col("cv")),
     )
-    return finalize(out, schemas.CANDLESTICK_SCHEMA)

@@ -23,8 +23,10 @@ from crypto_msg_parser_spark import schemas
 from crypto_msg_parser_spark.parser.common import (
     explode_with_count,
     SPOT,
-    finalize,
     sort_book_sides,
+    emit,
+    item_json,
+    spot_level,
 )
 from crypto_msg_parser_spark.functions.scalar import round9
 
@@ -234,24 +236,16 @@ def _parse_trade_spot(df: DataFrame) -> DataFrame:
     price = F.col("d")[0].cast("double")
     qty = F.col("d")[1].cast("double")
     ts = _sec_to_ms(F.col("d")[2])
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
-        F.lit("trade").alias("msg_type"),
-        ts.alias("timestamp"),
-        F.when(F.col("n_items") == 1, F.col("msg"))
-        .otherwise(F.to_json("d"))
-        .alias("json"),
-        F.when(F.col("d")[3] == "s", "sell").otherwise("buy").alias("side"),
-        price.alias("price"),
-        qty.alias("quantity_base"),
-        (price * qty).alias("quantity_quote"),
-        F.lit(None).cast("double").alias("quantity_contract"),
-        ts.cast("string").alias("trade_id"),
+    return emit(
+        base, schemas.TRADE_SCHEMA, EXCHANGE, "trade",
+        timestamp=ts,
+        json=item_json(),
+        side=F.when(F.col("d")[3] == "s", "sell").otherwise("buy"),
+        price=price,
+        quantity_base=qty,
+        quantity_quote=price * qty,
+        trade_id=ts.cast("string"),
     )
-    return finalize(out, schemas.TRADE_SCHEMA)
 
 
 _FUT_TRADE = (
@@ -283,26 +277,21 @@ def _parse_trade_futures(df: DataFrame) -> DataFrame:
     for sub in (singles, snaps):
         qty = F.col("d.qty")
         price = F.col("d.price")
-        out = sub.select(
-            F.lit(EXCHANGE).alias("exchange"),
-            "market_type",
-            F.col("d.product_id").alias("symbol"),
-            normalize_pair(F.col("d.product_id")).alias("pair"),
-            F.lit("trade").alias("msg_type"),
-            F.col("d.time").alias("timestamp"),
-            # the reference re-serializes the struct even for single trades
-            # (kraken_futures.rs:153) — the engine keeps raw provenance
-            F.when(F.col("n_items") == 1, F.col("msg"))
-            .otherwise(F.to_json("d"))
-            .alias("json"),
-            F.when(F.col("d.side") == "sell", "sell").otherwise("buy").alias("side"),
-            price.alias("price"),
-            (qty / price).alias("quantity_base"),
-            qty.alias("quantity_quote"),
-            qty.alias("quantity_contract"),
-            F.col("d.seq").cast("string").alias("trade_id"),
-        )
-        parts.append(finalize(out, schemas.TRADE_SCHEMA))
+        # the reference re-serializes the struct even for single trades
+        # (kraken_futures.rs:153) — the engine keeps raw provenance
+        parts.append(emit(
+            sub, schemas.TRADE_SCHEMA, EXCHANGE, "trade",
+            symbol=F.col("d.product_id"),
+            pair=normalize_pair(F.col("d.product_id")),
+            timestamp=F.col("d.time"),
+            json=item_json(),
+            side=F.when(F.col("d.side") == "sell", "sell").otherwise("buy"),
+            price=price,
+            quantity_base=qty / price,
+            quantity_quote=qty,
+            quantity_contract=qty,
+            trade_id=F.col("d.seq").cast("string"),
+        ))
     return parts[0].unionByName(parts[1])
 
 
@@ -317,12 +306,7 @@ def parse_l2(df: DataFrame) -> DataFrame:
 def _spot_order(lv):
     price = lv.getItem(0).cast("double")
     qty = lv.getItem(1).cast("double")
-    return F.struct(
-        price.alias("price"),
-        qty.alias("quantity_base"),
-        (price * qty).alias("quantity_quote"),
-        F.lit(None).cast("double").alias("quantity_contract"),
-    )
+    return spot_level(price, qty)
 
 
 def _parse_l2_spot(df: DataFrame) -> DataFrame:
@@ -369,21 +353,13 @@ def _parse_l2_spot(df: DataFrame) -> DataFrame:
         .withColumn("ts", F.array_max(all_ts))
         .filter(F.col("ts").isNotNull())
     )
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
-        F.lit("l2_event").alias("msg_type"),
-        F.col("ts").alias("timestamp"),
-        F.col("msg").alias("json"),
-        "snapshot",
-        F.transform("asks_raw", _spot_order).alias("asks"),
-        F.transform("bids_raw", _spot_order).alias("bids"),
-        F.lit(None).cast("long").alias("seq_id"),
-        F.lit(None).cast("long").alias("prev_seq_id"),
+    out = emit(
+        base, schemas.ORDERBOOK_SCHEMA, EXCHANGE, "l2_event",
+        timestamp=F.col("ts"),
+        asks=F.transform("asks_raw", _spot_order),
+        bids=F.transform("bids_raw", _spot_order),
     )
-    return finalize(sort_book_sides(out), schemas.ORDERBOOK_SCHEMA)
+    return sort_book_sides(out)
 
 
 def _parse_l2_futures(df: DataFrame) -> DataFrame:
@@ -408,19 +384,15 @@ def _parse_l2_futures(df: DataFrame) -> DataFrame:
         " quantity_quote:double, quantity_contract:double>>"
     )
     is_sell = F.get_json_object("msg", "$.side") == "sell"
-    upd_out = upd.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        F.get_json_object("msg", "$.product_id").alias("symbol"),
-        normalize_pair(F.get_json_object("msg", "$.product_id")).alias("pair"),
-        F.lit("l2_event").alias("msg_type"),
-        F.get_json_object("msg", "$.timestamp").cast("long").alias("timestamp"),
-        F.col("msg").alias("json"),
-        F.lit(False).alias("snapshot"),
-        F.when(is_sell, F.array(u_order)).otherwise(empty).alias("asks"),
-        F.when(~is_sell, F.array(u_order)).otherwise(empty).alias("bids"),
-        F.get_json_object("msg", "$.seq").cast("long").alias("seq_id"),
-        F.lit(None).cast("long").alias("prev_seq_id"),
+    upd_out = emit(
+        upd, schemas.ORDERBOOK_SCHEMA, EXCHANGE, "l2_event",
+        symbol=F.get_json_object("msg", "$.product_id"),
+        pair=normalize_pair(F.get_json_object("msg", "$.product_id")),
+        timestamp=F.get_json_object("msg", "$.timestamp").cast("long"),
+        snapshot=F.lit(False),
+        asks=F.when(is_sell, F.array(u_order)).otherwise(empty),
+        bids=F.when(~is_sell, F.array(u_order)).otherwise(empty),
+        seq_id=F.get_json_object("msg", "$.seq").cast("long"),
     )
 
     snap = df.filter(feed == "book_snapshot").withColumn(
@@ -436,23 +408,17 @@ def _parse_l2_futures(df: DataFrame) -> DataFrame:
     def order(lv):
         return order_from(lv["price"], lv["qty"])
 
-    snap_out = snap.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        F.col("d.product_id").alias("symbol"),
-        normalize_pair(F.col("d.product_id")).alias("pair"),
-        F.lit("l2_event").alias("msg_type"),
-        F.col("d.timestamp").alias("timestamp"),
-        F.col("msg").alias("json"),
-        F.lit(True).alias("snapshot"),
-        F.transform(F.coalesce("d.asks", F.array()), order).alias("asks"),
-        F.transform(F.coalesce("d.bids", F.array()), order).alias("bids"),
-        F.col("d.seq").alias("seq_id"),
-        F.lit(None).cast("long").alias("prev_seq_id"),
+    snap_out = emit(
+        snap, schemas.ORDERBOOK_SCHEMA, EXCHANGE, "l2_event",
+        symbol=F.col("d.product_id"),
+        pair=normalize_pair(F.col("d.product_id")),
+        timestamp=F.col("d.timestamp"),
+        snapshot=F.lit(True),
+        asks=F.transform(F.coalesce("d.asks", F.array()), order),
+        bids=F.transform(F.coalesce("d.bids", F.array()), order),
+        seq_id=F.col("d.seq"),
     )
-    return finalize(upd_out, schemas.ORDERBOOK_SCHEMA).unionByName(
-        finalize(sort_book_sides(snap_out), schemas.ORDERBOOK_SCHEMA)
-    )
+    return upd_out.unionByName(sort_book_sides(snap_out))
 
 
 # ---------------------------------------------------------------- bbo
@@ -475,25 +441,17 @@ def parse_bbo(df: DataFrame) -> DataFrame:
     ask_p = F.col("p")[1].cast("double")
     bid_q = F.col("p")[3].cast("double")
     ask_q = F.col("p")[4].cast("double")
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        normalize_pair(F.col("symbol")).alias("pair"),
-        F.lit("bbo").alias("msg_type"),
-        _sec_to_ms(F.col("p")[2]).alias("timestamp"),
-        F.col("msg").alias("json"),
-        bid_p.alias("bid_price"),
-        bid_q.alias("bid_quantity_base"),
-        round9(bid_p * bid_q).alias("bid_quantity_quote"),
-        F.lit(None).cast("double").alias("bid_quantity_contract"),
-        ask_p.alias("ask_price"),
-        ask_q.alias("ask_quantity_base"),
-        round9(ask_p * ask_q).alias("ask_quantity_quote"),
-        F.lit(None).cast("double").alias("ask_quantity_contract"),
-        F.lit(None).cast("long").alias("id"),
+    return emit(
+        base, schemas.BBO_SCHEMA, EXCHANGE, "bbo",
+        pair=normalize_pair(F.col("symbol")),
+        timestamp=_sec_to_ms(F.col("p")[2]),
+        bid_price=bid_p,
+        bid_quantity_base=bid_q,
+        bid_quantity_quote=round9(bid_p * bid_q),
+        ask_price=ask_p,
+        ask_quantity_base=ask_q,
+        ask_quantity_quote=round9(ask_p * ask_q),
     )
-    return finalize(out, schemas.BBO_SCHEMA)
 
 
 # ---------------------------------------------------------------- candles
@@ -517,24 +475,16 @@ def parse_candlestick(df: DataFrame) -> DataFrame:
     )
     vwap = F.col("p")[6].cast("double")
     volume = F.col("p")[7].cast("double")
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        normalize_pair(F.col("symbol")).alias("pair"),
-        F.lit("candlestick").alias("msg_type"),
-        _sec_to_ms(F.col("p")[0]).alias("timestamp"),
-        F.col("msg").alias("json"),
-        (
-            F.col("p")[1].cast("double").cast("long")
-            - F.col("period").cast("long") * 60
-        ).alias("begin_time"),
-        F.col("p")[2].cast("double").alias("open"),
-        F.col("p")[3].cast("double").alias("high"),
-        F.col("p")[4].cast("double").alias("low"),
-        F.col("p")[5].cast("double").alias("close"),
-        volume.alias("volume"),
-        "period",
-        (vwap * volume).alias("quote_volume"),
+    return emit(
+        base, schemas.CANDLESTICK_SCHEMA, EXCHANGE, "candlestick",
+        pair=normalize_pair(F.col("symbol")),
+        timestamp=_sec_to_ms(F.col("p")[0]),
+        begin_time=F.col("p")[1].cast("double").cast("long")
+            - F.col("period").cast("long") * 60,
+        open=F.col("p")[2].cast("double"),
+        high=F.col("p")[3].cast("double"),
+        low=F.col("p")[4].cast("double"),
+        close=F.col("p")[5].cast("double"),
+        volume=volume,
+        quote_volume=vwap * volume,
     )
-    return finalize(out, schemas.CANDLESTICK_SCHEMA)

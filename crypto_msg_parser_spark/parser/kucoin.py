@@ -26,9 +26,11 @@ from crypto_msg_parser_spark import schemas
 from crypto_msg_parser_spark.parser.common import (
     parsed_once,
     SPOT,
-    finalize,
     quantity_triple,
     sort_book_sides,
+    emit,
+    order_level,
+    spot_level,
 )
 from crypto_msg_parser_spark.functions.scalar import round9
 
@@ -232,26 +234,19 @@ def _parse_trade_spot(df: DataFrame) -> DataFrame:
     )
     price = F.get_json_object("msg", "$.data.price").cast("double")
     qty = F.get_json_object("msg", "$.data.size").cast("double")
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        normalize_pair(F.col("symbol")).alias("pair"),
-        F.lit("trade").alias("msg_type"),
-        F.floor(
+    return emit(
+        base, schemas.TRADE_SCHEMA, EXCHANGE, "trade",
+        pair=normalize_pair(F.col("symbol")),
+        timestamp=F.floor(
             F.get_json_object("msg", "$.data.time").cast("long") / 1000000
-        ).cast("long").alias("timestamp"),
-        F.col("msg").alias("json"),
-        F.when(F.get_json_object("msg", "$.data.side") == "sell", "sell")
-        .otherwise("buy")
-        .alias("side"),
-        price.alias("price"),
-        qty.alias("quantity_base"),
-        (price * qty).alias("quantity_quote"),
-        F.lit(None).cast("double").alias("quantity_contract"),
-        F.get_json_object("msg", "$.data.sequence").alias("trade_id"),
+        ).cast("long"),
+        side=F.when(F.get_json_object("msg", "$.data.side") == "sell", "sell")
+        .otherwise("buy"),
+        price=price,
+        quantity_base=qty,
+        quantity_quote=price * qty,
+        trade_id=F.get_json_object("msg", "$.data.sequence"),
     )
-    return finalize(out, schemas.TRADE_SCHEMA)
 
 
 def _parse_trade_swap(df: DataFrame) -> DataFrame:
@@ -266,26 +261,19 @@ def _parse_trade_swap(df: DataFrame) -> DataFrame:
     price = F.get_json_object("msg", "$.data.price").cast("double")
     qty = F.get_json_object("msg", "$.data.size").cast("double")
     q = quantity_triple(F.col("market_type"), price, qty, F.col("cv"))
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
-        F.lit("trade").alias("msg_type"),
-        F.floor(
+    return emit(
+        base, schemas.TRADE_SCHEMA, EXCHANGE, "trade",
+        timestamp=F.floor(
             F.get_json_object("msg", "$.data.ts").cast("long") / 1000000
-        ).cast("long").alias("timestamp"),
-        F.col("msg").alias("json"),
-        F.when(F.get_json_object("msg", "$.data.side") == "sell", "sell")
-        .otherwise("buy")
-        .alias("side"),
-        price.alias("price"),
-        q["quantity_base"].alias("quantity_base"),
-        q["quantity_quote"].alias("quantity_quote"),
-        q["quantity_contract"].alias("quantity_contract"),
-        F.get_json_object("msg", "$.data.sequence").alias("trade_id"),
+        ).cast("long"),
+        side=F.when(F.get_json_object("msg", "$.data.side") == "sell", "sell")
+        .otherwise("buy"),
+        price=price,
+        quantity_base=q["quantity_base"],
+        quantity_quote=q["quantity_quote"],
+        quantity_contract=q["quantity_contract"],
+        trade_id=F.get_json_object("msg", "$.data.sequence"),
     )
-    return finalize(out, schemas.TRADE_SCHEMA)
 
 
 # ---------------------------------------------------------------- orderbooks
@@ -316,31 +304,20 @@ def _parse_l2_spot(df: DataFrame) -> DataFrame:
     def order(lv):
         price = lv.getItem(0).cast("double")
         qty = lv.getItem(1).cast("double")
-        return F.struct(
-            price.alias("price"),
-            qty.alias("quantity_base"),
-            (price * qty).alias("quantity_quote"),
-            F.lit(None).cast("double").alias("quantity_contract"),
-        )
+        return spot_level(price, qty)
 
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        normalize_pair(F.col("symbol")).alias("pair"),
-        F.lit("l2_event").alias("msg_type"),
-        F.coalesce(
+    return emit(
+        base, schemas.ORDERBOOK_SCHEMA, EXCHANGE, "l2_event",
+        pair=normalize_pair(F.col("symbol")),
+        timestamp=F.coalesce(
             F.get_json_object("msg", "$.data.time").cast("long"),
             F.col("received_at"),
-        ).alias("timestamp"),
-        F.col("msg").alias("json"),
-        F.lit(False).alias("snapshot"),
-        F.transform(F.coalesce("ch.asks", F.array()), order).alias("asks"),
-        F.transform(F.coalesce("ch.bids", F.array()), order).alias("bids"),
-        F.get_json_object("msg", "$.data.sequenceStart").cast("long").alias("seq_id"),
-        F.lit(None).cast("long").alias("prev_seq_id"),
+        ),
+        snapshot=F.lit(False),
+        asks=F.transform(F.coalesce("ch.asks", F.array()), order),
+        bids=F.transform(F.coalesce("ch.bids", F.array()), order),
+        seq_id=F.get_json_object("msg", "$.data.sequenceStart").cast("long"),
     )
-    return finalize(out, schemas.ORDERBOOK_SCHEMA)
 
 
 def _parse_l2_swap(df: DataFrame) -> DataFrame:
@@ -357,35 +334,22 @@ def _parse_l2_swap(df: DataFrame) -> DataFrame:
     base = with_contract_value(base)
     price = F.col("chg")[0].cast("double")
     qty = F.col("chg")[2].cast("double")
-    q = quantity_triple(F.col("market_type"), price, qty, F.col("cv"))
-    order = F.struct(
-        price.alias("price"),
-        q["quantity_base"].alias("quantity_base"),
-        q["quantity_quote"].alias("quantity_quote"),
-        q["quantity_contract"].alias("quantity_contract"),
-    )
+    order = order_level(F.col("market_type"), price, qty, F.col("cv"))
     is_ask = F.col("chg")[1] == "sell"
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
-        F.lit("l2_event").alias("msg_type"),
-        F.get_json_object("msg", "$.data.timestamp").cast("long").alias("timestamp"),
-        F.col("msg").alias("json"),
-        F.lit(False).alias("snapshot"),
-        F.when(is_ask, F.array(order)).otherwise(F.array().cast(
+    return emit(
+        base, schemas.ORDERBOOK_SCHEMA, EXCHANGE, "l2_event",
+        timestamp=F.get_json_object("msg", "$.data.timestamp").cast("long"),
+        snapshot=F.lit(False),
+        asks=F.when(is_ask, F.array(order)).otherwise(F.array().cast(
             "array<struct<price:double, quantity_base:double,"
             " quantity_quote:double, quantity_contract:double>>"
-        )).alias("asks"),
-        F.when(~is_ask, F.array(order)).otherwise(F.array().cast(
+        )),
+        bids=F.when(~is_ask, F.array(order)).otherwise(F.array().cast(
             "array<struct<price:double, quantity_base:double,"
             " quantity_quote:double, quantity_contract:double>>"
-        )).alias("bids"),
-        F.get_json_object("msg", "$.data.sequence").cast("long").alias("seq_id"),
-        F.lit(None).cast("long").alias("prev_seq_id"),
+        )),
+        seq_id=F.get_json_object("msg", "$.data.sequence").cast("long"),
     )
-    return finalize(out, schemas.ORDERBOOK_SCHEMA)
 
 
 def parse_l2_topk(df: DataFrame) -> DataFrame:
@@ -410,28 +374,17 @@ def _parse_l2_topk_spot(df: DataFrame) -> DataFrame:
     def order(lv):
         price = lv.getItem(0).cast("double")
         qty = lv.getItem(1).cast("double")
-        return F.struct(
-            price.alias("price"),
-            qty.alias("quantity_base"),
-            (price * qty).alias("quantity_quote"),
-            F.lit(None).cast("double").alias("quantity_contract"),
-        )
+        return spot_level(price, qty)
 
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        normalize_pair(F.col("symbol")).alias("pair"),
-        F.lit("l2_topk").alias("msg_type"),
-        F.col("d.timestamp").alias("timestamp"),
-        F.col("msg").alias("json"),
-        F.lit(True).alias("snapshot"),
-        F.transform(F.coalesce("d.asks", F.array()), order).alias("asks"),
-        F.transform(F.coalesce("d.bids", F.array()), order).alias("bids"),
-        F.lit(None).cast("long").alias("seq_id"),
-        F.lit(None).cast("long").alias("prev_seq_id"),
+    out = emit(
+        base, schemas.ORDERBOOK_SCHEMA, EXCHANGE, "l2_topk",
+        pair=normalize_pair(F.col("symbol")),
+        timestamp=F.col("d.timestamp"),
+        snapshot=F.lit(True),
+        asks=F.transform(F.coalesce("d.asks", F.array()), order),
+        bids=F.transform(F.coalesce("d.bids", F.array()), order),
     )
-    return finalize(sort_book_sides(out), schemas.ORDERBOOK_SCHEMA)
+    return sort_book_sides(out)
 
 
 def _parse_l2_topk_swap(df: DataFrame) -> DataFrame:
@@ -455,29 +408,17 @@ def _parse_l2_topk_swap(df: DataFrame) -> DataFrame:
     def order(lv):
         price = lv.getItem(0)
         qty = lv.getItem(1)
-        q = quantity_triple(F.col("market_type"), price, qty, F.col("cv"))
-        return F.struct(
-            price.alias("price"),
-            q["quantity_base"].alias("quantity_base"),
-            q["quantity_quote"].alias("quantity_quote"),
-            q["quantity_contract"].alias("quantity_contract"),
-        )
+        return order_level(F.col("market_type"), price, qty, F.col("cv"))
 
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
-        F.lit("l2_topk").alias("msg_type"),
-        F.col("d.timestamp").alias("timestamp"),
-        F.col("msg").alias("json"),
-        F.lit(True).alias("snapshot"),
-        F.transform(F.coalesce("d.asks", F.array()), order).alias("asks"),
-        F.transform(F.coalesce("d.bids", F.array()), order).alias("bids"),
-        F.col("d.sequence").alias("seq_id"),
-        F.lit(None).cast("long").alias("prev_seq_id"),
+    out = emit(
+        base, schemas.ORDERBOOK_SCHEMA, EXCHANGE, "l2_topk",
+        timestamp=F.col("d.timestamp"),
+        snapshot=F.lit(True),
+        asks=F.transform(F.coalesce("d.asks", F.array()), order),
+        bids=F.transform(F.coalesce("d.bids", F.array()), order),
+        seq_id=F.col("d.sequence"),
     )
-    return finalize(sort_book_sides(out), schemas.ORDERBOOK_SCHEMA)
+    return sort_book_sides(out)
 
 
 # ---------------------------------------------------------------- bbo
@@ -499,25 +440,18 @@ def parse_bbo(df: DataFrame) -> DataFrame:
     ask_q = F.get_json_object("msg", "$.data.bestAskSize").cast("double")
     bid_p = F.get_json_object("msg", "$.data.bestBid").cast("double")
     bid_q = F.get_json_object("msg", "$.data.bestBidSize").cast("double")
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        normalize_pair(F.col("symbol")).alias("pair"),
-        F.lit("bbo").alias("msg_type"),
-        F.get_json_object("msg", "$.data.time").cast("long").alias("timestamp"),
-        F.col("msg").alias("json"),
-        bid_p.alias("bid_price"),
-        bid_q.alias("bid_quantity_base"),
-        round9(bid_p * bid_q).alias("bid_quantity_quote"),
-        F.lit(None).cast("double").alias("bid_quantity_contract"),
-        ask_p.alias("ask_price"),
-        ask_q.alias("ask_quantity_base"),
-        round9(ask_p * ask_q).alias("ask_quantity_quote"),
-        F.lit(None).cast("double").alias("ask_quantity_contract"),
-        F.get_json_object("msg", "$.data.sequence").cast("long").alias("id"),
+    return emit(
+        base, schemas.BBO_SCHEMA, EXCHANGE, "bbo",
+        pair=normalize_pair(F.col("symbol")),
+        timestamp=F.get_json_object("msg", "$.data.time").cast("long"),
+        bid_price=bid_p,
+        bid_quantity_base=bid_q,
+        bid_quantity_quote=round9(bid_p * bid_q),
+        ask_price=ask_p,
+        ask_quantity_base=ask_q,
+        ask_quantity_quote=round9(ask_p * ask_q),
+        id=F.get_json_object("msg", "$.data.sequence").cast("long"),
     )
-    return finalize(out, schemas.BBO_SCHEMA)
 
 
 # ---------------------------------------------------------------- candles
@@ -541,23 +475,17 @@ def parse_candlestick(df: DataFrame) -> DataFrame:
             F.substring_index(F.substring_index(_topic(F.col("msg")), ":", -1), "_", -1),
         )
     )
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        normalize_pair(F.col("symbol")).alias("pair"),
-        F.lit("candlestick").alias("msg_type"),
-        F.floor(
+    return emit(
+        base, schemas.CANDLESTICK_SCHEMA, EXCHANGE, "candlestick",
+        pair=normalize_pair(F.col("symbol")),
+        timestamp=F.floor(
             F.get_json_object("msg", "$.data.time").cast("long") / 1000000
-        ).cast("long").alias("timestamp"),
-        F.col("msg").alias("json"),
-        F.col("d")[0].cast("long").alias("begin_time"),
-        F.col("d")[1].cast("double").alias("open"),
-        F.col("d")[3].cast("double").alias("high"),
-        F.col("d")[4].cast("double").alias("low"),
-        F.col("d")[2].cast("double").alias("close"),
-        F.col("d")[5].cast("double").alias("volume"),
-        "period",
-        F.col("d")[6].cast("double").alias("quote_volume"),
+        ).cast("long"),
+        begin_time=F.col("d")[0].cast("long"),
+        open=F.col("d")[1].cast("double"),
+        high=F.col("d")[3].cast("double"),
+        low=F.col("d")[4].cast("double"),
+        close=F.col("d")[2].cast("double"),
+        volume=F.col("d")[5].cast("double"),
+        quote_volume=F.col("d")[6].cast("double"),
     )
-    return finalize(out, schemas.CANDLESTICK_SCHEMA)

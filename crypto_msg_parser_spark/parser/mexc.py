@@ -25,9 +25,12 @@ from crypto_msg_parser_spark.parser.common import (
     explode_with_count,
     parsed_once,
     SPOT,
-    finalize,
     quantity_triple,
     sort_book_sides,
+    emit,
+    item_json,
+    order_level,
+    spot_level,
 )
 
 EXCHANGE = "mexc"
@@ -173,24 +176,16 @@ def _parse_trade_spot(df: DataFrame) -> DataFrame:
     )
     price = F.col("d.p").cast("double")
     qty = F.col("d.q").cast("double")
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
-        F.lit("trade").alias("msg_type"),
-        F.col("d.t").alias("timestamp"),
-        F.when(F.col("n_items") == 1, F.col("msg"))
-        .otherwise(F.to_json("d"))
-        .alias("json"),
-        F.when(F.col("d.T") == 2, "sell").otherwise("buy").alias("side"),
-        price.alias("price"),
-        qty.alias("quantity_base"),
-        (price * qty).alias("quantity_quote"),
-        F.lit(None).cast("double").alias("quantity_contract"),
-        F.col("d.t").cast("string").alias("trade_id"),
+    return emit(
+        base, schemas.TRADE_SCHEMA, EXCHANGE, "trade",
+        timestamp=F.col("d.t"),
+        json=item_json(),
+        side=F.when(F.col("d.T") == 2, "sell").otherwise("buy"),
+        price=price,
+        quantity_base=qty,
+        quantity_quote=price * qty,
+        trade_id=F.col("d.t").cast("string"),
     )
-    return finalize(out, schemas.TRADE_SCHEMA)
 
 
 def _parse_trade_swap(df: DataFrame) -> DataFrame:
@@ -205,24 +200,17 @@ def _parse_trade_swap(df: DataFrame) -> DataFrame:
     qty = F.get_json_object("msg", "$.data.v").cast("double")
     q = quantity_triple(F.col("market_type"), price, qty, F.col("cv"))
     t = F.get_json_object("msg", "$.data.t").cast("long")
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
-        F.lit("trade").alias("msg_type"),
-        t.alias("timestamp"),
-        F.col("msg").alias("json"),
-        F.when(F.get_json_object("msg", "$.data.T") == "2", "sell")
-        .otherwise("buy")
-        .alias("side"),
-        price.alias("price"),
-        q["quantity_base"].alias("quantity_base"),
-        q["quantity_quote"].alias("quantity_quote"),
-        qty.alias("quantity_contract"),
-        t.cast("string").alias("trade_id"),
+    return emit(
+        base, schemas.TRADE_SCHEMA, EXCHANGE, "trade",
+        timestamp=t,
+        side=F.when(F.get_json_object("msg", "$.data.T") == "2", "sell")
+        .otherwise("buy"),
+        price=price,
+        quantity_base=q["quantity_base"],
+        quantity_quote=q["quantity_quote"],
+        quantity_contract=qty,
+        trade_id=t.cast("string"),
     )
-    return finalize(out, schemas.TRADE_SCHEMA)
 
 
 # ---------------------------------------------------------------- orderbooks
@@ -264,21 +252,14 @@ def _parse_l2_spot(df: DataFrame) -> DataFrame:
             F.lit(None).cast("double").alias("quantity_contract"),
         )
 
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
-        F.lit("l2_event").alias("msg_type"),
-        F.col("received_at").alias("timestamp"),
-        F.col("msg").alias("json"),
-        F.lit(False).alias("snapshot"),
-        F.transform(F.coalesce("d.asks", F.array()), order).alias("asks"),
-        F.transform(F.coalesce("d.bids", F.array()), order).alias("bids"),
-        F.col("d.version").cast("long").alias("seq_id"),
-        F.lit(None).cast("long").alias("prev_seq_id"),
+    return emit(
+        base, schemas.ORDERBOOK_SCHEMA, EXCHANGE, "l2_event",
+        timestamp=F.col("received_at"),
+        snapshot=F.lit(False),
+        asks=F.transform(F.coalesce("d.asks", F.array()), order),
+        bids=F.transform(F.coalesce("d.bids", F.array()), order),
+        seq_id=F.col("d.version").cast("long"),
     )
-    return finalize(out, schemas.ORDERBOOK_SCHEMA)
 
 
 def _parse_l2_swap(df: DataFrame) -> DataFrame:
@@ -297,29 +278,18 @@ def _parse_l2_swap(df: DataFrame) -> DataFrame:
     def order(lv):
         price = lv.getItem(0)
         qty = lv.getItem(1)
-        q = quantity_triple(F.col("market_type"), price, qty, F.col("cv"))
-        return F.struct(
-            price.alias("price"),
-            q["quantity_base"].alias("quantity_base"),
-            q["quantity_quote"].alias("quantity_quote"),
-            q["quantity_contract"].alias("quantity_contract"),
-        )
+        return order_level(F.col("market_type"), price, qty, F.col("cv"))
 
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
-        F.when(F.col("is_topk"), "l2_topk").otherwise("l2_event").alias("msg_type"),
-        F.get_json_object("msg", "$.ts").cast("long").alias("timestamp"),
-        F.col("msg").alias("json"),
-        F.col("is_topk").alias("snapshot"),
-        F.transform(F.coalesce("d.asks", F.array()), order).alias("asks"),
-        F.transform(F.coalesce("d.bids", F.array()), order).alias("bids"),
-        F.col("d.version").alias("seq_id"),
-        F.lit(None).cast("long").alias("prev_seq_id"),
+    out = emit(
+        base, schemas.ORDERBOOK_SCHEMA, EXCHANGE,
+        F.when(F.col("is_topk"), "l2_topk").otherwise("l2_event"),
+        timestamp=F.get_json_object("msg", "$.ts").cast("long"),
+        snapshot=F.col("is_topk"),
+        asks=F.transform(F.coalesce("d.asks", F.array()), order),
+        bids=F.transform(F.coalesce("d.bids", F.array()), order),
+        seq_id=F.col("d.version"),
     )
-    return finalize(sort_book_sides(out), schemas.ORDERBOOK_SCHEMA)
+    return sort_book_sides(out)
 
 
 def parse_l2_topk(df: DataFrame) -> DataFrame:
@@ -347,28 +317,17 @@ def _parse_l2_topk_spot(df: DataFrame) -> DataFrame:
     def order(lv):
         price = lv.getItem(0).cast("double")
         qty = lv.getItem(1).cast("double")
-        return F.struct(
-            price.alias("price"),
-            qty.alias("quantity_base"),
-            (price * qty).alias("quantity_quote"),
-            F.lit(None).cast("double").alias("quantity_contract"),
-        )
+        return spot_level(price, qty)
 
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
-        F.lit("l2_topk").alias("msg_type"),
-        F.col("received_at").alias("timestamp"),
-        F.col("msg").alias("json"),
-        F.lit(True).alias("snapshot"),
-        F.transform(F.coalesce("d.asks", F.array()), order).alias("asks"),
-        F.transform(F.coalesce("d.bids", F.array()), order).alias("bids"),
-        F.get_json_object("msg", "$.version").cast("long").alias("seq_id"),
-        F.lit(None).cast("long").alias("prev_seq_id"),
+    out = emit(
+        base, schemas.ORDERBOOK_SCHEMA, EXCHANGE, "l2_topk",
+        timestamp=F.col("received_at"),
+        snapshot=F.lit(True),
+        asks=F.transform(F.coalesce("d.asks", F.array()), order),
+        bids=F.transform(F.coalesce("d.bids", F.array()), order),
+        seq_id=F.get_json_object("msg", "$.version").cast("long"),
     )
-    return finalize(sort_book_sides(out), schemas.ORDERBOOK_SCHEMA)
+    return sort_book_sides(out)
 
 
 # ---------------------------------------------------------------- candles
@@ -407,26 +366,18 @@ def _parse_candle_spot(df: DataFrame) -> DataFrame:
         .withColumn("symbol", F.get_json_object(inner, "$.symbol"))
         .withColumn("pair", normalize_pair(F.col("symbol")))
     )
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
-        F.lit("candlestick").alias("msg_type"),
-        F.coalesce(F.col("d.tdt"), F.col("received_at")).alias("timestamp"),
-        F.col("msg").alias("json"),
-        (
-            F.col("d.t") * 1000 - _interval_seconds(F.col("d.interval")) * 1000
-        ).alias("begin_time"),
-        F.col("d.o").alias("open"),
-        F.col("d.h").alias("high"),
-        F.col("d.l").alias("low"),
-        F.col("d.c").alias("close"),
-        F.col("d.q").alias("volume"),
-        F.col("d.interval").alias("period"),
-        F.col("d.v").alias("quote_volume"),
+    return emit(
+        base, schemas.CANDLESTICK_SCHEMA, EXCHANGE, "candlestick",
+        timestamp=F.coalesce(F.col("d.tdt"), F.col("received_at")),
+        begin_time=F.col("d.t") * 1000 - _interval_seconds(F.col("d.interval")) * 1000,
+        open=F.col("d.o"),
+        high=F.col("d.h"),
+        low=F.col("d.l"),
+        close=F.col("d.c"),
+        volume=F.col("d.q"),
+        period=F.col("d.interval"),
+        quote_volume=F.col("d.v"),
     )
-    return finalize(out, schemas.CANDLESTICK_SCHEMA)
 
 
 def _parse_candle_swap(df: DataFrame) -> DataFrame:
@@ -445,27 +396,17 @@ def _parse_candle_swap(df: DataFrame) -> DataFrame:
     )
     base = with_contract_value(base)
     is_inverse = F.col("market_type") == "inverse_swap"
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
-        F.lit("candlestick").alias("msg_type"),
-        (F.col("d.t") * 1000).alias("timestamp"),
-        F.col("msg").alias("json"),
-        (
-            F.col("d.t") * 1000 - _interval_seconds(F.col("d.interval")) * 1000
-        ).alias("begin_time"),
-        F.col("d.o").alias("open"),
-        F.col("d.h").alias("high"),
-        F.col("d.l").alias("low"),
-        F.col("d.c").alias("close"),
-        F.when(is_inverse, F.col("d.a"))
-        .otherwise(F.col("d.q") * F.col("cv"))
-        .alias("volume"),
-        F.col("d.interval").alias("period"),
-        F.when(is_inverse, F.col("d.q") * F.col("cv"))
-        .otherwise(F.col("d.a"))
-        .alias("quote_volume"),
+    return emit(
+        base, schemas.CANDLESTICK_SCHEMA, EXCHANGE, "candlestick",
+        timestamp=F.col("d.t") * 1000,
+        begin_time=F.col("d.t") * 1000 - _interval_seconds(F.col("d.interval")) * 1000,
+        open=F.col("d.o"),
+        high=F.col("d.h"),
+        low=F.col("d.l"),
+        close=F.col("d.c"),
+        volume=F.when(is_inverse, F.col("d.a"))
+        .otherwise(F.col("d.q") * F.col("cv")),
+        period=F.col("d.interval"),
+        quote_volume=F.when(is_inverse, F.col("d.q") * F.col("cv"))
+        .otherwise(F.col("d.a")),
     )
-    return finalize(out, schemas.CANDLESTICK_SCHEMA)

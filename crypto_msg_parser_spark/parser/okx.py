@@ -36,9 +36,11 @@ from crypto_msg_parser_spark.parser.common import (
     parsed_once,
     INVERSE,
     SPOT,
-    finalize,
     quantity_triple,
     sort_book_sides,
+    emit,
+    item_json,
+    order_level,
 )
 
 EXCHANGE = "okx"
@@ -232,28 +234,21 @@ def parse_trade(df: DataFrame) -> DataFrame:
         "double"
     )
     qt = quantity_triple(F.col("market_type"), price, size, F.col("cv"))
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
-        F.lit("trade").alias("msg_type"),
-        F.coalesce(
+    return emit(
+        base, schemas.TRADE_SCHEMA, EXCHANGE, "trade",
+        timestamp=F.coalesce(
             F.col("d.ts").cast("long"), _rfc3339_ms(F.col("d.timestamp"))
-        ).alias("timestamp"),
-        F.when(F.col("n_items") == 1, F.col("msg"))
-        .otherwise(F.to_json("d"))
-        .alias("json"),
-        F.when(F.col("d.side") == "sell", "sell").otherwise("buy").alias("side"),
-        price.alias("price"),
-        qt["quantity_base"].alias("quantity_base"),
-        qt["quantity_quote"].alias("quantity_quote"),
-        F.when(F.col("market_type") == SPOT, F.lit(None).cast("double"))
-        .otherwise(size)
-        .alias("quantity_contract"),
-        F.coalesce(F.col("d.tradeId"), F.col("d.trade_id")).alias("trade_id"),
+        ),
+        json=item_json(),
+        side=F.when(F.col("d.side") == "sell", "sell").otherwise("buy"),
+        price=price,
+        quantity_base=qt["quantity_base"],
+        quantity_quote=qt["quantity_quote"],
+        quantity_contract=F.when(
+            F.col("market_type") == SPOT, F.lit(None).cast("double")
+        ).otherwise(size),
+        trade_id=F.coalesce(F.col("d.tradeId"), F.col("d.trade_id")),
     )
-    return finalize(out, schemas.TRADE_SCHEMA)
 
 
 # asks/bids level arrays are positional strings in both formats (v3 spot
@@ -269,13 +264,7 @@ def _levels(raw: Column, mt: Column, cv: Column) -> Column:
     def to_order(lv):
         price = lv.getItem(0).cast("double")
         qty = lv.getItem(1).cast("double")
-        t = quantity_triple(mt, price, qty, cv)
-        return F.struct(
-            price.alias("price"),
-            t["quantity_base"].alias("quantity_base"),
-            t["quantity_quote"].alias("quantity_quote"),
-            t["quantity_contract"].alias("quantity_contract"),
-        )
+        return order_level(mt, price, qty, cv)
 
     return F.transform(raw, to_order)
 
@@ -313,27 +302,18 @@ def parse_l2(df: DataFrame) -> DataFrame:
     snapshot = F.when(
         F.col("action").isNotNull(), F.col("action").isin("snapshot", "partial")
     ).otherwise(F.col("is_topk"))
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
-        F.when(F.col("is_topk"), "l2_topk").otherwise("l2_event").alias(
-            "msg_type"
-        ),
-        F.coalesce(
+    out = emit(
+        base, schemas.ORDERBOOK_SCHEMA, EXCHANGE,
+        F.when(F.col("is_topk"), "l2_topk").otherwise("l2_event"),
+        timestamp=F.coalesce(
             F.col("d.ts").cast("long"), _rfc3339_ms(F.col("d.timestamp"))
-        ).alias("timestamp"),
-        F.when(F.col("n_items") == 1, F.col("msg"))
-        .otherwise(F.to_json("d"))
-        .alias("json"),
-        snapshot.alias("snapshot"),
-        _levels(F.col("d.asks"), F.col("market_type"), F.col("cv")).alias("asks"),
-        _levels(F.col("d.bids"), F.col("market_type"), F.col("cv")).alias("bids"),
-        F.lit(None).cast("long").alias("seq_id"),
-        F.lit(None).cast("long").alias("prev_seq_id"),
+        ),
+        json=item_json(),
+        snapshot=snapshot,
+        asks=_levels(F.col("d.asks"), F.col("market_type"), F.col("cv")),
+        bids=_levels(F.col("d.bids"), F.col("market_type"), F.col("cv")),
     )
-    return finalize(sort_book_sides(out), schemas.ORDERBOOK_SCHEMA)
+    return sort_book_sides(out)
 
 
 # okx L2TopK rides the same books5 channel; the reference routes
@@ -368,29 +348,21 @@ def parse_funding_rate(df: DataFrame) -> DataFrame:
         )
         .withColumn("pair", normalize_pair(F.col("symbol")))
     )
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
-        F.lit("funding_rate").alias("msg_type"),
-        F.col("received_at").alias("timestamp"),
-        F.when(F.col("n_items") == 1, F.col("msg"))
-        .otherwise(F.to_json("d"))
-        .alias("json"),
-        F.coalesce(F.col("d.fundingRate"), F.col("d.funding_rate"))
-        .cast("double")
-        .alias("funding_rate"),
-        F.coalesce(
+    return emit(
+        base, schemas.FUNDING_RATE_SCHEMA, EXCHANGE, "funding_rate",
+        timestamp=F.col("received_at"),
+        json=item_json(),
+        funding_rate=F.coalesce(F.col("d.fundingRate"), F.col("d.funding_rate"))
+        .cast("double"),
+        funding_time=F.coalesce(
             F.col("d.fundingTime").cast("long"),
             _rfc3339_ms(F.col("d.funding_time")),
-        ).alias("funding_time"),
-        F.coalesce(
+        ),
+        estimated_rate=F.coalesce(
             F.col("d.nextFundingRate").cast("double"),
             F.col("d.estimated_rate").cast("double"),
-        ).alias("estimated_rate"),
+        ),
     )
-    return finalize(out, schemas.FUNDING_RATE_SCHEMA)
 
 
 def parse_bbo(df: DataFrame) -> DataFrame:
@@ -419,25 +391,18 @@ def parse_bbo(df: DataFrame) -> DataFrame:
         bid.getItem(1).cast("double"),
         F.col("cv"),
     )
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
-        F.lit("bbo").alias("msg_type"),
-        F.col("d.ts").cast("long").alias("timestamp"),
-        F.col("msg").alias("json"),
-        bid.getItem(0).cast("double").alias("bid_price"),
-        bid_t["quantity_base"].alias("bid_quantity_base"),
-        bid_t["quantity_quote"].alias("bid_quantity_quote"),
-        bid_t["quantity_contract"].alias("bid_quantity_contract"),
-        ask.getItem(0).cast("double").alias("ask_price"),
-        ask_t["quantity_base"].alias("ask_quantity_base"),
-        ask_t["quantity_quote"].alias("ask_quantity_quote"),
-        ask_t["quantity_contract"].alias("ask_quantity_contract"),
-        F.lit(None).cast("long").alias("id"),
+    return emit(
+        base, schemas.BBO_SCHEMA, EXCHANGE, "bbo",
+        timestamp=F.col("d.ts").cast("long"),
+        bid_price=bid.getItem(0).cast("double"),
+        bid_quantity_base=bid_t["quantity_base"],
+        bid_quantity_quote=bid_t["quantity_quote"],
+        bid_quantity_contract=bid_t["quantity_contract"],
+        ask_price=ask.getItem(0).cast("double"),
+        ask_quantity_base=ask_t["quantity_base"],
+        ask_quantity_quote=ask_t["quantity_quote"],
+        ask_quantity_contract=ask_t["quantity_contract"],
     )
-    return finalize(out, schemas.BBO_SCHEMA)
 
 
 def parse_candlestick(df: DataFrame) -> DataFrame:
@@ -472,21 +437,15 @@ def parse_candlestick(df: DataFrame) -> DataFrame:
         .when(mt.isin(*INVERSE), vol * F.col("cv"))
         .otherwise(F.lit(None).cast("double"))
     )
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
-        F.lit("candlestick").alias("msg_type"),
-        F.col("received_at").alias("timestamp"),
-        F.col("msg").alias("json"),
-        (F.col("d").getItem(0).cast("long") / 1000).cast("long").alias("begin_time"),
-        F.col("d").getItem(1).cast("double").alias("open"),
-        F.col("d").getItem(2).cast("double").alias("high"),
-        F.col("d").getItem(3).cast("double").alias("low"),
-        F.col("d").getItem(4).cast("double").alias("close"),
-        volume.alias("volume"),
-        period.alias("period"),
-        quote_volume.alias("quote_volume"),
+    return emit(
+        base, schemas.CANDLESTICK_SCHEMA, EXCHANGE, "candlestick",
+        timestamp=F.col("received_at"),
+        begin_time=(F.col("d").getItem(0).cast("long") / 1000).cast("long"),
+        open=F.col("d").getItem(1).cast("double"),
+        high=F.col("d").getItem(2).cast("double"),
+        low=F.col("d").getItem(3).cast("double"),
+        close=F.col("d").getItem(4).cast("double"),
+        volume=volume,
+        period=period,
+        quote_volume=quote_volume,
     )
-    return finalize(out, schemas.CANDLESTICK_SCHEMA)

@@ -24,9 +24,11 @@ from crypto_msg_parser_spark.parser.common import (
     explode_with_count,
     parsed_once,
     SPOT,
-    finalize,
     quantity_triple,
     sort_book_sides,
+    emit,
+    order_level,
+    spot_level,
 )
 from crypto_msg_parser_spark.functions.scalar import round9
 
@@ -187,22 +189,16 @@ def _parse_trade_spot(df: DataFrame) -> DataFrame:
     )
     price = F.col("d.price").cast("double")
     qty = F.col("d.amount").cast("double")
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
-        F.lit("trade").alias("msg_type"),
-        (F.col("d.date") * 1000).alias("timestamp"),
-        F.to_json("d").alias("json"),
-        F.when(F.col("d.type") == "sell", "sell").otherwise("buy").alias("side"),
-        price.alias("price"),
-        qty.alias("quantity_base"),
-        (price * qty).alias("quantity_quote"),
-        F.lit(None).cast("double").alias("quantity_contract"),
-        F.col("d.tid").cast("string").alias("trade_id"),
+    return emit(
+        base, schemas.TRADE_SCHEMA, EXCHANGE, "trade",
+        timestamp=F.col("d.date") * 1000,
+        json=F.to_json("d"),
+        side=F.when(F.col("d.type") == "sell", "sell").otherwise("buy"),
+        price=price,
+        quantity_base=qty,
+        quantity_quote=price * qty,
+        trade_id=F.col("d.tid").cast("string"),
     )
-    return finalize(out, schemas.TRADE_SCHEMA)
 
 
 def _parse_trade_swap(df: DataFrame) -> DataFrame:
@@ -219,22 +215,17 @@ def _parse_trade_swap(df: DataFrame) -> DataFrame:
     qty = F.col("d").getItem(1)
     ts = (F.col("d").getItem(3).cast("long") * 1000).cast("long")
     q = quantity_triple(F.col("market_type"), price, qty, F.lit(1.0))
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
-        F.lit("trade").alias("msg_type"),
-        ts.alias("timestamp"),
-        F.to_json("d").alias("json"),
-        F.when(F.col("d").getItem(3) < 0, "sell").otherwise("buy").alias("side"),
-        price.alias("price"),
-        q["quantity_base"].alias("quantity_base"),
-        q["quantity_quote"].alias("quantity_quote"),
-        q["quantity_contract"].alias("quantity_contract"),
-        ts.cast("string").alias("trade_id"),
+    return emit(
+        base, schemas.TRADE_SCHEMA, EXCHANGE, "trade",
+        timestamp=ts,
+        json=F.to_json("d"),
+        side=F.when(F.col("d").getItem(3) < 0, "sell").otherwise("buy"),
+        price=price,
+        quantity_base=q["quantity_base"],
+        quantity_quote=q["quantity_quote"],
+        quantity_contract=q["quantity_contract"],
+        trade_id=ts.cast("string"),
     )
-    return finalize(out, schemas.TRADE_SCHEMA)
 
 
 # ---------------------------------------------------------------- orderbooks
@@ -269,28 +260,16 @@ def _parse_l2_topk_spot(df: DataFrame) -> DataFrame:
     def order(lv):
         price = lv.getItem(0)
         qty = lv.getItem(1)
-        return F.struct(
-            price.alias("price"),
-            qty.alias("quantity_base"),
-            (price * qty).alias("quantity_quote"),
-            F.lit(None).cast("double").alias("quantity_contract"),
-        )
+        return spot_level(price, qty)
 
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
-        F.lit("l2_topk").alias("msg_type"),
-        (F.col("d.timestamp") * 1000).alias("timestamp"),
-        F.col("msg").alias("json"),
-        F.lit(True).alias("snapshot"),
-        F.transform(F.coalesce("d.asks", F.array()), order).alias("asks"),
-        F.transform(F.coalesce("d.bids", F.array()), order).alias("bids"),
-        F.lit(None).cast("long").alias("seq_id"),
-        F.lit(None).cast("long").alias("prev_seq_id"),
+    out = emit(
+        base, schemas.ORDERBOOK_SCHEMA, EXCHANGE, "l2_topk",
+        timestamp=F.col("d.timestamp") * 1000,
+        snapshot=F.lit(True),
+        asks=F.transform(F.coalesce("d.asks", F.array()), order),
+        bids=F.transform(F.coalesce("d.bids", F.array()), order),
     )
-    return finalize(sort_book_sides(out), schemas.ORDERBOOK_SCHEMA)
+    return sort_book_sides(out)
 
 
 def _parse_l2_swap(df: DataFrame) -> DataFrame:
@@ -321,29 +300,16 @@ def _parse_l2_swap(df: DataFrame) -> DataFrame:
     def order(lv):
         price = lv.getItem(0)
         qty = lv.getItem(1)
-        q = quantity_triple(F.col("market_type"), price, qty, F.lit(1.0))
-        return F.struct(
-            price.alias("price"),
-            q["quantity_base"].alias("quantity_base"),
-            q["quantity_quote"].alias("quantity_quote"),
-            q["quantity_contract"].alias("quantity_contract"),
-        )
+        return order_level(F.col("market_type"), price, qty, F.lit(1.0))
 
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
-        F.when(F.col("is_topk"), "l2_topk").otherwise("l2_event").alias("msg_type"),
-        F.col("d.time").cast("long").alias("timestamp"),
-        F.col("msg").alias("json"),
-        "snapshot",
-        F.transform(F.coalesce("d.asks", F.array()), order).alias("asks"),
-        F.transform(F.coalesce("d.bids", F.array()), order).alias("bids"),
-        F.lit(None).cast("long").alias("seq_id"),
-        F.lit(None).cast("long").alias("prev_seq_id"),
+    out = emit(
+        base, schemas.ORDERBOOK_SCHEMA, EXCHANGE,
+        F.when(F.col("is_topk"), "l2_topk").otherwise("l2_event"),
+        timestamp=F.col("d.time").cast("long"),
+        asks=F.transform(F.coalesce("d.asks", F.array()), order),
+        bids=F.transform(F.coalesce("d.bids", F.array()), order),
     )
-    return finalize(sort_book_sides(out), schemas.ORDERBOOK_SCHEMA)
+    return sort_book_sides(out)
 
 
 # ---------------------------------------------------------------- candles
@@ -386,24 +352,17 @@ def _parse_candle_spot(df: DataFrame) -> DataFrame:
     c = F.col("d").getItem(4)
     qty = F.col("d").getItem(5)
     avg = (o + h + low + c) / 4
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
-        F.lit("candlestick").alias("msg_type"),
-        ts.alias("timestamp"),
-        F.col("msg").alias("json"),
-        (ts - F.col("m_seconds")).alias("begin_time"),
-        o.alias("open"),
-        h.alias("high"),
-        low.alias("low"),
-        c.alias("close"),
-        qty.alias("volume"),
-        "period",
-        round9(round9(qty * avg)).alias("quote_volume"),
+    return emit(
+        base, schemas.CANDLESTICK_SCHEMA, EXCHANGE, "candlestick",
+        timestamp=ts,
+        begin_time=ts - F.col("m_seconds"),
+        open=o,
+        high=h,
+        low=low,
+        close=c,
+        volume=qty,
+        quote_volume=round9(round9(qty * avg)),
     )
-    return finalize(out, schemas.CANDLESTICK_SCHEMA)
 
 
 def _parse_candle_swap(df: DataFrame) -> DataFrame:
@@ -434,21 +393,14 @@ def _parse_candle_swap(df: DataFrame) -> DataFrame:
     c = F.col("d").getItem(3)
     qty = F.col("d").getItem(4)
     avg = (o + h + low + c) / 4
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        "symbol",
-        "pair",
-        F.lit("candlestick").alias("msg_type"),
-        ts.alias("timestamp"),
-        F.col("msg").alias("json"),
-        (ts - F.col("m_seconds")).alias("begin_time"),
-        o.alias("open"),
-        h.alias("high"),
-        low.alias("low"),
-        c.alias("close"),
-        round9(qty).alias("volume"),
-        "period",
-        round9(round9(qty * avg)).alias("quote_volume"),
+    return emit(
+        base, schemas.CANDLESTICK_SCHEMA, EXCHANGE, "candlestick",
+        timestamp=ts,
+        begin_time=ts - F.col("m_seconds"),
+        open=o,
+        high=h,
+        low=low,
+        close=c,
+        volume=round9(qty),
+        quote_volume=round9(round9(qty * avg)),
     )
-    return finalize(out, schemas.CANDLESTICK_SCHEMA)

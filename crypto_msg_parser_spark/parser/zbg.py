@@ -23,7 +23,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from crypto_msg_parser_spark import schemas
-from crypto_msg_parser_spark.parser.common import finalize, sort_book_sides, parsed_once
+from crypto_msg_parser_spark.parser.common import (
+    sort_book_sides,
+    parsed_once,
+    emit,
+    spot_level,
+)
 
 EXCHANGE = "zbg"
 
@@ -210,22 +215,18 @@ def _parse_trade_spot(df: DataFrame) -> DataFrame:
     ts = (F.col("arr")[2].cast("long") * 1000).cast("long")
     price = F.col("arr")[5].cast("double")
     qty = F.col("arr")[6].cast("double")
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        F.lower(F.col("arr")[3]).alias("symbol"),
-        normalize_pair(F.col("arr")[3]).alias("pair"),
-        F.lit("trade").alias("msg_type"),
-        ts.alias("timestamp"),
-        F.when(F.col("n_items") == 1, F.col("msg")).otherwise(F.col("d")).alias("json"),
-        F.when(F.col("arr")[4] == "ask", "sell").otherwise("buy").alias("side"),
-        price.alias("price"),
-        qty.alias("quantity_base"),
-        (price * qty).alias("quantity_quote"),
-        F.lit(None).cast("double").alias("quantity_contract"),
-        ts.cast("string").alias("trade_id"),
+    return emit(
+        base, schemas.TRADE_SCHEMA, EXCHANGE, "trade",
+        symbol=F.lower(F.col("arr")[3]),
+        pair=normalize_pair(F.col("arr")[3]),
+        timestamp=ts,
+        json=F.when(F.col("n_items") == 1, F.col("msg")).otherwise(F.col("d")),
+        side=F.when(F.col("arr")[4] == "ask", "sell").otherwise("buy"),
+        price=price,
+        quantity_base=qty,
+        quantity_quote=price * qty,
+        trade_id=ts.cast("string"),
     )
-    return finalize(out, schemas.TRADE_SCHEMA)
 
 
 def _parse_trade_swap(df: DataFrame) -> DataFrame:
@@ -241,22 +242,18 @@ def _parse_trade_swap(df: DataFrame) -> DataFrame:
     is_inverse = F.col("market_type") == "inverse_swap"
     qb = F.when(is_inverse, size * unit / price).otherwise(size * unit)
     qq = F.when(is_inverse, size * unit).otherwise(size * unit * price)
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        F.col("swap_symbol").alias("symbol"),
-        normalize_pair(F.col("swap_symbol")).alias("pair"),
-        F.lit("trade").alias("msg_type"),
-        F.floor(ts_us / 1000).cast("long").alias("timestamp"),
-        F.col("msg").alias("json"),
-        F.when(direction == -1, "sell").otherwise("buy").alias("side"),
-        price.alias("price"),
-        qb.alias("quantity_base"),
-        qq.alias("quantity_quote"),
-        size.alias("quantity_contract"),
-        ts_us.cast("string").alias("trade_id"),
+    return emit(
+        base, schemas.TRADE_SCHEMA, EXCHANGE, "trade",
+        symbol=F.col("swap_symbol"),
+        pair=normalize_pair(F.col("swap_symbol")),
+        timestamp=F.floor(ts_us / 1000).cast("long"),
+        side=F.when(direction == -1, "sell").otherwise("buy"),
+        price=price,
+        quantity_base=qb,
+        quantity_quote=qq,
+        quantity_contract=size,
+        trade_id=ts_us.cast("string"),
     )
-    return finalize(out, schemas.TRADE_SCHEMA)
 
 
 # ---------------------------------------------------------------- orderbooks
@@ -279,12 +276,7 @@ def parse_l2(df: DataFrame) -> DataFrame:
 def _spot_order(lv):
     price = lv.getItem(0).cast("double")
     qty = lv.getItem(1).cast("double")
-    return F.struct(
-        price.alias("price"),
-        qty.alias("quantity_base"),
-        (price * qty).alias("quantity_quote"),
-        F.lit(None).cast("double").alias("quantity_contract"),
-    )
+    return spot_level(price, qty)
 
 
 def _parse_l2_spot_snapshot(df: DataFrame) -> DataFrame:
@@ -309,21 +301,17 @@ def _parse_l2_spot_snapshot(df: DataFrame) -> DataFrame:
             F.from_json(F.get_json_object("d", "$[5].bids"), "array<array<string>>"),
         )
     )
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        F.lower(F.col("symbol")).alias("symbol"),
-        normalize_pair(F.col("symbol")).alias("pair"),
-        F.lit("l2_event").alias("msg_type"),
-        (F.get_json_object("d", "$[3]").cast("long") * 1000).alias("timestamp"),
-        F.when(F.col("n_items") == 1, F.col("msg")).otherwise(F.col("d")).alias("json"),
-        F.lit(True).alias("snapshot"),
-        F.transform(F.coalesce("asks_raw", F.array()), _spot_order).alias("asks"),
-        F.transform(F.coalesce("bids_raw", F.array()), _spot_order).alias("bids"),
-        F.lit(None).cast("long").alias("seq_id"),
-        F.lit(None).cast("long").alias("prev_seq_id"),
+    out = emit(
+        base, schemas.ORDERBOOK_SCHEMA, EXCHANGE, "l2_event",
+        symbol=F.lower(F.col("symbol")),
+        pair=normalize_pair(F.col("symbol")),
+        timestamp=F.get_json_object("d", "$[3]").cast("long") * 1000,
+        json=F.when(F.col("n_items") == 1, F.col("msg")).otherwise(F.col("d")),
+        snapshot=F.lit(True),
+        asks=F.transform(F.coalesce("asks_raw", F.array()), _spot_order),
+        bids=F.transform(F.coalesce("bids_raw", F.array()), _spot_order),
     )
-    return finalize(sort_book_sides(out), schemas.ORDERBOOK_SCHEMA)
+    return sort_book_sides(out)
 
 
 def _parse_l2_spot_update(df: DataFrame) -> DataFrame:
@@ -344,21 +332,15 @@ def _parse_l2_spot_update(df: DataFrame) -> DataFrame:
         " quantity_quote:double, quantity_contract:double>>"
     )
     is_bid = F.col("arr")[4] == "BID"
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        F.lower(F.col("arr")[3]).alias("symbol"),
-        normalize_pair(F.lower(F.col("arr")[3])).alias("pair"),
-        F.lit("l2_event").alias("msg_type"),
-        (F.col("arr")[2].cast("long") * 1000).alias("timestamp"),
-        F.col("msg").alias("json"),
-        F.lit(False).alias("snapshot"),
-        F.when(~is_bid, F.array(order)).otherwise(empty).alias("asks"),
-        F.when(is_bid, F.array(order)).otherwise(empty).alias("bids"),
-        F.lit(None).cast("long").alias("seq_id"),
-        F.lit(None).cast("long").alias("prev_seq_id"),
+    return emit(
+        base, schemas.ORDERBOOK_SCHEMA, EXCHANGE, "l2_event",
+        symbol=F.lower(F.col("arr")[3]),
+        pair=normalize_pair(F.lower(F.col("arr")[3])),
+        timestamp=F.col("arr")[2].cast("long") * 1000,
+        snapshot=F.lit(False),
+        asks=F.when(~is_bid, F.array(order)).otherwise(empty),
+        bids=F.when(is_bid, F.array(order)).otherwise(empty),
     )
-    return finalize(out, schemas.ORDERBOOK_SCHEMA)
 
 
 def _parse_l2_swap(df: DataFrame) -> DataFrame:
@@ -386,21 +368,15 @@ def _parse_l2_swap(df: DataFrame) -> DataFrame:
             size.alias("quantity_contract"),
         )
 
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        F.col("swap_symbol").alias("symbol"),
-        normalize_pair(F.col("swap_symbol")).alias("pair"),
-        F.lit("l2_event").alias("msg_type"),
-        F.floor(F.col("d.time") / 1000).cast("long").alias("timestamp"),
-        F.col("msg").alias("json"),
-        F.lit(False).alias("snapshot"),
-        F.transform(F.coalesce("d.asks", F.array()), order).alias("asks"),
-        F.transform(F.coalesce("d.bids", F.array()), order).alias("bids"),
-        F.lit(None).cast("long").alias("seq_id"),
-        F.lit(None).cast("long").alias("prev_seq_id"),
+    return emit(
+        base, schemas.ORDERBOOK_SCHEMA, EXCHANGE, "l2_event",
+        symbol=F.col("swap_symbol"),
+        pair=normalize_pair(F.col("swap_symbol")),
+        timestamp=F.floor(F.col("d.time") / 1000).cast("long"),
+        snapshot=F.lit(False),
+        asks=F.transform(F.coalesce("d.asks", F.array()), order),
+        bids=F.transform(F.coalesce("d.bids", F.array()), order),
     )
-    return finalize(out, schemas.ORDERBOOK_SCHEMA)
 
 
 # ---------------------------------------------------------------- candles
@@ -434,24 +410,20 @@ def _parse_candle_spot(df: DataFrame) -> DataFrame:
         .when(period.endswith("D"), num * 86400000)
         .otherwise(F.lit(0))
     )
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        F.col("arr")[2].alias("symbol"),
-        normalize_pair(F.col("arr")[2]).alias("pair"),
-        F.lit("candlestick").alias("msg_type"),
-        ts.alias("timestamp"),
-        F.col("msg").alias("json"),
-        (ts - m_seconds).alias("begin_time"),
-        F.col("arr")[4].cast("double").alias("open"),
-        F.col("arr")[5].cast("double").alias("high"),
-        F.col("arr")[6].cast("double").alias("low"),
-        F.col("arr")[7].cast("double").alias("close"),
-        F.col("arr")[8].cast("double").alias("volume"),
-        period.alias("period"),
-        F.col("arr")[13].cast("double").alias("quote_volume"),
+    return emit(
+        base, schemas.CANDLESTICK_SCHEMA, EXCHANGE, "candlestick",
+        symbol=F.col("arr")[2],
+        pair=normalize_pair(F.col("arr")[2]),
+        timestamp=ts,
+        begin_time=ts - m_seconds,
+        open=F.col("arr")[4].cast("double"),
+        high=F.col("arr")[5].cast("double"),
+        low=F.col("arr")[6].cast("double"),
+        close=F.col("arr")[7].cast("double"),
+        volume=F.col("arr")[8].cast("double"),
+        period=period,
+        quote_volume=F.col("arr")[13].cast("double"),
     )
-    return finalize(out, schemas.CANDLESTICK_SCHEMA)
 
 
 def _parse_candle_swap(df: DataFrame) -> DataFrame:
@@ -474,21 +446,17 @@ def _parse_candle_swap(df: DataFrame) -> DataFrame:
     is_inverse = F.col("market_type") == "inverse_swap"
     vol = F.when(is_inverse, size * unit / o).otherwise(size * unit)
     qvol = F.when(is_inverse, size * unit).otherwise(size * unit * o)
-    out = base.select(
-        F.lit(EXCHANGE).alias("exchange"),
-        "market_type",
-        F.col("swap_symbol").alias("symbol"),
-        normalize_pair(F.col("swap_symbol")).alias("pair"),
-        F.lit("candlestick").alias("msg_type"),
-        ts.alias("timestamp"),
-        F.col("msg").alias("json"),
-        (ts - F.col("range").cast("long")).alias("begin_time"),
-        o.alias("open"),
-        F.col("line")[2].cast("double").alias("high"),
-        F.col("line")[3].cast("double").alias("low"),
-        F.col("line")[4].cast("double").alias("close"),
-        vol.alias("volume"),
-        F.col("range").alias("period"),
-        qvol.alias("quote_volume"),
+    return emit(
+        base, schemas.CANDLESTICK_SCHEMA, EXCHANGE, "candlestick",
+        symbol=F.col("swap_symbol"),
+        pair=normalize_pair(F.col("swap_symbol")),
+        timestamp=ts,
+        begin_time=ts - F.col("range").cast("long"),
+        open=o,
+        high=F.col("line")[2].cast("double"),
+        low=F.col("line")[3].cast("double"),
+        close=F.col("line")[4].cast("double"),
+        volume=vol,
+        period=F.col("range"),
+        quote_volume=qvol,
     )
-    return finalize(out, schemas.CANDLESTICK_SCHEMA)

@@ -920,11 +920,14 @@ def test_sitemap_coverage_audit_quadrants(spark):
 
 def test_host_latency_budget_inverse_monotone(spark):
     """Budget is inverse in the EWMA: slower hosts never get MORE budget,
-    and the dyadic weights sum to 255 so ewma_ms is a true weighted mean
-    (between the min and max of the window)."""
+    and ewma_ms is a true weighted mean: the accumulator is divided by the
+    weight sum of the fetches present, so it lies between the min and max
+    of the host's <= 8 most recent latencies."""
     from crypto_msg_parser_spark.crawl.queries import (
+        _host,
         host_latency_ewma_budget,
     )
+    from crypto_msg_parser_spark.sources.testdata import load_table
 
     rows = host_latency_ewma_budget(spark, SF_SMOKE).collect()
     assert len(rows) == 4
@@ -933,9 +936,24 @@ def test_host_latency_budget_inverse_monotone(spark):
     assert budgets == sorted(budgets, reverse=True)
     for r in rows:
         assert 6 <= r.new_budget_per_min <= 600
-        # latency domain is [80, 649]; a 255-weight mean stays inside it
+        # latency domain is [80, 649]; a weighted mean stays inside it
         assert 80 <= r.ewma_ms <= 649
         assert 80 <= r.p50_latency_ms <= 649
+
+    # the recency window replayed in Python: latency of fetch k, newest
+    # (largest k) first
+    def latency(k):
+        d = k % 10
+        base = 80 if d <= 5 else 120 if d <= 7 else 200 if d == 8 else 350
+        return base + (k * 37) % 300
+
+    fetches = {}
+    part = load_table(spark, SF_SMOKE, "part")
+    for f in part.select(F.col("p_partkey").alias("k"), _host().alias("host")).collect():
+        fetches.setdefault(f.host, []).append(f.k)
+    for r in rows:
+        recent = [latency(k) for k in sorted(fetches[r.host], reverse=True)[:8]]
+        assert min(recent) <= r.ewma_ms <= max(recent), (r, recent)
 
 
 def test_recrawl_change_rate_ranking_contract(spark):

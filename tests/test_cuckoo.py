@@ -78,3 +78,34 @@ def test_per_bucket_build_and_update(spark):
         np.array([r["url_hash"] for r in kept], dtype=np.int64)
     ).all()
     assert u3["n"] == per_bucket[3] - retired.count()
+
+
+def test_update_with_both_change_sets_keeps_60_bit_hashes(spark):
+    """Retire 20 of a 200-URL filter and add 20 new URLs in ONE update.
+    Both change sets share the cogroup, so every hash must reach the
+    filter exactly: a change column padded with NULLs arrives in pandas as
+    float64, which drops the low bits of a 60-bit hash — the retired URLs
+    then stay members and the added ones land under the wrong hash."""
+    urls = spark.range(220).select(
+        "id",
+        F.lit(0).cast("long").alias("rank_bucket"),
+        F.xxhash64(F.concat(F.lit("https://example.com/p/"), F.col("id").cast("string")))
+        .bitwiseAND(F.lit((1 << 60) - 1))
+        .alias("url_hash"),
+    )
+    seen = urls.filter(F.col("id") < 200)
+    retired = urls.filter(F.col("id") < 20)
+    added = urls.filter(F.col("id") >= 200)
+    (row,) = cuckoo_update_buckets(
+        build_cuckoo_buckets(seen), retired, added
+    ).collect()
+    c = Cuckoo.from_state(row["m"], row["table"], row["overflow"])
+
+    def hashes(df):
+        return np.array([r["url_hash"] for r in df.collect()], dtype=np.int64)
+
+    assert not c.might_contain(hashes(retired)).any()
+    assert c.might_contain(hashes(added)).all()
+    kept = urls.filter((F.col("id") >= 20) & (F.col("id") < 200))
+    assert c.might_contain(hashes(kept)).all()
+    assert row["n"] == 200
