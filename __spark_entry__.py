@@ -22,10 +22,10 @@ _SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship query on sf0.001: TPC-H Q1-shaped pricing summary
-    (scan -> pushed filter -> partial+final aggregate)."""
+    """Flagship query on sf0.001: binance spot trades through the parse
+    pipeline, the reference's first dispatch arm."""
     qs = all_queries()
-    return qs["q1_pricing_summary"].spark_fn(spark, _SMOKE_SF_DIR)
+    return qs["parse_binance_spot_trade"].spark_fn(spark, _SMOKE_SF_DIR)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

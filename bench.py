@@ -1,13 +1,18 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-short JSON headline line (sized to fit the driver's ~2.2 KB stdout-tail
-capture):
+"""Benchmark harness: runs every registry query (or only the ones named on
+the command line) at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
+local[$SPARK_GRAFT_CPUS] (default: all host cores) and prints ONE short
+JSON line (sized to fit a ~2.2 KB stdout-tail capture):
 
   {"metric": "...", "value": N, "unit": "sec", "n_queries": K, ...}
 
 with the full per-query detail written to BENCH/bench_local_latest.json.
-`value` is total wall-clock seconds across the headline queries (lower is
-better). Use tools/bench_scaling.py for the N-vs-4N scaling-efficiency run
+`value` is total wall-clock seconds across the queries run (lower is
+better). Usage:
+
+    python bench.py                                  # every row
+    python bench.py parse_binance_spot_trade stream_candles_1m
+
+Use tools/bench_scaling.py for the N-vs-4N scaling-efficiency run
 (BENCH/BASELINE.md).
 """
 
@@ -23,259 +28,13 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from crypto_msg_parser_spark.registry import all_queries  # noqa: E402
 from crypto_msg_parser_spark.session import get_spark  # noqa: E402
 
-# Headline set: one per operator family — agg, multi-join, window, dedup,
-# similarity, text, parse pipeline, crawl scheduler.
-HEADLINE = [
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_region_revenue",
-    "window_topk_per_group",
-    "events_sessionize",
-    "dedup_exact_groups",
-    "neardup_minhash_lsh",
-    "ann_cosine_topk",
-    "text_quality_score",
-    "parse_binance_spot_trade",
-    "parse_gate_linear_swap_trade",
-    "route_mixed_exchanges",
-    "politeness_schedule",
-    "robots_gate",
-    "cuckoo_frontier_dedup",
-    "media_decode_meta",
-    "spans_interleave_roundtrip",
-    "ann_lsh_topk",
-    "corpus_sample_stratified",
-    "decontaminate_ngram_overlap",
-    "text_repetition_ratio",
-    "frequent_ngrams_topk",
-    "corpus_prep_full",
-    # r03: the two operators whose r02 scale-killers were fixed (two-level
-    # pack prefix-sum; components without the size broadcast) are measured
-    # explicitly so the fixes show up in BENCH deltas
-    "corpus_pack_sequences",
-    "neardup_components",
-    # r03 new corpus-prep operators
-    "spans_boilerplate_strip",
-    "spans_token_truncate",
-    "corpus_domain_rebalance",
-    "interleaved_prep_full",
-    "l2_book_reconstruct",
-    # r03 scrub/discovery additions: PII redaction (flat + in-span),
-    # duplicated-window detection, interleaved near-dup composition,
-    # sitemap frontier discovery
-    "pii_scrub",
-    "spans_pii_scrub",
-    "dup_ngram_windows",
-    "interleaved_neardup",
-    "sitemap_extract",
-    # iterative pointer-doubling resolver (O(log L) self-joins)
-    "redirect_resolve",
-    # integer-arithmetic PageRank, 3 power iterations (join+agg each)
-    "pagerank_priority",
-    "corpus_importance_resample",
-    "spans_caption_extract",
-    "word_rarity_score",
-    "embedding_quantize_int8",
-    # the web-corpus flagship: scrub -> strip -> truncate -> gate -> pack
-    "web_corpus_prep_full",
-    "candles_rollup_5m",
-    "vwap_1m",
-    # r04: every query rotated INTO the driver's CORRECTNESS sample is
-    # benched the round it is graded (VERDICT r03 #10) — market analytics,
-    # scrub/audit, crawl discovery, dedup-quality, media, and the new
-    # composed market flagship
-    "market_analytics_full",
-    "l2_spread_stats",
-    "order_flow_imbalance_1m",
-    "funding_accrual_8h",
-    "gopher_quality_filter",
-    "corpus_audit_report",
-    "robots_sitemap_discovery",
-    "recrawl_backoff",
-    "host_circuit_breaker",
-    "semantic_dedup_drop",
-    "minhash_estimate_quality",
-    "ann_recall_report",
-    "length_percentiles_by_source",
-    "length_percentiles_approx_by_source",
-    "docs_lake_roundtrip",
-    "media_resize",
-    "media_feature_extract",
-    "media_embedding_neardup",
-    "url_canonicalize",
-    "frontier_seen_dedup",
-    "host_skew_stats",
-    "range_join_error_follow",
-    "candles_recompute_1m",
-    "events_tumbling_window",
-    "tfidf_top_terms",
-    "media_frame_sample",
-    "dedup_simhash",
-    "proto_trade_roundtrip",
-    # r04 late additions, driver-sampled this round: repeated-field proto
-    # round trip + streaming OHLCV through the real parse plan
-    "proto_orderbook_roundtrip",
-    "stream_candles_1m",
-    # r04: composed crawl-scheduling flagship, driver-sampled this round
-    "crawl_schedule_full",
-    # r04: link-discovery handoff (crawl x interleaved bridge)
-    "outlink_frontier_handoff",
-    # r04: multi-epoch BFS frontier growth loop
-    "crawl_bfs_expansion",
-    # r04: streaming L2 book maintenance (keyed state, LWW(seq) merge
-    # across interleaved micro-batches; fresh checkpoint per run)
-    "stream_book_reconstruct",
-    # r04: integer-exact hourly realized volatility + lake compaction
-    # planner (manifest-window bin pack)
-    "realized_volatility_1h",
-    "lake_compaction_plan",
-    # r04: streaming sequence-gap recovery (desync -> snapshot re-seed)
-    "stream_book_resync",
-    # r04: cross-exchange NBBO consolidation + minute-grid gap fill
-    "nbbo_consolidated_1m",
-    "candles_gap_fill",
-    # r04: Lee-Ready trade-sign classification (as-of quote carry + tick
-    # rule fallback, integer cents)
-    "trade_sign_leeready_1m",
-    # r04: integer-exact rolling SMA/Bollinger + Kyle's-lambda impact
-    "candles_sma_bands_5m",
-    "price_impact_kyle_lambda",
-    # r04: streaming consolidated tape (two parse arms unioned in ONE
-    # streaming plan, per-pair venue-freshest state)
-    "stream_nbbo_tape",
-    # r04: the two stateful-streaming driver rows
-    "frontier_seen_batch_replay",
-    "frontier_stream_resume",
-    # r05 ratchet (VERDICT r04 #2 + #6): every query with a driver row
-    # this round is benched the round it is graded. First the three
-    # streaming rows that had driver evidence but never a bench row —
-    # they join STREAMING below so each pass pays the full rebuild:
-    "stream_rate_limit",
-    "crawl_stream_docs_replay",
-    "events_stream_late_drop",
-    # the kmeans-IVF plan + its new DuckDB-checkable invariant gate
-    "ann_ivf_kmeans",
-    "ann_ivf_kmeans_gate",
-    # the r05 driver-sample tail (oldest-evidence r02 rows re-verified
-    # this round): joins, relational aggs, windows, scalar fns, events,
-    # dedup
-    "join_anti",
-    "join_broadcast_dim",
-    "join_outer_coalesce",
-    "join_semi",
-    "rollup_agg",
-    "cube_agg",
-    "pivot_status",
-    "distinct_count",
-    "sort_limit",
-    "set_ops",
-    "window_lag_gap",
-    "window_running_sum",
-    "rfc3339_to_ms",
-    "round9_convention",
-    "string_surgery",
-    "ts_unit_normalize",
-    "array_ops_levels",
-    "events_json_extract",
-    "dedup_exact",
-    "neardup_ngram_jaccard",
-    # r05 final-session additions, driver-sampled this round: Roll
-    # effective-spread estimator, Amihud illiquidity (ratio-of-sums),
-    # cross-venue arb screen, leakage-free train/holdout split
-    "roll_spread_1h",
-    "amihud_illiquidity_daily",
-    "venue_arb_spread_1m",
-    "corpus_split_leakfree",
-    "trade_markout_5m",
-    # r05 crawl-hygiene additions: trap/budget audit, mirror-host
-    # detection, DUST parameter mining
-    "url_trap_detect",
-    "mirror_host_detect",
-    "dust_param_detect",
-    # r05 pipeline refinements: quality-aware dedup survivor, multimodal
-    # pack budget, registrable-domain rollup
-    "neardup_best_rep",
-    "interleaved_pack_budget",
-    "domain_budget_rollup",
-    "corpus_drift_topk",
-    "quoted_spread_tw_1h",
-    "sitemap_coverage_audit",
-    "events_funnel_conversion",
-    "events_retention_cohorts",
-    # r05 microstructure staples: microprice/depth imbalance + VPIN
-    "microprice_imbalance_1m",
-    "vpin_toxicity",
-    # r05 continuation: attribution, collocation lift, re-crawl span diff
-    "events_attribution_last_touch",
-    "collocation_lift_topk",
-    "spans_epoch_diff",
-    # r05 retrieval prep: overlap chunking + inverted-index dictionary
-    "corpus_chunk_overlap",
-    "inverted_index_postings",
-    # r05 wave 3: slippage curve, embedding norm audit, HITS
-    "book_slippage_curve",
-    "embedding_norm_audit",
-    "hits_hub_authority",
-    # r05 wave 4: HLL gate + media-store integrity audit
-    "distinct_sketch_gate",
-    "media_ref_integrity",
-    # r05 wave 5 (continuation session): drawdown, bipower jump,
-    # volume-profile POC, order-flow persistence, latency-EWMA budgets,
-    # K-epoch recrawl change rate — driver-sampled this round
-    "max_drawdown_daily",
-    "bipower_jump_daily",
-    "volume_profile_poc",
-    "order_flow_persistence_1h",
-    "host_latency_ewma_budget",
-    "recrawl_change_rate",
-    # r05 wave 6: stickiness, scale-safe ntile deciles, OOV audit,
-    # padding-efficiency audit — driver-sampled this round
-    "events_stickiness_weekly",
-    "events_power_users_decile",
-    "oov_rate_by_source",
-    "batch_padding_efficiency",
-]
 
-# Queries whose spark_fn RUNS a Structured Streaming job and returns its
-# (localCheckpointed) result: re-draining that cached frame on passes 2-3
-# would record a ~0.02s "warm" that measures nothing. These rebuild on
-# EVERY pass — each rep restarts the availableNow job from a fresh
-# checkpoint, so min-of-3 times the full state-store lifecycle. (Caught
-# in r4: the first r4 detail artifact recorded 0.02-0.03s warms for all
-# five; their cold column carried the real 12-34s cost.)
-STREAMING = {
-    "stream_nbbo_tape",
-    "stream_candles_1m",
-    "stream_book_reconstruct",
-    "stream_book_resync",
-    "frontier_seen_batch_replay",
-    "frontier_stream_resume",
-    # r05: the three formerly-unbenched streaming driver rows
-    "stream_rate_limit",
-    "crawl_stream_docs_replay",
-    "events_stream_late_drop",
-}
-
-
-def run(sf_dir: str, cores: int) -> dict:
+def run(sf_dir: str, cores: int, names: list[str] | None = None) -> dict:
     qs = all_queries()
-    names = [n for n in HEADLINE if n in qs]
-    # SPARK_GRAFT_BENCH_ALL=1: price EVERY registered query (HEADLINE
-    # order first, then the registry tail) — the one-off full-coverage
-    # artifact; the default HEADLINE stays the driver's per-round run.
-    if os.environ.get("SPARK_GRAFT_BENCH_ALL"):
-        names = names + [n for n in qs if n not in set(names)]
-    # targeted re-measure hook (quiet-window adjudications, per-commit
-    # verification of changed rows): SPARK_GRAFT_BENCH_ONLY=a,b,c trims
-    # the headline to the named subset. Default behavior is unchanged;
-    # the kept per-round artifacts always run the full headline.
-    only = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
-    if only:
-        keep = {s.strip() for s in only.split(",") if s.strip()}
-        unknown = keep - set(names)
-        if unknown:
-            raise SystemExit(f"SPARK_GRAFT_BENCH_ONLY not in headline: {sorted(unknown)}")
-        names = [n for n in names if n in keep]
+    names = names or list(qs)
+    unknown = sorted(set(names) - set(qs))
+    if unknown:
+        raise SystemExit(f"unknown queries: {unknown}")
     spark = get_spark("bench", cores=cores)
     # warm the JVM + parquet footer caches once so per-query times measure
     # the plan, not session startup
@@ -315,8 +74,10 @@ def run(sf_dir: str, cores: int) -> dict:
         load_per_pass.append(open("/proc/loadavg").read().split()[0])
         for name in names:
             t0 = time.perf_counter()
-            if rep == 0 or name in STREAMING:
-                # STREAMING rebuild: release the previous pass's frame
+            if rep == 0 or qs[name].streaming:
+                # a streaming row's frame is its drained result: rebuild
+                # it so each pass restarts the availableNow job from a
+                # fresh checkpoint. Release the previous pass's frame
                 # first — streaming spark_fns return an eagerly
                 # localCheckpointed, sink-view-dropped frame (see
                 # session.finalize_memory_sink), so unpersist frees the
@@ -340,7 +101,7 @@ def run(sf_dir: str, cores: int) -> dict:
     load_per_pass.append(open("/proc/loadavg").read().split()[0])
     total = round(sum(timings.values()), 3)
     return {
-        "metric": "headline_query_wall_seconds",
+        "metric": "query_wall_seconds",
         "value": total,
         "unit": "sec",
         "queries": timings,
@@ -354,8 +115,8 @@ def run(sf_dir: str, cores: int) -> dict:
 
 if __name__ == "__main__":
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    result = run(sf_dir, cores)
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
+    result = run(sf_dir, cores, sys.argv[1:])
     # The driver records only the LAST ~2.2 KB of stdout and parses the
     # final JSON line; the full per-query detail line outgrew that in r03
     # (BENCH_r03.json came back parsed: null). So: write the full detail

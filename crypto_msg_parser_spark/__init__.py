@@ -5,10 +5,10 @@ at /root/reference; blueprint in SURVEY.md).
 Layout:
   session    -- SparkSession factory tuned for local[N] and cluster parity
   schemas    -- fixed StructTypes for all normalized record tables (SURVEY §1.3)
-  functions/ -- scalar column expressions (round9, ts normalization, hashing)
-  operators/ -- dedup, similarity, text stats, as-of join, multimodal plumbing
+  functions/ -- scalar column expressions (round9, hashing)
+  operators/ -- dedup, similarity, text stats, multimodal plumbing
   sources/   -- testdata loaders, raw-message synthesis
-  plans/     -- relational query definitions shared by entry/bench/tests
+  plans/     -- exact integer money arithmetic shared by market rows
   parser/    -- router + vectorized per-exchange normalization (SURVEY §2.2-2.3)
   crawl/     -- URL canonicalization, frontier seen-set, politeness scheduler
   streaming/ -- Structured Streaming variants + keyed-state operators

@@ -113,11 +113,13 @@ class Cuckoo:
         for j in left:
             fp, i1, raw = fps[j], i1s[j], h[j]
             cur, fpv = int(i1), int(fp)
+            kicks = []  # (bucket, slot, evicted fp) of every swap
             placed = False
             for _ in range(MAX_KICKS):
                 # deterministic victim slot
                 rng_state = (rng_state * 1103515245 + 12345) & 0x7FFFFFFF
                 slot = rng_state % SLOTS
+                kicks.append((cur, slot, int(self.table[cur, slot])))
                 fpv, self.table[cur, slot] = int(self.table[cur, slot]), fpv
                 cur = int(
                     self._i2(np.array([cur]), np.array([fpv], dtype=np.uint16))[0]
@@ -126,6 +128,11 @@ class Cuckoo:
                     placed = True
                     break
             if not placed:
+                # the homeless fingerprint is the last victim's, not this
+                # key's: undo the kick path so every victim is back in its
+                # slot, then the key's own raw hash is the one to remember
+                for b, sl, old in reversed(kicks):
+                    self.table[b, sl] = old
                 self.overflow.add(int(raw))
 
     def _in_bucket(self, i, fp) -> bool:

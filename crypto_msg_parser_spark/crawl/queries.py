@@ -415,6 +415,7 @@ _SQL_DUP_URL = _SQL_FRONTIER_URL.replace("p_partkey", "(p_partkey % 211)")
 
 @query(
     "frontier_seen_batch_replay",
+    streaming=True,
     oracle=f"""
     SELECT canonical,
            ('0x' || substr(md5(canonical), 1, 15))::BIGINT AS url_hash
@@ -483,6 +484,7 @@ _SQL_DUP_HOST = _SQL_HOST.replace("p_partkey", "(p_partkey % 211)")
 
 @query(
     "crawl_stream_docs_replay",
+    streaming=True,
     oracle=f"""
     WITH seen AS (
       SELECT DISTINCT {_SQL_DUP_URL} AS canonical,
@@ -590,6 +592,7 @@ _SQL_E2_URL = _SQL_FRONTIER_URL.replace("p_partkey", "(p_partkey % 149)")
 
 @query(
     "frontier_stream_resume",
+    streaming=True,
     oracle=f"""
     WITH e1 AS (SELECT DISTINCT {_SQL_E1_URL} AS canonical FROM part),
     e2 AS (SELECT DISTINCT {_SQL_E2_URL} AS canonical FROM part)
@@ -1041,6 +1044,7 @@ _RATE_BUDGET = 40
 
 @query(
     "stream_rate_limit",
+    streaming=True,
     oracle=f"""
     WITH f AS (
       SELECT {_SQL_FRONTIER_URL} AS url, {_SQL_HOST} AS host,

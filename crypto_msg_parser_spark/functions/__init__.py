@@ -1,5 +1,4 @@
 from crypto_msg_parser_spark.functions.scalar import (  # noqa: F401
     round9,
     stable_hash64,
-    normalize_ts_ms,
 )

@@ -40,17 +40,3 @@ def stable_hash64(col: Column, nibbles: int = 15) -> Column:
     """
     return F.conv(F.substring(F.md5(col), 1, nibbles), 16, 10).cast("long")
 
-
-def normalize_ts_ms(ts: Column) -> Column:
-    """Normalize an integer timestamp in s/ms/us to milliseconds.
-
-    Mirrors the magnitude-threshold rule of
-    crypto-msg-parser/src/exchanges/utils.rs:60-86: <= 10 digits -> seconds,
-    <= 13 digits -> already ms, else microseconds.
-    """
-    ts = ts.cast("long")
-    return (
-        F.when(ts <= F.lit(9_999_999_999), ts * 1000)
-        .when(ts <= F.lit(9_999_999_999_999), ts)
-        .otherwise(F.floor(ts / 1000).cast("long"))
-    )

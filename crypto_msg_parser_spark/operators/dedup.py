@@ -1,7 +1,7 @@
 """Deduplication operators over the `documents` table.
 
 Large-scale-training-pipeline dedup family: exact (hash groupBy), MinHash +
-LSH banding, SimHash + hamming-band join, and n-gram/word-set Jaccard.
+LSH banding, SimHash + hamming-band join, and blocked n-gram Jaccard.
 
 Scale design:
 - Exact dedup is a single shuffle on the content hash.
@@ -508,28 +508,6 @@ def neardup_simhash(spark, sf_dir):
 
 
 @query(
-    "neardup_word_jaccard",
-    oracle=f"""
-    WITH w AS (SELECT doc_id, lang, {_sql_words('text')} AS ws FROM documents)
-    SELECT doc_a, doc_b, jaccard FROM (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-             len(list_filter(a.ws, x -> list_contains(b.ws, x))) /
-             (len(a.ws) + len(b.ws)
-              - len(list_filter(a.ws, x -> list_contains(b.ws, x)))) AS jaccard
-      FROM w a JOIN w b ON a.lang = b.lang AND a.doc_id < b.doc_id)
-    WHERE jaccard >= {JACCARD_THRESHOLD}
-    """,
-    doc="word-set Jaccard near-dup within a blocking key — the n-gram "
-    "Jaccard family with explicit candidate blocking. The lang key here "
-    "exists for oracle parity at small SF; the operator contract "
-    "(neardup_jaccard_blocked) requires a high-cardinality key at scale.",
-)
-def neardup_word_jaccard(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents")
-    return neardup_jaccard_blocked(docs, block_col="lang")
-
-
-@query(
     "neardup_ngram_jaccard",
     oracle=f"""
     WITH sh AS (
@@ -585,46 +563,6 @@ def neardup_ngram_jaccard(spark, sf_dir):
             (inter / union).alias("jaccard"),
         )
         .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-    )
-
-
-def neardup_jaccard_blocked(
-    docs: DataFrame,
-    block_col: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = JACCARD_THRESHOLD,
-) -> DataFrame:
-    """Exact word-set Jaccard pairs within a blocking key.
-
-    CONTRACT: work is O(sum over blocks of block_size^2) — ``block_col``
-    must be high-cardinality relative to the corpus (shingle prefix, LSH
-    band hash, host, ...) so the largest block stays task-sized. A
-    constant-cardinality key (e.g. lang, ~3 values) degenerates to
-    all-pairs within each value and does NOT scale; for unblocked corpora
-    use neardup_minhash_lsh, which IS this operator composed over LSH
-    buckets. AQE skew-join splits pathological blocks, but cannot rescue a
-    quadratic blocking choice."""
-    w = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(block_col).alias("_blk"),
-        _words(F.col(text_col)).alias("ws"),
-    )
-    inter = F.size(F.array_intersect(F.col("a.ws"), F.col("b.ws")))
-    union = F.size(F.col("a.ws")) + F.size(F.col("b.ws")) - inter
-    return (
-        w.alias("a")
-        .join(
-            w.alias("b"),
-            (F.col("a._blk") == F.col("b._blk"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            (inter / union).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
     )
 
 

@@ -2346,6 +2346,7 @@ def proto_orderbook_roundtrip(spark, sf_dir):
 
 @query(
     "stream_candles_1m",
+    streaming=True,
     oracle=f"""
     WITH trades AS (
         SELECT {_SQL_SPOT_SYMBOL} AS symbol,
@@ -2604,6 +2605,7 @@ def _sql_stream_book_oracle() -> str:
 
 @query(
     "stream_book_reconstruct",
+    streaming=True,
     oracle=_sql_stream_book_oracle(),
     doc="STREAMING order-book maintenance through the real parse plan "
     "(the live twin of l2_book_reconstruct; binance_all.rs:198-238 "
@@ -2987,6 +2989,7 @@ def _sql_resync_oracle() -> str:
 
 @query(
     "stream_book_resync",
+    streaming=True,
     oracle=_sql_resync_oracle(),
     doc="STREAMING sequence-gap recovery — the reference client's "
     "binance depth resync protocol (the pu/prev_seq_id chain the "
@@ -4037,6 +4040,7 @@ def _sql_stream_nbbo_oracle() -> str:
 
 @query(
     "stream_nbbo_tape",
+    streaming=True,
     oracle=_sql_stream_nbbo_oracle(),
     doc="STREAMING consolidated tape — the reference's live multi-feed "
     "topology in one plan: both venues' wire messages arrive in the "

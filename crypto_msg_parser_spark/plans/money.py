@@ -9,7 +9,6 @@ quantizes money-like columns to integer minor units *before* aggregation:
                                                 -- within ~1e-9 of a 2-decimal
                                                 -- value, 0.5 away from the
                                                 -- nearest boundary
-  pct(x)    = CAST(round(x * 100) AS BIGINT)    -- discounts/taxes, 0..100
 
 Integer sums are exact and order-insensitive in both engines; the final
 scale-back (`/ 100.0`, `/ 1e6`) is a single IEEE-754 op on identical inputs,
@@ -27,16 +26,3 @@ def cents(col: Column) -> Column:
     """Money double (<=2 true decimals) -> exact integer cents."""
     return F.round(col * 100).cast("long")
 
-
-def pct(col: Column) -> Column:
-    """Rate double (<=2 true decimals, e.g. 0.07) -> exact integer percent."""
-    return F.round(col * 100).cast("long")
-
-
-# DuckDB-side equivalents (string templates for oracle SQL)
-def sql_cents(expr: str) -> str:
-    return f"CAST(round(({expr}) * 100) AS BIGINT)"
-
-
-def sql_pct(expr: str) -> str:
-    return f"CAST(round(({expr}) * 100) AS BIGINT)"

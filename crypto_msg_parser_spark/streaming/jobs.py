@@ -36,8 +36,8 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def tumbling_counts(events: DataFrame) -> DataFrame:
-    """Watermarked tumbling-window counts — the streaming twin of the
-    registry's events_tumbling_window."""
+    """Watermarked hourly tumbling-window counts per event type; the
+    streaming twin of the same batch groupBy."""
     return (
         events.withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")

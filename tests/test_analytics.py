@@ -310,102 +310,6 @@ def test_quoted_spread_tw_durations_tile_the_tape(spark):
         assert per_pair_dur[pair] == last_hour_end - (_BASE_TS + 1000)
 
 
-def test_events_funnel_strict_sequencing(spark):
-    """Funnel stages must be strictly time-ordered per user: recompute
-    the min-after-min chain event-by-event in Python and require exact
-    equality — a min-per-type implementation (ignoring order) would
-    promote users whose clicks all precede their first view."""
-    from crypto_msg_parser_spark.plans.relational import (
-        events_funnel_conversion,
-    )
-    from crypto_msg_parser_spark.sources.testdata import load_table
-    from tests.conftest import SF_SMOKE
-
-    ev = load_table(spark, SF_SMOKE, "events").collect()
-    by_user = {}
-    for r in ev:
-        by_user.setdefault(r["user_id"], []).append((r["ts"], r["event_type"]))
-    want = {}
-    naive_differs = 0
-    for uid, rows in by_user.items():
-        t_view = min((t for t, k in rows if k == "view"), default=None)
-        t_click = (
-            min((t for t, k in rows if k == "click" and t > t_view), default=None)
-            if t_view
-            else None
-        )
-        t_purchase = (
-            min(
-                (t for t, k in rows if k == "purchase" and t > t_click),
-                default=None,
-            )
-            if t_click
-            else None
-        )
-        stage = 3 if t_purchase else 2 if t_click else 1 if t_view else 0
-        want[uid] = (t_view, t_click, t_purchase, stage)
-        # does strict sequencing actually bind on this corpus?
-        naive_click = min((t for t, k in rows if k == "click"), default=None)
-        if t_view and naive_click and naive_click <= t_view:
-            naive_differs += 1
-
-    got = {
-        r["user_id"]: (r["t_view"], r["t_click"], r["t_purchase"], r["reached_stage"])
-        for r in events_funnel_conversion(spark, SF_SMOKE).collect()
-    }
-    assert got == want
-    assert naive_differs > 0  # the corpus exercises the ordering trap
-
-
-def test_events_retention_cohorts_recompute(spark):
-    """Retention matrix equals a cell-by-cell Python recompute (ISO-Monday
-    week truncation, whole-week offsets, distinct active users)."""
-    import datetime
-
-    from crypto_msg_parser_spark.plans.relational import (
-        events_retention_cohorts,
-    )
-    from crypto_msg_parser_spark.sources.testdata import load_table
-    from tests.conftest import SF_SMOKE
-
-    def week(ts):
-        d = ts.date()
-        monday = d - datetime.timedelta(days=d.weekday())
-        return datetime.datetime.combine(monday, datetime.time())
-
-    ev = load_table(spark, SF_SMOKE, "events").collect()
-    signup = {}
-    for r in ev:
-        if r["event_type"] == "signup":
-            if r["user_id"] not in signup or r["ts"] < signup[r["user_id"]]:
-                signup[r["user_id"]] = r["ts"]
-    cohort = {u: week(t) for u, t in signup.items()}
-    active = {}
-    for r in ev:
-        u = r["user_id"]
-        if u not in cohort:
-            continue
-        off = (week(r["ts"]) - cohort[u]).days // 7
-        if off >= 0:
-            active.setdefault((cohort[u], off), set()).add(u)
-    sizes = {}
-    for u, cw in cohort.items():
-        sizes[cw] = sizes.get(cw, 0) + 1
-    want = {
-        (cw, off): (len(us), sizes[cw], (100 * len(us)) // sizes[cw])
-        for (cw, off), us in active.items()
-    }
-    got = {
-        (r["cohort_week"], r["week_offset"]): (
-            r["n_active"],
-            r["n_cohort"],
-            r["retention_pct"],
-        )
-        for r in events_retention_cohorts(spark, SF_SMOKE).collect()
-    }
-    assert got == want and got
-
-
 def test_max_drawdown_nonneg_and_bounded_by_range(spark):
     """Drawdown is >=0, <= peak - trough, and bps matches the integer
     per-minute floor convention on a crafted monotone-then-crash path."""
@@ -491,50 +395,6 @@ def test_order_flow_persistence_pair_accounting(spark):
     assert saw_pairs
 
 
-def test_stickiness_bounds_and_identity(spark):
-    """Stickiness is avg-DAU/WAU in exact ppm, always in (0, 1e6]."""
-    from crypto_msg_parser_spark.plans.relational import (
-        events_stickiness_weekly,
-    )
-
-    rows = events_stickiness_weekly(spark, SF).collect()
-    assert rows
-    for r in rows:
-        assert 0 < r.stickiness_ppm <= 1000000
-        assert (
-            r.stickiness_ppm
-            == 1000000 * r.active_user_days // (r.n_active_days * r.wau)
-        )
-        # each active day contributes at most wau users
-        assert r.active_user_days <= r.n_active_days * r.wau
-        assert r.n_active_days <= 7
-
-
-def test_power_user_deciles_match_sql_ntile(spark):
-    """The scale-safe two-level rank must reproduce SQL NTILE(10)
-    exactly: per-decile sizes differ by at most one, earlier deciles
-    are never smaller, and min/max event bounds are non-increasing."""
-    from crypto_msg_parser_spark.plans.relational import (
-        events_power_users_decile,
-    )
-
-    rows = sorted(
-        events_power_users_decile(spark, SF).collect(),
-        key=lambda r: r.decile,
-    )
-    assert rows
-    sizes = [r.n_users for r in rows]
-    assert max(sizes) - min(sizes) <= 1
-    assert sizes == sorted(sizes, reverse=True)
-    # decile 1 holds the heaviest users: max_events non-increasing
-    maxes = [r.max_events for r in rows]
-    assert maxes == sorted(maxes, reverse=True)
-    total = sum(r.total_events for r in rows)
-    for r in rows:
-        assert r.share_ppm == 1000000 * r.total_events // total
-        assert r.min_events <= r.max_events
-
-
 def test_oov_rate_vocab_covers_head(spark):
     """With a 1000-word vocab over a small corpus, OOV mass must be the
     complement of vocab mass, and a source made ONLY of vocab words
@@ -568,26 +428,3 @@ def test_batch_padding_bucket_containment(spark):
         assert (
             r.waste_ppm == 1000000 * r.waste_tokens // r.padded_tokens
         )
-
-
-def test_ntile_closed_form_matches_sql_semantics():
-    """Pure-formula check (no Spark): the closed-form bucket assignment
-    used by events_power_users_decile reproduces SQL NTILE(10) for every
-    N in 1..400 — first (N % 10) buckets hold (N DIV 10)+1 rows, the
-    rest (N DIV 10)."""
-    for n in range(1, 401):
-        base, extra = n // 10, n % 10
-        threshold = extra * (base + 1)
-        got = []
-        for grank in range(1, n + 1):
-            if grank <= threshold:
-                d = (grank - 1) // (base + 1) + 1
-            else:
-                d = extra + (grank - threshold - 1) // max(base, 1) + 1
-            got.append(d)
-        # reference NTILE: distribute n rows over 10 buckets
-        ref, bucket, left = [], 1, n
-        for b in range(1, 11):
-            size = n // 10 + (1 if b <= n % 10 else 0)
-            ref.extend([b] * size)
-        assert got == ref, n

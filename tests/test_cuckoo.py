@@ -31,6 +31,17 @@ def test_no_false_negatives_and_bounded_fpp():
     assert fpp < 0.01, fpp
 
 
+def test_overflow_keeps_every_inserted_key():
+    """Past the table's capacity the kick loop gives up; the key left
+    without a slot must still answer yes. 256 keys cannot all fit the
+    256 slots (64 buckets x 4) of a filter sized for 200."""
+    keys = _hashes(256)
+    c = Cuckoo(200)
+    c.insert(keys)
+    assert c.overflow
+    assert c.might_contain(keys).all()
+
+
 def test_delete_forgets_only_the_deleted():
     keys = _hashes(2000)
     c = Cuckoo(len(keys))

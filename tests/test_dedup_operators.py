@@ -1,7 +1,7 @@
-"""Scale-parameterized dedup operators: the 60-bit/6-band SimHash path and
-the blocked-Jaccard contract, checked against brute-force definitions
-in-Spark (DuckDB cannot express 60-bit hamming, so the registry keeps a
-16-bit oracle query and this file covers the scale configuration)."""
+"""Scale-parameterized dedup operators: the 60-bit/6-band SimHash path,
+checked against brute-force definitions in-Spark (DuckDB cannot express
+60-bit hamming, so the registry keeps a 16-bit oracle query and this file
+covers the scale configuration)."""
 
 from __future__ import annotations
 
@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 
 from crypto_msg_parser_spark.operators.dedup import (
     _words,
-    neardup_jaccard_blocked,
     neardup_simhash_pairs,
     simhash_col,
 )
@@ -55,14 +54,6 @@ def test_simhash_width_is_a_real_parameter(spark):
     assert any(r["s60"] >= (1 << 16) for r in sh)  # high bits actually used
     # low 16 bits agree: widening extends, never changes, existing bits
     assert all(r["s60"] & 0xFFFF == r["s16"] for r in sh)
-
-
-def test_jaccard_blocked_respects_block_boundaries(spark):
-    docs = load_table(spark, SF, "documents").limit(300)
-    pairs = neardup_jaccard_blocked(docs, block_col="lang", threshold=0.0)
-    langs = {r["doc_id"]: r["lang"] for r in docs.select("doc_id", "lang").collect()}
-    for r in pairs.limit(2000).collect():
-        assert langs[r["doc_a"]] == langs[r["doc_b"]]
 
 
 def test_connected_components_reliable_checkpoint_parity(spark, tmp_path):

@@ -19,14 +19,15 @@ from crypto_msg_parser_spark.registry import all_queries
 
 SF_SMOKE = "/root/testdata/sf0.001"
 
-# the four round-1 driver failures + the router + a timezone-sensitive agg
+# the four round-1 driver failures + the router + a timezone-sensitive row
+# (its RFC3339 wire timestamps are rendered in the session time zone)
 _PARITY_QUERIES = [
     "parse_binance_spot_trade",
     "parse_binance_inverse_swap_trade",
     "parse_binance_funding_rate",
     "parse_binance_l2_levels",
     "binance_router",
-    "events_tumbling_window",
+    "parse_coinbase_spot_trade",
 ]
 
 

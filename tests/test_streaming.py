@@ -540,28 +540,23 @@ def test_resync_protocol_discriminates_ignore_gap_client(spark):
     )
 
 
-def test_bench_streaming_set_covers_all_streaming_headline_rows():
-    """Regression guard for the r4 fake-warm bug: a streaming query whose
-    spark_fn runs a writeStream job returns a localCheckpointed result, so
-    bench.py must REBUILD it every pass (bench.STREAMING) or min-of-3
-    records a ~0.02s drain of a cached frame. Detect streaming queries
-    structurally (their source references writeStream in the function
-    body) and pin that every such HEADLINE row is in STREAMING — and that
-    STREAMING lists only headline rows that actually stream."""
+def test_streaming_flag_matches_writestream_body():
+    """Regression guard for the fake-warm bug: a row whose spark_fn runs a
+    writeStream job returns its drained result, so bench.py must rebuild
+    it every pass (``Query.streaming``) or min-of-3 records a ~0.02s
+    re-drain of a cached frame. Detect streaming rows structurally (their
+    function body references writeStream) and pin that, for every
+    registered row, the flag says exactly that."""
     import inspect
 
-    import bench
     from crypto_msg_parser_spark.registry import all_queries
 
     qs = all_queries()
-    streaming_headline = set()
-    for name in bench.HEADLINE:
-        if name not in qs:
-            continue
-        src = inspect.getsource(inspect.unwrap(qs[name].spark_fn))
-        if "writeStream" in src:
-            streaming_headline.add(name)
-    assert streaming_headline == set(bench.STREAMING), (
-        f"bench.STREAMING out of sync: headline streaming rows "
-        f"{sorted(streaming_headline)} vs declared {sorted(bench.STREAMING)}"
+    wrong = sorted(
+        name
+        for name, q in qs.items()
+        if q.streaming
+        != ("writeStream" in inspect.getsource(inspect.unwrap(q.spark_fn)))
     )
+    assert not wrong, f"streaming flag disagrees with the body: {wrong}"
+    assert any(q.streaming for q in qs.values())
