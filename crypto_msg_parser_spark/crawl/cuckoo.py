@@ -9,10 +9,13 @@ fingerprints in 4-slot buckets with two candidate buckets per key
 key set.
 
 Same scale layout as the Bloom layer: one filter per `rank_bucket`
-storage partition, built executor-side with groupBy.applyInPandas, carried
-as rows of a (rank_bucket, m, table bytes, overflow) DataFrame, applied
-and updated partition-locally by cogrouping on rank_bucket. The driver
-never materializes any table.
+storage partition, built executor-side with groupBy.applyInPandas and
+carried as rows of a (rank_bucket, m, table bytes, overflow) DataFrame.
+Membership is a Catalyst expression over a filter row (might_contain_col,
+the column twin of Cuckoo.might_contain), so the frontier joins its
+bucket's filter row and is probed in the JVM, with no Python stage;
+updates cogroup the filter table with the change sets on rank_bucket. The
+driver never materializes any table.
 
 Deletion soundness contract: `insert` dedups by (bucket, fingerprint) —
 two DISTINCT urls whose hashes collide on the 12-bit fp + bucket pair
@@ -32,6 +35,9 @@ fall through to the exact anti-join.
 """
 
 from __future__ import annotations
+
+from functools import reduce
+from operator import or_
 
 import numpy as np
 import pandas as pd
@@ -188,6 +194,32 @@ class Cuckoo:
         c.table = np.frombuffer(table, dtype=np.uint16).reshape(c.m, SLOTS).copy()
         c.overflow = set(int(x) for x in (overflow or []))
         return c
+
+
+def might_contain_col(h, m, table, overflow):
+    """Column twin of ``Cuckoo.might_contain`` for one hash column ``h``
+    against the (m, table, overflow) columns of a ``to_state`` row: the
+    same fingerprint and bucket arithmetic (m is a power of two, so
+    ``% m`` is ``& (m-1)``), then the eight 2-byte little-endian slots of
+    the two candidate buckets compared with the fingerprint's encoding.
+    NULL where the filter columns are NULL (no filter for the bucket)."""
+    fp = F.shiftrightunsigned(h, 45).bitwiseAND(FP_MASK)
+    fp = F.when(fp == 0, 1).otherwise(fp)
+    mask = m - 1
+    i1 = h.bitwiseAND(mask)
+    i2 = i1.bitwiseXOR((fp * 0x5BD1E995).bitwiseAND(mask))
+    # table.tobytes() stores each uint16 low byte first; an int -> binary
+    # cast is refused under ANSI, so the swapped value goes through hex
+    swapped = F.shiftleft(fp.bitwiseAND(0xFF), 8).bitwiseOR(F.shiftright(fp, 8))
+    fp_le = F.unhex(F.lpad(F.hex(swapped), 4, "0"))
+
+    def in_bucket(i):
+        return reduce(or_, (
+            table.substr(i * (2 * SLOTS) + (2 * s + 1), F.lit(2)) == fp_le
+            for s in range(SLOTS)
+        ))
+
+    return in_bucket(i1) | in_bucket(i2) | F.array_contains(overflow, h)
 
 
 CUCKOO_TABLE_SCHEMA = (

@@ -115,11 +115,13 @@ def bloom_prefilter(
         )
         return out
 
+    # both outputs read one materialization: each would otherwise run the
+    # filter build and the cogroup again
     flagged = (
         frontier.groupBy("_fbkt")
         .cogroup(blooms.groupBy("_fbkt"))
         .applyInPandas(apply_fn, out_schema)
-    ).drop("_fbkt")
+    ).drop("_fbkt").localCheckpoint(eager=False)
     definitely_new = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
     needs_check = flagged.filter(F.col("maybe_seen")).drop("maybe_seen")
     return definitely_new, needs_check
@@ -129,52 +131,52 @@ def cuckoo_prefilter(
     spark: SparkSession, frontier: DataFrame, seen: DataFrame, coarsen: int = 0
 ):
     """Deletable twin of bloom_prefilter: per-bucket cuckoo filters
-    (crawl/cuckoo.py) applied by cogrouping on the bucket id. Same
-    contract: no false negatives, false positives fall through to the
-    exact join; unlike Bloom, the filter table supports retiring URLs in
-    place (cuckoo_update_buckets) for recrawl/TTL eviction.
+    (crawl/cuckoo.py), each frontier row probed against its bucket's filter
+    row in Catalyst (cuckoo.might_contain_col). Same contract: no false
+    negatives, false positives fall through to the exact join; unlike
+    Bloom, the filter table supports retiring URLs in place
+    (cuckoo_update_buckets) for recrawl/TTL eviction.
+
+    The frontier left-joins the filter table on the bucket id with no
+    hint: a filter row is ~10 bytes per seen URL, so at this size the
+    planner broadcasts it (as in robots.apply_robots) and the frontier is
+    not shuffled; at web scale the join shuffles on the bucket id. The
+    flagged frame is materialized once and split, so the filters are built
+    once per call.
 
     ``coarsen``: filter-layer granularity = rank_bucket >> coarsen. Each
-    pandas cogroup invocation has a fixed ~5-10 ms overhead, so at small
-    corpus sizes 1024 near-empty groups are pure overhead (measured ~10s
-    at sf0.1); a coarse bucket is a contiguous run of storage buckets, so
-    co-partitioning still holds. At the 10^10 design point use coarsen=0
-    (each storage bucket's filter is already ~GB-scale work)."""
-    import numpy as np
-
-    from crypto_msg_parser_spark.crawl.cuckoo import Cuckoo, build_cuckoo_buckets
+    group of the build's grouped map has a fixed ~5-10 ms pandas overhead,
+    so at small corpus sizes 1024 near-empty groups are pure overhead
+    (measured ~10s at sf0.1); a coarse bucket is a contiguous run of
+    storage buckets, so co-partitioning still holds. At the 10^10 design
+    point use coarsen=0 (each storage bucket's filter is already
+    ~GB-scale work)."""
+    from crypto_msg_parser_spark.crawl.cuckoo import (
+        build_cuckoo_buckets,
+        might_contain_col,
+    )
 
     if "rank_bucket" not in frontier.columns or "rank_bucket" not in seen.columns:
         raise ValueError("cuckoo_prefilter requires rank_bucket on both sides")
     fb = F.shiftright(F.col("rank_bucket"), coarsen).alias("_fbkt")
-    fr = frontier.withColumn("_fbkt", fb)
     filters = build_cuckoo_buckets(
         seen.withColumn("_fbkt", fb), "_fbkt", "url_hash"
+    ).select(
+        "_fbkt",
+        F.col("m").alias("_cm"),
+        F.col("table").alias("_ct"),
+        F.col("overflow").alias("_co"),
     )
-    out_schema = T.StructType(
-        list(fr.schema.fields) + [T.StructField("maybe_seen", T.BooleanType())]
+    hit = might_contain_col(
+        F.col("url_hash"), F.col("_cm"), F.col("_ct"), F.col("_co")
     )
-
-    def apply_fn(key, fdf: pd.DataFrame, cdf: pd.DataFrame) -> pd.DataFrame:
-        if len(fdf) == 0:
-            return pd.DataFrame(columns=[*fdf.columns, "maybe_seen"])
-        out = fdf.copy()
-        if len(cdf) == 0:
-            out["maybe_seen"] = False
-            return out
-        c = Cuckoo.from_state(
-            cdf["m"].iloc[0], cdf["table"].iloc[0], cdf["overflow"].iloc[0]
-        )
-        out["maybe_seen"] = c.might_contain(
-            fdf["url_hash"].to_numpy(dtype=np.int64)
-        )
-        return out
-
     flagged = (
-        fr.groupBy("_fbkt")
-        .cogroup(filters.groupBy("_fbkt"))
-        .applyInPandas(apply_fn, out_schema)
-    ).drop("_fbkt")
+        frontier.withColumn("_fbkt", fb)
+        .join(filters, "_fbkt", "left")
+        .withColumn("maybe_seen", F.coalesce(hit, F.lit(False)))
+        .drop("_fbkt", "_cm", "_ct", "_co")
+        .localCheckpoint(eager=False)
+    )
     definitely_new = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
     needs_check = flagged.filter(F.col("maybe_seen")).drop("maybe_seen")
     return definitely_new, needs_check
@@ -275,7 +277,7 @@ class FrontierCheckpoint:
             "snapshot_id": snapshot_id,
             "committed_at": time.time(),
             "frontier_rows": frontier.count(),
-            "seen_rows": seen.count(),
+            "seen_rows": sum(r["rows"] for r in lineage),
             "partitions": [r.asDict() for r in lineage],
             # fetch/parse progress counters (epoch_metrics) so a resumed
             # job reports cumulative throughput, not just state sizes

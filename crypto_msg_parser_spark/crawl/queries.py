@@ -178,8 +178,9 @@ def politeness_schedule(spark, sf_dir):
     doc="seen-set dedup through the per-bucket CUCKOO prefilter "
     "(deletable fingerprints) + exact anti-join backstop: probabilistic "
     "false positives fall through to the exact layer, so the outcome is "
-    "deterministic and must equal the pure-SQL dedup. Exercises the same "
-    "cogrouped partition-local layout as the Bloom layer.",
+    "deterministic and must equal the pure-SQL dedup. Same per-bucket "
+    "filter table as the Bloom layer, probed in Catalyst through a join on "
+    "the bucket id.",
 )
 def cuckoo_frontier_dedup(spark, sf_dir):
     from crypto_msg_parser_spark.crawl.frontier import (
@@ -188,8 +189,8 @@ def cuckoo_frontier_dedup(spark, sf_dir):
     )
     from crypto_msg_parser_spark.crawl.scheduler import prepare_frontier
 
-    # the prepared frontier feeds four consumers (filter build, both
-    # prefilter outputs, the exact-join backstop); materialize the
+    # the prepared frontier feeds three consumers (filter build, the
+    # prefilter's probe, the exact-join backstop); materialize the
     # regex-heavy canonicalization once
     f = (
         prepare_frontier(_frontier_df(spark, sf_dir))
@@ -200,7 +201,7 @@ def cuckoo_frontier_dedup(spark, sf_dir):
         "rank_bucket", "url_hash", "canonical"
     )
     # coarsen=5 -> 32 filter groups: at sf-scale corpora 1024 near-empty
-    # pandas cogroups are fixed overhead; see cuckoo_prefilter docstring
+    # pandas groups of the build are fixed overhead; see cuckoo_prefilter
     definitely_new, needs_check = cuckoo_prefilter(spark, f, seen, coarsen=5)
     new = definitely_new.unionByName(dedup_against_seen(needs_check, seen))
     return new.groupBy("host").agg(F.count(F.lit(1)).alias("n_new"))

@@ -12,6 +12,13 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _driver_mem() -> str:
+    """Half of physical RAM, 1-48 GiB: the driver heap of local mode holds
+    every executor, and the host may be far smaller than a cluster node."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(48, ram // (2 << 30)))}g"
+
+
 def get_spark(
     app_name: str = "crypto_msg_parser_spark",
     cores: int | None = None,
@@ -53,16 +60,8 @@ def get_spark(
         .config("spark.sql.codegen.hugeMethodLimit", "8000")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", _driver_mem()))
         .config("spark.ui.enabled", "false")
-        # RAM-disk shuffle on big-memory nodes: local[N] shuffles through
-        # spark.local.dir, and /dev/shm removes disk I/O from the path
-        .config(
-            "spark.local.dir",
-            "/dev/shm/spark-local"
-            if os.access("/dev/shm", os.W_OK)
-            else "/tmp",
-        )
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # joins whose keys CONTAIN the storage bucket column (seen-set
         # anti-join on [rank_bucket, url_hash, canonical] over tables

@@ -8,9 +8,11 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from crypto_msg_parser_spark.crawl.cuckoo import (
+    FP_MASK,
     Cuckoo,
     build_cuckoo_buckets,
     cuckoo_update_buckets,
+    might_contain_col,
 )
 
 
@@ -120,3 +122,46 @@ def test_update_with_both_change_sets_keeps_60_bit_hashes(spark):
     kept = urls.filter((F.col("id") >= 20) & (F.col("id") < 200))
     assert c.might_contain(hashes(kept)).all()
     assert row["n"] == 200
+
+
+def test_column_twin_equals_might_contain(spark):
+    """might_contain_col answers exactly as Cuckoo.might_contain, row for
+    row: on a filter with overflow and one without, for inserted keys,
+    random keys, negative longs and hashes whose fingerprint bits are 0
+    (stored as fingerprint 1)."""
+    zero_fp = _hashes(500, seed=13) & ~np.int64(FP_MASK << 45)
+    over = Cuckoo(200)
+    over.insert(_hashes(256))
+    assert over.overflow
+    plain = Cuckoo(1000)
+    plain.insert(np.concatenate([_hashes(800, seed=11), zero_fp[:100]]))
+    assert not plain.overflow
+
+    rng = np.random.RandomState(3)
+    probes = np.concatenate([
+        _hashes(256),
+        _hashes(800, seed=11),
+        _hashes(2000, seed=5),
+        rng.randint(-(1 << 63), 0, size=2000, dtype=np.int64),
+        zero_fp,
+        -zero_fp,
+    ])
+    rows = [
+        (fid, int(h), m, table, ovf)
+        for fid, c in enumerate((over, plain))
+        for m, table, ovf in [c.to_state()]
+        for h in probes
+    ]
+    df = spark.createDataFrame(
+        rows, "fid int, h long, m long, table binary, overflow array<long>"
+    )
+    got = df.select(
+        "fid", "h",
+        might_contain_col(F.col("h"), F.col("m"), F.col("table"), F.col("overflow"))
+        .alias("hit"),
+    ).toPandas().sort_values(["fid", "h"], kind="stable")
+    for fid, c in enumerate((over, plain)):
+        g = got[got["fid"] == fid]
+        want = c.might_contain(g["h"].to_numpy(dtype=np.int64))
+        assert want.any() and not want.all()
+        assert (g["hit"].to_numpy(dtype=bool) == want).all(), fid

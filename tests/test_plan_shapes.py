@@ -109,6 +109,65 @@ def test_seen_set_anti_join_is_exchange_free(spark):
     ) <= plan.count("REPARTITION") + 2
 
 
+def _run_plans(spark, action) -> list[tuple[dict, dict]]:
+    """Run ``action`` and return the (node id -> name, child -> parent id)
+    plan graph of every SQL execution it started, read from the status
+    store: a checkpointed frame's own executedPlan is only a scan, so the
+    work behind it shows only in the executions that ran it."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    first = store.executionsCount()
+    action()
+    bus.waitUntilEmpty()
+    execs = store.executionsList(first, store.executionsCount() - first)
+    graphs = []
+    for i in range(execs.size()):
+        g = store.planGraph(execs.apply(i).executionId())
+        nodes, edges = g.allNodes(), g.edges()
+        graphs.append((
+            {nodes.apply(k).id(): nodes.apply(k).name() for k in range(nodes.size())},
+            {edges.apply(k).fromId(): edges.apply(k).toId() for k in range(edges.size())},
+        ))
+    return graphs
+
+
+def test_cuckoo_prefilter_builds_once_and_probes_in_catalyst(spark):
+    """Materializing both prefilter outputs builds the filters once (one
+    grouped map), probes them without a pandas cogroup, and shuffles only
+    the build's input: the frontier side has no Exchange."""
+    from pyspark.sql import functions as F
+
+    from crypto_msg_parser_spark.crawl.frontier import cuckoo_prefilter
+    from crypto_msg_parser_spark.crawl.queries import _frontier_df
+    from crypto_msg_parser_spark.crawl.scheduler import prepare_frontier
+
+    f = prepare_frontier(_frontier_df(spark, SF)).repartition(4).localCheckpoint(eager=True)
+    seen = f.filter(F.col("p_partkey") % 3 == 0).select(
+        "rank_bucket", "url_hash", "canonical"
+    )
+
+    def both():
+        fresh, maybe = cuckoo_prefilter(spark, f, seen, coarsen=5)
+        fresh.localCheckpoint(eager=True)
+        maybe.localCheckpoint(eager=True)
+
+    names = []
+    for nodes, parent in _run_plans(spark, both):
+        names += nodes.values()
+        for nid, name in nodes.items():
+            if name != "Exchange":
+                continue
+            above = []
+            while nid in parent:
+                nid = parent[nid]
+                above.append(nodes[nid])
+            assert "FlatMapGroupsInPandas" in above, f"frontier shuffled: {above}"
+    assert names.count("FlatMapGroupsInPandas") == 1, names
+    assert "FlatMapCoGroupsInPandas" not in names
+    assert "BroadcastHashJoin" in names
+
+
 def test_pack_prefix_sum_two_level(spark):
     """Sequence packing (r02 verdict scale-killer #2): the only
     single-partition stage allowed is the global window over PER-SUPER
