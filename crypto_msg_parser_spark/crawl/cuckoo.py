@@ -44,6 +44,8 @@ import pandas as pd
 
 from pyspark.sql import functions as F
 
+from crypto_msg_parser_spark.sources.local import local_table
+
 FP_BITS = 12
 FP_MASK = (1 << FP_BITS) - 1
 SLOTS = 4
@@ -276,7 +278,7 @@ def cuckoo_update_buckets(
             "rank_bucket", F.col(hash_col).alias("_h"), F.lit(True).alias("_add")
         )
         if additions_df is not None
-        else spark.createDataFrame([], "rank_bucket long, _h long, _add boolean")
+        else local_table(spark, [], "rank_bucket long, _h long, _add boolean")
     )
     changes = rem.unionByName(add).filter(F.col("_h").isNotNull())
 

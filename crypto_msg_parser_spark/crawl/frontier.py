@@ -36,6 +36,7 @@ from pyspark.sql import types as T
 
 from crypto_msg_parser_spark.crawl.scheduler import schedule
 from crypto_msg_parser_spark.schemas import DOCUMENTS_SCHEMA
+from crypto_msg_parser_spark.sources.local import local_table
 
 
 def dedup_against_seen(frontier: DataFrame, seen: DataFrame) -> DataFrame:
@@ -354,8 +355,8 @@ def crawl_paginated(
     makes anyway): without it the lineage doubles per round and round k
     re-executes all k-1 predecessors (measured: 7s, 28s, ~2min, ...)."""
     frontier = seeds
-    seen = spark.createDataFrame(
-        [], "rank_bucket bigint, url_hash bigint, canonical string"
+    seen = local_table(
+        spark, [], "rank_bucket bigint, url_hash bigint, canonical string"
     )
     all_pages = []
     for _ in range(max_rounds):

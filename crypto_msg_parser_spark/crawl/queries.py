@@ -18,6 +18,7 @@ from crypto_msg_parser_spark.crawl.scheduler import schedule
 from crypto_msg_parser_spark.functions.scalar import stable_hash64
 from crypto_msg_parser_spark.registry import query
 from crypto_msg_parser_spark.session import finalize_memory_sink
+from crypto_msg_parser_spark.sources.local import local_table
 from crypto_msg_parser_spark.sources.testdata import load_table
 
 # messy URL synthesis shared by both engines: mixed case, default port,
@@ -262,7 +263,7 @@ def robots_gate(spark, sf_dir):
     )
 
     f = _frontier_df(spark, sf_dir)
-    fetched = spark.createDataFrame(_ROBOTS_BODIES, ROBOTS_FETCH_SCHEMA)
+    fetched = local_table(spark, _ROBOTS_BODIES, ROBOTS_FETCH_SCHEMA)
     out = apply_robots(f, parse_robots(fetched))
     return out.groupBy("host").agg(
         F.count(F.lit(1)).alias("n_allowed"),
@@ -355,7 +356,7 @@ def frontier_checkpoint_resume(spark, sf_dir):
     )
 
     full = _frontier_df(spark, sf_dir)
-    empty_seen = spark.createDataFrame([], "url_hash bigint, canonical string")
+    empty_seen = local_table(spark, [], "url_hash bigint, canonical string")
 
     root = tempfile.mkdtemp(prefix="frontier_ckpt_")
     try:
@@ -394,7 +395,7 @@ def frontier_checkpoint_resume(spark, sf_dir):
         )
         # materialize before the temp snapshot dir disappears
         rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
+        return local_table(spark, rows, out.schema)
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -1185,9 +1186,7 @@ _ROBOTS_SITEMAP_BODIES = [
 def robots_sitemap_discovery(spark, sf_dir):
     from crypto_msg_parser_spark.crawl.robots import ROBOTS_FETCH_SCHEMA
 
-    fetched = spark.createDataFrame(
-        _ROBOTS_SITEMAP_BODIES, ROBOTS_FETCH_SCHEMA
-    )
+    fetched = local_table(spark, _ROBOTS_SITEMAP_BODIES, ROBOTS_FETCH_SCHEMA)
     # (?i) — RFC 9309 field names are FULLY case-insensitive ('SITEMAP:',
     # 'SiteMap:' included), not just the two common casings
     maps = F.regexp_extract_all(
@@ -1412,7 +1411,7 @@ def crawl_schedule_full(spark, sf_dir):
     f = prepare_frontier(_frontier_df(spark, sf_dir).drop("priority"))
     seen = f.filter(k % 3 == 0).select("rank_bucket", "url_hash", "canonical")
     new = dedup_against_seen(f, seen)
-    fetched = spark.createDataFrame(_ROBOTS_BODIES, ROBOTS_FETCH_SCHEMA)
+    fetched = local_table(spark, _ROBOTS_BODIES, ROBOTS_FETCH_SCHEMA)
     gated = apply_robots(new, parse_robots(fetched))
     ready = gated.join(prio, gated["p_partkey"] == prio["node"]).drop("node")
     sched = schedule(ready)

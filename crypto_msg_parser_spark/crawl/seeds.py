@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from crypto_msg_parser_spark.schemas import FRONTIER_SCHEMA
+from crypto_msg_parser_spark.sources.local import local_table
 
 # (url, exchange, kind, priority, rate_budget_per_min)
 # sources: crypto-pair/src/exchanges/{binance.rs:43, kraken.rs:46,
@@ -76,7 +77,7 @@ def seed_frontier(spark: SparkSession) -> DataFrame:
         (url, url.split("/")[2], exchange, kind, priority, budget)
         for url, exchange, kind, priority, budget in SEED_ENDPOINTS
     ]
-    return spark.createDataFrame(rows, FRONTIER_SCHEMA)
+    return local_table(spark, rows, FRONTIER_SCHEMA)
 
 
 def synthetic_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:

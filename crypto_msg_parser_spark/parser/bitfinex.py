@@ -19,14 +19,12 @@ L2 events carry no timestamp — the crawl receive time is used
 
 from __future__ import annotations
 
-import json
-import pathlib
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from crypto_msg_parser_spark import schemas
 from crypto_msg_parser_spark.parser.common import (
+    data_json,
     quantity_triple,
     sort_book_sides,
     emit,
@@ -35,8 +33,6 @@ from crypto_msg_parser_spark.parser.common import (
 
 EXCHANGE = "bitfinex"
 
-_DATA = pathlib.Path(__file__).parent / "data/bitfinex_currency_map.json"
-
 
 def _norm_currency(cur: Column) -> Column:
     """Strip F0, apply the alias map, uppercase
@@ -44,7 +40,7 @@ def _norm_currency(cur: Column) -> Column:
     stripped = F.when(
         cur.endswith("F0"), cur.substr(F.lit(1), F.length(cur) - 2)
     ).otherwise(cur)
-    aliases = json.loads(_DATA.read_text())
+    aliases = data_json("bitfinex_currency_map.json")
     items: list[Column] = []
     for k, v in aliases.items():
         items += [F.lit(k), F.lit(v)]

@@ -16,14 +16,12 @@ Format dispatch (mod.rs:24-28): `table` key = legacy, `arg` key = mix,
 
 from __future__ import annotations
 
-import json
-import pathlib
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from crypto_msg_parser_spark import schemas
 from crypto_msg_parser_spark.parser.common import (
+    data_json,
     explode_with_count,
     parsed_once,
     SPOT,
@@ -33,10 +31,9 @@ from crypto_msg_parser_spark.parser.common import (
     item_json,
     order_level,
 )
+from crypto_msg_parser_spark.sources.local import local_table
 
 EXCHANGE = "bitget"
-
-_DATA = pathlib.Path(__file__).parent / "data/bitget_contract_values.json"
 
 
 def normalize_pair(symbol: Column) -> Column:
@@ -77,15 +74,14 @@ def normalize_pair(symbol: Column) -> Column:
 
 
 def _cv_dict(spark):
-    d = json.loads(_DATA.read_text())
-    return spark.createDataFrame(
-        [(p, v) for p, v in d["linear_swap"].items()], "cv_pair string, cv double"
-    )
+    d = data_json("bitget_contract_values.json")["linear_swap"]
+    return local_table(spark, list(d.items()), "cv_pair string, cv double")
 
 
 def with_contract_value(df: DataFrame, pair_col: str = "pair") -> DataFrame:
     """Legacy-format quantity math only (bitget.rs:74-80): inverse 1.0,
-    linear from the broadcast dict."""
+    linear from a broadcast join on the contract-value table, a
+    LocalRelation."""
     joined = df.join(
         F.broadcast(_cv_dict(df.sparkSession)),
         F.col(pair_col) == F.col("cv_pair"),

@@ -15,15 +15,13 @@ round9((1e8*index - id) * tick_size) — pure column arithmetic.
 
 from __future__ import annotations
 
-import json
-import pathlib
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from crypto_msg_parser_spark import schemas
 from crypto_msg_parser_spark.functions.scalar import round9
 from crypto_msg_parser_spark.parser.common import (
+    data_json,
     explode_with_count,
     quantity_triple,
     sort_book_sides,
@@ -31,9 +29,9 @@ from crypto_msg_parser_spark.parser.common import (
     item_json,
     order_level,
 )
+from crypto_msg_parser_spark.sources.local import local_table
 
 EXCHANGE = "bitmex"
-_DATA = pathlib.Path(__file__).parent / "data"
 
 
 def normalize_pair(symbol: Column) -> Column:
@@ -88,22 +86,18 @@ def normalize_pair(symbol: Column) -> Column:
 def _ticks_dict(spark) -> DataFrame:
     rows = [
         (sym, int(v[0]), float(v[1]))
-        for sym, v in json.loads((_DATA / "bitmex_ticks.json").read_text()).items()
+        for sym, v in data_json("bitmex_ticks.json").items()
     ]
-    return spark.createDataFrame(
-        rows, "tick_symbol string, sym_index bigint, tick_size double"
+    return local_table(
+        spark, rows, "tick_symbol string, sym_index bigint, tick_size double"
     )
 
 
 def _cv_dict(spark) -> DataFrame:
-    rows = [
-        (k.split(".", 1)[0], k.split(".", 1)[1], v)
-        for k, v in json.loads(
-            (_DATA / "bitmex_contract_values.json").read_text()
-        ).items()
-    ]
-    return spark.createDataFrame(
-        rows, "cv_market_type string, cv_pair string, cv_val double"
+    d = data_json("bitmex_contract_values.json")
+    rows = [(*k.split(".", 1), v) for k, v in d.items()]
+    return local_table(
+        spark, rows, "cv_market_type string, cv_pair string, cv_val double"
     )
 
 

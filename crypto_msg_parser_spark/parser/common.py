@@ -7,6 +7,10 @@ math + `explode`, entirely inside whole-stage codegen. No Python UDFs.
 
 from __future__ import annotations
 
+import functools
+import json
+import pathlib
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -26,6 +30,13 @@ BVOL = "bvol"
 
 INVERSE = (INVERSE_SWAP, INVERSE_FUTURE)
 LINEARISH = (LINEAR_SWAP, LINEAR_FUTURE, MOVE, BVOL)
+
+
+@functools.cache
+def data_json(name: str):
+    """``parser/data/<name>``, read and parsed once per process. Shared:
+    callers must not mutate it."""
+    return json.loads((pathlib.Path(__file__).parent / "data" / name).read_text())
 
 
 def parsed_once(expr: Column, alias: str = "d"):

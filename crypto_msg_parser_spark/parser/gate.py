@@ -23,7 +23,6 @@ arrival (SURVEY §2.9); streaming realization: transformWithStateInPandas
 from __future__ import annotations
 
 import json
-import pathlib
 
 import pandas as pd
 
@@ -32,6 +31,7 @@ from pyspark.sql import functions as F
 
 from crypto_msg_parser_spark import schemas
 from crypto_msg_parser_spark.parser.common import (
+    data_json,
     explode_env_with_count,
     explode_with_count,
     parsed_once,
@@ -45,10 +45,10 @@ from crypto_msg_parser_spark.parser.common import (
     order_level,
     spot_level,
 )
+from crypto_msg_parser_spark.sources.local import local_table
 
 EXCHANGE = "gate"
 
-_DATA = pathlib.Path(__file__).parent / "data/gate_contract_values.json"
 _FUTURES = ("inverse_future", "linear_future")
 _SWAPS = ("inverse_swap", "linear_swap")
 
@@ -63,19 +63,14 @@ def normalize_pair(symbol: Column) -> Column:
 
 
 def _cv_dict(spark):
-    d = json.loads(_DATA.read_text())
-    rows = [
-        (mt, pair, cv)
-        for mt, m in d.items()
-        for pair, cv in m.items()
-    ]
-    return spark.createDataFrame(
-        rows, "cv_market_type string, cv_pair string, cv double"
-    )
+    d = data_json("gate_contract_values.json")
+    rows = [(mt, pair, cv) for mt, table in d.items() for pair, cv in table.items()]
+    return local_table(spark, rows, "cv_market_type string, cv_pair string, cv double")
 
 
 def with_contract_value(df: DataFrame, pair_col: str = "pair") -> DataFrame:
-    """cv column: spot/inverse 1.0 (gate.rs:528), linear via broadcast dict."""
+    """cv column: spot/inverse 1.0 (gate.rs:528), linear via a broadcast
+    join on the contract-value table, a LocalRelation."""
     joined = df.join(
         F.broadcast(_cv_dict(df.sparkSession)),
         (F.col("market_type") == F.col("cv_market_type"))
@@ -596,7 +591,7 @@ def _parse_futures_update_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
     """Per-symbol ordered replay of futures.order_book deltas. Runs inside
     applyInPandas — the one place the engine keeps cross-message state
     (SURVEY §2.9)."""
-    cv = json.loads(_DATA.read_text())
+    cv = data_json("gate_contract_values.json")
     pdf = pdf.sort_values(["received_at", "msg_id"], kind="stable")
     price_side: dict[str, bool] = {}  # price-string -> is_ask
     out = []

@@ -14,14 +14,12 @@ name (split('.')[1]); spot symbols are lowercase.
 
 from __future__ import annotations
 
-import json
-import pathlib
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from crypto_msg_parser_spark import schemas
 from crypto_msg_parser_spark.parser.common import (
+    data_json,
     explode_with_count,
     INVERSE,
     SPOT,
@@ -33,6 +31,7 @@ from crypto_msg_parser_spark.parser.common import (
     order_level,
     spot_level,
 )
+from crypto_msg_parser_spark.sources.local import local_table
 
 EXCHANGE = "huobi"
 
@@ -41,8 +40,6 @@ SPOT_QUOTES = [
     "brl", "btc", "eth", "eur", "euroc", "gbp", "ht", "husd", "rub", "trx",
     "try", "tusd", "uah", "usdc", "usdd", "usdt", "ust", "ustc",
 ]
-
-_DATA = pathlib.Path(__file__).parent / "data/huobi_contract_values.json"
 
 
 def normalize_pair(symbol: Column) -> Column:
@@ -70,13 +67,9 @@ def normalize_pair(symbol: Column) -> Column:
 
 
 def _linear_cv_dict(spark) -> DataFrame:
-    d = json.loads(_DATA.read_text())
-    rows = [
-        (mt, pair, cv) for mt, table in d.items() for pair, cv in table.items()
-    ]
-    return spark.createDataFrame(
-        rows, "cv_market_type string, cv_pair string, cv double"
-    )
+    d = data_json("huobi_contract_values.json")
+    rows = [(mt, pair, cv) for mt, table in d.items() for pair, cv in table.items()]
+    return local_table(spark, rows, "cv_market_type string, cv_pair string, cv double")
 
 
 def with_contract_value(df: DataFrame, pair_col: str = "pair") -> DataFrame:

@@ -16,14 +16,12 @@ the reference (kucoin_swap.rs:204-213) and intentionally unimplemented here.
 
 from __future__ import annotations
 
-import json
-import pathlib
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from crypto_msg_parser_spark import schemas
 from crypto_msg_parser_spark.parser.common import (
+    data_json,
     parsed_once,
     SPOT,
     quantity_triple,
@@ -32,11 +30,11 @@ from crypto_msg_parser_spark.parser.common import (
     order_level,
     spot_level,
 )
+from crypto_msg_parser_spark.sources.local import local_table
 from crypto_msg_parser_spark.functions.scalar import round9
 
 EXCHANGE = "kucoin"
 
-_DATA = pathlib.Path(__file__).parent / "data/kucoin_contract_values.json"
 
 # crypto-pair/src/exchanges/kucoin.rs:3-22
 _CURRENCY_ALIASES = {
@@ -81,10 +79,8 @@ def normalize_pair(symbol: Column) -> Column:
 
 
 def _cv_dict(spark):
-    d = json.loads(_DATA.read_text())
-    return spark.createDataFrame(
-        [(p, v) for p, v in d["linear_swap"].items()], "cv_pair string, cv double"
-    )
+    d = data_json("kucoin_contract_values.json")["linear_swap"]
+    return local_table(spark, list(d.items()), "cv_pair string, cv double")
 
 
 def with_contract_value(df: DataFrame, pair_col: str = "pair") -> DataFrame:

@@ -14,14 +14,12 @@ envelope: {channel, symbol, ts, data}. Side encoding: T==2 -> sell.
 
 from __future__ import annotations
 
-import json
-import pathlib
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from crypto_msg_parser_spark import schemas
 from crypto_msg_parser_spark.parser.common import (
+    data_json,
     explode_with_count,
     parsed_once,
     SPOT,
@@ -32,10 +30,9 @@ from crypto_msg_parser_spark.parser.common import (
     order_level,
     spot_level,
 )
+from crypto_msg_parser_spark.sources.local import local_table
 
 EXCHANGE = "mexc"
-
-_DATA = pathlib.Path(__file__).parent / "data/mexc_contract_values.json"
 
 
 def normalize_pair(symbol: Column) -> Column:
@@ -43,10 +40,8 @@ def normalize_pair(symbol: Column) -> Column:
 
 
 def _cv_dict(spark):
-    d = json.loads(_DATA.read_text())
-    return spark.createDataFrame(
-        [(p, v) for p, v in d["linear_swap"].items()], "cv_pair string, cv double"
-    )
+    d = data_json("mexc_contract_values.json")["linear_swap"]
+    return local_table(spark, list(d.items()), "cv_pair string, cv double")
 
 
 def with_contract_value(df: DataFrame, pair_col: str = "pair") -> DataFrame:

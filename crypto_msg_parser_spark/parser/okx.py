@@ -24,14 +24,12 @@ len(data)==1 and the element's canonical JSON otherwise.
 
 from __future__ import annotations
 
-import json
-import pathlib
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from crypto_msg_parser_spark import schemas
 from crypto_msg_parser_spark.parser.common import (
+    data_json,
     explode_with_count,
     parsed_once,
     INVERSE,
@@ -42,10 +40,9 @@ from crypto_msg_parser_spark.parser.common import (
     item_json,
     order_level,
 )
+from crypto_msg_parser_spark.sources.local import local_table
 
 EXCHANGE = "okx"
-
-_DATA = pathlib.Path(__file__).parent / "data/okx_contract_values.json"
 
 
 def normalize_pair(symbol: Column) -> Column:
@@ -55,20 +52,15 @@ def normalize_pair(symbol: Column) -> Column:
 
 
 def _linear_cv_dict(spark) -> DataFrame:
-    d = json.loads(_DATA.read_text())
-    rows = [
-        (mt, pair, cv)
-        for mt, table in d.items()
-        for pair, cv in table.items()
-    ]
-    return spark.createDataFrame(
-        rows, "cv_market_type string, cv_pair string, cv double"
-    )
+    d = data_json("okx_contract_values.json")
+    rows = [(mt, pair, cv) for mt, table in d.items() for pair, cv in table.items()]
+    return local_table(spark, rows, "cv_market_type string, cv_pair string, cv double")
 
 
 def with_contract_value(df: DataFrame, pair_col: str = "pair") -> DataFrame:
     """Attach the contract multiplier as column `cv`:
-    spot 1, inverse closed-form, linear via broadcast dict join."""
+    spot 1, inverse closed-form, linear via a broadcast join on the
+    contract-value table, a LocalRelation."""
     spark = df.sparkSession
     joined = df.join(
         F.broadcast(_linear_cv_dict(spark)),

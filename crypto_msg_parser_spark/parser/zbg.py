@@ -16,23 +16,20 @@ Swap frames: [channel, {contractId, ...}] with µs timestamps.
 
 from __future__ import annotations
 
-import json
-import pathlib
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from crypto_msg_parser_spark import schemas
 from crypto_msg_parser_spark.parser.common import (
+    data_json,
     sort_book_sides,
     parsed_once,
     emit,
     spot_level,
 )
+from crypto_msg_parser_spark.sources.local import local_table
 
 EXCHANGE = "zbg"
-
-_DATA = pathlib.Path(__file__).parent / "data/zbg_symbols.json"
 
 
 def normalize_pair(symbol: Column) -> Column:
@@ -42,21 +39,16 @@ def normalize_pair(symbol: Column) -> Column:
     ).otherwise(F.upper(F.translate(symbol, "_", "/")))
 
 
-def _maps(spark):
-    d = json.loads(_DATA.read_text())
-    spot = spark.createDataFrame(
-        [(int(k), v) for k, v in d["spot_symbols"].items()],
-        "spot_id bigint, spot_symbol string",
+def _swap_map(spark):
+    d = data_json("zbg_symbols.json")["swap_contracts"]
+    rows = [(int(k), *v) for k, v in d.items()]
+    return local_table(
+        spark, rows, "contract_id bigint, swap_symbol string, contract_unit double"
     )
-    swap = spark.createDataFrame(
-        [(int(k), v[0], v[1]) for k, v in d["swap_contracts"].items()],
-        "contract_id bigint, swap_symbol string, contract_unit double",
-    )
-    return spot, swap
 
 
 def _with_swap_contract(df: DataFrame, id_col) -> DataFrame:
-    _, swap = _maps(df.sparkSession)
+    swap = _swap_map(df.sparkSession)
     return df.withColumn("cid", id_col.cast("long")).join(
         F.broadcast(swap), F.col("cid") == F.col("contract_id"), "left"
     ).drop("contract_id")
@@ -83,7 +75,7 @@ def _head(msg: Column) -> Column:
 def _id_map_literal(kind: str) -> Column:
     """Numeric-id -> symbol dictionary as a map literal (evaluated inside
     whole-stage codegen; no join needed for the routing triple)."""
-    d = json.loads(_DATA.read_text())
+    d = data_json("zbg_symbols.json")
     items: list[Column] = []
     if kind == "spot":
         for k, v in d["spot_symbols"].items():

@@ -119,10 +119,8 @@ def gate_futures_l2_stateful(raw: DataFrame) -> DataFrame:
         GroupStateTimeout,
     )
 
-    from crypto_msg_parser_spark.parser.gate import (
-        _DATA,
-        _replay_futures_update,
-    )
+    from crypto_msg_parser_spark.parser.common import data_json
+    from crypto_msg_parser_spark.parser.gate import _replay_futures_update
 
     ev = F.get_json_object("msg", "$.event")
     upd = (
@@ -148,7 +146,7 @@ def gate_futures_l2_stateful(raw: DataFrame) -> DataFrame:
     def update(
         key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        cv = _json.loads(_DATA.read_text())
+        cv = data_json("gate_contract_values.json")
         if state.exists:
             (blob,) = state.get
             price_side = dict(_json.loads(blob))

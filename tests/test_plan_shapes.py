@@ -37,6 +37,99 @@ def test_dimension_joins_broadcast(spark):
         assert "CartesianProduct" not in plan, name
 
 
+def _dimension_builders():
+    from crypto_msg_parser_spark.crawl.seeds import seed_frontier
+    from crypto_msg_parser_spark.parser import (
+        bitget, bitmex, gate, huobi, kucoin, mexc, okx, zbg,
+    )
+
+    return [
+        bitget._cv_dict, bitmex._ticks_dict, bitmex._cv_dict, gate._cv_dict,
+        huobi._linear_cv_dict, kucoin._cv_dict, mexc._cv_dict,
+        okx._linear_cv_dict, zbg._swap_map, seed_frontier,
+    ]
+
+
+@pytest.mark.parametrize("arrow", ["true", "false"])
+def test_dimension_tables_are_local_relations(spark, arrow):
+    """A constant table built from a Python list must be a LocalRelation
+    whatever the session's Arrow setting: an RDD of pickled rows
+    (LogicalRDD) starts Python workers on every execution of every plan
+    that joins it."""
+    from crypto_msg_parser_spark.schemas import FRONTIER_SCHEMA
+
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, arrow)
+    try:
+        for build in _dimension_builders():
+            df = build(spark)
+            plan = df._jdf.queryExecution().optimizedPlan()
+            assert plan.nodeName() == "LocalRelation", (
+                build.__qualname__, plan.toString()
+            )
+            assert plan.children().isEmpty(), build.__qualname__
+            # the same schema createDataFrame(rows, ddl) gave: all nullable,
+            # except the frontier's declared non-null columns
+            want = FRONTIER_SCHEMA if build.__name__ == "seed_frontier" else None
+            assert [f.nullable for f in df.schema.fields] == (
+                [f.nullable for f in want.fields] if want else [True] * len(df.columns)
+            ), build.__qualname__
+            assert df.count() > 0, build.__qualname__
+    finally:
+        spark.conf.set(key, old)
+
+
+@pytest.mark.parametrize("escaped", ["true", "false"])
+def test_local_table_equals_create_dataframe(spark, escaped):
+    """local_table holds the same rows and schema as createDataFrame for
+    values SQL quoting could mangle, under either string-literal parser
+    mode."""
+    from crypto_msg_parser_spark.sources.local import local_table
+
+    ddl = "s string not null, n bigint, x double, b boolean"
+    rows = [
+        ("a'b\\c\n\"d`", -(1 << 59) - 7, 1e-08, True),
+        ("ünï☃ \\' '' \\n", None, 1.0000000000000002, None),
+        ("", 2147483648, -2.5e300, False),
+    ]
+    key = "spark.sql.parser.escapedStringLiterals"
+    old = spark.conf.get(key)
+    spark.conf.set(key, escaped)
+    try:
+        got = local_table(spark, rows, ddl)
+        want = spark.createDataFrame(rows, ddl)
+        assert got.schema == want.schema
+        assert got.collect() == want.collect()
+        empty = local_table(spark, [], "h bigint, c string")
+        assert empty.schema == spark.createDataFrame([], "h bigint, c string").schema
+        assert empty.count() == 0
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_api_parse_plans_read_no_rdd_but_their_input(spark, tmp_path):
+    """Over a parquet input, no api.parse_* plan has an RDD leaf: every
+    dimension table it joins is a LocalRelation."""
+    from pyspark.sql import functions as F
+
+    from crypto_msg_parser_spark.parser import api
+    from tests.parser_util import fixtures_df, load_fixtures
+
+    rows = [dict(r, market_type=r["market_type"] or "spot") for r in load_fixtures()]
+    fixtures_df(spark, rows).write.parquet(str(tmp_path / "raw"))
+    raw = spark.read.parquet(str(tmp_path / "raw")).withColumn(
+        "routed_symbol", F.lit(None).cast("string")
+    )
+    for fn in (api.parse_trade, api.parse_l2, api.parse_l2_topk, api.parse_bbo,
+               api.parse_funding_rate, api.parse_candlestick, api.parse_l2_snapshot):
+        qe = fn(raw)._jdf.queryExecution()
+        leaves = qe.optimizedPlan().collectLeaves()
+        names = {leaves.apply(i).nodeName() for i in range(leaves.size())}
+        assert "LogicalRDD" not in names, (fn.__name__, names)
+        assert "ExistingRDD" not in qe.executedPlan().toString(), fn.__name__
+
+
 def test_no_cartesian_products_anywhere(spark):
     # every registered query must avoid accidental cross joins; the ANN
     # brute-force scans are explicit BroadcastNestedLoop by design, and
