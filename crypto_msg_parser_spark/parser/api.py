@@ -43,6 +43,7 @@ from crypto_msg_parser_spark.parser import (
     zb,
     zbg,
 )
+from crypto_msg_parser_spark.parser.common import Msg, parse_once
 
 # canonical exchange -> (module implementing a subset of the parse
 # functions, alias names the arm also accepts — lib.rs:35-36,41)
@@ -152,22 +153,26 @@ def _msg_type_fn(exchange_name: str, mod, extended: bool):
 def _route_col(
     fn_name: str, exchange: Column, msg: Column, extended: bool = False
 ) -> Column:
-    if fn_name == "get_msg_type":
-        # exchanges without a sniffer return Other (lib.rs:327)
-        expr = F.lit("other")
-    else:
-        expr = F.lit(None).cast(
-            "string" if fn_name != "extract_timestamp" else "long"
-        )
-    for name, names, mod in _dispatch_arms():
+    def ladder(m: Msg) -> Column:
         if fn_name == "get_msg_type":
-            fn = _msg_type_fn(name, mod, extended)
+            # exchanges without a sniffer return Other (lib.rs:327)
+            default = F.lit("other")
         else:
-            fn = getattr(mod, fn_name, None)
-        if fn is None:
-            continue
-        expr = F.when(exchange.isin(*names), fn(msg)).otherwise(expr)
-    return expr
+            default = F.lit(None).cast(
+                "string" if fn_name != "extract_timestamp" else "long"
+            )
+        expr = default
+        for name, names, mod in _dispatch_arms():
+            if fn_name == "get_msg_type":
+                fn = _msg_type_fn(name, mod, extended)
+            else:
+                fn = getattr(mod, fn_name, None)
+            if fn is None:
+                continue
+            expr = F.when(exchange.isin(*names), fn.read(m)).otherwise(expr)
+        return F.when(m.v.isNotNull(), expr).otherwise(default)
+
+    return parse_once(msg, ladder)
 
 
 def get_msg_type(exchange: Column, msg: Column, extended: bool = False) -> Column:
@@ -187,22 +192,23 @@ def extract_timestamp(exchange: Column, msg: Column) -> Column:
     return _route_col("extract_timestamp", exchange, msg)
 
 
-def _route_struct(
-    exchange: Column, msg: Column, extended: bool = False
-) -> Column:
+def _route_struct(exchange: Column, m: Msg, extended: bool = False) -> Column:
     """ONE 20-exchange ladder producing the whole routing triple as a
-    struct, instead of three parallel ladders: the exchange match and the
-    per-arm json probes are emitted once, cutting the generated code and
-    per-row work to a third. A module missing one of the three functions
-    contributes that ladder's default inside its arm (msg_type 'other',
-    symbol/ts NULL — lib.rs:327 semantics), identical to the per-column
-    ladders skipping the arm. The msg_type component honors the strict
-    9-exchange reference parity of get_msg_type unless extended=True."""
-    expr = F.struct(
+    struct, instead of three parallel ladders: the exchange match is
+    emitted once, and every arm reads the same parse ``m``. A module
+    missing one of the three functions contributes that ladder's default
+    inside its arm (msg_type 'other', symbol/ts NULL — lib.rs:327
+    semantics), identical to the per-column ladders skipping the arm. The
+    msg_type component honors the strict 9-exchange reference parity of
+    get_msg_type unless extended=True. A message that is not one JSON
+    document (``try_parse_json`` is NULL: not JSON, truncated, a duplicate
+    key) routes to the default."""
+    default = F.struct(
         F.lit("other").alias("routed_msg_type"),
         F.lit(None).cast("string").alias("routed_symbol"),
         F.lit(None).cast("long").alias("routed_ts"),
     )
+    expr = default
     for name, names, mod in _dispatch_arms():
         mt = _msg_type_fn(name, mod, extended)
         sym = getattr(mod, "extract_symbol", None)
@@ -211,14 +217,14 @@ def _route_struct(
             continue
         match = exchange.isin(*names)
         arm = F.struct(
-            (mt(msg) if mt else F.lit("other")).alias("routed_msg_type"),
-            (sym(msg) if sym else F.lit(None).cast("string")).alias(
+            (mt.read(m) if mt else F.lit("other")).alias("routed_msg_type"),
+            (sym.read(m) if sym else F.lit(None).cast("string")).alias(
                 "routed_symbol"
             ),
-            (ts(msg) if ts else F.lit(None).cast("long")).alias("routed_ts"),
+            (ts.read(m) if ts else F.lit(None).cast("long")).alias("routed_ts"),
         )
         expr = F.when(match, arm).otherwise(expr)
-    return expr
+    return F.when(m.v.isNotNull(), expr).otherwise(default)
 
 
 def route(df: DataFrame, extended: bool = False) -> DataFrame:
@@ -227,24 +233,27 @@ def route(df: DataFrame, extended: bool = False) -> DataFrame:
     one place the crawl job shuffles (by (exchange, msg_type)); everything
     downstream is partition-local.
 
-    Physical-design note (measured on 600k mixed msgs, 16 cores): the
-    20-exchange when-ladder is ONE pass over the input at ~230k msgs/s
-    steady-state but costs ~40s of one-time Catalyst analysis + codegen;
-    the union-of-filtered-branches alternative compiles fast but re-scans
-    the input once per exchange (~30k msgs/s steady). At 100 TB the
-    one-time compile amortizes to nothing and the single-pass ladder wins.
-    The triple is computed as ONE fused struct ladder pinned behind a
-    Generate barrier (parsed_once): three parallel column ladders tripled
-    the generated code past HotSpot's JIT method limit and the stage ran
-    INTERPRETED — same 600k rows swung 2s/20s run-to-run; the fused form
-    is a third the code and evaluates the exchange match once per row.
+    Physical-design note. The triple is ONE struct ladder over the
+    exchange, evaluated once per row behind a Generate barrier, and every
+    arm reads ONE parse of the message: ``try_parse_json(msg)`` bound to a
+    lambda variable (``common.parse_once``), read by the sniffers through
+    ``common.Msg``. The earlier ladder called ``get_json_object`` on the
+    raw text in every probe — 5 to 70 re-scans per arm, ~450 in the plan —
+    and its generated code passed HotSpot's 8000-byte JIT limit. The
+    ladder now runs interpreted inside the lambda (higher-order functions
+    have no codegen), so nothing large is compiled, and ``common.let``
+    binds a value a ladder tests more than once: each successful VARIANT
+    read costs about a microsecond, as Spark builds a Cast per read.
+    Measured on 4 cores / 15 GB, fixtures x128 (63 616 msgs), CPU of a
+    warm drain (process tree minus JIT threads): 5.1-5.4 s before,
+    2.4-2.7 s after, of which the parse is ~1.2 s (~18 us/msg).
     Per-exchange sub-pipelines remain available directly on the modules
     for partition-pruned inputs."""
-    from crypto_msg_parser_spark.parser.common import parsed_once
-
-    triple = _route_struct(F.col("exchange"), F.col("msg"), extended=extended)
+    triple = parse_once(
+        F.col("msg"), lambda m: _route_struct(F.col("exchange"), m, extended)
+    )
     cols = df.columns
-    return df.transform(parsed_once(triple, alias="_r")).select(
+    return df.select("*", F.explode(F.array(triple)).alias("_r")).select(
         *cols,
         F.col("_r.routed_msg_type").alias("routed_msg_type"),
         F.col("_r.routed_symbol").alias("routed_symbol"),

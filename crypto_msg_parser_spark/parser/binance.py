@@ -25,6 +25,9 @@ from crypto_msg_parser_spark.parser.common import (
     parsed_once,
     INVERSE,
     SPOT,
+    Msg,
+    let,
+    sniffer,
     emit,
     item_json,
     normalize_pair_with_quotes,
@@ -91,61 +94,61 @@ def _stream(msg: Column) -> Column:
     return F.get_json_object(msg, "$.stream")
 
 
-def get_msg_type(msg: Column) -> Column:
-    s = _stream(msg)
-    return (
-        F.when(s.isNull(), "l2_snapshot")
-        .when(s.endswith("@aggTrade"), "trade")
-        .when(s.endswith("@depth") | s.endswith("@depth@100ms"), "l2_event")
-        .when(
-            s.endswith("@depth5") | s.endswith("@depth10") | s.endswith("depth20"),
-            "l2_topk",
+@sniffer
+def get_msg_type(m: Msg) -> Column:
+    def by_stream(s):
+        return (
+            F.when(s.isNull(), "l2_snapshot")
+            .when(s.endswith("@aggTrade"), "trade")
+            .when(s.endswith("@depth") | s.endswith("@depth@100ms"), "l2_event")
+            .when(
+                s.endswith("@depth5") | s.endswith("@depth10") | s.endswith("depth20"),
+                "l2_topk",
+            )
+            .when(s.endswith("@bookTicker"), "bbo")
+            .when(s.endswith("@ticker"), "ticker")
+            .when(s.contains("@kline_"), "candlestick")
+            .when(s.contains("markPrice"), "funding_rate")
+            .otherwise("other")
         )
-        .when(s.endswith("@bookTicker"), "bbo")
-        .when(s.endswith("@ticker"), "ticker")
-        .when(s.contains("@kline_"), "candlestick")
-        .when(s.contains("markPrice"), "funding_rate")
-        .otherwise("other")
+
+    return let(by_stream, m.get("$.stream"))
+
+
+@sniffer
+def extract_symbol(m: Msg) -> Column:
+    def by_stream(s, data_s):
+        return (
+            F.when(s.startswith("!") & s.endswith("@arr"), "ALL")
+            .when(s.endswith("_ALL"), "ALL")
+            .when(data_s.isNotNull(), data_s)
+            .when(data_symbol.isNotNull(), data_symbol)
+            .when(s.contains("@"), F.upper(F.split(s, "@").getItem(0)))
+            .when(bare_snapshot, "NONE")
+        )
+
+    data_symbol = F.coalesce(m.get("$.data.symbol"), m.get("$.symbol"))
+    bare_snapshot = m.has("$.lastUpdateId") & m.has("$.asks") & m.has("$.bids")
+    return let(
+        by_stream,
+        F.coalesce(m.get("$.stream"), F.lit("")),
+        F.coalesce(m.get("$.data.s"), m.get("$.s")),
     )
 
 
-def extract_symbol(msg: Column) -> Column:
-    s = F.coalesce(_stream(msg), F.lit(""))
-    data_s = F.coalesce(
-        F.get_json_object(msg, "$.data.s"), F.get_json_object(msg, "$.s")
-    )
-    data_symbol = F.coalesce(
-        F.get_json_object(msg, "$.data.symbol"), F.get_json_object(msg, "$.symbol")
-    )
-    bare_snapshot = (
-        F.get_json_object(msg, "$.lastUpdateId").isNotNull()
-        & F.get_json_object(msg, "$.asks").isNotNull()
-        & F.get_json_object(msg, "$.bids").isNotNull()
-    )
-    return (
-        F.when(s.startswith("!") & s.endswith("@arr"), "ALL")
-        .when(s.endswith("_ALL"), "ALL")
-        .when(data_s.isNotNull(), data_s)
-        .when(data_symbol.isNotNull(), data_symbol)
-        .when(s.contains("@"), F.upper(F.split(s, "@").getItem(0)))
-        .when(bare_snapshot, "NONE")
-    )
-
-
-def extract_timestamp(msg: Column) -> Column:
+@sniffer
+def extract_timestamp(m: Msg) -> Column:
     """E or time of the data object; max(E) over array payloads."""
-    arr = F.from_json(
-        F.get_json_object(msg, "$.data"), "array<struct<E:bigint>>"
-    )
     scalar = F.coalesce(
-        F.get_json_object(msg, "$.data.E"),
-        F.get_json_object(msg, "$.E"),
-        F.get_json_object(msg, "$.data.time"),
-        F.get_json_object(msg, "$.time"),
-    ).cast("long")
-    return F.when(
-        arr.isNotNull(), F.array_max(F.transform(arr, lambda x: x["E"]))
-    ).otherwise(scalar)
+        m.get("$.data.E"), m.get("$.E"), m.get("$.data.time"), m.get("$.time")
+    ).try_cast("long")
+    return let(
+        lambda arr: F.when(
+            arr.isNotNull(),
+            F.array_max(F.transform(arr, lambda x: x["E"].try_cast("long"))),
+        ).otherwise(scalar),
+        m.rows("$.data", "struct<E:string>"),
+    )
 
 
 # ---------------------------------------------------------------- parsers

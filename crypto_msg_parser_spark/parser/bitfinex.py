@@ -24,6 +24,9 @@ from pyspark.sql import functions as F
 
 from crypto_msg_parser_spark import schemas
 from crypto_msg_parser_spark.parser.common import (
+    Msg,
+    let,
+    sniffer,
     data_json,
     quantity_triple,
     sort_book_sides,
@@ -72,69 +75,74 @@ def _hdr_symbol(msg: Column) -> Column:
     return F.get_json_object(msg, "$[0].symbol")
 
 
-def _candle_key_symbol(msg: Column) -> Column:
+def _candle_key_symbol(key: Column) -> Column:
     """'trade:1m:tBTCF0:USTF0' -> everything after the SECOND ':'."""
-    key = F.get_json_object(msg, "$[0].key")
     return F.regexp_replace(key, "^trade:[^:]*:", "")
 
 
-def _candle_key_period(msg: Column) -> Column:
-    key = F.get_json_object(msg, "$[0].key")
+def _candle_key_period(key: Column) -> Column:
     return F.regexp_extract(key, "^trade:([^:]*):", 1)
 
 
-def extract_symbol(msg: Column) -> Column:
+@sniffer
+def extract_symbol(m: Msg) -> Column:
     """bitfinex.rs:13-33."""
-    return (
-        F.when(msg == "[]", "NONE")
-        .when(_hdr_symbol(msg).isNotNull(), _hdr_symbol(msg))
-        .when(_channel(msg) == "candles", _candle_key_symbol(msg))
-        .when(~msg.rlike('^\\[\\s*\\{'), "NONE")
+    return let(
+        lambda hdr: F.when(m.raw == "[]", "NONE")
+        .when(hdr.isNotNull(), hdr)
+        .when(
+            m.get("$[0].channel") == "candles",
+            _candle_key_symbol(m.get("$[0].key")),
+        )
+        .when(~m.raw.rlike('^\\[\\s*\\{'), "NONE"),
+        m.get("$[0].symbol"),
     )
 
 
-def extract_timestamp(msg: Column) -> Column:
+@sniffer
+def extract_timestamp(m: Msg) -> Column:
     """bitfinex.rs:35-76: trades te/tu arr[2][1]; snapshots max over [1];
     candles arr[1][0] or max; book/ticker None."""
-    ch = _channel(msg)
-    te_ts = F.get_json_object(msg, "$[2][1]").cast("long")
-    snap = F.from_json(F.get_json_object(msg, "$[1]"), "array<array<double>>")
-    single = F.from_json(F.get_json_object(msg, "$[1]"), "array<double>")
-    is_2d = F.get_json_object(msg, "$[1][0][0]").isNotNull()
-    return (
-        F.when(
-            ch == "trades",
-            F.when(te_ts.isNotNull(), te_ts).otherwise(
-                F.array_max(
-                    F.transform(snap, lambda x: x.getItem(1).cast("long"))
-                )
-            ),
-        )
-        .when(
-            ch == "candles",
+    snap = m.get("$[1]", "array<array<double>>")
+    single = m.get("$[1]", "array<double>")
+
+    def ladder(ch, te_ts):
+        return (
             F.when(
-                is_2d,
-                F.array_max(
-                    F.transform(snap, lambda x: x.getItem(0).cast("long"))
+                ch == "trades",
+                F.when(te_ts.isNotNull(), te_ts).otherwise(
+                    F.array_max(
+                        F.transform(snap, lambda x: x.getItem(1).cast("long"))
+                    )
                 ),
-            ).otherwise(single.getItem(0).cast("long")),
+            )
+            .when(
+                ch == "candles",
+                F.when(
+                    m.has("$[1][0][0]"),
+                    F.array_max(
+                        F.transform(snap, lambda x: x.getItem(0).cast("long"))
+                    ),
+                ).otherwise(single.getItem(0).cast("long")),
+            )
+            .otherwise(F.lit(None).cast("long"))
         )
-        .otherwise(F.lit(None).cast("long"))
-    )
+
+    return let(ladder, m.get("$[0].channel"), m.get("$[2][1]").try_cast("long"))
 
 
-def get_msg_type(msg: Column) -> Column:
+@sniffer
+def get_msg_type(m: Msg) -> Column:
     """Engine-side sniffer (bitfinex missing from lib.rs get_msg_type):
     channel + book precision (R0 = L3)."""
-    ch = _channel(msg)
-    prec = F.get_json_object(msg, "$[0].prec")
-    return (
-        F.when(ch == "trades", "trade")
-        .when((ch == "book") & (prec == "R0"), "l3_event")
+    return let(
+        lambda ch: F.when(ch == "trades", "trade")
+        .when((ch == "book") & (m.get("$[0].prec") == "R0"), "l3_event")
         .when(ch == "book", "l2_event")
         .when(ch == "ticker", "ticker")
         .when(ch == "candles", "candlestick")
-        .otherwise("other")
+        .otherwise("other"),
+        m.get("$[0].channel"),
     )
 
 
@@ -258,9 +266,9 @@ def parse_candlestick(df: DataFrame) -> DataFrame:
     single = F.from_json(F.get_json_object("msg", "$[1]"), "array<double>")
     base = (
         df.filter(_channel(F.col("msg")) == "candles")
-        .withColumn("symbol", _candle_key_symbol(F.col("msg")))
+        .withColumn("symbol", _candle_key_symbol(F.get_json_object("msg", "$[0].key")))
         .withColumn("pair", normalize_pair(F.col("symbol")))
-        .withColumn("period", _candle_key_period(F.col("msg")))
+        .withColumn("period", _candle_key_period(F.get_json_object("msg", "$[0].key")))
         .withColumn("items", F.when(is_2d, snap).otherwise(F.array(single)))
         .filter(F.size("items") > 0)
         .select("*", F.explode("items").alias("d"))

@@ -21,6 +21,9 @@ from pyspark.sql import functions as F
 
 from crypto_msg_parser_spark import schemas
 from crypto_msg_parser_spark.parser.common import (
+    Msg,
+    let,
+    sniffer,
     data_json,
     explode_with_count,
     parsed_once,
@@ -97,47 +100,66 @@ def with_contract_value(df: DataFrame, pair_col: str = "pair") -> DataFrame:
 
 def _fmt(msg: Column) -> Column:
     """'mix' | 'legacy' | 'rest' (mod.rs:24-28 key probing)."""
+    return _fmt_of(lambda path: F.get_json_object(msg, path).isNotNull())
+
+
+def _fmt_of(has) -> Column:
+    """``_fmt`` over ``has(path)``, a key-presence probe."""
     return (
-        F.when(F.get_json_object(msg, "$.table").isNotNull(), "legacy")
-        .when(F.get_json_object(msg, "$.arg").isNotNull(), "mix")
-        .when(F.get_json_object(msg, "$.code").isNotNull(), "rest")
+        F.when(has("$.table"), "legacy")
+        .when(has("$.arg"), "mix")
+        .when(has("$.code"), "rest")
         .otherwise("unknown")
     )
 
 
-def get_msg_type(msg: Column) -> Column:
+@sniffer
+def get_msg_type(m: Msg) -> Column:
     """mod.rs:71-95 + before20220429/bitget_swap.rs:97-122."""
-    table_ch = F.split(F.get_json_object(msg, "$.table"), "/")[1]
-    arg_ch = F.get_json_object(msg, "$.arg.channel")
-    has_data = F.get_json_object(msg, "$.data").isNotNull()
-    return (
-        F.when(
-            has_data & (_fmt(msg) == "legacy"),
-            F.when(table_ch == "trade", "trade")
-            .when(table_ch == "depth", "l2_event")
-            .when(table_ch == "depth5", "l2_topk")
-            .when(table_ch == "ticker", "ticker")
-            .when(table_ch.startswith("candle"), "candlestick")
-            .when(table_ch == "funding_rate", "funding_rate")
-            .otherwise("other"),
+
+    def ladder(fmt, has_data, table, arg_ch):
+        table_ch = F.split(table, "/")[1]
+        return (
+            F.when(
+                has_data & (fmt == "legacy"),
+                F.when(table_ch == "trade", "trade")
+                .when(table_ch == "depth", "l2_event")
+                .when(table_ch == "depth5", "l2_topk")
+                .when(table_ch == "ticker", "ticker")
+                .when(table_ch.startswith("candle"), "candlestick")
+                .when(table_ch == "funding_rate", "funding_rate")
+                .otherwise("other"),
+            )
+            .when(
+                has_data & (fmt == "mix"),
+                F.when(arg_ch == "trade", "trade")
+                .when(arg_ch == "books", "l2_event")
+                .when(arg_ch.isin("books5", "books15"), "l2_topk")
+                .when(arg_ch == "ticker", "ticker")
+                .when(arg_ch.startswith("candle"), "candlestick")
+                .otherwise("other"),
+            )
+            .otherwise("l2_snapshot")
         )
-        .when(
-            has_data & (_fmt(msg) == "mix"),
-            F.when(arg_ch == "trade", "trade")
-            .when(arg_ch == "books", "l2_event")
-            .when(arg_ch.isin("books5", "books15"), "l2_topk")
-            .when(arg_ch == "ticker", "ticker")
-            .when(arg_ch.startswith("candle"), "candlestick")
-            .otherwise("other"),
-        )
-        .otherwise("l2_snapshot")
+
+    return let(
+        ladder,
+        _fmt_of(m.has),
+        m.has("$.data"),
+        m.get("$.table"),
+        m.get("$.arg.channel"),
     )
 
 
 def _mix_symbol(msg: Column) -> Column:
     """bitget_mix.rs:77-93: sp -> {instId}_SPBL; mc -> _UMCBL/_DMCBL."""
-    inst_type = F.get_json_object(msg, "$.arg.instType")
-    inst_id = F.get_json_object(msg, "$.arg.instId")
+    return _mix_symbol_of(lambda path: F.get_json_object(msg, path))
+
+
+def _mix_symbol_of(get) -> Column:
+    """``_mix_symbol`` over ``get(path)``, a string read."""
+    inst_type = get("$.arg.instType")
+    inst_id = get("$.arg.instId")
     return F.when(inst_type == "sp", F.concat(inst_id, F.lit("_SPBL"))).when(
         inst_type == "mc",
         F.when(
@@ -146,55 +168,48 @@ def _mix_symbol(msg: Column) -> Column:
     )
 
 
-def extract_symbol(msg: Column) -> Column:
+@sniffer
+def extract_symbol(m: Msg) -> Column:
     """mod.rs:19-40."""
     legacy = F.coalesce(
-        F.get_json_object(msg, "$.data[0].instrument_id"),
-        F.get_json_object(msg, "$.data.instrument_id"),
+        m.get("$.data[0].instrument_id"), m.get("$.data.instrument_id")
     )
-    return (
-        F.when(_fmt(msg) == "legacy", legacy)
-        .when(_fmt(msg) == "mix", _mix_symbol(msg))
-        .when(
-            _fmt(msg) == "rest",
-            F.coalesce(F.get_json_object(msg, "$.data.symbol"), F.lit("NONE")),
-        )
+    return let(
+        lambda fmt: F.when(fmt == "legacy", legacy)
+        .when(fmt == "mix", _mix_symbol_of(m.get))
+        .when(fmt == "rest", F.coalesce(m.get("$.data.symbol"), F.lit("NONE"))),
+        _fmt_of(m.has),
     )
 
 
-def extract_timestamp(msg: Column) -> Column:
+@sniffer
+def extract_timestamp(m: Msg) -> Column:
     """mod.rs:42-68 + bitget_mix.rs:95-122 (max over data[] of elem[0] |
     ts | systemTime) + bitget_swap.rs:74-96 (candle[0] | max timestamp)."""
-    table = F.get_json_object(msg, "$.table")
-    arrs = F.from_json(F.get_json_object(msg, "$.data"), "array<array<string>>")
-    objs = F.from_json(
-        F.get_json_object(msg, "$.data"),
-        "array<struct<ts:string, systemTime:string, timestamp:string>>",
-    )
+    arrs = m.get("$.data", "array<array<string>>")
+    objs = m.rows("$.data", "struct<ts:string, systemTime:string, timestamp:string>")
     mix_ts = F.when(
-        F.get_json_object(msg, "$.data[0][0]").isNotNull(),
-        F.array_max(F.transform(arrs, lambda x: x[0].cast("long"))),
+        m.has("$.data[0][0]"),
+        F.array_max(F.transform(arrs, lambda x: x[0].try_cast("long"))),
     ).otherwise(
         F.array_max(
             F.transform(
                 objs,
-                lambda x: F.coalesce(x["ts"], x["systemTime"]).cast("long"),
+                lambda x: F.coalesce(x["ts"], x["systemTime"]).try_cast("long"),
             )
         )
     )
     legacy_ts = F.when(
-        table.startswith("swap/candle"),
-        F.get_json_object(msg, "$.data.candle[0]").cast("long"),
+        m.get("$.table").startswith("swap/candle"),
+        m.get("$.data.candle[0]").try_cast("long"),
     ).otherwise(
-        F.array_max(F.transform(objs, lambda x: x["timestamp"].cast("long")))
+        F.array_max(F.transform(objs, lambda x: x["timestamp"].try_cast("long")))
     )
-    return (
-        F.when(_fmt(msg) == "legacy", legacy_ts)
-        .when(_fmt(msg) == "mix", mix_ts)
-        .when(
-            _fmt(msg) == "rest",
-            F.get_json_object(msg, "$.data.timestamp").cast("long"),
-        )
+    return let(
+        lambda fmt: F.when(fmt == "legacy", legacy_ts)
+        .when(fmt == "mix", mix_ts)
+        .when(fmt == "rest", m.get("$.data.timestamp").try_cast("long")),
+        _fmt_of(m.has),
     )
 
 

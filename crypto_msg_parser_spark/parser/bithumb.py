@@ -11,11 +11,16 @@ an array for trades), 00007 = update (single object). Orderbook sides are
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from crypto_msg_parser_spark import schemas
 from crypto_msg_parser_spark.parser.common import (
+    Msg,
+    sniffer,
     emit,
     item_json,
     parsed_once,
@@ -30,25 +35,30 @@ def normalize_pair(symbol: Column) -> Column:
     return F.when(symbol.contains("-"), F.translate(symbol, "-", "/"))
 
 
-def extract_symbol(msg: Column) -> Column:
+@sniffer
+def extract_symbol(m: Msg) -> Column:
     """bithumb.rs:46-66: data.symbol or first array element's symbol."""
-    return F.coalesce(
-        F.get_json_object(msg, "$.data.symbol"),
-        F.get_json_object(msg, "$.data[0].symbol"),
-    )
+    return F.coalesce(m.get("$.data.symbol"), m.get("$.data[0].symbol"))
 
 
-def extract_timestamp(msg: Column) -> Column:
+@sniffer
+def extract_timestamp(m: Msg) -> Column:
     """bithumb.rs:68-76: envelope timestamp (ms)."""
-    return F.get_json_object(msg, "$.timestamp").cast("long")
+    return m.get("$.timestamp").try_cast("long")
 
 
-_TRADE = "struct<p:string, s:string, symbol:string, t:string, v:string, ver:string>"
+_TRADE_FIELDS = ("p", "s", "symbol", "t", "v", "ver")
+_TRADE = "struct<" + ", ".join(f"{f}:string" for f in _TRADE_FIELDS) + ">"
 
 
 def parse_trade(df: DataFrame) -> DataFrame:
     """bithumb.rs:78-131: 00006 snapshot fan-out / 00007 single;
-    ts = t seconds * 1000; trade_id = ver."""
+    ts = t seconds * 1000; trade_id = ver.
+
+    Every field of the reference's trade struct is required, so serde
+    rejects a message whose items lack one — e.g. a 00007 ticker, which
+    has `p` and `t` (a decimal volume there) but no `s`. Such a message
+    is dropped here too, before `t` is cast."""
     code = F.get_json_object("msg", "$.code")
     arr = F.from_json(F.get_json_object("msg", "$.data"), f"array<{_TRADE}>")
     single = F.from_json(F.get_json_object("msg", "$.data"), _TRADE)
@@ -59,7 +69,14 @@ def parse_trade(df: DataFrame) -> DataFrame:
             F.when(code == "00007", F.array(single)).otherwise(arr),
         )
         .filter(F.col("items").isNotNull() & (F.size("items") > 0))
-        .filter(F.col("items")[0]["p"].isNotNull())
+        .filter(
+            F.forall(
+                "items",
+                lambda d: reduce(
+                    operator.and_, [d[f].isNotNull() for f in _TRADE_FIELDS]
+                ),
+            )
+        )
         .withColumn("n_items", F.size("items"))
         .select("*", F.explode("items").alias("d"))
     )

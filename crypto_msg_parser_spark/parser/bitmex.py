@@ -21,6 +21,9 @@ from pyspark.sql import functions as F
 from crypto_msg_parser_spark import schemas
 from crypto_msg_parser_spark.functions.scalar import round9
 from crypto_msg_parser_spark.parser.common import (
+    Msg,
+    let,
+    sniffer,
     data_json,
     explode_with_count,
     quantity_triple,
@@ -125,28 +128,29 @@ def _table(msg: Column) -> Column:
     return F.get_json_object(msg, "$.table")
 
 
-def get_msg_type(msg: Column) -> Column:
-    t = _table(msg)
-    return (
-        F.when(t.isNull(), "other")
-        .when(t == "trade", "trade")
-        .when(t.isin("orderBookL2", "orderBookL2_25"), "l2_event")
-        .when(t == "orderBook10", "l2_topk")
-        .when(t == "quote", "bbo")
-        .when(t == "tradeBin", "candlestick")
-        .when(t == "funding", "funding_rate")
-        .otherwise("other")
-    )
+@sniffer
+def get_msg_type(m: Msg) -> Column:
+    def ladder(t):
+        return (
+            F.when(t.isNull(), "other")
+            .when(t == "trade", "trade")
+            .when(t.isin("orderBookL2", "orderBookL2_25"), "l2_event")
+            .when(t == "orderBook10", "l2_topk")
+            .when(t == "quote", "bbo")
+            .when(t == "tradeBin", "candlestick")
+            .when(t == "funding", "funding_rate")
+            .otherwise("other")
+        )
+
+    return let(ladder, m.get("$.table"))
 
 
-def extract_symbol(msg: Column) -> Column:
-    snap = F.from_json(msg, "array<struct<symbol:string>>")
-    data = F.from_json(
-        F.get_json_object(msg, "$.data"), "array<struct<symbol:string>>"
-    )
+@sniffer
+def extract_symbol(m: Msg) -> Column:
+    data = m.rows("$.data", "struct<symbol:string>")
     return (
-        F.when(msg.startswith('[{"symbol":'), snap.getItem(0)["symbol"])
-        .when((_table(msg) == "funding") & (F.size(data) > 1), "ALL")
+        F.when(m.raw.startswith('[{"symbol":'), m.get("$[0].symbol"))
+        .when((m.get("$.table") == "funding") & (F.size(data) > 1), "ALL")
         .otherwise(data.getItem(0)["symbol"])
     )
 
@@ -159,10 +163,9 @@ def _rfc3339_ms(col: Column) -> Column:
     ).cast("long")
 
 
-def extract_timestamp(msg: Column) -> Column:
-    data = F.from_json(
-        F.get_json_object(msg, "$.data"), "array<struct<timestamp:string>>"
-    )
+@sniffer
+def extract_timestamp(m: Msg) -> Column:
+    data = m.rows("$.data", "struct<timestamp:string>")
     mx = F.array_max(
         F.transform(
             F.filter(data, lambda x: x["timestamp"].isNotNull()),
@@ -170,7 +173,7 @@ def extract_timestamp(msg: Column) -> Column:
         )
     )
     return F.when(
-        msg.startswith('[{"symbol":') | (_table(msg) == "funding"),
+        m.raw.startswith('[{"symbol":') | (m.get("$.table") == "funding"),
         F.lit(None).cast("long"),
     ).otherwise(mx)
 

@@ -18,6 +18,9 @@ from pyspark.sql import functions as F
 
 from crypto_msg_parser_spark import schemas
 from crypto_msg_parser_spark.parser.common import (
+    Msg,
+    let,
+    sniffer,
     emit,
     sort_book_sides,
     parsed_once,
@@ -46,34 +49,35 @@ def _channel_symbol(msg: Column) -> Column:
     return F.substring_index(_channel(msg), "_", -1)
 
 
-def get_msg_type(msg: Column) -> Column:
-    ch = _channel(msg)
-    return (
-        F.when(ch.startswith("live_trades_"), "trade")
+@sniffer
+def get_msg_type(m: Msg) -> Column:
+    return let(
+        lambda ch: F.when(ch.startswith("live_trades_"), "trade")
         .when(ch.startswith("diff_order_book_"), "l2_event")
         .when(ch.startswith("detail_order_book_"), "l3_event")
         .when(ch.startswith("live_orders_"), "l3_event")
         .when(ch.startswith("order_book_"), "l2_topk")
-        .otherwise("other")
+        .otherwise("other"),
+        m.get("$.channel"),
     )
 
 
-def extract_symbol(msg: Column) -> Column:
+@sniffer
+def extract_symbol(m: Msg) -> Column:
     """bitstamp.rs:49-61: channel suffix; bare book snapshots -> NONE."""
-    has_book = (
-        F.get_json_object(msg, "$.asks").isNotNull()
-        & F.get_json_object(msg, "$.bids").isNotNull()
-    )
-    return F.when(_channel(msg).isNotNull(), _channel_symbol(msg)).when(
-        has_book, "NONE"
+    return let(
+        lambda ch: F.when(ch.isNotNull(), F.substring_index(ch, "_", -1)).when(
+            m.has("$.asks") & m.has("$.bids"), "NONE"
+        ),
+        m.get("$.channel"),
     )
 
 
-def extract_timestamp(msg: Column) -> Column:
+@sniffer
+def extract_timestamp(m: Msg) -> Column:
     """bitstamp.rs:63-77: microtimestamp / 1000."""
     micro = F.coalesce(
-        F.get_json_object(msg, "$.data.microtimestamp"),
-        F.get_json_object(msg, "$.microtimestamp"),
+        m.get("$.data.microtimestamp"), m.get("$.microtimestamp")
     ).try_cast("long")
     return F.floor(micro / 1000).cast("long")
 

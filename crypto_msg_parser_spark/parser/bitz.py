@@ -16,6 +16,8 @@ from pyspark.sql import functions as F
 
 from crypto_msg_parser_spark import schemas
 from crypto_msg_parser_spark.parser.common import (
+    Msg,
+    sniffer,
     parsed_once,
     explode_with_count,
     emit,
@@ -29,14 +31,16 @@ def normalize_pair(symbol: Column) -> Column:
     return F.when(symbol.contains("_"), F.upper(F.translate(symbol, "_", "/")))
 
 
-def extract_symbol(msg: Column) -> Column:
+@sniffer
+def extract_symbol(m: Msg) -> Column:
     """bitz.rs:52-58."""
-    return F.get_json_object(msg, "$.params.symbol")
+    return m.get("$.params.symbol")
 
 
-def extract_timestamp(msg: Column) -> Column:
+@sniffer
+def extract_timestamp(m: Msg) -> Column:
     """bitz.rs:60-68: envelope time (as-is)."""
-    return F.get_json_object(msg, "$.time").cast("long")
+    return m.get("$.time").try_cast("long")
 
 
 _TRADE = "array<struct<id:string, t:string, T:bigint, p:string, n:string, s:string>>"

@@ -18,6 +18,9 @@ from pyspark.sql import functions as F
 
 from crypto_msg_parser_spark import schemas
 from crypto_msg_parser_spark.parser.common import (
+    Msg,
+    let,
+    sniffer,
     explode_with_count,
     INVERSE,
     sort_book_sides,
@@ -59,48 +62,52 @@ def _topic(msg: Column) -> Column:
     return F.get_json_object(msg, "$.topic")
 
 
-def get_msg_type(msg: Column) -> Column:
-    t = _topic(msg)
-    ch = F.split(t, "\\.").getItem(0)
-    return (
-        F.when(t.isNull(), "other")
-        .when(ch == "trade", "trade")
-        .when(ch == "orderBookL2_25", "l2_event")
-        .when(t == "instrument_info", "ticker")
-        .when((t == "klineV2") | (t == "candle") | ch.isin("klineV2", "candle"), "candlestick")
-        .otherwise("other")
+@sniffer
+def get_msg_type(m: Msg) -> Column:
+    def ladder(t):
+        ch = F.split(t, "\\.").getItem(0)
+        return (
+            F.when(t.isNull(), "other")
+            .when(ch == "trade", "trade")
+            .when(ch == "orderBookL2_25", "l2_event")
+            .when(t == "instrument_info", "ticker")
+            .when(
+                (t == "klineV2") | (t == "candle") | ch.isin("klineV2", "candle"),
+                "candlestick",
+            )
+            .otherwise("other")
+        )
+
+    return let(ladder, m.get("$.topic"))
+
+
+@sniffer
+def extract_symbol(m: Msg) -> Column:
+    rest = m.rows("$.result", "struct<symbol:string>")
+    return let(
+        lambda t: F.when(t.isNotNull(), F.element_at(F.split(t, "\\."), -1)).when(
+            (m.get("$.ret_code") == "0") & rest.isNotNull(),
+            rest.getItem(0)["symbol"],
+        ),
+        m.get("$.topic"),
     )
 
 
-def extract_symbol(msg: Column) -> Column:
-    t = _topic(msg)
-    parts = F.split(t, "\\.")
-    rest = F.from_json(
-        F.get_json_object(msg, "$.result"), "array<struct<symbol:string>>"
-    )
-    return F.when(t.isNotNull(), F.element_at(parts, -1)).when(
-        (F.get_json_object(msg, "$.ret_code") == "0") & rest.isNotNull(),
-        rest.getItem(0)["symbol"],
-    )
-
-
-def extract_timestamp(msg: Column) -> Column:
-    t = _topic(msg)
-    is_trade = F.split(t, "\\.").getItem(0) == "trade"
-    trades = F.from_json(
-        F.get_json_object(msg, "$.data"), "array<struct<trade_time_ms:string>>"
-    )
+@sniffer
+def extract_timestamp(m: Msg) -> Column:
+    trades = m.rows("$.data", "struct<trade_time_ms:string>")
     trade_ts = F.array_max(
-        F.transform(trades, lambda x: x["trade_time_ms"].cast("long"))
+        F.transform(trades, lambda x: x["trade_time_ms"].try_cast("long"))
     )
-    e6 = (F.get_json_object(msg, "$.timestamp_e6").cast("long") / 1000).cast("long")
-    rest_ts = (F.get_json_object(msg, "$.time_now").cast("double") * 1000).cast(
-        "long"
-    )
-    return (
-        F.when(t.isNotNull() & is_trade, trade_ts)
+    e6 = (m.get("$.timestamp_e6").try_cast("long") / 1000).cast("long")
+    rest_ts = (m.get("$.time_now").try_cast("double") * 1000).cast("long")
+    return let(
+        lambda t: F.when(
+            t.isNotNull() & (F.split(t, "\\.").getItem(0) == "trade"), trade_ts
+        )
         .when(t.isNotNull(), e6)
-        .otherwise(rest_ts)
+        .otherwise(rest_ts),
+        m.get("$.topic"),
     )
 
 

@@ -15,7 +15,14 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from crypto_msg_parser_spark import schemas
-from crypto_msg_parser_spark.parser.common import sort_book_sides, emit, spot_level
+from crypto_msg_parser_spark.parser.common import (
+    Msg,
+    emit,
+    let,
+    sniffer,
+    sort_book_sides,
+    spot_level,
+)
 
 EXCHANGE = "coinbase_pro"
 
@@ -32,40 +39,45 @@ def _type(msg: Column) -> Column:
     return F.get_json_object(msg, "$.type")
 
 
-def get_msg_type(msg: Column) -> Column:
+@sniffer
+def get_msg_type(m: Msg) -> Column:
     """Engine-side sniffer (coinbase_pro absent from lib.rs get_msg_type)."""
-    t = _type(msg)
-    return (
-        F.when(t.isin("match", "last_match"), "trade")
+    return let(
+        lambda t: F.when(t.isin("match", "last_match"), "trade")
         .when(t.isin("snapshot", "l2update"), "l2_event")
         .when(t.isin("received", "open", "done", "change"), "l3_event")
         .when(t == "ticker", "ticker")
-        .otherwise("other")
+        .otherwise("other"),
+        m.get("$.type"),
     )
 
 
-def extract_symbol(msg: Column) -> Column:
+@sniffer
+def extract_symbol(m: Msg) -> Column:
     """coinbase_pro.rs:56-66."""
-    pid = F.get_json_object(msg, "$.product_id")
-    has_book = (
-        F.get_json_object(msg, "$.asks").isNotNull()
-        & F.get_json_object(msg, "$.bids").isNotNull()
+    return let(
+        lambda pid: F.when(pid.isNotNull(), pid).when(
+            m.has("$.asks") & m.has("$.bids"), "NONE"
+        ),
+        m.get("$.product_id"),
     )
-    return F.when(pid.isNotNull(), pid).when(has_book, "NONE")
 
 
-def extract_timestamp(msg: Column) -> Column:
+@sniffer
+def extract_timestamp(m: Msg) -> Column:
     """coinbase_pro.rs:68-94: RFC3339 `time` (zero-date sentinel -> NULL);
     snapshots carry none."""
-    t = _type(msg)
-    time = F.get_json_object(msg, "$.time")
-    return F.when(
-        t.isNotNull(),
-        F.when(t == "snapshot", F.lit(None).cast("long")).when(
-            time.isNotNull() & ~time.startswith("0001-01-01T00:00:00"),
-            _rfc3339_ms(time),
-        ),
-    ).otherwise(F.lit(None).cast("long"))
+    return let(
+        lambda t, time: F.when(
+            t.isNotNull(),
+            F.when(t == "snapshot", F.lit(None).cast("long")).when(
+                time.isNotNull() & ~time.startswith("0001-01-01T00:00:00"),
+                _rfc3339_ms(time),
+            ),
+        ).otherwise(F.lit(None).cast("long")),
+        m.get("$.type"),
+        m.get("$.time"),
+    )
 
 
 def parse_trade(df: DataFrame) -> DataFrame:

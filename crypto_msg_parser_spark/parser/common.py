@@ -3,6 +3,9 @@
 Everything here is pure Column expressions — the parse stage is a per-row
 flatMap with dictionary lookups, which in Spark is `from_json` + expression
 math + `explode`, entirely inside whole-stage codegen. No Python UDFs.
+The routing sniffers are the exception to the codegen: they read one
+VARIANT parse per message (`Msg`, `parse_once`) inside a lambda, which
+Spark evaluates interpreted.
 """
 
 from __future__ import annotations
@@ -59,6 +62,89 @@ def parsed_once(expr: Column, alias: str = "d"):
         return df.select("*", F.explode(F.array(expr)).alias(alias))
 
     return _apply
+
+
+class Msg:
+    """One raw message as the routing sniffers read it: the text ``raw``,
+    for probes of the text itself (``startswith``, ``contains``,
+    ``rlike``), and ``v``, its one parse as a VARIANT. Every JSON path read
+    walks ``v``; nothing re-tokenizes the text.
+
+    ``v`` is NULL where ``try_parse_json`` rejects the text: not JSON,
+    truncated, or an object with a duplicate key. Every read of such a
+    message is NULL and none raises; ``api.route`` gives it the default
+    triple."""
+
+    __slots__ = ("raw", "v")
+
+    def __init__(self, raw: Column, v: Column):
+        self.raw = raw
+        self.v = v
+
+    def get(self, path: str, type: str = "string") -> Column:
+        """The value at ``path`` as ``type``; NULL where the path is
+        missing, holds JSON null, or does not cast. A number read as a
+        string is its decimal text; an object or array read as a string is
+        its JSON (keys sorted), so probe containers with ``has``. A number
+        read as a string and ``.try_cast`` equals
+        ``get_json_object(...).cast`` where that cast succeeds, and is
+        NULL where it would raise (a fraction read as an integer)."""
+        return F.try_variant_get(self.v, path, type)
+
+    def has(self, path: str) -> Column:
+        """``path`` holds a non-null value (of any type), without
+        rendering it: ``get_json_object(raw, path) IS NOT NULL``."""
+        x = F.try_variant_get(self.v, path, "variant")
+        return x.isNotNull() & ~F.is_variant_null(x)
+
+    def rows(self, path: str, struct: str) -> Column:
+        """``array<struct>`` at ``path``, a bare object read as a
+        one-element array — how ``from_json`` reads an array-of-struct
+        schema, which the sniffers' probes were written against."""
+        obj = self.get(path, struct)
+        return F.coalesce(
+            self.get(path, f"array<{struct}>"), F.when(obj.isNotNull(), F.array(obj))
+        )
+
+
+def let(fn, *values: Column) -> Column:
+    """``fn(*values)``, each value evaluated once per row however often
+    ``fn`` names it.
+
+    Catalyst shares no subexpression across the branches of a CASE, and
+    a ladder that runs interpreted (as the sniffers do, inside a lambda)
+    shares none at all: a value a ladder tests in five branches is
+    computed five times. Binding the values to a lambda variable
+    (``transform(array(value), x -> fn(x))[0]``; several values as one
+    struct) computes each once."""
+    if len(values) == 1:
+        return F.transform(F.array(values[0]), fn)[0]
+    names = [f"_{i}" for i in range(len(values))]
+    bound = F.struct(*[v.alias(n) for v, n in zip(values, names)])
+    return F.transform(F.array(bound), lambda t: fn(*[t[n] for n in names]))[0]
+
+
+def parse_once(msg: Column, fn) -> Column:
+    """``fn(Msg(msg, try_parse_json(msg)))``, parsing ``msg`` once per
+    row (``let``) however many paths ``fn`` reads. The result is wrapped
+    in a struct, whose type Spark does not re-derive per row as it does
+    that of the 20-arm CASE of ``api.route``."""
+    wrapped = let(lambda v: F.struct(fn(Msg(msg, v)).alias("x")), F.try_parse_json(msg))
+    return wrapped["x"]
+
+
+def sniffer(fn):
+    """Decorator: ``fn(m: Msg) -> Column`` becomes the raw-message column
+    function ``f(msg: Column) -> Column``, which parses ``msg`` once and
+    applies ``fn``; ``f.read(m)`` is ``fn`` itself, for a caller that
+    already holds the parse (``api.route``)."""
+
+    @functools.wraps(fn)
+    def on_raw(msg: Column) -> Column:
+        return parse_once(msg, fn)
+
+    on_raw.read = fn
+    return on_raw
 
 
 def explode_with_count(arr_expr: Column, alias: str = "d", n_alias: str = "n_items"):

@@ -20,6 +20,9 @@ from pyspark.sql import functions as F
 
 from crypto_msg_parser_spark import schemas
 from crypto_msg_parser_spark.parser.common import (
+    Msg,
+    let,
+    sniffer,
     explode_with_count,
     parsed_once,
     quantity_triple,
@@ -68,89 +71,86 @@ def _channel(msg: Column) -> Column:
     return F.get_json_object(msg, "$.params.channel")
 
 
-def get_msg_type(msg: Column) -> Column:
+@sniffer
+def get_msg_type(m: Msg) -> Column:
     """deribit.rs:173-198: first channel segment; book.* with exactly two
     dots is L2Event, deeper is L2TopK."""
-    ch = _channel(msg)
-    head = F.split(ch, "\\.")[0]
-    ndots = F.length(ch) - F.length(F.translate(ch, ".", ""))
-    return (
-        F.when(ch.isNull(), "other")
-        .when(head == "trades", "trade")
-        .when(head == "book", F.when(ndots == 2, "l2_event").otherwise("l2_topk"))
-        .when(head == "quote", "bbo")
-        .when(head == "ticker", "ticker")
-        .when(head == "chart", "candlestick")
-        .otherwise("other")
-    )
+
+    def ladder(ch):
+        head = F.split(ch, "\\.")[0]
+        ndots = F.length(ch) - F.length(F.translate(ch, ".", ""))
+        return (
+            F.when(ch.isNull(), "other")
+            .when(head == "trades", "trade")
+            .when(head == "book", F.when(ndots == 2, "l2_event").otherwise("l2_topk"))
+            .when(head == "quote", "bbo")
+            .when(head == "ticker", "ticker")
+            .when(head == "chart", "candlestick")
+            .otherwise("other")
+        )
+
+    return let(ladder, m.get("$.params.channel"))
 
 
-def extract_symbol(msg: Column) -> Column:
+@sniffer
+def extract_symbol(m: Msg) -> Column:
     """deribit.rs:95-131."""
-    ch = _channel(msg)
-    ws_obj = F.get_json_object(msg, "$.params.data.instrument_name")
-    ws_arr = F.get_json_object(msg, "$.params.data[0].instrument_name")
-    rest_obj = F.get_json_object(msg, "$.result.instrument_name")
-    rest_arr = F.from_json(
-        F.get_json_object(msg, "$.result"),
-        "array<struct<instrument_name:string>>",
-    )
-    is_rest_arr = msg.rlike('"result"\\s*:\\s*\\[')
-    return (
-        F.when(
+    ws_obj = m.get("$.params.data.instrument_name")
+    ws_arr = m.get("$.params.data[0].instrument_name")
+    rest_arr = m.rows("$.result", "struct<instrument_name:string>")
+    is_rest_arr = m.raw.rlike('"result"\\s*:\\s*\\[')
+    return let(
+        lambda ch: F.when(
             ch.isNotNull(),
             F.when(
                 ch.startswith("chart.trades."), F.split(ch, "\\.")[2]
             ).otherwise(F.coalesce(ws_obj, ws_arr)),
         )
         .when(
-            F.get_json_object(msg, "$.result").isNotNull(),
+            m.has("$.result"),
             F.when(is_rest_arr & (F.size(rest_arr) > 1), "ALL")
             .when(
                 is_rest_arr & (F.size(rest_arr) == 1),
                 rest_arr[0]["instrument_name"],
             )
             .when(is_rest_arr, "NONE")
-            .otherwise(rest_obj),
-        )
+            .otherwise(m.get("$.result.instrument_name")),
+        ),
+        m.get("$.params.channel"),
     )
 
 
-def extract_timestamp(msg: Column) -> Column:
+@sniffer
+def extract_timestamp(m: Msg) -> Column:
     """deribit.rs:133-171."""
-    ch = _channel(msg)
-    data_ts = F.get_json_object(msg, "$.params.data.timestamp").cast("long")
-    arr = F.from_json(
-        F.get_json_object(msg, "$.params.data"),
-        "array<struct<timestamp:bigint>>",
-    )
-    rest_obj_ts = F.get_json_object(msg, "$.result.timestamp").cast("long")
-    rest_arr = F.from_json(
-        F.get_json_object(msg, "$.result"),
-        "array<struct<creation_timestamp:bigint>>",
-    )
-    is_rest_arr = msg.rlike('"result"\\s*:\\s*\\[')
-    return (
-        F.when(
+    arr = m.rows("$.params.data", "struct<timestamp:string>")
+    rest_arr = m.rows("$.result", "struct<creation_timestamp:string>")
+    is_rest_arr = m.raw.rlike('"result"\\s*:\\s*\\[')
+    return let(
+        lambda ch, data_ts: F.when(
             ch.isNotNull(),
             F.when(
                 ch.startswith("chart.trades."),
-                F.get_json_object(msg, "$.params.data.tick").cast("long"),
+                m.get("$.params.data.tick").try_cast("long"),
             )
             .when(data_ts.isNotNull(), data_ts)
             .otherwise(
-                F.array_max(F.transform(arr, lambda x: x["timestamp"]))
+                F.array_max(F.transform(arr, lambda x: x["timestamp"].try_cast("long")))
             ),
         )
         .when(
-            F.get_json_object(msg, "$.result").isNotNull(),
+            m.has("$.result"),
             F.when(
                 is_rest_arr,
                 F.array_max(
-                    F.transform(rest_arr, lambda x: x["creation_timestamp"])
+                    F.transform(
+                        rest_arr, lambda x: x["creation_timestamp"].try_cast("long")
+                    )
                 ),
-            ).otherwise(rest_obj_ts),
-        )
+            ).otherwise(m.get("$.result.timestamp").try_cast("long")),
+        ),
+        m.get("$.params.channel"),
+        m.get("$.params.data.timestamp").try_cast("long"),
     )
 
 

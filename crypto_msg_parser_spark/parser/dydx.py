@@ -16,6 +16,9 @@ from pyspark.sql import functions as F
 
 from crypto_msg_parser_spark import schemas
 from crypto_msg_parser_spark.parser.common import (
+    Msg,
+    let,
+    sniffer,
     sort_book_sides,
     explode_with_count,
     emit,
@@ -39,36 +42,31 @@ def _rfc3339_ms(col: Column) -> Column:
     ).cast("long")
 
 
-def get_msg_type(msg: Column) -> Column:
-    ch = F.get_json_object(msg, "$.channel")
-    return (
-        F.when(ch == "v3_trades", "trade")
+@sniffer
+def get_msg_type(m: Msg) -> Column:
+    return let(
+        lambda ch: F.when(ch == "v3_trades", "trade")
         .when(ch == "v3_orderbook", "l2_event")
-        .otherwise("other")
+        .otherwise("other"),
+        m.get("$.channel"),
     )
 
 
-def extract_symbol(msg: Column) -> Column:
-    ws = F.get_json_object(msg, "$.id")
-    return (
-        F.when(ws.isNotNull(), ws)
-        .when(msg.startswith('{"markets":'), "ALL")
-        .when(
-            F.get_json_object(msg, "$.asks").isNotNull()
-            & F.get_json_object(msg, "$.bids").isNotNull(),
-            "NONE",
-        )
+@sniffer
+def extract_symbol(m: Msg) -> Column:
+    return let(
+        lambda ws: F.when(ws.isNotNull(), ws)
+        .when(m.raw.startswith('{"markets":'), "ALL")
+        .when(m.has("$.asks") & m.has("$.bids"), "NONE"),
+        m.get("$.id"),
     )
 
 
-def extract_timestamp(msg: Column) -> Column:
-    ch = F.get_json_object(msg, "$.channel")
-    trades = F.from_json(
-        F.get_json_object(msg, "$.contents.trades"),
-        "array<struct<createdAt:string>>",
-    )
+@sniffer
+def extract_timestamp(m: Msg) -> Column:
+    trades = m.rows("$.contents.trades", "struct<createdAt:string>")
     return F.when(
-        ch == "v3_trades",
+        m.get("$.channel") == "v3_trades",
         F.array_max(F.transform(trades, lambda x: _rfc3339_ms(x["createdAt"]))),
     ).otherwise(F.lit(None).cast("long"))
 

@@ -16,6 +16,9 @@ from pyspark.sql import functions as F
 
 from crypto_msg_parser_spark import schemas
 from crypto_msg_parser_spark.parser.common import (
+    Msg,
+    let,
+    sniffer,
     explode_with_count,
     parsed_once,
     quantity_triple,
@@ -57,56 +60,51 @@ def _channel(msg: Column) -> Column:
     return F.get_json_object(msg, "$.channel")
 
 
-def get_msg_type(msg: Column) -> Column:
+@sniffer
+def get_msg_type(m: Msg) -> Column:
     """ftx.rs:140-155."""
-    ch = _channel(msg)
-    return (
-        F.when(ch == "trades", "trade")
+    return let(
+        lambda ch: F.when(ch == "trades", "trade")
         .when(ch == "orderbook", "l2_event")
         .when(ch == "ticker", "ticker")
-        .otherwise("other")
+        .otherwise("other"),
+        m.get("$.channel"),
     )
 
 
-def extract_symbol(msg: Column) -> Column:
+@sniffer
+def extract_symbol(m: Msg) -> Column:
     """ftx.rs:67-95."""
-    market = F.get_json_object(msg, "$.market")
-    success = F.get_json_object(msg, "$.success")
-    arr = F.from_json(
-        F.get_json_object(msg, "$.result"), "array<struct<name:string>>"
-    )
-    is_arr = msg.rlike('"result"\\s*:\\s*\\[')
-    has_book = (
-        F.get_json_object(msg, "$.result.asks").isNotNull()
-        & F.get_json_object(msg, "$.result.bids").isNotNull()
-    )
-    return F.when(market.isNotNull(), market).when(
-        success == "true",
-        F.when(is_arr & (F.size(arr) > 1), "ALL")
-        .when(is_arr & (F.size(arr) == 1), arr[0]["name"])
-        .when(is_arr, "NONE")
-        .when(has_book, "NONE"),
+    arr = m.rows("$.result", "struct<name:string>")
+    is_arr = m.raw.rlike('"result"\\s*:\\s*\\[')
+    has_book = m.has("$.result.asks") & m.has("$.result.bids")
+    return let(
+        lambda market: F.when(market.isNotNull(), market).when(
+            m.get("$.success") == "true",
+            F.when(is_arr & (F.size(arr) > 1), "ALL")
+            .when(is_arr & (F.size(arr) == 1), arr[0]["name"])
+            .when(is_arr, "NONE")
+            .when(has_book, "NONE"),
+        ),
+        m.get("$.market"),
     )
 
 
-def extract_timestamp(msg: Column) -> Column:
+@sniffer
+def extract_timestamp(m: Msg) -> Column:
     """ftx.rs:97-136: trades max RFC3339; orderbook/ticker float secs."""
-    ch = _channel(msg)
-    trades = F.from_json(
-        F.get_json_object(msg, "$.data"), "array<struct<time:string>>"
-    )
-    return (
-        F.when(
+    trades = m.rows("$.data", "struct<time:string>")
+    return let(
+        lambda ch: F.when(
             ch == "trades",
             F.array_max(F.transform(trades, lambda x: _rfc3339_ms(x["time"]))),
         )
         .when(
             ch.isin("orderbook", "ticker"),
-            (F.get_json_object(msg, "$.data.time").cast("double") * 1000).cast(
-                "long"
-            ),
+            (m.get("$.data.time").try_cast("double") * 1000).cast("long"),
         )
-        .otherwise(F.lit(None).cast("long"))
+        .otherwise(F.lit(None).cast("long")),
+        m.get("$.channel"),
     )
 
 

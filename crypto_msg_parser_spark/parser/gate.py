@@ -31,6 +31,9 @@ from pyspark.sql import functions as F
 
 from crypto_msg_parser_spark import schemas
 from crypto_msg_parser_spark.parser.common import (
+    Msg,
+    let,
+    sniffer,
     data_json,
     explode_env_with_count,
     explode_with_count,
@@ -100,110 +103,101 @@ def _n_suffix(n: Column) -> Column:
     return F.regexp_replace(n, "^[^_]*_", "")
 
 
-def extract_symbol(msg: Column) -> Column:
+@sniffer
+def extract_symbol(m: Msg) -> Column:
     """gate_spot.rs:8-17 + gate_spot_current.rs:96-112 +
     gate_spot_20210916.rs:44-55 + gate_swap.rs:95-122."""
-    method = _method(msg)
-    ws = _channel(msg).isNotNull() & F.get_json_object(msg, "$.result").isNotNull()
+    ws = m.has("$.channel") & m.has("$.result")
     # ws current: contract | s | n(split) | c — object or first array element
-    contract = F.coalesce(
-        F.get_json_object(msg, "$.result.contract"),
-        F.get_json_object(msg, "$.result[0].contract"),
-    )
-    s = F.coalesce(
-        F.get_json_object(msg, "$.result.s"),
-        F.get_json_object(msg, "$.result[0].s"),
-    )
-    n = F.coalesce(
-        F.get_json_object(msg, "$.result.n"),
-        F.get_json_object(msg, "$.result[0].n"),
-    )
-    c = F.coalesce(
-        F.get_json_object(msg, "$.result.c"),
-        F.get_json_object(msg, "$.result[0].c"),
-    )
-    currency_pair = F.get_json_object(msg, "$.result.currency_pair")
+    contract = F.coalesce(m.get("$.result.contract"), m.get("$.result[0].contract"))
+    s = F.coalesce(m.get("$.result.s"), m.get("$.result[0].s"))
+    n = F.coalesce(m.get("$.result.n"), m.get("$.result[0].n"))
+    c = F.coalesce(m.get("$.result.c"), m.get("$.result[0].c"))
     # `s`/`c` probes must be strings (swap update arrays use numeric s=size /
     # c=close; the symbol-bearing s/c are always FOO_BAR strings)
     s_str = F.when(s.rlike("^[A-Za-z0-9]+_[A-Za-z0-9_]+$"), s)
     c_str = F.when(c.rlike("^[A-Za-z0-9]+_[A-Za-z0-9_]+$"), c)
-    return (
-        F.when(method == "trades.update", F.get_json_object(msg, "$.params[0]"))
-        .when(method == "ticker.update", F.get_json_object(msg, "$.params[0]"))
-        .when(method == "depth.update", F.get_json_object(msg, "$.params[2]"))
+    return let(
+        lambda method: F.when(method == "trades.update", m.get("$.params[0]"))
+        .when(method == "ticker.update", m.get("$.params[0]"))
+        .when(method == "depth.update", m.get("$.params[2]"))
         .when(
             ws,
             F.coalesce(
-                currency_pair, contract, s_str, _n_suffix(n), c_str
+                m.get("$.result.currency_pair"), contract, s_str, _n_suffix(n), c_str
             ),
         )
-        .when(
-            msg.contains("open_interest")
-            | F.get_json_object(msg, "$.current").isNotNull(),
-            "NONE",
-        )
+        .when(m.raw.contains("open_interest") | m.has("$.current"), "NONE"),
+        m.get("$.method"),
     )
 
 
-def extract_timestamp(msg: Column) -> Column:
+@sniffer
+def extract_timestamp(m: Msg) -> Column:
     """gate_spot_current.rs:115-133 + gate_spot_20210916.rs:57-77 +
     gate_swap.rs:124-168. Unix ms or NULL."""
-    ch = _channel(msg)
-    method = _method(msg)
-    time_ms = F.get_json_object(msg, "$.time").cast("long") * 1000
-    result_t = F.get_json_object(msg, "$.result.t").cast("long")
-    legacy_trades = F.from_json(
-        F.get_json_object(msg, "$.params[1]"), "array<struct<time:double>>"
+    time_ms = m.get("$.time").try_cast("long") * 1000
+    result_t = m.get("$.result.t").try_cast("long")
+    legacy_trades = m.rows("$.params[1]", "struct<time:double>")
+    swap_trades = m.rows(
+        "$.result", "struct<create_time:string, create_time_ms:string>"
     )
-    swap_trades = F.from_json(
-        F.get_json_object(msg, "$.result"),
-        "array<struct<create_time:long, create_time_ms:long>>",
-    )
-    current = F.get_json_object(msg, "$.current")
-    return (
-        F.when(
-            method == "trades.update",
-            F.array_max(
-                F.transform(
-                    legacy_trades, lambda x: (x["time"] * 1000).cast("long")
-                )
-            ),
+    current = m.get("$.current")
+    # a JSON number written with a fraction reads as a DECIMAL, whose text
+    # drops a zero fraction (1616234567.0 -> '1616234567')
+    current_secs = current.contains(".") | F.schema_of_variant(
+        m.get("$.current", "variant")
+    ).startswith("DECIMAL")
+
+    def ladder(ch, method):
+        return (
+            F.when(
+                method == "trades.update",
+                F.array_max(
+                    F.transform(
+                        legacy_trades, lambda x: (x["time"] * 1000).cast("long")
+                    )
+                ),
+            )
+            .when(
+                method.isin("depth.update", "ticker.update"),
+                F.lit(None).cast("long"),
+            )
+            .when(
+                ch == "spot.trades",
+                m.get("$.result.create_time_ms").try_cast("double").cast("long"),
+            )
+            .when(
+                ch.startswith("spot.order_book") | (ch == "spot.book_ticker"),
+                result_t,
+            )
+            .when(
+                ch == "futures.trades",
+                F.array_max(
+                    F.transform(
+                        swap_trades,
+                        lambda x: F.coalesce(
+                            x["create_time_ms"].try_cast("long"),
+                            x["create_time"].try_cast("long") * 1000,
+                        ),
+                    )
+                ),
+            )
+            .when(ch == "futures.order_book", F.coalesce(result_t, time_ms))
+            .when(
+                ch.isin("futures.order_book_update", "futures.book_ticker"), result_t
+            )
+            .when(ch.isNotNull(), time_ms)
+            .when(m.raw.contains("open_interest"), F.lit(None).cast("long"))
+            # REST snapshots: spot `current` is integer ms, swap is float seconds
+            .when(
+                current.isNotNull() & current_secs,
+                (current.try_cast("double") * 1000).cast("long"),
+            )
+            .when(current.isNotNull(), current.try_cast("long"))
         )
-        .when(
-            method.isin("depth.update", "ticker.update"),
-            F.lit(None).cast("long"),
-        )
-        .when(
-            ch == "spot.trades",
-            F.get_json_object(msg, "$.result.create_time_ms")
-            .cast("double")
-            .cast("long"),
-        )
-        .when(ch.startswith("spot.order_book") | (ch == "spot.book_ticker"), result_t)
-        .when(
-            ch == "futures.trades",
-            F.array_max(
-                F.transform(
-                    swap_trades,
-                    lambda x: F.coalesce(
-                        x["create_time_ms"], x["create_time"] * 1000
-                    ),
-                )
-            ),
-        )
-        .when(ch == "futures.order_book", F.coalesce(result_t, time_ms))
-        .when(
-            ch.isin("futures.order_book_update", "futures.book_ticker"), result_t
-        )
-        .when(ch.isNotNull(), time_ms)
-        .when(msg.contains("open_interest"), F.lit(None).cast("long"))
-        # REST snapshots: spot `current` is integer ms, swap is float seconds
-        .when(
-            current.isNotNull() & current.contains("."),
-            (current.cast("double") * 1000).cast("long"),
-        )
-        .when(current.isNotNull(), current.cast("long"))
-    )
+
+    return let(ladder, m.get("$.channel"), m.get("$.method"))
 
 
 # ---------------------------------------------------------------- trades

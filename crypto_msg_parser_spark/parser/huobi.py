@@ -19,6 +19,9 @@ from pyspark.sql import functions as F
 
 from crypto_msg_parser_spark import schemas
 from crypto_msg_parser_spark.parser.common import (
+    Msg,
+    let,
+    sniffer,
     data_json,
     explode_with_count,
     INVERSE,
@@ -95,43 +98,51 @@ def with_contract_value(df: DataFrame, pair_col: str = "pair") -> DataFrame:
 
 
 def _channel(msg: Column) -> Column:
-    return F.coalesce(
-        F.get_json_object(msg, "$.ch"), F.get_json_object(msg, "$.topic")
-    )
+    return _channel_of(lambda path: F.get_json_object(msg, path))
 
 
-def get_msg_type(msg: Column) -> Column:
-    ch = _channel(msg)
-    return (
-        F.when(ch.isNull(), "other")
-        .when(ch.endswith("trade.detail"), "trade")
-        .when(
-            ch.endswith("depth.size_20.high_freq")
-            | ch.endswith("depth.size_150.high_freq")
-            | ch.endswith("mbp.20"),
-            "l2_event",
+def _channel_of(get) -> Column:
+    """``_channel`` over ``get(path)``, a string read."""
+    return F.coalesce(get("$.ch"), get("$.topic"))
+
+
+@sniffer
+def get_msg_type(m: Msg) -> Column:
+    def ladder(ch):
+        return (
+            F.when(ch.isNull(), "other")
+            .when(ch.endswith("trade.detail"), "trade")
+            .when(
+                ch.endswith("depth.size_20.high_freq")
+                | ch.endswith("depth.size_150.high_freq")
+                | ch.endswith("mbp.20"),
+                "l2_event",
+            )
+            .when(ch.contains(".depth.step"), "l2_topk")
+            .when(ch.endswith("bbo"), "bbo")
+            .when(ch.endswith(".funding_rate"), "funding_rate")
+            .when(ch.endswith("detail"), "ticker")
+            .when(ch.contains(".kline."), "candlestick")
+            .otherwise("other")
         )
-        .when(ch.contains(".depth.step"), "l2_topk")
-        .when(ch.endswith("bbo"), "bbo")
-        .when(ch.endswith(".funding_rate"), "funding_rate")
-        .when(ch.endswith("detail"), "ticker")
-        .when(ch.contains(".kline."), "candlestick")
-        .otherwise("other")
-    )
+
+    return let(ladder, _channel_of(m.get))
 
 
-def extract_symbol(msg: Column) -> Column:
-    ch = _channel(msg)
-    arr = F.from_json(F.get_json_object(msg, "$.data"), "array<string>")
-    return (
-        F.when(F.size(F.coalesce(arr, F.array())) > 1, "ALL")
+@sniffer
+def extract_symbol(m: Msg) -> Column:
+    return let(
+        # a data array of two or more entries
+        lambda ch: F.when(m.get("$.data[1]", "variant").isNotNull(), "ALL")
         .when(ch == "public.*.funding_rate", "ALL")
-        .otherwise(F.split(ch, "\\.").getItem(1))
+        .otherwise(F.split(ch, "\\.").getItem(1)),
+        _channel_of(m.get),
     )
 
 
-def extract_timestamp(msg: Column) -> Column:
-    return F.get_json_object(msg, "$.ts").cast("long")
+@sniffer
+def extract_timestamp(m: Msg) -> Column:
+    return m.get("$.ts").try_cast("long")
 
 
 # ---------------------------------------------------------------- parsers

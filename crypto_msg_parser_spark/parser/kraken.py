@@ -21,6 +21,9 @@ from pyspark.sql import functions as F
 
 from crypto_msg_parser_spark import schemas
 from crypto_msg_parser_spark.parser.common import (
+    Msg,
+    let,
+    sniffer,
     explode_with_count,
     SPOT,
     sort_book_sides,
@@ -99,48 +102,57 @@ def _spot_symbol(msg: Column) -> Column:
     return F.element_at(_frames(msg), -1)
 
 
-def get_msg_type(msg: Column) -> Column:
+def _frame_str(frames: Column, i: int) -> Column:
+    """Element ``i`` (1-based; negative counts from the end) of a spot
+    array frame, as a string; NULL when the frame is shorter."""
+    return F.try_variant_get(F.try_element_at(frames, F.lit(i)), "$", "string")
+
+
+@sniffer
+def get_msg_type(m: Msg) -> Column:
     """mod.rs:35-67."""
-    ch = _channel(msg)
-    feed = F.get_json_object(msg, "$.feed")
-    return (
-        F.when(
-            msg.startswith("["),
-            F.when(ch == "ticker", "ticker")
-            .when(ch == "trade", "trade")
-            .when(ch == "spread", "bbo")
-            .when(ch.startswith("book-"), "l2_event")
-            .when(ch.startswith("ohlc-"), "candlestick")
-            .otherwise("other"),
+
+    def ladder(ch, feed):
+        return (
+            F.when(
+                m.raw.startswith("["),
+                F.when(ch == "ticker", "ticker")
+                .when(ch == "trade", "trade")
+                .when(ch == "spread", "bbo")
+                .when(ch.startswith("book-"), "l2_event")
+                .when(ch.startswith("ohlc-"), "candlestick")
+                .otherwise("other"),
+            )
+            .when(feed.isin("trade", "trade_snapshot"), "trade")
+            .when(feed == "ticker", "ticker")
+            .when(feed.isin("book", "book_snapshot"), "l2_event")
+            .otherwise("other")
         )
-        .when(feed.isin("trade", "trade_snapshot"), "trade")
-        .when(feed == "ticker", "ticker")
-        .when(feed.isin("book", "book_snapshot"), "l2_event")
-        .otherwise("other")
-    )
+
+    return let(ladder, _frame_str(m.get("$", "array<variant>"), -2), m.get("$.feed"))
 
 
-def extract_symbol(msg: Column) -> Column:
+@sniffer
+def extract_symbol(m: Msg) -> Column:
     """kraken_spot.rs:60-77 + kraken_futures.rs:72-90."""
-    product = F.get_json_object(msg, "$.product_id")
-    rest_spot = msg.contains('"error"') & msg.contains('"result"')
-    has_ob = F.get_json_object(msg, "$.orderBook").isNotNull()
-    keys = F.map_keys(
-        F.from_json(F.get_json_object(msg, "$.result"), "map<string,string>")
-    )
-    return (
-        F.when(msg.startswith("["), _spot_symbol(msg))
+    rest_spot = m.raw.contains('"error"') & m.raw.contains('"result"')
+    keys = F.map_keys(m.get("$.result", "map<string,variant>"))
+    return let(
+        lambda product: F.when(
+            m.raw.startswith("["), _frame_str(m.get("$", "array<variant>"), -1)
+        )
         .when(product.isNotNull(), product)
         .when(
-            F.get_json_object(msg, "$.serverTime").isNotNull()
-            & (F.get_json_object(msg, "$.result") == "success")
-            & has_ob,
+            m.has("$.serverTime")
+            & (m.get("$.result") == "success")
+            & m.has("$.orderBook"),
             "NONE",
         )
         .when(
             rest_spot,
             F.when(F.size(keys) > 1, "ALL").otherwise(keys[0]),
-        )
+        ),
+        m.get("$.product_id"),
     )
 
 
@@ -148,70 +160,70 @@ def _sec_to_ms(col: Column) -> Column:
     return (col.cast("double") * 1000).cast("long")
 
 
-def extract_timestamp(msg: Column) -> Column:
+@sniffer
+def extract_timestamp(m: Msg) -> Column:
     """kraken_spot.rs:79-195 + kraken_futures.rs:92-119."""
-    fr = _frames(msg)
-    ch = _channel(msg)
-    trades = F.from_json(F.element_at(fr, 2), "array<array<string>>")
-    spread = F.from_json(F.element_at(fr, 2), "array<string>")
-    feed = F.get_json_object(msg, "$.feed")
-    fut_trades = F.from_json(
-        F.get_json_object(msg, "$.trades"), "array<struct<time:bigint>>"
-    )
+    fr = m.get("$", "array<variant>")
+    trades = m.get("$[1]", "array<array<string>>")
+    spread = m.get("$[1]", "array<string>")
+    fut_trades = m.rows("$.trades", "struct<time:string>")
 
-    def levels_ts(elem, key):
-        lv = F.from_json(
-            F.get_json_object(elem, key), "array<array<string>>"
-        )
+    def levels_ts(path):
+        lv = m.get(path, "array<array<string>>")
         return F.transform(
             F.coalesce(lv, F.array()), lambda x: _sec_to_ms(x[2])
         )
 
     book_ts_arr = F.concat(
-        levels_ts(F.element_at(fr, 2), "$.as"),
-        levels_ts(F.element_at(fr, 2), "$.bs"),
-        levels_ts(F.element_at(fr, 2), "$.a"),
-        levels_ts(F.element_at(fr, 2), "$.b"),
-        F.when(
-            F.size(fr) == 5, levels_ts(F.element_at(fr, 3), "$.a")
-        ).otherwise(F.array().cast("array<bigint>")),
-        F.when(
-            F.size(fr) == 5, levels_ts(F.element_at(fr, 3), "$.b")
-        ).otherwise(F.array().cast("array<bigint>")),
+        levels_ts("$[1].as"),
+        levels_ts("$[1].bs"),
+        levels_ts("$[1].a"),
+        levels_ts("$[1].b"),
+        F.when(F.size(fr) == 5, levels_ts("$[2].a")).otherwise(
+            F.array().cast("array<bigint>")
+        ),
+        F.when(F.size(fr) == 5, levels_ts("$[2].b")).otherwise(
+            F.array().cast("array<bigint>")
+        ),
     )
-    return (
+
+    def ladder(ch, feed):
+        return (
         F.when(
-            msg.startswith("["),
-            F.when(ch == "trade", _sec_to_ms(trades[0][2]))
-            .when(ch == "spread", _sec_to_ms(spread[2]))
-            .when(ch.startswith("ohlc-"), _sec_to_ms(spread[0]))
-            .when(
-                ch.startswith("book-"),
-                F.array_max(book_ts_arr),
-            )
-            .otherwise(F.lit(None).cast("long")),
-        )
-        .when(
-            F.get_json_object(msg, "$.serverTime").isNotNull()
-            & msg.contains('"result"'),
-            (
-                F.to_timestamp(F.get_json_object(msg, "$.serverTime")).cast(
-                    "double"
+            m.raw.startswith("["),
+            F.when(ch == "trade"    , _sec_to_ms(trades[0][2]))
+                .when(ch == "spread", _sec_to_ms(spread[2]))
+                .when(ch.startswith("ohlc-"), _sec_to_ms(spread[0]))
+                .when(
+                    ch.startswith("book-"),
+                    F.array_max(book_ts_arr),
                 )
-                * 1000
-            ).cast("long"),
+                .otherwise(F.lit(None).cast("long")),
+            )
+            .when(
+                m.has("$.serverTime") & m.raw.contains('"result"'),
+                (F.to_timestamp(m.get("$.serverTime")).cast("double") * 1000).cast(
+                    "long"
+                ),
+            )
+            .when(
+                m.raw.contains('"error"') & m.raw.contains('"result"'),
+                F.lit(None).cast("long"),
+            )
+            .when(feed.isin("trade", "ticker"), m.get("$.time").try_cast("long"))
+            .when(
+                feed == "trade_snapshot",
+                F.array_max(
+                    F.transform(fut_trades, lambda x: x["time"].try_cast("long"))
+                ),
+            )
+            .when(
+                feed.isin("book", "book_snapshot"),
+                m.get("$.timestamp").try_cast("long"),
+            )
         )
-        .when(msg.contains('"error"') & msg.contains('"result"'), F.lit(None).cast("long"))
-        .when(feed.isin("trade", "ticker"), F.get_json_object(msg, "$.time").cast("long"))
-        .when(
-            feed == "trade_snapshot",
-            F.array_max(F.transform(fut_trades, lambda x: x["time"])),
-        )
-        .when(
-            feed.isin("book", "book_snapshot"),
-            F.get_json_object(msg, "$.timestamp").cast("long"),
-        )
-    )
+
+    return let(ladder, _frame_str(fr, -2), m.get("$.feed"))
 
 
 # ---------------------------------------------------------------- trades

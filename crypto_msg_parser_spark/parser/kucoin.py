@@ -21,6 +21,9 @@ from pyspark.sql import functions as F
 
 from crypto_msg_parser_spark import schemas
 from crypto_msg_parser_spark.parser.common import (
+    Msg,
+    let,
+    sniffer,
     data_json,
     parsed_once,
     SPOT,
@@ -105,112 +108,114 @@ def _topic(msg: Column) -> Column:
     return F.get_json_object(msg, "$.topic")
 
 
-def _topic_symbol(msg: Column) -> Column:
-    """Symbol after the last ':' (candle topics strip the _period suffix)."""
-    t = _topic(msg)
+def _topic_symbol(t: Column) -> Column:
+    """Symbol after the last ':' of topic ``t`` (candle topics strip the
+    _period suffix)."""
     sym = F.substring_index(t, ":", -1)
     return F.when(
         t.contains("/candle"), F.regexp_replace(sym, "_[^_]*$", "")
     ).otherwise(sym)
 
 
-def get_msg_type(msg: Column) -> Column:
+@sniffer
+def get_msg_type(m: Msg) -> Column:
     """Not in the reference's get_msg_type dispatch (lib.rs:316-329 lacks
     kucoin) — engine-side sniffer on the topic prefix for routing parity
     with the other exchanges."""
-    t = _topic(msg)
-    return (
-        F.when(t.isNull(), "other")
-        .when(t.startswith("/market/match:"), "trade")
-        .when(t.startswith("/contractMarket/execution:"), "trade")
-        .when(t.startswith("/market/level2:"), "l2_event")
-        .when(t.startswith("/contractMarket/level2:"), "l2_event")
-        .when(t.startswith("/spotMarket/level2Depth"), "l2_topk")
-        .when(t.startswith("/contractMarket/level2Depth"), "l2_topk")
-        .when(t.startswith("/market/ticker"), "bbo")
-        .when(t.startswith("/contractMarket/tickerV2:"), "bbo")
-        .when(t.startswith("/market/candles:"), "candlestick")
-        .when(t.startswith("/contractMarket/candle:"), "candlestick")
-        .when(t.startswith("/market/snapshot:"), "ticker")
-        .when(t.startswith("/contractMarket/snapshot:"), "ticker")
-        .otherwise("other")
-    )
+
+    def ladder(t):
+        return (
+            F.when(t.isNull(), "other")
+            .when(t.startswith("/market/match:"), "trade")
+            .when(t.startswith("/contractMarket/execution:"), "trade")
+            .when(t.startswith("/market/level2:"), "l2_event")
+            .when(t.startswith("/contractMarket/level2:"), "l2_event")
+            .when(t.startswith("/spotMarket/level2Depth"), "l2_topk")
+            .when(t.startswith("/contractMarket/level2Depth"), "l2_topk")
+            .when(t.startswith("/market/ticker"), "bbo")
+            .when(t.startswith("/contractMarket/tickerV2:"), "bbo")
+            .when(t.startswith("/market/candles:"), "candlestick")
+            .when(t.startswith("/contractMarket/candle:"), "candlestick")
+            .when(t.startswith("/market/snapshot:"), "ticker")
+            .when(t.startswith("/contractMarket/snapshot:"), "ticker")
+            .otherwise("other")
+        )
+
+    return let(ladder, m.get("$.topic"))
 
 
-def extract_symbol(msg: Column) -> Column:
+@sniffer
+def extract_symbol(m: Msg) -> Column:
     """mod.rs:16-57: ws topic parsing; REST data.symbol | ALL | NONE."""
-    code = F.get_json_object(msg, "$.code")
-    rest_sym = F.get_json_object(msg, "$.data.symbol")
-    arr = F.from_json(
-        F.get_json_object(msg, "$.data"), "array<struct<symbol:string>>"
-    )
-    # from_json parses a bare object as a 1-element array, so probe the raw
+    arr = m.rows("$.data", "struct<symbol:string>")
+    # rows() reads a bare object as a 1-element array, so probe the raw
     # text for `"data": [` to tell RestfulMsg<Vec<_>> from RestfulMsg<Map>
-    is_arr = msg.rlike('"data"\\s*:\\s*\\[')
-    return (
-        F.when(
-            _topic(msg).isNotNull(),
-            F.when(
-                _topic(msg) == "/market/ticker:all",
-                F.get_json_object(msg, "$.subject"),
-            ).otherwise(_topic_symbol(msg)),
+    is_arr = m.raw.rlike('"data"\\s*:\\s*\\[')
+    return let(
+        lambda t: F.when(
+            t.isNotNull(),
+            F.when(t == "/market/ticker:all", m.get("$.subject")).otherwise(
+                _topic_symbol(t)
+            ),
         )
         .when(
-            code == "200000",
+            m.get("$.code") == "200000",
             F.when(is_arr & (F.size(arr) > 1), "ALL")
             .when(is_arr & (F.size(arr) == 1), arr[0]["symbol"])
             .when(is_arr, "NONE")
-            .otherwise(F.coalesce(rest_sym, F.lit("NONE"))),
-        )
+            .otherwise(F.coalesce(m.get("$.data.symbol"), F.lit("NONE"))),
+        ),
+        m.get("$.topic"),
     )
 
 
-def extract_timestamp(msg: Column) -> Column:
+@sniffer
+def extract_timestamp(m: Msg) -> Column:
     """mod.rs:60-110 — the ns/ms zoo."""
-    t = _topic(msg)
-    d_timestamp = F.get_json_object(msg, "$.data.timestamp").cast("long")
-    d_ts = F.get_json_object(msg, "$.data.ts").cast("long")
-    d_time = F.get_json_object(msg, "$.data.time").cast("long")
-    code = F.get_json_object(msg, "$.code")
-    arr_probe = msg.rlike('"data"\\s*:\\s*\\[')
-    return (
-        F.when(
-            t.isNotNull(),
-            F.when(d_timestamp.isNotNull(), d_timestamp)
-            .when(d_ts.isNotNull(), F.floor(d_ts / 1000000).cast("long"))
-            .when(
-                d_time.isNotNull() & t.startswith("/market/match:"),
-                F.floor(d_time / 1000000).cast("long"),
+    arr_probe = m.raw.rlike('"data"\\s*:\\s*\\[')
+
+    def ladder(t, d_timestamp, d_ts, d_time):
+        return (
+            F.when(
+                t.isNotNull(),
+                F.when(d_timestamp.isNotNull(), d_timestamp)
+                .when(d_ts.isNotNull(), F.floor(d_ts / 1000000).cast("long"))
+                .when(
+                    d_time.isNotNull() & t.startswith("/market/match:"),
+                    F.floor(d_time / 1000000).cast("long"),
+                )
+                .when(
+                    d_time.isNotNull()
+                    & (
+                        t.startswith("/market/ticker")
+                        | t.startswith("/contractMarket/candle:")
+                        | t.startswith("/market/level2:")
+                    ),
+                    d_time,
+                )
+                .when(
+                    d_time.isNotNull() & t.startswith("/market/candles:"),
+                    F.floor(d_time / 1000000).cast("long"),
+                )
+                .when(
+                    t.startswith("/market/snapshot:"),
+                    m.get("$.data.data.datetime").try_cast("long"),
+                )
+                .otherwise(F.lit(None).cast("long")),
             )
             .when(
-                d_time.isNotNull()
-                & (
-                    t.startswith("/market/ticker")
-                    | t.startswith("/contractMarket/candle:")
-                    | t.startswith("/market/level2:")
-                ),
-                d_time,
+                (m.get("$.code") == "200000") & ~arr_probe,
+                F.coalesce(d_time, F.floor(d_ts / 1000000).cast("long")),
             )
-            .when(
-                d_time.isNotNull() & t.startswith("/market/candles:"),
-                F.floor(d_time / 1000000).cast("long"),
-            )
-            .when(
-                t.startswith("/market/snapshot:"),
-                F.get_json_object(msg, "$.data.data.datetime").cast("long"),
-            )
-            .otherwise(F.lit(None).cast("long")),
+            .otherwise(F.lit(None).cast("long"))
         )
-        .when(
-            (code == "200000") & ~arr_probe,
-            F.coalesce(
-                F.get_json_object(msg, "$.data.time").cast("long"),
-                F.floor(
-                    F.get_json_object(msg, "$.data.ts").cast("long") / 1000000
-                ).cast("long"),
-            ),
-        )
-        .otherwise(F.lit(None).cast("long"))
+
+    return let(
+        ladder,
+        m.get("$.topic"),
+        m.get("$.data.timestamp").try_cast("long"),
+        m.get("$.data.ts").try_cast("long"),
+        m.get("$.data.time").try_cast("long"),
     )
 
 

@@ -19,6 +19,9 @@ from pyspark.sql import functions as F
 
 from crypto_msg_parser_spark import schemas
 from crypto_msg_parser_spark.parser.common import (
+    Msg,
+    let,
+    sniffer,
     data_json,
     explode_with_count,
     parsed_once,
@@ -70,82 +73,82 @@ def _unwrap(msg: Column) -> Column:
     ).otherwise(msg)
 
 
-def extract_symbol(msg: Column) -> Column:
+def _inner(m: Msg) -> Msg:
+    """Tuple frames ["push.x", {...}] -> inner object; else the message."""
+    inner = F.when(m.raw.startswith("["), m.get("$[1]", "variant")).otherwise(m.v)
+    return Msg(m.raw, inner)
+
+
+@sniffer
+def extract_symbol(m: Msg) -> Column:
     """mod.rs:15-38."""
-    inner = _unwrap(msg)
-    code = F.get_json_object(msg, "$.code").cast("long")
     return (
-        F.when(msg.startswith("["), F.get_json_object(msg, "$[1].symbol"))
+        F.when(m.raw.startswith("["), m.get("$[1].symbol"))
         .when(
-            F.get_json_object(msg, "$.code").isNotNull()
-            & F.get_json_object(msg, "$.data").isNotNull(),
+            m.has("$.code") & m.has("$.data"),
             F.when(
-                code.isin(0, 200),
-                F.coalesce(
-                    F.get_json_object(msg, "$.data.symbol"), F.lit("NONE")
-                ),
+                m.get("$.code").try_cast("long").isin(0, 200),
+                F.coalesce(m.get("$.data.symbol"), F.lit("NONE")),
             ),
         )
-        .otherwise(F.get_json_object(inner, "$.symbol"))
+        .otherwise(m.get("$.symbol"))
     )
 
 
-def extract_timestamp(msg: Column) -> Column:
+@sniffer
+def extract_timestamp(m: Msg) -> Column:
     """mod.rs:40-105: tuple frames by channel; objects prefer ts, then
     kline tdt/t*1000, then max over data.deals[].t."""
-    deals = F.from_json(
-        F.get_json_object(_unwrap(msg), "$.data.deals"),
-        "array<struct<t:bigint>>",
-    )
-    deals_max = F.array_max(F.transform(deals, lambda x: x["t"]))
-    tuple_ch = F.get_json_object(msg, "$[0]")
-    code = F.get_json_object(msg, "$.code").cast("long")
-    obj_ch = F.get_json_object(msg, "$.channel")
-    ts_field = F.get_json_object(msg, "$.ts").cast("long")
+    deals = _inner(m).rows("$.data.deals", "struct<t:string>")
+    deals_max = F.array_max(F.transform(deals, lambda x: x["t"].try_cast("long")))
     kline_ts = F.coalesce(
-        F.get_json_object(msg, "$.data.tdt").cast("long"),
-        F.get_json_object(msg, "$.data.t").cast("long") * 1000,
+        m.get("$.data.tdt").try_cast("long"),
+        m.get("$.data.t").try_cast("long") * 1000,
     )
-    return (
-        F.when(
-            msg.startswith("["),
-            F.when(tuple_ch == "push.symbol", deals_max).when(
-                tuple_ch == "push.kline",
-                F.get_json_object(msg, "$[1].data.t").cast("long") * 1000,
-            ),
-        )
-        .when(
-            F.get_json_object(msg, "$.code").isNotNull()
-            & F.get_json_object(msg, "$.data").isNotNull(),
+
+    def ladder(tuple_ch, ts_field):
+        return (
             F.when(
-                code.isin(0, 200),
-                F.get_json_object(msg, "$.data.timestamp").cast("long"),
-            ),
+                m.raw.startswith("["),
+                F.when(tuple_ch == "push.symbol", deals_max).when(
+                    tuple_ch == "push.kline",
+                    m.get("$[1].data.t").try_cast("long") * 1000,
+                ),
+            )
+            .when(
+                m.has("$.code") & m.has("$.data"),
+                F.when(
+                    m.get("$.code").try_cast("long").isin(0, 200),
+                    m.get("$.data.timestamp").try_cast("long"),
+                ),
+            )
+            .when(ts_field.isNotNull(), ts_field)
+            .when(m.get("$.channel") == "push.kline", kline_ts)
+            .otherwise(deals_max)
         )
-        .when(ts_field.isNotNull(), ts_field)
-        .when(obj_ch == "push.kline", kline_ts)
-        .otherwise(deals_max)
-    )
+
+    return let(ladder, m.get("$[0]"), m.get("$.ts").try_cast("long"))
 
 
-def get_msg_type(msg: Column) -> Column:
+@sniffer
+def get_msg_type(m: Msg) -> Column:
     """Engine-side sniffer (mexc is not in lib.rs get_msg_type)."""
-    inner = _unwrap(msg)
-    ch = F.coalesce(
-        F.get_json_object(msg, "$[0]"), F.get_json_object(inner, "$.channel")
-    )
-    has_deals = F.get_json_object(inner, "$.data.deals").isNotNull()
-    return (
-        F.when(ch == "push.deal", "trade")
-        .when((ch == "push.symbol") & has_deals, "trade")
-        .when(ch == "push.symbol", "l2_event")
-        .when(ch == "push.depth.full", "l2_topk")
-        .when(ch == "push.limit.depth", "l2_topk")
-        .when(ch == "push.depth", "l2_event")
-        .when(ch == "push.kline", "candlestick")
-        .when(ch == "push.ticker", "ticker")
-        .otherwise("other")
-    )
+    inner = _inner(m)
+
+    def ladder(ch):
+        return (
+            F.when(ch == "push.deal", "trade")
+            .when((ch == "push.symbol") & inner.has("$.data.deals"), "trade")
+            .when(ch == "push.symbol", "l2_event")
+            .when(ch == "push.depth.full", "l2_topk")
+            .when(ch == "push.limit.depth", "l2_topk")
+            .when(ch == "push.depth", "l2_event")
+            .when(ch == "push.kline", "candlestick")
+            .when(ch == "push.ticker", "ticker")
+            .otherwise("other")
+        )
+
+    return let(ladder, F.coalesce(m.get("$[0]"), inner.get("$.channel")))
 
 
 # ---------------------------------------------------------------- trades

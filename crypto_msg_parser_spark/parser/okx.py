@@ -29,6 +29,9 @@ from pyspark.sql import functions as F
 
 from crypto_msg_parser_spark import schemas
 from crypto_msg_parser_spark.parser.common import (
+    Msg,
+    let,
+    sniffer,
     data_json,
     explode_with_count,
     parsed_once,
@@ -101,48 +104,47 @@ def _rfc3339_ms(col: Column) -> Column:
     ).cast("long")
 
 
-def get_msg_type(msg: Column) -> Column:
-    ch = _channel(msg)
-    # v3: channel is the second '/'-field of table (okx_v3.rs:107-132);
-    # note "candle60s" != "candle", so v3 candles route to other — a
-    # reference quirk preserved deliberately
-    v3ch = F.split(_table(msg), "/").getItem(1)
-    v3 = (
-        F.when(v3ch == "trade", "trade")
-        .when(v3ch == "depth_l2_tbt", "l2_event")
-        .when(v3ch == "depth5", "l2_topk")
-        .when(v3ch == "ticker", "bbo")
-        .when(v3ch == "candle", "candlestick")
-        .when(v3ch == "funding_rate", "funding_rate")
-        .otherwise("other")
-    )
-    return (
-        F.when(ch == "trades", "trade")
-        .when(ch.isin("books", "books-l2-tbt", "books50-l2-tbt"), "l2_event")
-        .when(ch == "books5", "l2_topk")
-        .when(ch == "bbo-tbt", "bbo")
-        .when(ch == "tickers", "ticker")
-        .when(ch == "funding-rate", "funding_rate")
-        .when(ch.startswith("candle"), "candlestick")
-        .when(ch.isNotNull(), "other")
-        .when(_table(msg).isNotNull(), v3)
-        .otherwise("other")
-    )
+@sniffer
+def get_msg_type(m: Msg) -> Column:
+    def ladder(ch, table):
+        # v3: channel is the second '/'-field of table (okx_v3.rs:107-132);
+        # note "candle60s" != "candle", so v3 candles route to other — a
+        # reference quirk preserved deliberately
+        v3ch = F.split(table, "/").getItem(1)
+        v3 = (
+            F.when(v3ch == "trade", "trade")
+            .when(v3ch == "depth_l2_tbt", "l2_event")
+            .when(v3ch == "depth5", "l2_topk")
+            .when(v3ch == "ticker", "bbo")
+            .when(v3ch == "candle", "candlestick")
+            .when(v3ch == "funding_rate", "funding_rate")
+            .otherwise("other")
+        )
+        return (
+            F.when(ch == "trades", "trade")
+            .when(ch.isin("books", "books-l2-tbt", "books50-l2-tbt"), "l2_event")
+            .when(ch == "books5", "l2_topk")
+            .when(ch == "bbo-tbt", "bbo")
+            .when(ch == "tickers", "ticker")
+            .when(ch == "funding-rate", "funding_rate")
+            .when(ch.startswith("candle"), "candlestick")
+            .when(ch.isNotNull(), "other")
+            .when(table.isNotNull(), v3)
+            .otherwise("other")
+        )
+
+    return let(ladder, m.get("$.arg.channel"), m.get("$.table"))
 
 
-def extract_symbol(msg: Column) -> Column:
+@sniffer
+def extract_symbol(m: Msg) -> Column:
     """arg.instId for ws messages; REST {code,data:[...]} handling:
     >1 rows -> ALL, ==1 -> its instId or NONE (okx_v5.rs:93-115)."""
-    ws = F.get_json_object(msg, "$.arg.instId")
-    rest_arr = F.from_json(
-        F.get_json_object(msg, "$.data"),
-        "array<struct<instId:string, instrument_id:string>>",
-    )
-    code_ok = F.get_json_object(msg, "$.code") == "0"
-    return (
-        F.when(ws.isNotNull(), ws)
+    rest_arr = m.rows("$.data", "struct<instId:string, instrument_id:string>")
+    return let(
+        lambda ws: F.when(ws.isNotNull(), ws)
         .when(
-            code_ok,
+            m.get("$.code") == "0",
             F.when(F.size(rest_arr) > 1, "ALL")
             .when(
                 (F.size(rest_arr) == 1) & rest_arr.getItem(0)["instId"].isNotNull(),
@@ -151,22 +153,20 @@ def extract_symbol(msg: Column) -> Column:
             .otherwise("NONE"),
         )
         # v3: data[0].instrument_id (okx_v3.rs:68-76)
-        .when(
-            _table(msg).isNotNull(), rest_arr.getItem(0)["instrument_id"]
-        )
+        .when(m.has("$.table"), rest_arr.getItem(0)["instrument_id"]),
+        m.get("$.arg.instId"),
     )
 
 
-def extract_timestamp(msg: Column) -> Column:
+@sniffer
+def extract_timestamp(m: Msg) -> Column:
     """v5: max(data[].ts), None for funding-rate/candle channels
     (okx_v5.rs:118-149). v3: max over RFC3339 data[].timestamp or
     candle[0], None for swap/funding_rate (okx_v3.rs:78-105)."""
-    ch = F.coalesce(_channel(msg), F.lit(""))
-    arr = F.from_json(
-        F.get_json_object(msg, "$.data"),
-        "array<struct<ts:string, timestamp:string, candle:array<string>>>",
+    arr = m.rows(
+        "$.data", "struct<ts:string, timestamp:string, candle:array<string>>"
     )
-    mx = F.array_max(F.transform(arr, lambda x: x["ts"].cast("long")))
+    mx = F.array_max(F.transform(arr, lambda x: x["ts"].try_cast("long")))
     v3_mx = F.array_max(
         F.transform(
             arr,
@@ -175,19 +175,24 @@ def extract_timestamp(msg: Column) -> Column:
             ),
         )
     )
-    return (
-        F.when(
-            (ch == "funding-rate") | ch.startswith("candle"),
-            F.lit(None).cast("long"),
-        )
-        .when(ch != "", mx)
-        .when(
-            _table(msg).isNotNull(),
+
+    def ladder(ch, table):
+        return (
             F.when(
-                _table(msg) == "swap/funding_rate", F.lit(None).cast("long")
-            ).otherwise(v3_mx),
+                (ch == "funding-rate") | ch.startswith("candle"),
+                F.lit(None).cast("long"),
+            )
+            .when(ch != "", mx)
+            .when(
+                table.isNotNull(),
+                F.when(table == "swap/funding_rate", F.lit(None).cast("long"))
+                .otherwise(v3_mx),
+            )
+            .otherwise(mx)
         )
-        .otherwise(mx)
+
+    return let(
+        ladder, F.coalesce(m.get("$.arg.channel"), F.lit("")), m.get("$.table")
     )
 
 

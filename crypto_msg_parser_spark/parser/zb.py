@@ -21,6 +21,9 @@ from pyspark.sql import functions as F
 
 from crypto_msg_parser_spark import schemas
 from crypto_msg_parser_spark.parser.common import (
+    Msg,
+    let,
+    sniffer,
     explode_with_count,
     parsed_once,
     SPOT,
@@ -52,115 +55,97 @@ def _channel(msg: Column) -> Column:
     return F.get_json_object(msg, "$.channel")
 
 
-def extract_symbol(msg: Column) -> Column:
+@sniffer
+def extract_symbol(m: Msg) -> Column:
     """zb/mod.rs:16-44: channel prefix before '.' (swap) or '_' (spot)."""
-    ch = _channel(msg)
-    has_book = (
-        F.get_json_object(msg, "$.asks").isNotNull()
-        & F.get_json_object(msg, "$.bids").isNotNull()
-    )
-    rest_swap = (
-        F.get_json_object(msg, "$.code").isNotNull()
-        & F.get_json_object(msg, "$.desc").isNotNull()
-        & F.get_json_object(msg, "$.data").isNotNull()
-    )
-    return (
-        F.when(
+    return let(
+        lambda ch: F.when(
             ch.isNotNull(),
             F.when(ch.contains("."), F.substring_index(ch, ".", 1)).when(
                 ch.contains("_"), F.substring_index(ch, "_", 1)
             ),
         )
-        .when(has_book, "NONE")
+        .when(m.has("$.asks") & m.has("$.bids"), "NONE")
         .when(
-            rest_swap,
-            F.coalesce(F.get_json_object(msg, "$.data.symbol"), F.lit("NONE")),
-        )
+            m.has("$.code") & m.has("$.desc") & m.has("$.data"),
+            F.coalesce(m.get("$.data.symbol"), F.lit("NONE")),
+        ),
+        m.get("$.channel"),
     )
 
 
-def extract_timestamp(msg: Column) -> Column:
+@sniffer
+def extract_timestamp(m: Msg) -> Column:
     """zb_spot.rs:13-55 + zb_swap.rs:12-74."""
-    ch = _channel(msg)
-    spot_ch = F.split(ch, "_")[1]
-    swap_ch = F.split(ch, "\\.")[1]
-    trades = F.from_json(
-        F.get_json_object(msg, "$.data"), "array<struct<date:bigint>>"
-    )
-    kline_spot = F.from_json(
-        F.get_json_object(msg, "$.datas.data"), "array<array<string>>"
-    )
-    swap_arrays = F.from_json(
-        F.get_json_object(msg, "$.data"), "array<array<double>>"
-    )
-    ticker_map = F.from_json(
-        F.get_json_object(msg, "$.data"), "map<string, array<double>>"
-    )
-    rest_swap = (
-        F.get_json_object(msg, "$.code").isNotNull()
-        & F.get_json_object(msg, "$.desc").isNotNull()
-    )
-    return (
-        F.when(
-            ch.isNotNull() & ch.contains("."),
+    trades = m.rows("$.data", "struct<date:string>")
+    kline_spot = m.get("$.datas.data", "array<array<string>>")
+    swap_arrays = m.get("$.data", "array<array<double>>")
+    ticker_map = m.get("$.data", "map<string, array<double>>")
+
+    def ladder(ch):
+        spot_ch = F.split(ch, "_")[1]
+        swap_ch = F.split(ch, "\\.")[1]
+        return (
             F.when(
-                swap_ch == "Trade",
-                F.array_max(
-                    F.transform(swap_arrays, lambda x: x.getItem(3).cast("long"))
-                )
-                * 1000,
-            )
-            .when(
-                swap_ch.isin("Depth", "DepthWhole"),
-                F.get_json_object(msg, "$.data.time").try_cast("long"),
-            )
-            .when(
-                swap_ch == "Ticker",
+                ch.isNotNull() & ch.contains("."),
                 F.when(
-                    ch == "All.Ticker",
+                    swap_ch == "Trade",
                     F.array_max(
-                        F.transform(
-                            F.map_values(ticker_map),
-                            lambda x: x.getItem(6).cast("long"),
-                        )
+                        F.transform(swap_arrays, lambda x: x.getItem(3).cast("long"))
                     )
                     * 1000,
-                ).otherwise(
-                    F.get_json_object(msg, "$.data[6]").cast("long") * 1000
-                ),
-            )
-            .when(
-                swap_ch.startswith("KLine_"),
-                F.array_max(
-                    F.transform(swap_arrays, lambda x: x.getItem(5).cast("long"))
                 )
-                * 1000,
-            ),
-        )
-        .when(
-            ch.isNotNull(),
-            F.when(
-                spot_ch == "ticker",
-                F.get_json_object(msg, "$.date").cast("long"),
-            )
-            .when(
-                spot_ch == "depth",
-                F.get_json_object(msg, "$.timestamp").try_cast("long") * 1000,
-            )
-            .when(
-                spot_ch == "trades",
-                F.array_max(F.transform(trades, lambda x: x["date"])) * 1000,
-            )
-            .when(
-                spot_ch == "kline",
-                F.array_max(
-                    F.transform(kline_spot, lambda x: x[0].cast("long"))
+                .when(
+                    swap_ch.isin("Depth", "DepthWhole"),
+                    m.get("$.data.time").try_cast("long"),
+                )
+                .when(
+                    swap_ch == "Ticker",
+                    F.when(
+                        ch == "All.Ticker",
+                        F.array_max(
+                            F.transform(
+                                F.map_values(ticker_map),
+                                lambda x: x.getItem(6).cast("long"),
+                            )
+                        )
+                        * 1000,
+                    ).otherwise(m.get("$.data[6]").try_cast("long") * 1000),
+                )
+                .when(
+                    swap_ch.startswith("KLine_"),
+                    F.array_max(
+                        F.transform(swap_arrays, lambda x: x.getItem(5).cast("long"))
+                    )
+                    * 1000,
                 ),
-            ),
+            )
+            .when(
+                ch.isNotNull(),
+                F.when(spot_ch == "ticker", m.get("$.date").try_cast("long"))
+                .when(spot_ch == "depth", m.get("$.timestamp").try_cast("long") * 1000)
+                .when(
+                    spot_ch == "trades",
+                    F.array_max(
+                        F.transform(trades, lambda x: x["date"].try_cast("long"))
+                    )
+                    * 1000,
+                )
+                .when(
+                    spot_ch == "kline",
+                    F.array_max(
+                        F.transform(kline_spot, lambda x: x[0].try_cast("long"))
+                    ),
+                ),
+            )
+            .when(
+                m.has("$.code") & m.has("$.desc"),
+                m.get("$.data.time").try_cast("long"),
+            )
+            .otherwise(m.get("$.timestamp").try_cast("long") * 1000)
         )
-        .when(rest_swap, F.get_json_object(msg, "$.data.time").try_cast("long"))
-        .otherwise(F.get_json_object(msg, "$.timestamp").try_cast("long") * 1000)
-    )
+
+    return let(ladder, m.get("$.channel"))
 
 
 # ---------------------------------------------------------------- trades

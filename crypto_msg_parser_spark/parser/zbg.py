@@ -21,6 +21,9 @@ from pyspark.sql import functions as F
 
 from crypto_msg_parser_spark import schemas
 from crypto_msg_parser_spark.parser.common import (
+    Msg,
+    let,
+    sniffer,
     data_json,
     sort_book_sides,
     parsed_once,
@@ -67,9 +70,12 @@ def _ts_to_ms(ts: Column) -> Column:
 
 def _head(msg: Column) -> Column:
     """First element of a tuple frame ('T'/'E'/'K'/'AE'/future_*)."""
-    return F.coalesce(
-        F.get_json_object(msg, "$[0][0]"), F.get_json_object(msg, "$[0]")
-    )
+    return _head_of(lambda path: F.get_json_object(msg, path))
+
+
+def _head_of(get) -> Column:
+    """``_head`` over ``get(path)``, a string read."""
+    return F.coalesce(get("$[0][0]"), get("$[0]"))
 
 
 def _id_map_literal(kind: str) -> Column:
@@ -86,37 +92,28 @@ def _id_map_literal(kind: str) -> Column:
     return F.create_map(*items)
 
 
-def extract_symbol(msg: Column) -> Column:
+@sniffer
+def extract_symbol(m: Msg) -> Column:
     """zbg_spot.rs extract_symbol + zbg_swap.rs:150-172 (contractId map)."""
-    rest = msg.contains("datas") & msg.contains("resMsg")
-    stat = F.from_json(
-        F.get_json_object(msg, "$.trade_statistic"), "array<array<string>>"
-    )
-    head = _head(msg)
-    spot_sym = F.when(
-        head.isin("T", "E"),
-        F.coalesce(
-            F.get_json_object(msg, "$[0][3]"), F.get_json_object(msg, "$[3]")
+    rest = m.raw.contains("datas") & m.raw.contains("resMsg")
+    stat = m.get("$.trade_statistic", "array<array<string>>")
+    spot_sym = let(
+        lambda head: F.when(
+            head.isin("T", "E"), F.coalesce(m.get("$[0][3]"), m.get("$[3]"))
+        ).when(
+            head.isin("K", "AE"), F.coalesce(m.get("$[0][2]"), m.get("$[2]"))
         ),
-    ).when(
-        head.isin("K", "AE"),
-        F.coalesce(
-            F.get_json_object(msg, "$[0][2]"), F.get_json_object(msg, "$[2]")
-        ),
+        _head_of(m.get),
     )
-    cid = F.get_json_object(msg, "$[1].contractId")
+    cid = m.get("$[1].contractId")
     return (
-        F.when(msg == "[]", "NONE")
+        F.when(m.raw == "[]", "NONE")
         .when(
             rest,
-            F.coalesce(
-                F.get_json_object(msg, "$.symbol"),
-                F.get_json_object(msg, "$.datas.sb"),
-                F.lit("NONE"),
-            ),
+            F.coalesce(m.get("$.symbol"), m.get("$.datas.sb"), F.lit("NONE")),
         )
         .when(
-            msg.startswith('{"trade_statistic":[['),
+            m.raw.startswith('{"trade_statistic":[['),
             F.when(F.size(stat) > 1, "ALL").otherwise(
                 _id_map_literal("spot")[stat[0][0]]
             ),
@@ -126,59 +123,61 @@ def extract_symbol(msg: Column) -> Column:
     )
 
 
-def extract_timestamp(msg: Column) -> Column:
+@sniffer
+def extract_timestamp(m: Msg) -> Column:
     """zbg_spot.rs extract_timestamp + zbg_swap.rs:174-207."""
-    rest = msg.contains("datas") & msg.contains("resMsg")
-    head = _head(msg)
-    rows = F.from_json(msg, "array<string>")
+    rest = m.raw.contains("datas") & m.raw.contains("resMsg")
+
     # spot: max over frames of position 2 (T/E) or 3 (K/AE), seconds
-    def frame_ts(fr):
-        t = F.get_json_object(fr, "$[0]")
-        # try_cast: AE frames may carry JSON null (text "null") timestamps
-        pos2 = F.get_json_object(fr, "$[2]").try_cast("long")
-        pos3 = F.get_json_object(fr, "$[3]").try_cast("long")
+    def frame_ts(v):
+        fr = Msg(m.raw, v)
+        t = fr.get("$[0]")
+        pos2 = fr.get("$[2]").try_cast("long")
+        pos3 = fr.get("$[3]").try_cast("long")
         return F.when(t.isin("T", "E"), pos2).when(t.isin("K", "AE"), pos3)
 
     spot_frames = F.when(
-        msg.startswith("[["), rows
-    ).otherwise(F.array(msg))
+        m.raw.startswith("[["), m.get("$", "array<variant>")
+    ).otherwise(F.array(m.v))
     spot_ts = F.array_max(
         F.transform(spot_frames, lambda fr: _ts_to_ms(frame_ts(fr)))
     )
-    lines = F.from_json(
-        F.get_json_object(msg, "$[1].lines"), "array<array<string>>"
-    )
-    return (
-        F.when(
-            rest,
-            _ts_to_ms(
-                F.coalesce(
-                    F.get_json_object(msg, "$.datas.timestamp").cast("long"),
-                    F.get_json_object(msg, "$.datas.te").cast("long"),
-                )
-            ),
+    lines = m.get("$[1].lines", "array<array<string>>")
+
+    def ladder(head):
+        return (
+            F.when(
+                rest,
+                _ts_to_ms(
+                    F.coalesce(
+                        m.get("$.datas.timestamp").try_cast("long"),
+                        m.get("$.datas.te").try_cast("long"),
+                    )
+                ),
+            )
+            .when(m.raw.startswith('{"trade_statistic":'), F.lit(None).cast("long"))
+            .when(
+                head == "future_tick",
+                _ts_to_ms(m.get("$[1].trades[0]").try_cast("long")),
+            )
+            .when(
+                head == "future_kline",
+                F.array_max(
+                    F.transform(lines, lambda x: _ts_to_ms(x[0].try_cast("long")))
+                ),
+            )
+            .when(
+                head == "future_snapshot_depth",
+                _ts_to_ms(m.get("$[1].time").try_cast("long")),
+            )
+            .when(
+                head == "future_snapshot_indicator",
+                _ts_to_ms(m.get("$[1].te").try_cast("long")),
+            )
+            .otherwise(spot_ts)
         )
-        .when(msg.startswith('{"trade_statistic":'), F.lit(None).cast("long"))
-        .when(
-            head == "future_tick",
-            _ts_to_ms(F.get_json_object(msg, "$[1].trades[0]").cast("long")),
-        )
-        .when(
-            head == "future_kline",
-            F.array_max(
-                F.transform(lines, lambda x: _ts_to_ms(x[0].cast("long")))
-            ),
-        )
-        .when(
-            head == "future_snapshot_depth",
-            _ts_to_ms(F.get_json_object(msg, "$[1].time").cast("long")),
-        )
-        .when(
-            head == "future_snapshot_indicator",
-            _ts_to_ms(F.get_json_object(msg, "$[1].te").cast("long")),
-        )
-        .otherwise(spot_ts)
-    )
+
+    return let(ladder, _head_of(m.get))
 
 
 # ---------------------------------------------------------------- trades

@@ -53,10 +53,12 @@ def get_spark(
         .config("spark.sql.caseSensitive", "true")
         # HotSpot refuses to JIT methods over 8000 bytecode bytes; Spark's
         # default hugeMethodLimit (65535) happily emits whole-stage methods
-        # above that, which then run INTERPRETED — the 20-exchange routing
-        # ladder measured 19-23s/600k rows in that mode vs ~2s with
-        # codegen deactivated for just that subtree. 8000 is the value the
-        # Spark docs recommend for HotSpot.
+        # above that, which then run INTERPRETED. The routing ladder that
+        # once did (19-23s/600k rows) now runs inside a lambda and compiles
+        # nothing; the setting still keeps any other oversized stage — a
+        # wide parse projection, a union of 20 exchange arms — on
+        # per-operator codegen instead. 8000 is the value the Spark docs
+        # recommend for HotSpot.
         .config("spark.sql.codegen.hugeMethodLimit", "8000")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")

@@ -126,3 +126,65 @@ def test_get_msg_type_strict_reference_parity(spark):
     # extras engage beyond the reference set, and nothing regresses
     assert sniffed <= ext_sniffed
     assert ext_sniffed - set(api.REFERENCE_MSG_TYPE_ARMS)
+
+
+# (exchange, msg) -> routed triple (msg_type, symbol, ts): messages the
+# sniffers cannot read as one JSON document, and numbers with a fraction
+# where the sniffers read integer timestamps
+MALFORMED = [
+    # a duplicate key: not one JSON document (get_json_object read the
+    # first value), so the default triple
+    ("binance", '{"stream":"btcusdt@aggTrade","stream":"ethusdt@depth"}',
+     ("other", None, None)),
+    ("okx", '{"arg":{"channel":"trades"},"arg":{"channel":"books"}}',
+     ("other", None, None)),
+    # not JSON, and truncated JSON: the default triple (binance's REST
+    # fallback arm no longer claims them as l2_snapshot)
+    ("binance", "not json", ("other", None, None)),
+    ("huobi", "", ("other", None, None)),
+    ("binance", '{"stream":"btcusdt@aggTrade","data":{"E":16',
+     ("other", None, None)),
+    ("kraken", "[1,{}", ("other", None, None)),
+    # a fractional number where an integer ms timestamp is read: NULL,
+    # where the old cast raised CAST_INVALID_INPUT; a zero fraction reads
+    # as its integer
+    ("binance", '{"stream":"btcusdt@aggTrade","data":{"e":"aggTrade","E":1.50,"s":"BTCUSDT"}}',
+     ("trade", "BTCUSDT", None)),
+    ("binance", '{"stream":"btcusdt@aggTrade","data":{"e":"aggTrade","E":1616000000000.0,"s":"BTCUSDT"}}',
+     ("trade", "BTCUSDT", 1616000000000)),
+    ("huobi", '{"ch":"market.btcusdt.trade.detail","ts":"1.50"}',
+     ("trade", "btcusdt", None)),
+    # a kraken frame too short for its channel slot
+    ("kraken", "[]", ("other", None, None)),
+]
+
+
+def test_route_malformed_messages(spark):
+    """Every message is routed, none raises: see MALFORMED."""
+    rows = [
+        (str(i), ex, "spot", None, 0, msg) for i, (ex, msg, _) in enumerate(MALFORMED)
+    ]
+    raw = spark.createDataFrame(rows, fixtures_df(spark, []).schema)
+    for extended in (False, True):
+        got = {
+            r["msg_id"]: (r["routed_msg_type"], r["routed_symbol"], r["routed_ts"])
+            for r in api.route(raw, extended=extended).collect()
+        }
+        for i, (ex, msg, want) in enumerate(MALFORMED):
+            assert got[str(i)] == want, (extended, ex, msg, got[str(i)])
+
+
+def test_api_parse_trade_on_all_fixtures(spark):
+    """api.parse_trade over every fixture, not sliced by msg_type, runs
+    without raising; bithumb's trade rows are those of its trade slice
+    (its 00007 ticker has the trade keys `p`/`t` but no `s`)."""
+    from crypto_msg_parser_spark.parser import bithumb
+
+    rows = [dict(r, market_type=r["market_type"] or "spot") for r in load_fixtures()]
+    out = api.parse_trade(fixtures_df(spark, rows))
+    got = out.filter(F.col("exchange") == "bithumb").drop("json").collect()
+    trades = [r for r in rows if r["exchange"] == "bithumb" and ":trade:" in r["fixture_id"]]
+    want = bithumb.parse_trade(fixtures_df(spark, trades)).drop("json").collect()
+    assert out.count() > 0
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+    assert len(want) > 0
