@@ -4,6 +4,7 @@ at /root/reference; blueprint in SURVEY.md).
 
 Layout:
   session    -- SparkSession factory tuned for local[N] and cluster parity
+  pydaemon   -- the local session's Python daemon (no per-task zip re-read)
   schemas    -- fixed StructTypes for all normalized record tables (SURVEY §1.3)
   functions/ -- scalar column expressions (round9, hashing)
   operators/ -- dedup, similarity, text stats, multimodal plumbing

@@ -118,7 +118,7 @@ def get_msg_type(m: Msg) -> Column:
     """mod.rs:71-95 + before20220429/bitget_swap.rs:97-122."""
 
     def ladder(fmt, has_data, table, arg_ch):
-        table_ch = F.split(table, "/")[1]
+        table_ch = F.get(F.split(table, "/"), 1)
         return (
             F.when(
                 has_data & (fmt == "legacy"),
@@ -190,7 +190,7 @@ def extract_timestamp(m: Msg) -> Column:
     objs = m.rows("$.data", "struct<ts:string, systemTime:string, timestamp:string>")
     mix_ts = F.when(
         m.has("$.data[0][0]"),
-        F.array_max(F.transform(arrs, lambda x: x[0].try_cast("long"))),
+        F.array_max(F.transform(arrs, lambda x: F.get(x, 0).try_cast("long"))),
     ).otherwise(
         F.array_max(
             F.transform(

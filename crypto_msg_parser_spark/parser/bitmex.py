@@ -151,12 +151,12 @@ def extract_symbol(m: Msg) -> Column:
     return (
         F.when(m.raw.startswith('[{"symbol":'), m.get("$[0].symbol"))
         .when((m.get("$.table") == "funding") & (F.size(data) > 1), "ALL")
-        .otherwise(data.getItem(0)["symbol"])
+        .otherwise(F.get(data, 0)["symbol"])
     )
 
 
-def _rfc3339_ms(col: Column) -> Column:
-    t = F.to_timestamp(col)
+def _rfc3339_ms(col: Column, to_timestamp=F.to_timestamp) -> Column:
+    t = to_timestamp(col)
     return (
         F.unix_timestamp(t) * 1000
         + F.floor(F.date_format(t, "SSSSSS").cast("long") / 1000)
@@ -169,7 +169,7 @@ def extract_timestamp(m: Msg) -> Column:
     mx = F.array_max(
         F.transform(
             F.filter(data, lambda x: x["timestamp"].isNotNull()),
-            lambda x: _rfc3339_ms(x["timestamp"]),
+            lambda x: _rfc3339_ms(x["timestamp"], F.try_to_timestamp),
         )
     )
     return F.when(

@@ -31,8 +31,8 @@ def normalize_pair(symbol: Column) -> Column:
     return F.when(symbol.contains("-"), F.translate(symbol, "-", "/"))
 
 
-def _rfc3339_ms(col: Column) -> Column:
-    return (F.to_timestamp(col).cast("double") * 1000).cast("long")
+def _rfc3339_ms(col: Column, to_timestamp=F.to_timestamp) -> Column:
+    return (to_timestamp(col).cast("double") * 1000).cast("long")
 
 
 def _type(msg: Column) -> Column:
@@ -72,7 +72,7 @@ def extract_timestamp(m: Msg) -> Column:
             t.isNotNull(),
             F.when(t == "snapshot", F.lit(None).cast("long")).when(
                 time.isNotNull() & ~time.startswith("0001-01-01T00:00:00"),
-                _rfc3339_ms(time),
+                _rfc3339_ms(time, F.try_to_timestamp),
             ),
         ).otherwise(F.lit(None).cast("long")),
         m.get("$.type"),

@@ -135,7 +135,7 @@ def extract_symbol(m: Msg) -> Column:
         # a data array of two or more entries
         lambda ch: F.when(m.get("$.data[1]", "variant").isNotNull(), "ALL")
         .when(ch == "public.*.funding_rate", "ALL")
-        .otherwise(F.split(ch, "\\.").getItem(1)),
+        .otherwise(F.get(F.split(ch, "\\."), 1)),
         _channel_of(m.get),
     )
 

@@ -94,10 +94,10 @@ def _table(msg: Column) -> Column:
     return F.get_json_object(msg, "$.table")
 
 
-def _rfc3339_ms(col: Column) -> Column:
+def _rfc3339_ms(col: Column, to_timestamp=F.to_timestamp) -> Column:
     """RFC3339 with millis -> epoch ms (v3 timestamps; chrono
     parse_from_rfc3339().timestamp_millis() in okx_v3.rs:88-93)."""
-    t = F.to_timestamp(col)
+    t = to_timestamp(col)
     return (
         F.unix_timestamp(t) * 1000
         + F.floor(F.date_format(t, "SSSSSS").cast("long") / 1000)
@@ -110,7 +110,7 @@ def get_msg_type(m: Msg) -> Column:
         # v3: channel is the second '/'-field of table (okx_v3.rs:107-132);
         # note "candle60s" != "candle", so v3 candles route to other — a
         # reference quirk preserved deliberately
-        v3ch = F.split(table, "/").getItem(1)
+        v3ch = F.get(F.split(table, "/"), 1)
         v3 = (
             F.when(v3ch == "trade", "trade")
             .when(v3ch == "depth_l2_tbt", "l2_event")
@@ -153,7 +153,7 @@ def extract_symbol(m: Msg) -> Column:
             .otherwise("NONE"),
         )
         # v3: data[0].instrument_id (okx_v3.rs:68-76)
-        .when(m.has("$.table"), rest_arr.getItem(0)["instrument_id"]),
+        .when(m.has("$.table"), F.get(rest_arr, 0)["instrument_id"]),
         m.get("$.arg.instId"),
     )
 
@@ -171,7 +171,8 @@ def extract_timestamp(m: Msg) -> Column:
         F.transform(
             arr,
             lambda x: _rfc3339_ms(
-                F.coalesce(x["timestamp"], x["candle"].getItem(0))
+                F.coalesce(x["timestamp"], F.get(x["candle"], 0)),
+                F.try_to_timestamp,
             ),
         )
     )

@@ -83,15 +83,15 @@ def extract_timestamp(m: Msg) -> Column:
     ticker_map = m.get("$.data", "map<string, array<double>>")
 
     def ladder(ch):
-        spot_ch = F.split(ch, "_")[1]
-        swap_ch = F.split(ch, "\\.")[1]
+        spot_ch = F.get(F.split(ch, "_"), 1)
+        swap_ch = F.get(F.split(ch, "\\."), 1)
         return (
             F.when(
                 ch.isNotNull() & ch.contains("."),
                 F.when(
                     swap_ch == "Trade",
                     F.array_max(
-                        F.transform(swap_arrays, lambda x: x.getItem(3).cast("long"))
+                        F.transform(swap_arrays, lambda x: F.get(x, 3).cast("long"))
                     )
                     * 1000,
                 )
@@ -106,7 +106,7 @@ def extract_timestamp(m: Msg) -> Column:
                         F.array_max(
                             F.transform(
                                 F.map_values(ticker_map),
-                                lambda x: x.getItem(6).cast("long"),
+                                lambda x: F.get(x, 6).cast("long"),
                             )
                         )
                         * 1000,
@@ -115,7 +115,7 @@ def extract_timestamp(m: Msg) -> Column:
                 .when(
                     swap_ch.startswith("KLine_"),
                     F.array_max(
-                        F.transform(swap_arrays, lambda x: x.getItem(5).cast("long"))
+                        F.transform(swap_arrays, lambda x: F.get(x, 5).cast("long"))
                     )
                     * 1000,
                 ),
@@ -134,7 +134,7 @@ def extract_timestamp(m: Msg) -> Column:
                 .when(
                     spot_ch == "kline",
                     F.array_max(
-                        F.transform(kline_spot, lambda x: x[0].try_cast("long"))
+                        F.transform(kline_spot, lambda x: F.get(x, 0).try_cast("long"))
                     ),
                 ),
             )

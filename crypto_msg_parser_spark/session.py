@@ -11,6 +11,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the directory holding this package: the workers import the daemon from it
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def _driver_mem() -> str:
     """Half of physical RAM, 1-48 GiB: the driver heap of local mode holds
@@ -41,7 +44,18 @@ def get_spark(
     # cluster manager); forcing local[] here would silently un-cluster the
     # job. SPARK_GRAFT_INHERIT_MASTER=1 defers to the submit-time master.
     if os.environ.get("SPARK_GRAFT_INHERIT_MASTER") != "1":
-        builder = builder.master(f"local[{cores}]")
+        builder = (
+            builder.master(f"local[{cores}]")
+            # On Python < 3.12 every task of a reused worker re-read
+            # pyspark.zip's directory ~16 times (~0.2 CPU s) before the
+            # user function ran; this daemon re-reads it only when it
+            # changed (see pydaemon.py). Local mode only: a cluster's
+            # executors may get the package per task (--py-files) and
+            # could not start it, so they keep pyspark.daemon. The package
+            # root on the workers' path lets it start from any cwd.
+            .config("spark.python.daemon.module", "crypto_msg_parser_spark.pydaemon")
+            .config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
+        )
     builder = (
         builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))

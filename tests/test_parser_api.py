@@ -156,6 +156,27 @@ MALFORMED = [
      ("trade", "btcusdt", None)),
     # a kraken frame too short for its channel slot
     ("kraken", "[]", ("other", None, None)),
+    # a channel or table without the separator a sniffer splits on, an
+    # empty data array, a row shorter than the slot read, a time that is
+    # not RFC 3339: the piece reads NULL, where indexing raised
+    # INVALID_ARRAY_INDEX and the time cast CAST_INVALID_INPUT
+    ("huobi", '{"ch":"marketbtcusdt","ts":1616000000000}',
+     ("other", None, 1616000000000)),
+    ("okx", '{"table":"spottrade","data":[]}', ("other", None, None)),
+    ("okx", '{"table":"spot/candle","data":[{"candle":[]}]}',
+     ("candlestick", None, None)),
+    ("okx", '{"table":"spot/ticker","data":[{"timestamp":"garbage"}]}',
+     ("bbo", None, None)),
+    ("zb", '{"channel":"btcusdtdepth","timestamp":1616000000}', ("other", None, None)),
+    ("zb", '{"channel":"btcusdt.Trade","data":[[1,2]]}', ("other", "btcusdt", None)),
+    ("bitget", '{"table":"spottrade","data":[]}', ("other", None, None)),
+    ("bitget", '{"arg":{"instType":"sp","channel":"trade","instId":"BTCUSDT"},"data":[["1"],[]]}',
+     ("trade", "BTCUSDT_SPBL", 1)),
+    ("bitmex", '{"table":"trade","data":[]}', ("trade", None, None)),
+    ("bitmex", '{"table":"trade","data":[{"timestamp":"garbage","symbol":"XBTUSD"}]}',
+     ("trade", "XBTUSD", None)),
+    ("coinbase_pro", '{"type":"heartbeat","product_id":"BTC-USD","time":"garbage"}',
+     ("other", "BTC-USD", None)),
 ]
 
 
