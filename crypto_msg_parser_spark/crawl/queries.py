@@ -17,7 +17,7 @@ from crypto_msg_parser_spark.crawl.canonicalize import (
 from crypto_msg_parser_spark.crawl.scheduler import schedule
 from crypto_msg_parser_spark.functions.scalar import stable_hash64
 from crypto_msg_parser_spark.registry import query
-from crypto_msg_parser_spark.session import finalize_memory_sink
+from crypto_msg_parser_spark.session import await_drain, drain_available_now
 from crypto_msg_parser_spark.sources.local import local_table
 from crypto_msg_parser_spark.sources.testdata import load_table
 
@@ -431,10 +431,6 @@ _SQL_DUP_URL = _SQL_FRONTIER_URL.replace("p_partkey", "(p_partkey % 211)")
     "— batch/stream parity as a CORRECTNESS row (SURVEY §2.9).",
 )
 def frontier_seen_batch_replay(spark, sf_dir):
-    import shutil
-    import tempfile
-    import uuid
-
     from crypto_msg_parser_spark.streaming.jobs import (
         FRONTIER_URLS_DDL,
         frontier_seen_stream,
@@ -453,31 +449,14 @@ def frontier_seen_batch_replay(spark, sf_dir):
         (k % 3).cast("int").alias("priority"),
         F.lit(50).cast("int").alias("rate_budget_per_min"),
     )
-    src = tempfile.mkdtemp(prefix="seen_stream_src_")
-    ckpt = tempfile.mkdtemp(prefix="seen_stream_ckpt_")
-    name = f"seen_replay_{uuid.uuid4().hex[:12]}"
-    try:
-        urls.repartition(8).write.mode("overwrite").parquet(src)
-        stream = (
-            spark.readStream.schema(FRONTIER_URLS_DDL)
-            .option("maxFilesPerTrigger", 3)
-            .parquet(src)
-        )
-        q = (
-            frontier_seen_stream(stream)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return finalize_memory_sink(
-        spark.table(name).select("canonical", "url_hash"), name
+    return drain_available_now(
+        spark,
+        urls.repartition(8),
+        frontier_seen_stream,
+        schema=FRONTIER_URLS_DDL,
+        max_files_per_trigger=3,
+        project=lambda sink: sink.select("canonical", "url_hash"),
+        name="seen_replay",
     )
 
 
@@ -521,10 +500,6 @@ _SQL_DUP_HOST = _SQL_HOST.replace("p_partkey", "(p_partkey % 211)")
     "rank%7 media emission are all load-bearing.",
 )
 def crawl_stream_docs_replay(spark, sf_dir):
-    import shutil
-    import tempfile
-    import uuid
-
     from crypto_msg_parser_spark.streaming.jobs import (
         FRONTIER_URLS_DDL,
         crawl_stream_to_docs,
@@ -543,31 +518,14 @@ def crawl_stream_docs_replay(spark, sf_dir):
         (k % 3).cast("int").alias("priority"),
         F.lit(50).cast("int").alias("rate_budget_per_min"),
     )
-    src = tempfile.mkdtemp(prefix="docs_stream_src_")
-    ckpt = tempfile.mkdtemp(prefix="docs_stream_ckpt_")
-    name = f"docs_replay_{uuid.uuid4().hex[:12]}"
-    try:
-        urls.repartition(8).write.mode("overwrite").parquet(src)
-        stream = (
-            spark.readStream.schema(FRONTIER_URLS_DDL)
-            .option("maxFilesPerTrigger", 3)
-            .parquet(src)
-        )
-        q = (
-            crawl_stream_to_docs(stream)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-    docs = finalize_memory_sink(
-        spark.table(name).select("doc_id", "spans"), name
+    docs = drain_available_now(
+        spark,
+        urls.repartition(8),
+        crawl_stream_to_docs,
+        schema=FRONTIER_URLS_DDL,
+        max_files_per_trigger=3,
+        project=lambda sink: sink.select("doc_id", "spans"),
+        name="docs_replay",
     )
     ex = docs.select("doc_id", F.explode("spans").alias("s"))
     item = F.struct(
@@ -653,7 +611,7 @@ def frontier_stream_resume(spark, sf_dir):
             .option("maxFilesPerTrigger", 2)
             .parquet(src)
         )
-        q = (
+        await_drain(
             frontier_seen_stream(stream)
             .writeStream.format("parquet")
             .option("path", out)
@@ -662,7 +620,6 @@ def frontier_stream_resume(spark, sf_dir):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
 
     epoch_urls(97).repartition(4).write.mode("append").parquet(src)
     run_once()
@@ -683,6 +640,66 @@ def frontier_stream_resume(spark, sf_dir):
         F.coalesce(F.col("in_run1"), F.lit(2))
         .cast("int")
         .alias("emitted_in_run"),
+    )
+
+
+_RATE_BUDGET = 40
+
+
+@query(
+    "stream_rate_limit",
+    streaming=True,
+    oracle=f"""
+    WITH f AS (
+      SELECT {_SQL_FRONTIER_URL} AS url, {_SQL_HOST} AS host,
+             CAST(p_partkey % 3 AS INT) AS batch_idx
+      FROM part),
+    h AS (
+      SELECT url, host, batch_idx,
+             {_SQL_HASH.format(expr="url")} AS url_hash
+      FROM f),
+    r AS (
+      SELECT *, row_number() OVER (PARTITION BY host
+                                   ORDER BY batch_idx, url_hash) AS rnk
+      FROM h)
+    SELECT host, url, url_hash,
+           CAST(CASE WHEN rnk <= {_RATE_BUDGET} THEN rnk ELSE 0 END AS INT)
+             AS admit_seq,
+           (rnk <= {_RATE_BUDGET}) AS allowed
+    FROM r
+    """,
+    doc="per-exchange rate budgets enforced as STREAMING keyed state "
+    "(north_rule): the token-budget admission job drained under "
+    "Trigger.availableNow over three mtime-ordered micro-batches; each "
+    "host's O(1) used-token state persists across batches, admission "
+    "order is pinned by (batch_idx, url_hash) so replays are exact. The "
+    "oracle is the closed form: per-host row_number over the same order "
+    "with the same budget. Batch/stream parity for the scheduler's "
+    "budget arm as a CORRECTNESS row (the batch twin is "
+    "politeness_schedule's epoch budgeting).",
+)
+def stream_rate_limit(spark, sf_dir):
+    from crypto_msg_parser_spark.streaming.jobs import (
+        RATE_URLS_DDL,
+        host_rate_limit_stream,
+    )
+
+    f = _frontier_df(spark, sf_dir).select(
+        "url",
+        "host",
+        stable_hash64(F.col("url")).alias("url_hash"),
+        (F.col("p_partkey") % 3).cast("int").alias("batch_idx"),
+    )
+    return drain_available_now(
+        spark,
+        [f.filter(F.col("batch_idx") == i) for i in range(3)],
+        lambda stream: host_rate_limit_stream(stream, _RATE_BUDGET),
+        schema=RATE_URLS_DDL,
+        max_files_per_trigger=1,
+        project=lambda sink: sink.select(
+            "host", "url", "url_hash", "admit_seq", "allowed"
+        ),
+        name="rate_limit",
     )
 
 
@@ -1039,99 +1056,6 @@ def pagerank_priority(spark, sf_dir):
             )
         )
     return r.select("node", F.col("r").alias("rank_micro"))
-
-
-_RATE_BUDGET = 40
-
-
-@query(
-    "stream_rate_limit",
-    streaming=True,
-    oracle=f"""
-    WITH f AS (
-      SELECT {_SQL_FRONTIER_URL} AS url, {_SQL_HOST} AS host,
-             CAST(p_partkey % 3 AS INT) AS batch_idx
-      FROM part),
-    h AS (
-      SELECT url, host, batch_idx,
-             {_SQL_HASH.format(expr="url")} AS url_hash
-      FROM f),
-    r AS (
-      SELECT *, row_number() OVER (PARTITION BY host
-                                   ORDER BY batch_idx, url_hash) AS rnk
-      FROM h)
-    SELECT host, url, url_hash,
-           CAST(CASE WHEN rnk <= {_RATE_BUDGET} THEN rnk ELSE 0 END AS INT)
-             AS admit_seq,
-           (rnk <= {_RATE_BUDGET}) AS allowed
-    FROM r
-    """,
-    doc="per-exchange rate budgets enforced as STREAMING keyed state "
-    "(north_rule): the token-budget admission job drained under "
-    "Trigger.availableNow over three mtime-ordered micro-batches; each "
-    "host's O(1) used-token state persists across batches, admission "
-    "order is pinned by (batch_idx, url_hash) so replays are exact. The "
-    "oracle is the closed form: per-host row_number over the same order "
-    "with the same budget. Batch/stream parity for the scheduler's "
-    "budget arm as a CORRECTNESS row (the batch twin is "
-    "politeness_schedule's epoch budgeting).",
-)
-def stream_rate_limit(spark, sf_dir):
-    import glob
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
-    from crypto_msg_parser_spark.streaming.jobs import (
-        RATE_URLS_DDL,
-        host_rate_limit_stream,
-    )
-
-    f = _frontier_df(spark, sf_dir).select(
-        "url",
-        "host",
-        stable_hash64(F.col("url")).alias("url_hash"),
-        (F.col("p_partkey") % 3).cast("int").alias("batch_idx"),
-    )
-    src = tempfile.mkdtemp(prefix="rate_stream_src_")
-    ckpt = tempfile.mkdtemp(prefix="rate_stream_ckpt_")
-    name = f"rate_limit_{uuid.uuid4().hex[:12]}"
-    try:
-        for i in range(3):
-            d = tempfile.mkdtemp(prefix="rate_stream_part_")
-            f.filter(F.col("batch_idx") == i).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(d)
-            (pf,) = glob.glob(f"{d}/part-*.parquet")
-            dest = os.path.join(src, f"{i}.parquet")
-            shutil.move(pf, dest)
-            os.utime(dest, (1_700_000_000 + i * 10, 1_700_000_000 + i * 10))
-            shutil.rmtree(d, ignore_errors=True)
-        stream = (
-            spark.readStream.schema(RATE_URLS_DDL)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = (
-            host_rate_limit_stream(stream, _RATE_BUDGET)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return finalize_memory_sink(
-        spark.table(name).select(
-            "host", "url", "url_hash", "admit_seq", "allowed"
-        ),
-        name,
-    )
 
 
 # Sitemap: directives live OUTSIDE user-agent groups (RFC 9309 §2.3 allows

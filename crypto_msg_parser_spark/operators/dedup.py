@@ -60,10 +60,6 @@ def _word_hash(word_col, salt: int):
     ).cast("long")
 
 
-def _sql_word_hash(expr: str, salt: int) -> str:
-    return f"('0x' || substr(md5({expr} || '#{salt}'), 1, 15))::BIGINT"
-
-
 def _hasher(salt: int):
     # single-arg closure: a 2-arg lambda would make F.transform/F.filter pass
     # the element *index* as the second argument

@@ -100,7 +100,7 @@ def extract_timestamp(m: Msg) -> Column:
         F.transform(trades, lambda x: x["trade_time_ms"].try_cast("long"))
     )
     e6 = (m.get("$.timestamp_e6").try_cast("long") / 1000).cast("long")
-    rest_ts = (m.get("$.time_now").try_cast("double") * 1000).cast("long")
+    rest_ts = (m.get("$.time_now").try_cast("double") * 1000).try_cast("long")
     return let(
         lambda t: F.when(
             t.isNotNull() & (F.split(t, "\\.").getItem(0) == "trade"), trade_ts

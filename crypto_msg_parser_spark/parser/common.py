@@ -124,6 +124,13 @@ def let(fn, *values: Column) -> Column:
     return F.transform(F.array(bound), lambda t: fn(*[t[n] for n in names]))[0]
 
 
+def secs_to_ms(secs: Column) -> Column:
+    """Integral seconds to ms, NULL past BIGINT: a plain ``* 1000`` on a
+    sniffed number raises ARITHMETIC_OVERFLOW under ANSI mode and fails
+    the whole routing job for one out-of-range message."""
+    return F.try_multiply(secs, F.lit(1000))
+
+
 def parse_once(msg: Column, fn) -> Column:
     """``fn(Msg(msg, try_parse_json(msg)))``, parsing ``msg`` once per
     row (``let``) however many paths ``fn`` reads. The result is wrapped

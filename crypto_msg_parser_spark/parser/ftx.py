@@ -101,7 +101,7 @@ def extract_timestamp(m: Msg) -> Column:
         )
         .when(
             ch.isin("orderbook", "ticker"),
-            (m.get("$.data.time").try_cast("double") * 1000).cast("long"),
+            (m.get("$.data.time").try_cast("double") * 1000).try_cast("long"),
         )
         .otherwise(F.lit(None).cast("long")),
         m.get("$.channel"),

@@ -33,6 +33,7 @@ from crypto_msg_parser_spark import schemas
 from crypto_msg_parser_spark.parser.common import (
     Msg,
     let,
+    secs_to_ms,
     sniffer,
     data_json,
     explode_env_with_count,
@@ -136,7 +137,7 @@ def extract_symbol(m: Msg) -> Column:
 def extract_timestamp(m: Msg) -> Column:
     """gate_spot_current.rs:115-133 + gate_spot_20210916.rs:57-77 +
     gate_swap.rs:124-168. Unix ms or NULL."""
-    time_ms = m.get("$.time").try_cast("long") * 1000
+    time_ms = secs_to_ms(m.get("$.time").try_cast("long"))
     result_t = m.get("$.result.t").try_cast("long")
     legacy_trades = m.rows("$.params[1]", "struct<time:double>")
     swap_trades = m.rows(
@@ -155,7 +156,7 @@ def extract_timestamp(m: Msg) -> Column:
                 method == "trades.update",
                 F.array_max(
                     F.transform(
-                        legacy_trades, lambda x: (x["time"] * 1000).cast("long")
+                        legacy_trades, lambda x: (x["time"] * 1000).try_cast("long")
                     )
                 ),
             )
@@ -165,7 +166,7 @@ def extract_timestamp(m: Msg) -> Column:
             )
             .when(
                 ch == "spot.trades",
-                m.get("$.result.create_time_ms").try_cast("double").cast("long"),
+                m.get("$.result.create_time_ms").try_cast("double").try_cast("long"),
             )
             .when(
                 ch.startswith("spot.order_book") | (ch == "spot.book_ticker"),
@@ -178,7 +179,7 @@ def extract_timestamp(m: Msg) -> Column:
                         swap_trades,
                         lambda x: F.coalesce(
                             x["create_time_ms"].try_cast("long"),
-                            x["create_time"].try_cast("long") * 1000,
+                            secs_to_ms(x["create_time"].try_cast("long")),
                         ),
                     )
                 ),
@@ -192,7 +193,7 @@ def extract_timestamp(m: Msg) -> Column:
             # REST snapshots: spot `current` is integer ms, swap is float seconds
             .when(
                 current.isNotNull() & current_secs,
-                (current.try_cast("double") * 1000).cast("long"),
+                (current.try_cast("double") * 1000).try_cast("long"),
             )
             .when(current.isNotNull(), current.try_cast("long"))
         )

@@ -21,6 +21,7 @@ from crypto_msg_parser_spark import schemas
 from crypto_msg_parser_spark.parser.common import (
     Msg,
     let,
+    secs_to_ms,
     sniffer,
     data_json,
     explode_with_count,
@@ -103,7 +104,7 @@ def extract_timestamp(m: Msg) -> Column:
     deals_max = F.array_max(F.transform(deals, lambda x: x["t"].try_cast("long")))
     kline_ts = F.coalesce(
         m.get("$.data.tdt").try_cast("long"),
-        m.get("$.data.t").try_cast("long") * 1000,
+        secs_to_ms(m.get("$.data.t").try_cast("long")),
     )
 
     def ladder(tuple_ch, ts_field):
@@ -112,7 +113,7 @@ def extract_timestamp(m: Msg) -> Column:
                 m.raw.startswith("["),
                 F.when(tuple_ch == "push.symbol", deals_max).when(
                     tuple_ch == "push.kline",
-                    m.get("$[1].data.t").try_cast("long") * 1000,
+                    secs_to_ms(m.get("$[1].data.t").try_cast("long")),
                 ),
             )
             .when(

@@ -23,6 +23,7 @@ from crypto_msg_parser_spark import schemas
 from crypto_msg_parser_spark.parser.common import (
     Msg,
     let,
+    secs_to_ms,
     sniffer,
     explode_with_count,
     parsed_once,
@@ -85,64 +86,53 @@ def extract_timestamp(m: Msg) -> Column:
     def ladder(ch):
         spot_ch = F.get(F.split(ch, "_"), 1)
         swap_ch = F.get(F.split(ch, "\\."), 1)
+
+        def slot_max(rows, i):
+            return F.array_max(
+                F.transform(rows, lambda x: F.get(x, i).try_cast("long"))
+            )
+
         return (
             F.when(
                 ch.isNotNull() & ch.contains("."),
-                F.when(
-                    swap_ch == "Trade",
-                    F.array_max(
-                        F.transform(swap_arrays, lambda x: F.get(x, 3).cast("long"))
-                    )
-                    * 1000,
-                )
+                F.when(swap_ch == "Trade", secs_to_ms(slot_max(swap_arrays, 3)))
                 .when(
                     swap_ch.isin("Depth", "DepthWhole"),
                     m.get("$.data.time").try_cast("long"),
                 )
                 .when(
                     swap_ch == "Ticker",
-                    F.when(
-                        ch == "All.Ticker",
-                        F.array_max(
-                            F.transform(
-                                F.map_values(ticker_map),
-                                lambda x: F.get(x, 6).cast("long"),
-                            )
-                        )
-                        * 1000,
-                    ).otherwise(m.get("$.data[6]").try_cast("long") * 1000),
+                    secs_to_ms(
+                        F.when(
+                            ch == "All.Ticker", slot_max(F.map_values(ticker_map), 6)
+                        ).otherwise(m.get("$.data[6]").try_cast("long"))
+                    ),
                 )
                 .when(
-                    swap_ch.startswith("KLine_"),
-                    F.array_max(
-                        F.transform(swap_arrays, lambda x: F.get(x, 5).cast("long"))
-                    )
-                    * 1000,
+                    swap_ch.startswith("KLine_"), secs_to_ms(slot_max(swap_arrays, 5))
                 ),
             )
             .when(
                 ch.isNotNull(),
                 F.when(spot_ch == "ticker", m.get("$.date").try_cast("long"))
-                .when(spot_ch == "depth", m.get("$.timestamp").try_cast("long") * 1000)
                 .when(
-                    spot_ch == "trades",
-                    F.array_max(
-                        F.transform(trades, lambda x: x["date"].try_cast("long"))
-                    )
-                    * 1000,
+                    spot_ch == "depth", secs_to_ms(m.get("$.timestamp").try_cast("long"))
                 )
                 .when(
-                    spot_ch == "kline",
-                    F.array_max(
-                        F.transform(kline_spot, lambda x: F.get(x, 0).try_cast("long"))
+                    spot_ch == "trades",
+                    secs_to_ms(
+                        F.array_max(
+                            F.transform(trades, lambda x: x["date"].try_cast("long"))
+                        )
                     ),
-                ),
+                )
+                .when(spot_ch == "kline", slot_max(kline_spot, 0)),
             )
             .when(
                 m.has("$.code") & m.has("$.desc"),
                 m.get("$.data.time").try_cast("long"),
             )
-            .otherwise(m.get("$.timestamp").try_cast("long") * 1000)
+            .otherwise(secs_to_ms(m.get("$.timestamp").try_cast("long")))
         )
 
     return let(ladder, m.get("$.channel"))

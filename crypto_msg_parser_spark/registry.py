@@ -28,9 +28,9 @@ _REQUIRED_CONFS = {
     "spark.sql.session.timeZone": "UTC",
     # deactivate whole-stage codegen for subtrees whose generated method
     # exceeds HotSpot's 8000-byte JIT limit (they would run interpreted,
-    # ~10x slower — the 20-exchange routing ladder hits this); everything
-    # JIT-able keeps codegen. Runtime-settable SQL conf, safe on a host
-    # session.
+    # ~10x slower — a wide parse projection, a union of 20 exchange arms);
+    # everything JIT-able keeps codegen. Runtime-settable SQL conf, safe
+    # on a host session.
     "spark.sql.codegen.hugeMethodLimit": "8000",
 }
 
@@ -51,14 +51,17 @@ class Query:
     # re-execution of the returned frame measures nothing: bench.py
     # rebuilds these rows on every pass
     streaming: bool = False
+    module: str = ""  # the registering module, which fixes the row's rank
 
 
 _REGISTRY: dict[str, Query] = {}
 
-# Modules whose import registers queries; their order is all_queries() order.
+# Modules whose import registers queries; their order is all_queries() order:
+# the paper's surface (parse, crawl) first, then what consumes its output.
 _QUERY_MODULES = [
     "crypto_msg_parser_spark.parser.queries",
     "crypto_msg_parser_spark.crawl.queries",
+    "crypto_msg_parser_spark.parser.analytics",
     "crypto_msg_parser_spark.operators.dedup",
     "crypto_msg_parser_spark.operators.textstats",
     "crypto_msg_parser_spark.operators.similarity",
@@ -86,7 +89,12 @@ def query(
         wrapped.__doc__ = fn.__doc__
         wrapped.__wrapped__ = fn  # inspect.unwrap -> the real plan builder
         _REGISTRY[name] = Query(
-            name=name, spark_fn=wrapped, oracle=oracle, doc=doc, streaming=streaming
+            name=name,
+            spark_fn=wrapped,
+            oracle=oracle,
+            doc=doc,
+            streaming=streaming,
+            module=fn.__module__,
         )
         return fn
 
@@ -94,9 +102,12 @@ def query(
 
 
 def all_queries() -> dict[str, Query]:
-    """Every registered row, in registration order: the paper surface
-    (parse, then crawl) first, so a driver sampling the first N rows
-    covers it before the training-data operators."""
+    """Every registered row, in _QUERY_MODULES order and registration
+    order within a module: the paper surface (parse, then crawl) first,
+    so a driver sampling the first N rows covers it before the analytics
+    and training-data rows, whichever module a process imported first."""
     for mod in _QUERY_MODULES:
         importlib.import_module(mod)
-    return dict(_REGISTRY)
+    rank = {mod: i for i, mod in enumerate(_QUERY_MODULES)}
+    rows = sorted(_REGISTRY.values(), key=lambda q: rank.get(q.module, len(rank)))
+    return {q.name: q for q in rows}

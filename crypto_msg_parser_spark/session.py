@@ -7,9 +7,13 @@ spark.sql.shuffle.partitions ~ 2-3x total cores there; AQE coalesces).
 
 from __future__ import annotations
 
+import glob
 import os
+import shutil
+import tempfile
+import uuid
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # the directory holding this package: the workers import the daemon from it
 PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -110,3 +114,88 @@ def finalize_memory_sink(df, name: str):
     out = df.localCheckpoint(eager=True)
     df.sparkSession.catalog.dropTempView(name)
     return out
+
+
+# seconds an availableNow drain may take before it is stopped as stuck
+DRAIN_TIMEOUT_S = 600
+
+
+def await_drain(q) -> None:
+    """Wait for availableNow query ``q`` to finish.
+
+    awaitTermination(t) returns False on timeout WITHOUT stopping the
+    query, and a sink read then holds a partial result: a query not
+    finished within DRAIN_TIMEOUT_S is stopped and raises, as is one
+    whose wait fails any other way."""
+    try:
+        if not q.awaitTermination(DRAIN_TIMEOUT_S):
+            raise RuntimeError(
+                f"{q.name or q.id} did not drain in {DRAIN_TIMEOUT_S}s"
+            )
+    except BaseException:
+        q.stop()
+        raise
+
+
+def drain_available_now(
+    spark: SparkSession,
+    source,
+    pipeline=lambda stream: stream,
+    *,
+    schema: str | None = None,
+    max_files_per_trigger: int | None = None,
+    output_mode: str = "append",
+    project=lambda sink: sink,
+    name: str = "drain",
+) -> DataFrame:
+    """Run ``pipeline(stream)`` under Trigger.availableNow into a
+    uuid-named memory sink (await_drain) and return ``project(sink)``,
+    finalized.
+
+    ``source`` is what the stream reads:
+    - a list of batch frames: each is written as ONE parquet file, with
+      mtimes in list order, so ``max_files_per_trigger=1`` makes each its
+      own micro-batch;
+    - a batch frame: written as partitioned, one file per partition;
+    - a streaming frame: read as it is (``schema`` is then unused).
+    File sources are read back with ``schema``. ``project`` runs on the
+    sink table BEFORE finalize_memory_sink, so the returned frame is the
+    checkpointed one callers can unpersist. The source and checkpoint
+    dirs are removed, and on failure the sink view is dropped."""
+    root = tempfile.mkdtemp(prefix=f"{name}_")
+    src, ckpt = os.path.join(root, "src"), os.path.join(root, "ckpt")
+    sink = f"{name}_{uuid.uuid4().hex[:12]}"
+    try:
+        if isinstance(source, DataFrame) and source.isStreaming:
+            stream = source
+        else:
+            if isinstance(source, DataFrame):
+                source.write.mode("overwrite").parquet(src)
+            else:
+                os.makedirs(src)
+                for i, part in enumerate(source):
+                    tmp = os.path.join(root, f"part_{i}")
+                    part.coalesce(1).write.parquet(tmp)
+                    (pf,) = glob.glob(f"{tmp}/part-*.parquet")
+                    dest = os.path.join(src, f"{i}.parquet")
+                    shutil.move(pf, dest)
+                    os.utime(dest, (1_700_000_000 + i * 10,) * 2)
+            reader = spark.readStream.schema(schema)
+            if max_files_per_trigger is not None:
+                reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+            stream = reader.parquet(src)
+        await_drain(
+            pipeline(stream)
+            .writeStream.format("memory")
+            .queryName(sink)
+            .outputMode(output_mode)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+    except BaseException:
+        spark.catalog.dropTempView(sink)
+        raise
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+    return finalize_memory_sink(project(spark.table(sink)), sink)

@@ -47,20 +47,12 @@ def tumbling_counts(events: DataFrame) -> DataFrame:
 
 
 def run_available_now(stream_df: DataFrame, query_name: str) -> DataFrame:
-    """Drain a stream with Trigger.availableNow into a memory sink and
-    return the materialized result."""
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    from crypto_msg_parser_spark.session import finalize_memory_sink
+    """Drain an aggregating stream with Trigger.availableNow into a memory
+    sink (complete mode) and return the materialized result."""
+    from crypto_msg_parser_spark.session import drain_available_now
 
-    return finalize_memory_sink(
-        stream_df.sparkSession.table(query_name), query_name
+    return drain_available_now(
+        stream_df.sparkSession, stream_df, output_mode="complete", name=query_name
     )
 
 

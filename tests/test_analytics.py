@@ -133,7 +133,7 @@ def test_roll_spread_sign_convention(spark):
     """Roll estimator: alternating bid-ask bounce (negative serial cov)
     must yield a defined spread; a monotone trend (positive cov) must
     yield NULL — crafted minute-close series, one symbol each."""
-    from crypto_msg_parser_spark.parser.queries import roll_spread_1h
+    from crypto_msg_parser_spark.parser.analytics import roll_spread_1h
 
     # monkeypatch-free: replicate the grouped tail on crafted closes
     from pyspark.sql import Row, Window as W
@@ -179,7 +179,7 @@ def test_amihud_ratio_of_sums_identity(spark):
     """amihud_nano must equal (sum_abs_move_cents / dollar_deci_cents)*1e9
     exactly (ratio of the row's own integer columns) and every volume day
     must be present even without price moves (LEFT join)."""
-    from crypto_msg_parser_spark.parser.queries import amihud_illiquidity_daily
+    from crypto_msg_parser_spark.parser.analytics import amihud_illiquidity_daily
 
     rows = amihud_illiquidity_daily(spark, SF).collect()
     assert rows
@@ -192,7 +192,7 @@ def test_amihud_ratio_of_sums_identity(spark):
 def test_venue_arb_single_venue_null(spark):
     """BNB/BTC is binance-only: its arb columns must be NULL; two-venue
     pairs must carry both venues' quotes and a concrete arb verdict."""
-    from crypto_msg_parser_spark.parser.queries import venue_arb_spread_1m
+    from crypto_msg_parser_spark.parser.analytics import venue_arb_spread_1m
 
     rows = venue_arb_spread_1m(spark, SF).collect()
     by_pair = {}
@@ -243,7 +243,7 @@ def test_markout_decomposition_identity(spark):
     sum_impact_x2 on every symbol-hour (integer identity, no float
     slack), partial-match hours must be reported not guessed, and the
     guarded average must reproduce from the row's own integers."""
-    from crypto_msg_parser_spark.parser.queries import trade_markout_5m
+    from crypto_msg_parser_spark.parser.analytics import trade_markout_5m
 
     rows = trade_markout_5m(spark, SF).collect()
     assert rows
@@ -270,7 +270,7 @@ def test_quoted_spread_tw_durations_tile_the_tape(spark):
     first quote to the last hour's end (no gaps, no double counting);
     the display ratio is the integer identity over the two exact sums;
     every TWAS sits inside the synthesized 200..208-cent spread band."""
-    from crypto_msg_parser_spark.parser.queries import (
+    from crypto_msg_parser_spark.parser.analytics import (
         _BASE_TS,
         quoted_spread_tw_1h,
     )
@@ -313,7 +313,7 @@ def test_quoted_spread_tw_durations_tile_the_tape(spark):
 def test_max_drawdown_nonneg_and_bounded_by_range(spark):
     """Drawdown is >=0, <= peak - trough, and bps matches the integer
     per-minute floor convention on a crafted monotone-then-crash path."""
-    from crypto_msg_parser_spark.parser.queries import max_drawdown_daily
+    from crypto_msg_parser_spark.parser.analytics import max_drawdown_daily
 
     rows = max_drawdown_daily(spark, SF).collect()
     assert rows
@@ -341,7 +341,7 @@ def test_max_drawdown_nonneg_and_bounded_by_range(spark):
 def test_bipower_jump_identity_and_null_convention(spark):
     """RV >= 0, jump_share in [0,1] when defined, NULL exactly when a
     day has no complete |d_t||d_(t-1)| pair."""
-    from crypto_msg_parser_spark.parser.queries import bipower_jump_daily
+    from crypto_msg_parser_spark.parser.analytics import bipower_jump_daily
 
     rows = bipower_jump_daily(spark, SF).collect()
     assert rows
@@ -364,7 +364,7 @@ def test_bipower_jump_identity_and_null_convention(spark):
 
 def test_volume_profile_poc_is_modal_bin(spark):
     """POC bin holds max_vol, share_ppm consistent, lowest-bin tie rule."""
-    from crypto_msg_parser_spark.parser.queries import volume_profile_poc
+    from crypto_msg_parser_spark.parser.analytics import volume_profile_poc
 
     rows = volume_profile_poc(spark, SF).collect()
     assert rows
@@ -377,7 +377,7 @@ def test_volume_profile_poc_is_modal_bin(spark):
 
 def test_order_flow_persistence_pair_accounting(spark):
     """n_same + n_flip == n_pairs and persistence matches integer DIV."""
-    from crypto_msg_parser_spark.parser.queries import (
+    from crypto_msg_parser_spark.parser.analytics import (
         order_flow_persistence_1h,
     )
 

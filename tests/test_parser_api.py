@@ -209,3 +209,51 @@ def test_api_parse_trade_on_all_fixtures(spark):
     assert out.count() > 0
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
     assert len(want) > 0
+
+
+def _numbers_replaced(msg, token):
+    """``msg`` with every JSON number, and every all-digit string of 9 or
+    more digits (ids and ms timestamps sent as text), replaced by
+    ``token``; a message that is not JSON is kept as it is."""
+    import json
+    import re
+
+    try:
+        doc = json.loads(msg)
+    except ValueError:
+        return msg
+    num = "\x00num\x00"
+
+    def walk(v):
+        if isinstance(v, bool) or v is None:
+            return v
+        if isinstance(v, (int, float)):
+            return num
+        if isinstance(v, str):
+            return token if re.fullmatch(r"\d{9,}", v) else v
+        if isinstance(v, list):
+            return [walk(x) for x in v]
+        return {k: walk(x) for k, x in v.items()}
+
+    return json.dumps(walk(doc)).replace(json.dumps(num), token)
+
+
+def test_route_survives_out_of_range_numbers(spark):
+    """Numbers past BIGINT (or any integral type) route to NULL fields:
+    under ANSI mode a plain `* 1000` or `.cast("long")` in a sniffer
+    raised ARITHMETIC_OVERFLOW / CAST_OVERFLOW and failed the whole job."""
+    for token in ("9223372036854775807", "1e30"):
+        rows = [
+            dict(
+                r,
+                market_type=r["market_type"] or "spot",
+                raw=_numbers_replaced(r["raw"], token),
+            )
+            for r in load_fixtures()
+        ]
+        raw = fixtures_df(spark, rows)
+        for extended in (False, True):
+            got = api.route(raw, extended=extended).select(
+                "msg_id", "routed_msg_type", "routed_symbol", "routed_ts"
+            ).collect()
+            assert len(got) == len(rows), (token, extended)

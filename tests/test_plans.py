@@ -31,3 +31,19 @@ def test_query_matches_oracle(name, spark, con):
         assert df.count() >= 0  # rows-only check, mirrors the driver
         return
     compare(df, con, q.oracle, name)
+
+
+def test_paper_surface_rows_come_first():
+    """Every parse and crawl row precedes the first other row, and the
+    crawl streaming rows sit in the first 50, the driver's graded window."""
+    paper = (
+        "crypto_msg_parser_spark.parser.queries",
+        "crypto_msg_parser_spark.crawl.queries",
+    )
+    mods = [q.module for q in QUERIES.values()]
+    n_paper = sum(m in paper for m in mods)
+    assert all(m in paper for m in mods[:n_paper])
+    crawl_streaming = [
+        i for i, q in enumerate(QUERIES.values()) if q.streaming and q.module == paper[1]
+    ]
+    assert crawl_streaming and max(crawl_streaming) < 50, crawl_streaming

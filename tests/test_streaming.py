@@ -546,17 +546,39 @@ def test_streaming_flag_matches_writestream_body():
     it every pass (``Query.streaming``) or min-of-3 records a ~0.02s
     re-drain of a cached frame. Detect streaming rows structurally (their
     function body references writeStream) and pin that, for every
-    registered row, the flag says exactly that."""
+    registered row, the flag says exactly that. A body that drains
+    through session.drain_available_now runs a writeStream job too."""
     import inspect
 
     from crypto_msg_parser_spark.registry import all_queries
 
+    def drains(fn):
+        src = inspect.getsource(inspect.unwrap(fn))
+        return "writeStream" in src or "drain_available_now" in src
+
     qs = all_queries()
-    wrong = sorted(
-        name
-        for name, q in qs.items()
-        if q.streaming
-        != ("writeStream" in inspect.getsource(inspect.unwrap(q.spark_fn)))
-    )
+    wrong = sorted(name for name, q in qs.items() if q.streaming != drains(q.spark_fn))
     assert not wrong, f"streaming flag disagrees with the body: {wrong}"
     assert any(q.streaming for q in qs.values())
+
+
+@pytest.mark.parametrize("timeout", [0, 0.001])
+def test_drain_timeout_stops_the_query_and_removes_its_dirs(
+    spark, tmp_path, monkeypatch, timeout
+):
+    """A drain that has not finished within DRAIN_TIMEOUT_S raises instead
+    of returning a partial memory sink; its query is stopped and its temp
+    dirs are gone. awaitTermination refuses 0 itself; 1 ms times out."""
+    import tempfile
+
+    from crypto_msg_parser_spark import session
+
+    monkeypatch.setattr(session, "DRAIN_TIMEOUT_S", timeout)
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    parts = [spark.range(3).toDF("id"), spark.range(3, 6).toDF("id")]
+    with pytest.raises(ValueError if timeout == 0 else RuntimeError):
+        session.drain_available_now(
+            spark, parts, schema="id long", max_files_per_trigger=1
+        )
+    assert not spark.streams.active
+    assert not list(tmp_path.iterdir())
