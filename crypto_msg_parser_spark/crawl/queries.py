@@ -579,6 +579,7 @@ _SQL_E2_URL = _SQL_FRONTIER_URL.replace("p_partkey", "(p_partkey % 149)")
     "epoch-2-minus-epoch-1 tagged run 2.",
 )
 def frontier_stream_resume(spark, sf_dir):
+    import shutil
     import tempfile
 
     from crypto_msg_parser_spark.streaming.jobs import (
@@ -621,26 +622,31 @@ def frontier_stream_resume(spark, sf_dir):
             .start()
         )
 
-    epoch_urls(97).repartition(4).write.mode("append").parquet(src)
-    run_once()
-    # the file sink's _spark_metadata log makes this read exactly the
-    # run-1 committed set; eager localCheckpoint pins it before run 2
-    # appends more committed files under the same path
-    run1 = (
-        spark.read.parquet(out)
-        .select("canonical", F.lit(1).alias("in_run1"))
-        .localCheckpoint(eager=True)
-    )
-    epoch_urls(149).repartition(4).write.mode("append").parquet(src)
-    run_once()
-    both = spark.read.parquet(out).select("canonical", "url_hash")
-    return both.join(run1, "canonical", "left").select(
-        "canonical",
-        "url_hash",
-        F.coalesce(F.col("in_run1"), F.lit(2))
-        .cast("int")
-        .alias("emitted_in_run"),
-    )
+    try:
+        epoch_urls(97).repartition(4).write.mode("append").parquet(src)
+        run_once()
+        # the file sink's _spark_metadata log makes this read exactly the
+        # run-1 committed set; eager localCheckpoint pins it before run 2
+        # appends more committed files under the same path
+        run1 = (
+            spark.read.parquet(out)
+            .select("canonical", F.lit(1).alias("in_run1"))
+            .localCheckpoint(eager=True)
+        )
+        epoch_urls(149).repartition(4).write.mode("append").parquet(src)
+        run_once()
+        both = spark.read.parquet(out).select("canonical", "url_hash")
+        # pinned, so the dirs can go
+        return both.join(run1, "canonical", "left").select(
+            "canonical",
+            "url_hash",
+            F.coalesce(F.col("in_run1"), F.lit(2))
+            .cast("int")
+            .alias("emitted_in_run"),
+        ).localCheckpoint(eager=True)
+    finally:
+        for d in (src, ckpt, out):
+            shutil.rmtree(d, ignore_errors=True)
 
 
 _RATE_BUDGET = 40

@@ -112,7 +112,7 @@ def extract_timestamp(m: Msg) -> Column:
                 ch == "trades",
                 F.when(te_ts.isNotNull(), te_ts).otherwise(
                     F.array_max(
-                        F.transform(snap, lambda x: x.getItem(1).try_cast("long"))
+                        F.transform(snap, lambda x: F.get(x, 1).try_cast("long"))
                     )
                 ),
             )
@@ -121,9 +121,9 @@ def extract_timestamp(m: Msg) -> Column:
                 F.when(
                     m.has("$[1][0][0]"),
                     F.array_max(
-                        F.transform(snap, lambda x: x.getItem(0).try_cast("long"))
+                        F.transform(snap, lambda x: F.get(x, 0).try_cast("long"))
                     ),
-                ).otherwise(single.getItem(0).try_cast("long")),
+                ).otherwise(F.get(single, 0).try_cast("long")),
             )
             .otherwise(F.lit(None).cast("long"))
         )

@@ -8,15 +8,27 @@ spark.sql.shuffle.partitions ~ 2-3x total cores there; AQE coalesces).
 from __future__ import annotations
 
 import glob
+import hashlib
 import os
 import shutil
+import subprocess
 import tempfile
 import uuid
+import warnings
+import zipfile
 
+import pyspark
 from pyspark.sql import DataFrame, SparkSession
 
 # the directory holding this package: the workers import the daemon from it
 PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# the local FileSystem that forks no chmod or readlink; its FileContext
+# twin is f"{NO_FORK_FS}$Fs" (see jvm/NoForkLocalFileSystem.java)
+NO_FORK_FS = "crypto_msg_parser_spark.jvm.NoForkLocalFileSystem"
+NO_FORK_FS_SOURCE = os.path.join(
+    PACKAGE_ROOT, "crypto_msg_parser_spark", "jvm", "NoForkLocalFileSystem.java"
+)
 
 
 def _driver_mem() -> str:
@@ -24,6 +36,69 @@ def _driver_mem() -> str:
     every executor, and the host may be far smaller than a cluster node."""
     ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
     return f"{max(1, min(48, ram // (2 << 30)))}g"
+
+
+def no_fork_fs_jar() -> str:
+    """The jar of NO_FORK_FS, compiled against Spark's Hadoop client jar
+    on first use and cached under $XDG_CACHE_HOME (or ~/.cache), keyed by
+    the source and that jar's name. Not under the temp dir: a caller that
+    points TMPDIR at a per-run dir would compile it every run (~2.5 CPU
+    s). Raises OSError, RuntimeError or CalledProcessError if it cannot
+    be built."""
+    jars_dir = os.path.join(
+        os.environ.get("SPARK_HOME") or os.path.dirname(pyspark.__file__), "jars"
+    )
+    hadoop = glob.glob(os.path.join(jars_dir, "hadoop-client-api-*.jar"))
+    if len(hadoop) != 1:
+        raise RuntimeError(f"no single hadoop-client-api jar in {jars_dir}")
+    with open(NO_FORK_FS_SOURCE, "rb") as f:
+        key = hashlib.sha256(f.read() + os.path.basename(hadoop[0]).encode())
+    cache = os.path.join(
+        os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache"),
+        "crypto_msg_parser_spark",
+        key.hexdigest(),
+    )
+    jar = os.path.join(cache, "no-fork-fs.jar")
+    if os.path.isfile(jar):
+        return jar
+    javac = shutil.which("javac")
+    if javac is None:
+        raise RuntimeError("javac is not on PATH")
+    os.makedirs(cache, exist_ok=True)
+    with tempfile.TemporaryDirectory() as classes:
+        subprocess.run(
+            [javac, "--release", "17", "-nowarn", "-cp", hadoop[0], "-d", classes,
+             NO_FORK_FS_SOURCE],
+            check=True, capture_output=True, text=True,
+        )
+        # written whole under a temp name, then renamed: a concurrent
+        # session sees either no jar or a complete one
+        fd, tmp = tempfile.mkstemp(dir=cache, suffix=".tmp")
+        try:
+            with os.fdopen(fd, "wb") as f, zipfile.ZipFile(f, "w") as z:
+                for cls in glob.glob(f"{classes}/**/*.class", recursive=True):
+                    z.write(cls, os.path.relpath(cls, classes))
+            os.replace(tmp, jar)
+        except BaseException:
+            os.unlink(tmp)
+            raise
+    return jar
+
+
+def _no_fork_fs_conf() -> dict[str, str]:
+    """Confs that make the session's file: FileSystem NO_FORK_FS, or none,
+    with a warning saying why, when its jar cannot be built."""
+    try:
+        jar = no_fork_fs_jar()
+    except (OSError, RuntimeError, subprocess.SubprocessError) as e:
+        why = getattr(e, "stderr", None) or e
+        warnings.warn(f"keeping Hadoop's stock local FileSystem: {why}", stacklevel=3)
+        return {}
+    return {
+        "spark.driver.extraClassPath": jar,
+        "spark.hadoop.fs.file.impl": NO_FORK_FS,
+        "spark.hadoop.fs.AbstractFileSystem.file.impl": f"{NO_FORK_FS}$Fs",
+    }
 
 
 def get_spark(
@@ -47,7 +122,12 @@ def get_spark(
     # Under spark-submit the master comes from the launcher (--master /
     # cluster manager); forcing local[] here would silently un-cluster the
     # job. SPARK_GRAFT_INHERIT_MASTER=1 defers to the submit-time master.
-    if os.environ.get("SPARK_GRAFT_INHERIT_MASTER") != "1":
+    if os.environ.get("SPARK_GRAFT_INHERIT_MASTER") == "1":
+        warnings.warn(
+            "keeping Hadoop's stock local FileSystem: SPARK_GRAFT_INHERIT_MASTER=1",
+            stacklevel=2,
+        )
+    else:
         builder = (
             builder.master(f"local[{cores}]")
             # On Python < 3.12 every task of a reused worker re-read
@@ -60,6 +140,14 @@ def get_spark(
             .config("spark.python.daemon.module", "crypto_msg_parser_spark.pydaemon")
             .config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
         )
+        # Without native Hadoop, Hadoop's local FileSystem forks chmod for
+        # every file, .crc and directory a write creates (the three lake
+        # writes of 27 files in all started ~330 processes), and readlink
+        # for every file a streaming checkpoint renames; NO_FORK_FS does
+        # both in-process. Local mode only: the jar is on this host's
+        # driver class path, which a cluster's executors do not share.
+        for k, v in _no_fork_fs_conf().items():
+            builder = builder.config(k, v)
     builder = (
         builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))

@@ -4,7 +4,9 @@ SPARK_GRAFT_TEST_SF=/root/testdata/sf0.01)."""
 
 from __future__ import annotations
 
+import glob
 import os
+import tempfile
 
 import pytest
 
@@ -47,3 +49,13 @@ def test_paper_surface_rows_come_first():
         i for i, q in enumerate(QUERIES.values()) if q.streaming and q.module == paper[1]
     ]
     assert crawl_streaming and max(crawl_streaming) < 50, crawl_streaming
+
+
+def test_frontier_stream_resume_removes_its_temp_dirs(spark, con):
+    """The streaming resume row returns a checkpointed frame, so its
+    source, checkpoint and sink dirs go when it returns."""
+    pattern = os.path.join(tempfile.gettempdir(), "resume_*")
+    before = set(glob.glob(pattern))
+    q = QUERIES["frontier_stream_resume"]
+    compare(q.spark_fn(spark, SF), con, q.oracle, q.name)
+    assert set(glob.glob(pattern)) - before == set()
