@@ -33,6 +33,4 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        name: q.oracle for name, q in all_queries().items() if q.oracle is not None
-    }
+    return {name: q.oracle for name, q in all_queries().items()}

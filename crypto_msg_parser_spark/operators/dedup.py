@@ -132,41 +132,6 @@ def dedup_exact(spark, sf_dir):
     )
 
 
-@query(
-    "dedup_exact_groups",
-    oracle="""
-    SELECT content_hash, n_copies, keep_doc_id FROM (
-      SELECT md5(text) AS content_hash, count(*) AS n_copies,
-             min(doc_id) AS keep_doc_id
-      FROM documents GROUP BY md5(text))
-    WHERE n_copies > 1
-    """,
-    doc="duplicate groups only (the rows exact dedup would drop).",
-)
-def dedup_exact_groups(spark, sf_dir):
-    return dedup_exact(spark, sf_dir).filter(F.col("n_copies") > 1)
-
-
-@query(
-    "minhash_signatures",
-    oracle=f"""
-    WITH hashed AS (
-      SELECT doc_id, {_sql_word_hashes(_sql_words('text'))} AS wh
-      FROM documents)
-    SELECT doc_id,
-           {", ".join(f"{_sql_minhash('wh', s)} AS mh{s}" for s in range(N_MINHASH))}
-    FROM hashed
-    """,
-    doc="per-doc MinHash signature over the distinct-word set, computed as "
-    "pure array expressions (no shuffle, no Python); one md5 per word, "
-    "xor-permutations for the signature rows.",
-)
-def minhash_signatures(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents")
-    hashes = F.transform(_words(F.col("text")), _hasher(0))
-    return docs.select("doc_id", *minhash_cols(hashes))
-
-
 def _lsh_bands(sig_df: DataFrame) -> DataFrame:
     """Explode a signature table into (doc_id, band_idx, band_hash) rows.
     The band key is the plain joined minhash pair — hashing it again buys
@@ -284,9 +249,9 @@ def neardup_minhash_lsh(spark, sf_dir, checkpoint_dir: str | None = None):
 
 
 def lsh_neardup_pairs(raw_docs, checkpoint_dir: str | None = None):
-    """The LSH near-dup core over ANY (doc_id, text) frame — shared by the
-    flat-documents query above and the interleaved-payload variant
-    (operators.interleaved.interleaved_neardup)."""
+    """The LSH near-dup core over ANY (doc_id, text) frame, e.g. the
+    flat-documents row above or text reassembled from interleaved spans
+    (span_sequence_signature's `reassembled`)."""
     # ONE md5 pass: representatives' shingle sets are hashed once and that
     # array feeds every consumer — all 8 minhash permutations (xor-min) AND
     # both sides of the Jaccard verify. Round 1 ran 8 separate md5 passes
@@ -454,22 +419,6 @@ def _sql_simhash(words_expr: str) -> str:
         for i in range(SIMHASH_BITS)
     ]
     return "(" + " + ".join(terms) + ")::BIGINT"
-
-
-@query(
-    "dedup_simhash",
-    oracle=f"""
-    SELECT doc_id, {_sql_simhash(_sql_words('text'))} AS simhash
-    FROM documents
-    """,
-    doc="per-doc SimHash fingerprint (16-bit here; 64-bit at scale) as a "
-    "pure column expression.",
-)
-def dedup_simhash(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id", simhash_col(_words(F.col("text"))).alias("simhash")
-    )
 
 
 @query(
@@ -693,100 +642,6 @@ def neardup_components(spark, sf_dir):
     # measures small at runtime.
     return comp.join(sizes, "component_id").select(
         "doc_id", "component_id", "n_members"
-    )
-
-
-@query(
-    "minhash_estimate_quality",
-    oracle=f"""
-    WITH reps AS ({_SQL_REPS}),
-    hashed AS ({_SQL_HASHED}),
-    sig AS ({_SQL_SIG}),
-    bands AS ({_SQL_BANDS}),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a JOIN bands b
-        ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
-           AND a.doc_id < b.doc_id),
-    verified AS (
-      SELECT c.doc_a, c.doc_b,
-             len(list_filter(wa.wh, x -> list_contains(wb.wh, x))) /
-             (len(wa.wh) + len(wb.wh)
-              - len(list_filter(wa.wh, x -> list_contains(wb.wh, x))))
-               AS jaccard,
-             CAST({" + ".join(f"CASE WHEN sa.mh{s} = sb.mh{s} THEN 1 ELSE 0 END" for s in range(N_MINHASH))}
-                  AS BIGINT) AS n_agree
-      FROM cand c
-      JOIN hashed wa ON wa.doc_id = c.doc_a
-      JOIN hashed wb ON wb.doc_id = c.doc_b
-      JOIN sig sa ON sa.doc_id = c.doc_a
-      JOIN sig sb ON sb.doc_id = c.doc_b)
-    SELECT doc_a, doc_b, jaccard, n_agree,
-           n_agree / {N_MINHASH} AS jaccard_est
-    FROM verified WHERE jaccard >= {JACCARD_THRESHOLD}
-    """,
-    doc="sketch-quality measurement for the MinHash family ('measure, "
-    "don't guess' applied to the estimator itself): for every CONFIRMED "
-    "near-dup pair, report the exact shingle-set Jaccard next to the "
-    "MinHash estimate (fraction of agreeing signature coordinates — the "
-    "unbiased estimator whose stderr is sqrt(J(1-J)/k), here k=8). "
-    "Agreement is an integer count, both similarity numbers are single "
-    "divisions — no float aggregation. A production pipeline uses this "
-    "row to size k before trusting LSH thresholds at 100 TB.",
-)
-def minhash_estimate_quality(spark, sf_dir):
-    raw_docs = load_table(spark, sf_dir, "documents")
-    hashed = _barrier(
-        raw_docs.groupBy(F.md5("text").alias("_h"))
-        .agg(F.min("doc_id").alias("doc_id"), F.any_value("text").alias("text"))
-        .select(
-            "doc_id",
-            F.transform(_bigrams(F.split(F.col("text"), " ")), _hasher(0)).alias("wh"),
-        ),
-        None,
-    )
-    sig = hashed.select("doc_id", *minhash_cols(F.col("wh")))
-    bands = _lsh_bands(sig)
-    ids = F.sort_array(F.collect_set("doc_id")).alias("ids")
-    buckets = _barrier(
-        bands.groupBy("band_idx", "band_hash").agg(ids).filter(F.size("ids") > 1),
-        None,
-    )
-    a = buckets.select("band_idx", "band_hash", F.explode("ids").alias("doc_a"))
-    b = buckets.select("band_idx", "band_hash", F.explode("ids").alias("doc_b"))
-    cand = (
-        a.join(b, ["band_idx", "band_hash"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    inter = F.size(F.array_intersect(F.col("wa"), F.col("wb")))
-    union = F.size(F.col("wa")) + F.size(F.col("wb")) - inter
-    sa = sig.select(
-        F.col("doc_id").alias("doc_a"),
-        *[F.col(f"mh{s}").alias(f"a{s}") for s in range(N_MINHASH)],
-    )
-    sb = sig.select(
-        F.col("doc_id").alias("doc_b"),
-        *[F.col(f"mh{s}").alias(f"b{s}") for s in range(N_MINHASH)],
-    )
-    n_agree = sum(
-        (F.col(f"a{s}") == F.col(f"b{s}")).cast("long")
-        for s in range(N_MINHASH)
-    )
-    return (
-        cand.join(hashed.select(F.col("doc_id").alias("doc_a"), F.col("wh").alias("wa")), "doc_a")
-        .join(hashed.select(F.col("doc_id").alias("doc_b"), F.col("wh").alias("wb")), "doc_b")
-        .join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            (inter / union).alias("jaccard"),
-            n_agree.cast("long").alias("n_agree"),
-            (n_agree.cast("long") / F.lit(N_MINHASH)).alias("jaccard_est"),
-        )
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
     )
 
 

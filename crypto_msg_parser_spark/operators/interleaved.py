@@ -24,9 +24,11 @@ CORRECTNESS row rather than a pytest-only claim.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
+from ..functions.scalar import stable_hash64
 from ..registry import query
 from ..sources.testdata import load_table
 from .corpus import PACK_TOKENS
@@ -217,6 +219,28 @@ def synth_interleaved_with_footer(docs: DataFrame) -> DataFrame:
     return inter.select("doc_id", spans.alias("spans"))
 
 
+def _boilerplate_key(kind: Column, text: Column) -> Column:
+    """A text span's boilerplate key: the stable hash of its normalized
+    (lower+trim) text; NULL for media spans, which are never dropped."""
+    return F.when(kind == "text", stable_hash64(F.lower(F.trim(text))))
+
+
+def _flag_boilerplate(keyed: DataFrame) -> tuple[DataFrame, Column]:
+    """(flagged, kept): spans (doc_id, bkey, ...) left-joined to the keys
+    that recur in >= _BOILER_MIN_DOCS distinct docs, and the column that
+    is true on the spans whose key is not one of them. One
+    partial-aggregated shuffle counts the docs per key, and the flag-back
+    is a plain equi-join on the key (AQE picks the strategy)."""
+    boiler = (
+        keyed.filter(F.col("bkey").isNotNull())
+        .groupBy("bkey")
+        .agg(F.count_distinct("doc_id").alias("nd"))
+        .filter(F.col("nd") >= _BOILER_MIN_DOCS)
+        .select("bkey", F.lit(True).alias("_boiler"))
+    )
+    return keyed.join(boiler, "bkey", "left"), F.col("_boiler").isNull()
+
+
 @query(
     "spans_boilerplate_strip",
     oracle=f"""
@@ -258,27 +282,12 @@ def synth_interleaved_with_footer(docs: DataFrame) -> DataFrame:
     "flagged explode, not over the survivors).",
 )
 def spans_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.scalar import stable_hash64
-
     docs = load_table(spark, sf_dir, "documents")
     inter = synth_interleaved_with_footer(docs)
     ex = inter.select("doc_id", F.explode("spans").alias("s"))
-    keyed = ex.withColumn(
-        "bkey",
-        F.when(
-            F.col("s.kind") == "text",
-            stable_hash64(F.lower(F.trim(F.col("s.text")))),
-        ),
+    flagged, kept = _flag_boilerplate(
+        ex.withColumn("bkey", _boilerplate_key(F.col("s.kind"), F.col("s.text")))
     )
-    boiler = (
-        keyed.filter(F.col("bkey").isNotNull())
-        .groupBy("bkey")
-        .agg(F.count_distinct("doc_id").alias("nd"))
-        .filter(F.col("nd") >= _BOILER_MIN_DOCS)
-        .select("bkey", F.lit(True).alias("_boiler"))
-    )
-    flagged = keyed.join(boiler, "bkey", "left")
-    kept = F.col("_boiler").isNull()
     kept_item = F.when(
         kept,
         F.struct(
@@ -311,6 +320,27 @@ def spans_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # costs a fixed 16 tokens (a patch-embedding placeholder budget).
 _TRUNC_BUDGET = 48
 _MEDIA_TOKEN_COST = 16
+
+
+def _span_tokens(
+    kind: Column, text: Column, offset: Column, kept: Column | None = None
+) -> tuple[Column, Column]:
+    """(tok, cum): a span's token cost (whitespace tokens of a text span,
+    _MEDIA_TOKEN_COST for a media span) and its doc's running total in
+    span order. With ``kept`` only kept spans advance the total. The
+    running sum is a per-doc window, so its partitions stay bounded."""
+    tok = (
+        F.when(kind == "text", F.coalesce(F.size(F.split(text, " ")), F.lit(0)))
+        .otherwise(F.lit(_MEDIA_TOKEN_COST))
+        .cast("long")
+    )
+    w = (
+        Window.partitionBy("doc_id")
+        .orderBy(offset, kind)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    counted = tok if kept is None else F.when(kept, tok).otherwise(F.lit(0))
+    return tok, F.sum(counted).over(w)
 
 
 @query(
@@ -352,26 +382,10 @@ _MEDIA_TOKEN_COST = 16
     "character truncation violates.",
 )
 def spans_token_truncate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
     inter = synth_interleaved(load_table(spark, sf_dir, "documents"))
     ex = inter.select("doc_id", F.explode("spans").alias("s"))
-    tok = (
-        F.when(
-            F.col("s.kind") == "text",
-            F.coalesce(F.size(F.split("s.text", " ")), F.lit(0)),
-        )
-        .otherwise(F.lit(_MEDIA_TOKEN_COST))
-        .cast("long")
-    )
-    w = (
-        Window.partitionBy("doc_id")
-        .orderBy(F.col("s.offset"), F.col("s.kind"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    staged = ex.select(
-        "doc_id", tok.alias("tok"), F.sum(tok).over(w).alias("cum")
-    )
+    tok, cum = _span_tokens(F.col("s.kind"), F.col("s.text"), F.col("s.offset"))
+    staged = ex.select("doc_id", tok.alias("tok"), cum.alias("cum"))
     within = F.col("cum") <= _TRUNC_BUDGET
     return staged.groupBy("doc_id").agg(
         F.sum(within.cast("long")).alias("n_kept"),
@@ -379,124 +393,6 @@ def spans_token_truncate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("tokens_kept"),
         (F.max("cum") > _TRUNC_BUDGET).alias("truncated"),
-    )
-
-
-@query(
-    "interleaved_prep_full",
-    oracle=f"""
-    WITH {_SQL_SPANS_FOOTER},
-    keyed AS (
-      SELECT doc_id, kind, stext, soff,
-             CASE WHEN kind = 'text'
-                  THEN ('0x' || substr(md5(lower(trim(stext))), 1, 15))::BIGINT
-             END AS bkey
-      FROM spans_f),
-    boiler AS (
-      SELECT bkey FROM keyed WHERE bkey IS NOT NULL
-      GROUP BY bkey HAVING count(DISTINCT doc_id) >= {_BOILER_MIN_DOCS}),
-    flagged AS (
-      SELECT k.doc_id, k.kind, k.soff,
-             (b.bkey IS NULL) AS kept,
-             CASE WHEN k.kind = 'text'
-                  THEN coalesce(len(string_split(k.stext, ' ')), 0)
-                  ELSE {_MEDIA_TOKEN_COST} END AS tok
-      FROM keyed k LEFT JOIN boiler b ON k.bkey = b.bkey),
-    cums AS (
-      SELECT doc_id, kept, tok,
-             sum(CASE WHEN kept THEN tok ELSE 0 END)
-               OVER (PARTITION BY doc_id ORDER BY soff, kind
-                     ROWS UNBOUNDED PRECEDING) AS cum
-      FROM flagged),
-    perdoc AS (
-      SELECT CAST(doc_id AS BIGINT) AS doc_id,
-             CAST(count(*) FILTER (WHERE kept AND cum <= {_TRUNC_BUDGET})
-                  AS BIGINT) AS n_spans_final,
-             CAST(coalesce(sum(CASE WHEN kept AND cum <= {_TRUNC_BUDGET}
-                                    THEN tok END), 0) AS BIGINT) AS n_tok
-      FROM cums GROUP BY doc_id)
-    SELECT doc_id, n_spans_final, n_tok,
-           CAST(cum2 - n_tok AS BIGINT) AS start_offset,
-           CAST(floor((cum2 - n_tok) / {PACK_TOKENS}) AS BIGINT) AS pack_id
-    FROM (SELECT *, sum(n_tok) OVER (ORDER BY doc_id
-                                     ROWS UNBOUNDED PRECEDING) AS cum2
-          FROM perdoc)
-    """,
-    doc="the INTERLEAVED corpus-prep flagship, one declarative plan: "
-    "boilerplate strip (normalize->hash->distinct-doc count->equi-join "
-    "flag) -> token accounting over the SURVIVING spans (text = "
-    "whitespace tokens, media = fixed 16-token patch budget) -> "
-    "token-budget truncation at span boundaries (conditional running sum "
-    "in a per-doc bounded window: dropped spans advance nothing, spans "
-    "are atomic) -> two-level distributed prefix-sum packing into fixed "
-    "256-token training sequences. Every doc keeps a row even when fully "
-    "stripped. Stage composition is where single-op correctness usually "
-    "breaks (truncation must budget the POST-strip spans; packing must "
-    "offset the POST-truncation totals) — the oracle replays the whole "
-    "chain in closed form. Catalyst sees one tree: the strip join, the "
-    "per-doc window, the pack windows all reuse the doc_id partitioning; "
-    "the only single-partition stage is the pack's per-super-total "
-    "window (n_docs/2^20 rows).",
-)
-def interleaved_prep_full(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
-    from ..functions.scalar import stable_hash64
-    from .corpus import pack_sequences
-
-    docs = load_table(spark, sf_dir, "documents")
-    inter = synth_interleaved_with_footer(docs)
-    ex = inter.select("doc_id", F.explode("spans").alias("s"))
-    keyed = ex.withColumn(
-        "bkey",
-        F.when(
-            F.col("s.kind") == "text",
-            stable_hash64(F.lower(F.trim(F.col("s.text")))),
-        ),
-    )
-    boiler = (
-        keyed.filter(F.col("bkey").isNotNull())
-        .groupBy("bkey")
-        .agg(F.count_distinct("doc_id").alias("nd"))
-        .filter(F.col("nd") >= _BOILER_MIN_DOCS)
-        .select("bkey", F.lit(True).alias("_boiler"))
-    )
-    flagged = keyed.join(boiler, "bkey", "left")
-    kept = F.col("_boiler").isNull()
-    tok = (
-        F.when(
-            F.col("s.kind") == "text",
-            F.coalesce(F.size(F.split("s.text", " ")), F.lit(0)),
-        )
-        .otherwise(F.lit(_MEDIA_TOKEN_COST))
-        .cast("long")
-    )
-    w = (
-        Window.partitionBy("doc_id")
-        .orderBy(F.col("s.offset"), F.col("s.kind"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = F.sum(F.when(kept, tok).otherwise(F.lit(0))).over(w)
-    staged = flagged.select(
-        "doc_id", kept.alias("kept"), tok.alias("tok"), cum.alias("cum")
-    )
-    within = F.col("kept") & (F.col("cum") <= _TRUNC_BUDGET)
-    perdoc = staged.groupBy(
-        F.col("doc_id").cast("long").alias("doc_id")
-    ).agg(
-        F.sum(within.cast("long")).alias("n_spans_final"),
-        F.coalesce(F.sum(F.when(within, F.col("tok"))), F.lit(0))
-        .cast("long")
-        .alias("n_tok"),
-    )
-    # pack_sequences references its input three times (local cumsum, leaf
-    # totals, offsets join); without a barrier Catalyst re-evaluates the
-    # whole strip+truncate subtree per reference (measured: 22 exchanges,
-    # 3 copies). The per-doc frame is 3 longs/doc — the cheap thing to
-    # materialize — so the expensive subtree runs exactly once.
-    perdoc = perdoc.localCheckpoint(eager=False)
-    return pack_sequences(perdoc).select(
-        "doc_id", "n_spans_final", "n_tok", "start_offset", "pack_id"
     )
 
 
@@ -620,32 +516,6 @@ def spans_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("n_redactions"),
     )
-
-
-from ..operators.dedup import NEARDUP_LSH_ORACLE, lsh_neardup_pairs  # noqa: E402
-
-
-@query(
-    "interleaved_neardup",
-    oracle=NEARDUP_LSH_ORACLE,
-    doc="near-dup detection over the INTERLEAVED payload: explode spans, "
-    "reassemble each doc's text in span order (one groupBy(doc_id) "
-    "shuffle), then the shared bigram-shingle MinHash-LSH core "
-    "(dedup.lsh_neardup_pairs). The oracle is the flat-documents LSH "
-    "closed form — legal because span reassembly is exactly "
-    "text-preserving (the roundtrip_ok invariant of "
-    "spans_interleave_roundtrip), so a reassembly bug surfaces as an "
-    "LSH-pair mismatch here. Composition row: payload axis (interleaved "
-    "spans) x dedup axis, one declarative plan.",
-)
-def interleaved_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    inter = synth_interleaved(docs)
-    reassembled = span_sequence_signature(inter).select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.col("reassembled").alias("text"),
-    )
-    return lsh_neardup_pairs(reassembled)
 
 
 @query(
@@ -791,9 +661,6 @@ _SQL_SPANS_AUG_FOOTER = (
     "what single-operator tests cannot catch.",
 )
 def web_corpus_prep_full(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
-    from ..functions.scalar import stable_hash64
     from .corpus import pack_sequences
     from .scrub import _augmented_text, scrub_pii
     from .textstats import STOPWORDS
@@ -813,10 +680,7 @@ def web_corpus_prep_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     keyed = scr.select(
         "*",
-        F.when(
-            F.col("kind") == "text",
-            stable_hash64(F.lower(F.trim(F.col("stext")))),
-        ).alias("bkey"),
+        _boilerplate_key(F.col("kind"), F.col("stext")).alias("bkey"),
         F.when(
             F.col("kind") == "text",
             F.regexp_count("stext", F.lit("<(EMAIL|PHONE|IP)>")).cast("long"),
@@ -824,23 +688,8 @@ def web_corpus_prep_full(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit(0))
         .alias("nred"),
     )
-    boiler = (
-        keyed.filter(F.col("bkey").isNotNull())
-        .groupBy("bkey")
-        .agg(F.count_distinct("doc_id").alias("nd"))
-        .filter(F.col("nd") >= _BOILER_MIN_DOCS)
-        .select("bkey", F.lit(True).alias("_boiler"))
-    )
-    flagged = keyed.join(boiler, "bkey", "left")
-    kept = F.col("_boiler").isNull()
-    tok = (
-        F.when(
-            F.col("kind") == "text",
-            F.coalesce(F.size(F.split("stext", " ")), F.lit(0)),
-        )
-        .otherwise(F.lit(_MEDIA_TOKEN_COST))
-        .cast("long")
-    )
+    flagged, kept = _flag_boilerplate(keyed)
+    tok, cum = _span_tokens(F.col("kind"), F.col("stext"), F.col("soff"), kept)
     stp = (
         F.when(
             F.col("kind") == "text",
@@ -854,12 +703,6 @@ def web_corpus_prep_full(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit(0))
         .cast("long")
     )
-    w = (
-        Window.partitionBy("doc_id")
-        .orderBy(F.col("soff"), F.col("kind"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = F.sum(F.when(kept, tok).otherwise(F.lit(0))).over(w)
     staged = flagged.select(
         "doc_id",
         kept.alias("kept"),
@@ -885,8 +728,10 @@ def web_corpus_prep_full(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("n_tok") >= _MIN_TOK_GATE)
         & (F.col("stop_hits") >= _MIN_STOP_GATE)
     )
-    # same triple-reference barrier as interleaved_prep_full: pack's three
-    # consumers must not re-run the scrub+strip+truncate subtree
+    # pack_sequences references its input three times (local cumsum, leaf
+    # totals, offsets join); without a barrier Catalyst re-evaluates the
+    # whole scrub+strip+truncate subtree per reference. The gated frame is
+    # a few longs per doc, so the expensive subtree runs exactly once.
     gated = gated.localCheckpoint(eager=False)
     return pack_sequences(gated).select(
         "doc_id",

@@ -311,7 +311,7 @@ _MEDIA_ND_CELLS = 8
     doc="END-TO-END multimodal dedup: decode -> feature-extract -> "
     "cell-blocked embedding-cosine near-dup, composing the multimodal "
     "stages with the semantic-dedup join shape of "
-    "neardup_embedding_cosine (similarity.py). Blocking cell = a byte of "
+    "semantic_dedup_drop (similarity.py). Blocking cell = a byte of "
     "the content feature hash (at scale: the k-means IVF cell), so work "
     "is O(sum cell_size^2), never all-pairs across the corpus; cosine is "
     "the sequential-accumulation form both engines share bit-for-bit.",

@@ -1,9 +1,12 @@
 """Similarity search over the `embeddings` table (array<float> column).
 
-Brute-force cosine top-k as the correctness baseline, plus an IVF-style
-cell-restricted variant as the scale path (search only the query's coarse
-cluster — here the prepartitioned `label` column; a real pipeline assigns
-cells with a k-means fit).
+Three top-k searches are plain functions the registry rows compose:
+`ann_cosine_topk` (brute force, the correctness baseline), `ann_ivf_topk`
+(search only the query's coarse cell, here the prepartitioned `label`
+column) and `ann_ivf_kmeans` (cells from a k-means fit). The rows are
+`ann_lsh_topk` (sign-hyperplane buckets), `ann_ivf_kmeans_gate` and
+`ann_recall_report` (index-quality checks over those searches),
+`semantic_dedup_drop`, and the int8 quantization and norm audits.
 
 Scale design: the query set is broadcast (it is small by construction), the
 corpus side streams — the join is a broadcast nested loop over a few query
@@ -54,26 +57,9 @@ def _topk(joined, k=TOP_K):
     )
 
 
-@query(
-    "ann_cosine_topk",
-    oracle=f"""
-    WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-               FROM embeddings WHERE vec_id < {N_QUERIES}),
-    scored AS (
-      SELECT q.query_id, e.vec_id,
-             list_cosine_similarity(q.qv, e.embedding::DOUBLE[]) AS cosine
-      FROM q JOIN embeddings e ON e.vec_id <> q.query_id)
-    SELECT query_id, vec_id, cosine, rank FROM (
-      SELECT query_id, vec_id, cosine,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY cosine DESC, vec_id) AS rank
-      FROM scored)
-    WHERE rank <= {TOP_K}
-    """,
-    doc="brute-force cosine top-k: broadcast query set x corpus scan, "
-    "windowed rank per query.",
-)
 def ann_cosine_topk(spark, sf_dir):
+    """Brute-force cosine top-k: broadcast query set x corpus scan,
+    windowed rank per query."""
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), _dvec(F.col("embedding")).alias("qv")
@@ -86,28 +72,10 @@ def ann_cosine_topk(spark, sf_dir):
     return _topk(scored)
 
 
-@query(
-    "ann_ivf_topk",
-    oracle=f"""
-    WITH q AS (SELECT vec_id AS query_id, label, embedding::DOUBLE[] AS qv
-               FROM embeddings WHERE vec_id < {N_QUERIES}),
-    scored AS (
-      SELECT q.query_id, e.vec_id,
-             list_cosine_similarity(q.qv, e.embedding::DOUBLE[]) AS cosine
-      FROM q JOIN embeddings e
-        ON e.label = q.label AND e.vec_id <> q.query_id)
-    SELECT query_id, vec_id, cosine, rank FROM (
-      SELECT query_id, vec_id, cosine,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY cosine DESC, vec_id) AS rank
-      FROM scored)
-    WHERE rank <= {TOP_K}
-    """,
-    doc="IVF-style ANN: restrict the scan to the query's coarse cell "
-    "(label) — an equi-join on the cell id, so at scale it prunes to "
-    "1/n_cells of the corpus and shuffles only by cell.",
-)
 def ann_ivf_topk(spark, sf_dir):
+    """IVF-style top-k: scan only the query's coarse cell (label), an
+    equi-join on the cell id, so at scale it prunes to 1/n_cells of the
+    corpus and shuffles only by cell."""
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
@@ -124,45 +92,6 @@ def ann_ivf_topk(spark, sf_dir):
         .select("query_id", "vec_id", cosine(F.col("qv"), F.col("ev")).alias("cosine"))
     )
     return _topk(scored)
-
-
-EMB_NEARDUP_THRESHOLD = 0.25  # calibrated to the synthetic corpus (same-
-# label cosine p99 ~ 0.30); real text embeddings would use ~0.95
-
-
-@query(
-    "neardup_embedding_cosine",
-    oracle=f"""
-    WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v
-               FROM embeddings)
-    SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-           list_cosine_similarity(a.v, b.v) AS cosine
-    FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id
-    WHERE list_cosine_similarity(a.v, b.v) >= {EMB_NEARDUP_THRESHOLD}
-    """,
-    doc="embedding-cosine near-dup pairs within a blocking cell (label — "
-    "at scale the k-means cell from kmeans_fit, same join shape): the "
-    "semantic-dedup member of the dedup family. Work is O(sum of "
-    "cell_size^2); cosine is the sequential-accumulation form both "
-    "engines share bit-for-bit.",
-)
-def neardup_embedding_cosine(spark, sf_dir):
-    emb = load_table(spark, sf_dir, "embeddings")
-    e = emb.select("vec_id", "label", _dvec(F.col("embedding")).alias("v"))
-    return (
-        e.alias("a")
-        .join(
-            e.alias("b"),
-            (F.col("a.label") == F.col("b.label"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-            cosine(F.col("a.v"), F.col("b.v")).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= EMB_NEARDUP_THRESHOLD)
-    )
 
 
 # ------------------------------------------------------------- k-means IVF
@@ -323,18 +252,12 @@ def ann_lsh_topk(spark, sf_dir):
     return _topk(scored)
 
 
-@query(
-    "ann_ivf_kmeans",
-    oracle=None,  # iterative fit: driver does the rows-only check; exact
-    # parity vs a numpy replica is asserted in tests/test_similarity.py,
-    # and ann_ivf_kmeans_gate gives this plan a DuckDB-checkable row
-    # (in-plan invariants + brute-force bound over the SAME plan)
-    doc="IVF with a REAL k-means coarse quantizer (deterministic "
-    "distributed Lloyd's, k=8 x 3 iters): corpus and queries are assigned "
-    "to learned cells, search scans only the query's cell. Replaces the "
-    "label-column stand-in as the scale path.",
-)
 def ann_ivf_kmeans(spark, sf_dir):
+    """IVF top-k with a learned coarse quantizer (deterministic distributed
+    Lloyd's, k=8 x 3 iters): corpus and queries are assigned to cells and
+    each query scans only its own cell. The fit is iterative, so no SQL
+    oracle replays it: tests/test_similarity.py pins it against numpy and
+    ann_ivf_kmeans_gate checks its output's invariants."""
     emb = load_table(spark, sf_dir, "embeddings")
     cents = kmeans_fit(emb, k=8, iters=3)
     df = emb.select("vec_id", _dvec(F.col("embedding")).alias("v"))
@@ -376,10 +299,10 @@ def ann_ivf_kmeans(spark, sf_dir):
     FROM brute
     """,
     doc="DuckDB-checkable gate over the learned-quantizer IVF "
-    "(ann_ivf_kmeans is the one registry row whose raw output has no "
-    "SQL oracle: its cells come from an iterative distributed Lloyd's "
-    "fit whose float means are not engine-replicable — exact parity vs "
-    "a numpy replica is asserted in tests/test_similarity.py). This "
+    "(ann_ivf_kmeans, whose raw output no SQL oracle can replay: its "
+    "cells come from an iterative distributed Lloyd's fit whose float "
+    "means are not engine-replicable — exact parity vs a numpy replica "
+    "is asserted in tests/test_similarity.py). This "
     "row runs the REAL kmeans-IVF plan and emits, per query, the "
     "invariants any correct IVF must satisfy regardless of which cells "
     "the fit produced — no self-match in the results, ranks contiguous "
@@ -539,8 +462,9 @@ def embedding_quantize_int8(spark, sf_dir):
           WHERE vec_id < {N_QUERIES}) q
     LEFT JOIN hits h ON h.query_id = q.query_id
     """,
-    doc="ANN quality measurement — recall@k of the IVF index against the "
-    "brute-force ground truth, per query, IN-PLAN ('measure, don't "
+    doc="ANN quality measurement — recall@k of the label-cell IVF search "
+    "(ann_ivf_topk) against the brute-force ground truth "
+    "(ann_cosine_topk), per query, IN-PLAN ('measure, don't "
     "guess' applied to the index itself: a production pipeline gates "
     "index deployment on exactly this join). Integer intersection "
     "counts + one division — no float aggregation. At scale both sides "
@@ -549,7 +473,8 @@ def embedding_quantize_int8(spark, sf_dir):
     "corpus the verdict is damning by design: label-cells barely "
     "correlate with cosine neighborhoods (same-label cosine p99 ~0.30), "
     "so recall@3 ~ 0.07 — the gate correctly REJECTS this quantizer; "
-    "kmeans_fit cells (ann_ivf_kmeans) are the fix.",
+    "kmeans_fit cells (ann_ivf_kmeans, checked by ann_ivf_kmeans_gate) "
+    "are the fix.",
 )
 def ann_recall_report(spark, sf_dir):
     brute = ann_cosine_topk(spark, sf_dir).select(
@@ -580,6 +505,10 @@ def ann_recall_report(spark, sf_dir):
     )
 
 
+EMB_NEARDUP_THRESHOLD = 0.25  # calibrated to the synthetic corpus (same-
+# label cosine p99 ~ 0.30); real text embeddings would use ~0.95
+
+
 @query(
     "semantic_dedup_drop",
     oracle=f"""
@@ -602,7 +531,7 @@ def ann_recall_report(spark, sf_dir):
     doc="SemDeDup (Abbas et al. 2023): within each coarse cell, DROP any "
     "vector whose cosine to a LOWER-id vector clears the threshold — the "
     "deterministic keep-the-canonical-representative rule, computed from "
-    "the cell-blocked pair table (neardup_embedding_cosine's shape) as "
+    "the cell-blocked pair table (label self-join, cosine filter) as "
     "one distinct + one anti-join-style left join; never all-pairs "
     "across cells, O(sum cell_size^2) like every cell-blocked member of "
     "the dedup family. Per-cell survivor accounting in integer counts. "
@@ -616,8 +545,7 @@ def ann_recall_report(spark, sf_dir):
     "exactly, which a learned quantizer cannot). The 100 TB deployment "
     "path is to block on kmeans_fit cells with k scaled ~ corpus/"
     "target_cell_size so cells stay BOUNDED as the corpus grows — the "
-    "same fit ann_ivf_kmeans runs and ann_ivf_kmeans_gate "
-    "driver-checks; swapping the blocking key is a one-line change "
+    "same fit ann_ivf_kmeans_gate runs and driver-checks; swapping the blocking key is a one-line change "
     "(label -> assign_cells(..)'s cell) that trades this row's exact "
     "SQL oracle for the gate-style check.",
 )

@@ -136,32 +136,11 @@ _SQL_BOOK_CTES = f"""
 """
 
 
-@query(
-    "l2_spread_stats",
-    oracle=f"""
-    {_SQL_BOOK_CTES}
-    SELECT symbol,
-           max(CASE WHEN side = 'bid' THEN price END) AS best_bid,
-           min(CASE WHEN side = 'ask' THEN price END) AS best_ask,
-           min(CASE WHEN side = 'ask' THEN price END)
-             - max(CASE WHEN side = 'bid' THEN price END) AS spread,
-           (min(CASE WHEN side = 'ask' THEN price END)
-             + max(CASE WHEN side = 'bid' THEN price END)) / 2.0 AS mid,
-           CAST(sum(CASE WHEN side = 'bid' THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_bid_levels,
-           CAST(sum(CASE WHEN side = 'ask' THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_ask_levels
-    FROM book GROUP BY symbol
-    """,
-    doc="top-of-book analytics over the RECONSTRUCTED order book "
-    "(composition on l2_book_reconstruct): best bid/ask, spread, mid and "
-    "level depth per symbol — one more partial-agg groupBy on the same "
-    "book key, zero extra shuffles beyond it. Numeric determinism: "
-    "best-of = max/min (order-independent), spread/mid are single IEEE "
-    "ops on those scalars; level depth is an integer count. No float "
-    "SUM over rows anywhere — that would drift with aggregation order.",
-)
 def l2_spread_stats(spark, sf_dir):
+    """Top-of-book per symbol over the reconstructed book: best bid/ask,
+    spread, mid and level depth. Best-of is max/min (order-independent),
+    spread/mid are single IEEE ops on those scalars and depth is an
+    integer count, so no float sum over rows can drift."""
     book = l2_book_reconstruct(spark, sf_dir)
     is_bid = F.col("side") == "bid"
     best_bid = F.max(F.when(is_bid, F.col("price")))

@@ -45,7 +45,7 @@ def ensure_session_confs(spark: SparkSession) -> None:
 class Query:
     name: str
     spark_fn: SparkQueryFn
-    oracle: str | None  # DuckDB SQL; None -> driver does rows-only check
+    oracle: str  # DuckDB SQL the driver compares the row's output with
     doc: str = ""
     # spark_fn runs a writeStream job and returns its drained result, so a
     # re-execution of the returned frame measures nothing: bench.py
@@ -72,9 +72,7 @@ _QUERY_MODULES = [
 ]
 
 
-def query(
-    name: str, oracle: str | None = None, doc: str = "", streaming: bool = False
-):
+def query(name: str, oracle: str, doc: str = "", streaming: bool = False):
     """Decorator: register ``fn(spark, sf_dir) -> DataFrame`` under ``name``."""
 
     def deco(fn: SparkQueryFn) -> SparkQueryFn:

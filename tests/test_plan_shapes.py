@@ -135,8 +135,8 @@ def test_no_cartesian_products_anywhere(spark):
     # brute-force scans are explicit BroadcastNestedLoop by design, and
     # corpus_domain_rebalance cross-joins a global aggregate's SINGLE row
     # (the grand token total) — a 1-row build side is bounded at any scale
-    # ann_recall_report embeds the brute-force side as its ground truth,
-    # so it inherits ann_cosine_topk's intentional BNL scan — as does
+    # ann_recall_report embeds the brute-force search (ann_cosine_topk) as
+    # its ground truth, so it runs that intentional BNL scan — as does
     # ann_ivf_kmeans_gate, whose within-brute-bound invariant needs the
     # same broadcast-query-set x corpus pass
     # corpus_drift_topk cross-joins the same kind of SINGLE-row global
@@ -145,7 +145,6 @@ def test_no_cartesian_products_anywhere(spark):
     # corpus token total onto the min-count-filtered bigram heavy
     # hitters (same grand-total pattern, documented in its docstring)
     allowed_bnl = {
-        "ann_cosine_topk",
         "ann_recall_report",
         "ann_ivf_kmeans_gate",
         "collocation_lift_topk",

@@ -1,6 +1,7 @@
 """k-means IVF: the distributed Lloyd's fit vs an exact numpy replica, and
-assignment invariants (the driver only rows-checks ann_ivf_kmeans since the
-fit is iterative; this file is its correctness gate)."""
+assignment invariants. The fit is iterative, so no SQL oracle replays it:
+ann_ivf_kmeans_gate checks the invariants of the search built on it, and
+this file pins the fit itself."""
 
 from __future__ import annotations
 

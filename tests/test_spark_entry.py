@@ -18,7 +18,8 @@ def test_queries_are_the_registry():
 
 
 def test_oracle_sql_covers_exactly_the_oracled_rows():
-    oracled = {
-        n: q.oracle for n, q in all_queries().items() if q.oracle is not None
-    }
-    assert entry_mod.oracle_sql() == oracled
+    """Every row has an oracle, so the oracle map has exactly the rows."""
+    qs, oracles = all_queries(), entry_mod.oracle_sql()
+    assert list(oracles) == list(entry_mod.queries())
+    assert all(isinstance(o, str) and o.strip() for o in oracles.values())
+    assert oracles == {n: q.oracle for n, q in qs.items()}
